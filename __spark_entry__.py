@@ -41,7 +41,10 @@ def _documents_index(spark: SparkSession, sf_dir: str) -> str:
     from probe_spark.indexer import build_index
 
     _ensure_shipped(spark)
-    # :v3 = bloom-free doc_lens (tri lane serves rescue)
+    # :v3 = bloom-free doc_lens (tri lane serves rescue).  The zstd /
+    # delta doc_id encoding did not bump it: readers are encoding-agnostic,
+    # so a cached index in the older snappy layout stays valid
+    # (tests/test_index_layout.py pins that).
     key = hashlib.md5(f"{sf_dir}:v3".encode()).hexdigest()[:12]
     ix = _CACHE_ROOT / key
     if (ix / "stats").exists() and not (

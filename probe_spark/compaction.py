@@ -50,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from probe_spark.config import DEFAULT_BM25, POSTING_BLOCK_SIZE, BM25Params
+from probe_spark.indexer import index_write
 
 SEG_BITS = 13
 SEG_SIZE = 1 << SEG_BITS
@@ -197,11 +198,9 @@ def compact_index(
         # here would sample the applyInPandas output and run the block
         # encoding twice
         bdir = out / "blocks" / f"bucket={bname}"
-        (
+        index_write(
             blocks.sortWithinPartitions("term", "seg", "block_id")
-            .write.mode("overwrite")
-            .parquet(str(bdir))
-        )
+        ).parquet(str(bdir))
         with state_lock:
             state["buckets"][bname] = {
                 "blocks_bytes": _bytes(bdir),

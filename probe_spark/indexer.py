@@ -12,10 +12,17 @@ same mechanism Iceberg snapshots would give us):
                                 doc_text_df hydrates on demand)
   doc_lens/bucket=i/            slim lengths: doc_id, doc_len
   postings/bucket=i/            flat postings: term, doc_id, tf, doc_len
+  tri_postings/bucket=i/        trigram substring lane: tri, doc_id
   terms_partial/bucket=i/       per-bucket term aggregates (df, cf)
   terms/                        term dictionary: term, df, cf
+  tri_terms/                    trigram dictionary: tri, df
   stats/                        singleton: n_docs, avgdl
   lineage/                      per-bucket build metrics + checkpoints
+
+Encoding contract: every table is written through ``index_write`` -- zstd,
+v2 data pages, and ``doc_id`` without a dictionary so its sorted runs
+delta-encode (DELTA_BINARY_PACKED); readers are encoding-agnostic, so
+layouts written with other codecs stay valid.
 
 Scale design notes (explicitly, per the north rule):
   * doc_id is the global url-lexicographic rank (FIXTURES.md SS1, mirroring
@@ -54,7 +61,7 @@ import json
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -65,6 +72,21 @@ from pyspark.sql.types import (
 )
 
 from pyspark.sql.types import ArrayType, BinaryType
+
+# Parquet options of every index table.  doc_id is sorted inside each
+# posting run, so with its dictionary off the v2 writer delta + bit-packs
+# it (DELTA_BINARY_PACKED); term/tri/tf keep dictionary + RLE.
+INDEX_PARQUET = {
+    "compression": "zstd",
+    "parquet.writer.version": "v2",
+    "parquet.enable.dictionary#doc_id": "false",
+}
+
+
+def index_write(df: DataFrame) -> DataFrameWriter:
+    """The one writer for index tables: overwrite mode + INDEX_PARQUET."""
+    return df.write.mode("overwrite").options(**INDEX_PARQUET)
+
 
 TOKENS_SCHEMA = StructType(
     [
@@ -318,6 +340,16 @@ def _dir_bytes(path: Path) -> int:
     return sum(f.stat().st_size for f in path.rglob("*") if f.is_file())
 
 
+def bytes_by_table(index_dir: Path) -> dict[str, int]:
+    """On-disk bytes of every top-level entry of an index dir (tables and
+    metadata files alike, so the values sum to the dir's bytes); a
+    driver-side directory walk, no Spark job."""
+    return {
+        p.name: _dir_bytes(p) if p.is_dir() else p.stat().st_size
+        for p in sorted(Path(index_dir).iterdir())
+    }
+
+
 def _committed_parquet_rows(path: Path) -> int:
     """Exact row count of a committed parquet dir from file footers
     (driver-side metadata read, no Spark job).  Unlike ``observe`` on the
@@ -362,7 +394,7 @@ def write_stats(index_dir: str, n_docs: int, avgdl: float) -> None:
             "avgdl": pa.array([float(avgdl)], type=pa.float64()),
         }
     )
-    pq.write_table(table, out / "part-00000.parquet")
+    pq.write_table(table, out / "part-00000.parquet", compression="zstd")
 
 
 def sorted_dictionary(terms: DataFrame, spark: SparkSession) -> DataFrame:
@@ -455,7 +487,8 @@ def build_index(
         streaming path enforces it via dropDuplicates).  ``pages`` may be
         None (read from source_path).
 
-    Returns build metrics (also persisted in the lineage table).
+    Returns build metrics (also persisted in the lineage table), plus
+    ``bytes_by_table``: the index footprint per top-level table.
     """
     if doc_store not in ("copy", "reference"):
         raise ValueError(f"doc_store must be 'copy' or 'reference': {doc_store!r}")
@@ -533,8 +566,7 @@ def build_index(
             else ["doc_id", "url", "lang", "text", "bucket"]
         )
         (
-            indexed.select(*doc_cols)
-            .write.mode("overwrite")
+            index_write(indexed.select(*doc_cols))
             .partitionBy("bucket")
             .parquet(str(pages_indexed_dir))
         )
@@ -620,7 +652,7 @@ def build_index(
             )
             .sortWithinPartitions("term", "doc_id")
         )
-        postings_b.write.mode("overwrite").parquet(str(postings_dir))
+        index_write(postings_b).parquet(str(postings_dir))
         lens_b = (
             rows.filter(F.col("term").isNull())
             .select(
@@ -628,27 +660,24 @@ def build_index(
                 *(["tri_bloom"] if emit_bloom else []),
             )
         )
-        lens_b.coalesce(2).write.mode("overwrite").parquet(str(lens_dir))
+        index_write(lens_b.coalesce(2)).parquet(str(lens_dir))
         # trigram substring-index lane for this bucket (rescue serving);
         # sorted by tri for row-group pruning at query time
-        (
+        tri_dir = out / "tri_postings" / f"bucket={b}"
+        index_write(
             tri_rows(rows)
             .repartition(max(2, par // 2), "tri")
             .sortWithinPartitions("tri", "doc_id")
-            .write.mode("overwrite")
-            .parquet(str(out / "tri_postings" / f"bucket={b}"))
-        )
+        ).parquet(str(tri_dir))
         # per-bucket term partials from the cached tokenization: the final
         # dictionary re-aggregates these (vocab-sized) instead of scanning
         # the full postings table again
-        (
+        index_write(
             rows.filter(F.col("term").isNotNull())
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
             .coalesce(2)
-            .write.mode("overwrite")
-            .parquet(str(tpart_dir))
-        )
+        ).parquet(str(tpart_dir))
         n_postings = _committed_parquet_rows(postings_dir)
         n_docs = _committed_parquet_rows(lens_dir)
         sum_dl = _committed_column_sum(lens_dir, "doc_len")
@@ -662,7 +691,9 @@ def build_index(
                 "n_postings": n_postings,
                 "sum_dl": sum_dl,
                 "bytes_in": _dir_bytes(pages_indexed_dir / f"bucket={b}"),
-                "bytes_out": _dir_bytes(postings_dir) + _dir_bytes(lens_dir),
+                "bytes_out": _dir_bytes(postings_dir)
+                + _dir_bytes(lens_dir)
+                + _dir_bytes(tri_dir),
                 "wall_ms": wall_ms,
                 "finished_ts": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
@@ -774,15 +805,16 @@ def build_index(
         # each bucket's file is term-sorted).  Task count tracks cores AND
         # data so no stage underfills the machine.
         (
-            rows.filter(F.col("term").isNotNull())
-            .select("bucket", "term", "doc_id", "tf", "tf_url", "doc_len")
-            .repartition(
-                max(2, par, int(total_bytes // (256 << 20))),
-                "bucket",
-                "term",
+            index_write(
+                rows.filter(F.col("term").isNotNull())
+                .select("bucket", "term", "doc_id", "tf", "tf_url", "doc_len")
+                .repartition(
+                    max(2, par, int(total_bytes // (256 << 20))),
+                    "bucket",
+                    "term",
+                )
+                .sortWithinPartitions("bucket", "term", "doc_id")
             )
-            .sortWithinPartitions("bucket", "term", "doc_id")
-            .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
             .parquet(str(postings_root))
@@ -795,13 +827,14 @@ def build_index(
 
         def _write_lens() -> None:
             (
-                rows.filter(F.col("term").isNull())
-                .select(
-                    "bucket", "doc_id", "doc_len",
-                    *(["tri_bloom"] if emit_bloom else []),
+                index_write(
+                    rows.filter(F.col("term").isNull())
+                    .select(
+                        "bucket", "doc_id", "doc_len",
+                        *(["tri_bloom"] if emit_bloom else []),
+                    )
+                    .repartition(max(2, par // 2), "bucket", "doc_id")
                 )
-                .repartition(max(2, par // 2), "bucket", "doc_id")
-                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(lens_root))
@@ -809,10 +842,11 @@ def build_index(
 
         def _write_tpart() -> None:
             (
-                rows.filter(F.col("term").isNotNull())
-                .groupBy("bucket", "term")
-                .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-                .write.mode("overwrite")
+                index_write(
+                    rows.filter(F.col("term").isNotNull())
+                    .groupBy("bucket", "term")
+                    .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+                )
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(tpart_root_))
@@ -823,14 +857,15 @@ def build_index(
             # pure explode of the cached tokenize output's tris arrays --
             # no extra text read, no Python
             (
-                tri_rows(rows, keep=("bucket",))
-                .repartition(
-                    max(2, par, int(total_bytes // (128 << 20))),
-                    "bucket",
-                    "tri",
+                index_write(
+                    tri_rows(rows, keep=("bucket",))
+                    .repartition(
+                        max(2, par, int(total_bytes // (128 << 20))),
+                        "bucket",
+                        "tri",
+                    )
+                    .sortWithinPartitions("bucket", "tri", "doc_id")
                 )
-                .sortWithinPartitions("bucket", "tri", "doc_id")
-                .write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(out / "tri_postings"))
@@ -879,8 +914,10 @@ def build_index(
                     "n_postings": int(r["n_postings"]) if r else 0,
                     "sum_dl": int(r["sum_dl"]) if r else 0,
                     "bytes_in": in_bytes[b],
-                    "bytes_out": _dir_bytes(postings_root / f"bucket={b}")
-                    + _dir_bytes(lens_root / f"bucket={b}"),
+                    "bytes_out": sum(
+                        _dir_bytes(out / t / f"bucket={b}")
+                        for t in ("postings", "doc_lens", "tri_postings")
+                    ),
                     # wall attributed by input share so the lineage sum
                     # equals the real wave wall (per-bucket walls from the
                     # old concurrent pool double-counted overlap)
@@ -936,23 +973,19 @@ def build_index(
         )
     else:
         terms = spark.createDataFrame([], terms_schema)
-    sorted_dictionary(terms, spark).write.mode("overwrite").parquet(
-        str(out / "terms")
-    )
+    index_write(sorted_dictionary(terms, spark)).parquet(str(out / "terms"))
 
     # trigram dictionary (tri, df): the driver-cached rarest-trigram
     # selector for rescue serving.  Input is the slim (doc_id, tri) lane;
     # vocab is charset-bounded (tiny vs the corpus), one agg job.
     tri_root = out / "tri_postings"
     if tri_root.exists() and any(tri_root.iterdir()):
-        (
+        index_write(
             spark.read.parquet(str(tri_root))
             .groupBy("tri")
             .agg(F.count(F.lit(1)).alias("df"))
             .coalesce(4)
-            .write.mode("overwrite")
-            .parquet(str(out / "tri_terms"))
-        )
+        ).parquet(str(out / "tri_terms"))
 
     lineage = _read_lineage(index_dir)
     if lineage and all("sum_dl" in r for r in lineage.values()):
@@ -968,7 +1001,7 @@ def build_index(
         stats = lens.agg(
             F.count(F.lit(1)).alias("n_docs"), F.avg("doc_len").alias("avgdl")
         )
-        stats.write.mode("overwrite").parquet(str(out / "stats"))
+        index_write(stats).parquet(str(out / "stats"))
 
     tot = {
         k: sum(r[k] for r in lineage.values())
@@ -979,4 +1012,5 @@ def build_index(
         **tot,
         "docs_per_sec": tot["n_docs"] / wall_s,
         "postings_per_sec": tot["n_postings"] / wall_s,
+        "bytes_by_table": bytes_by_table(out),
     }

@@ -42,6 +42,7 @@ from probe_spark.indexer import (
     _make_tokenize_partition,
     _read_lineage,
     _tokenize_partition,
+    index_write,
     sorted_dictionary,
     tri_rows,
     write_stats,
@@ -156,9 +157,7 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
             F.sum("df").alias("df"), F.sum("cf").alias("cf")
         )
         tmp = out / "terms_tmp"
-        sorted_dictionary(folded_terms, spark).write.mode("overwrite").parquet(
-            str(tmp)
-        )
+        index_write(sorted_dictionary(folded_terms, spark)).parquet(str(tmp))
         shutil.rmtree(out / "terms", ignore_errors=True)
         tmp.rename(out / "terms")
         _rebuild_tri_terms(spark, index_dir)
@@ -198,7 +197,7 @@ def _fold_terms(spark: SparkSession, index_dir: str, new_partial: Path) -> None:
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
     tmp = out / "terms_tmp"
-    sorted_dictionary(folded, spark).write.mode("overwrite").parquet(str(tmp))
+    index_write(sorted_dictionary(folded, spark)).parquet(str(tmp))
     shutil.rmtree(terms_dir, ignore_errors=True)
     tmp.rename(terms_dir)
 
@@ -217,7 +216,7 @@ def _rebuild_tri_terms(spark: SparkSession, index_dir: str) -> None:
         .agg(F.count(F.lit(1)).alias("df"))
     )
     tmp = out / "tri_terms_tmp"
-    folded.coalesce(4).write.mode("overwrite").parquet(str(tmp))
+    index_write(folded.coalesce(4)).parquet(str(tmp))
     shutil.rmtree(out / "tri_terms", ignore_errors=True)
     tmp.rename(out / "tri_terms")
 
@@ -243,7 +242,7 @@ def _fold_tri_terms(spark: SparkSession, index_dir: str, delta_bucket: Path) -> 
         .agg(F.sum("df").alias("df"))
     )
     tmp = out / "tri_terms_tmp"
-    folded.coalesce(4).write.mode("overwrite").parquet(str(tmp))
+    index_write(folded.coalesce(4)).parquet(str(tmp))
     shutil.rmtree(t_dir, ignore_errors=True)
     tmp.rename(t_dir)
 
@@ -306,22 +305,16 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     )
     rows.persist()
     bucket = f"stream_{epoch_id}_{base}"
-    (
+    index_write(
         rows.filter(F.col("term").isNotNull())
         .select("term", "doc_id", "tf", "tf_url", "doc_len")
         .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .parquet(str(out / "postings" / f"bucket={bucket}"))
-    )
+    ).parquet(str(out / "postings" / f"bucket={bucket}"))
     lens_delta = out / "doc_lens" / f"bucket={bucket}"
-    (
-        # bloom-free layout: the tri_postings delta below serves rescue
-        rows.filter(F.col("term").isNull())
-        .select("doc_id", "doc_len")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(lens_delta))
-    )
+    # bloom-free layout: the tri_postings delta below serves rescue
+    index_write(
+        rows.filter(F.col("term").isNull()).select("doc_id", "doc_len").coalesce(1)
+    ).parquet(str(lens_delta))
     # sum from the COMMITTED delta files, not an Observation riding the
     # write: observe() merges metric rows from every completed task
     # attempt, so a retried or speculative duplicate would inflate sum_dl
@@ -333,21 +326,16 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     # trigram substring-index lane for the delta (rescue serving): explode
     # of the cached tokenize output's tris arrays (indexer.tri_rows)
     tri_delta = out / "tri_postings" / f"bucket={bucket}"
-    (
-        tri_rows(rows)
-        .sortWithinPartitions("tri", "doc_id")
-        .write.mode("overwrite")
-        .parquet(str(tri_delta))
+    index_write(tri_rows(rows).sortWithinPartitions("tri", "doc_id")).parquet(
+        str(tri_delta)
     )
     tpart = out / "terms_partial" / f"bucket={bucket}"
-    (
+    index_write(
         rows.filter(F.col("term").isNotNull())
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
         .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(tpart))
-    )
+    ).parquet(str(tpart))
     # PREPARE marker: the lineage row commits the bucket's existence (and
     # carries the totals) BEFORE the url-dedup table sees its pages -- a
     # crash from here until the fold is healed by _reconcile
@@ -366,13 +354,11 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     )
     # COMMIT marker: pages_indexed is also the url-dedup table, so writing
     # it LAST means an interrupted batch is re-ingested, never skipped
-    (
+    index_write(
         rows.filter(F.col("term").isNull())
         .select("doc_id", "url", "lang", "text")
         .coalesce(2)
-        .write.mode("overwrite")
-        .parquet(str(out / "pages_indexed" / f"bucket={bucket}"))
-    )
+    ).parquet(str(out / "pages_indexed" / f"bucket={bucket}"))
     rows.unpersist()
     _fold_terms(spark, index_dir, tpart)
     _fold_tri_terms(spark, index_dir, tri_delta)

@@ -36,6 +36,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from probe_spark.indexer import index_write
+
 MANIFEST = "suggest_buckets.json"
 TABLE = "suggest_buckets"
 
@@ -139,9 +141,10 @@ def build_suggest_buckets(
     # never a matching manifest over half-written files
     tmp = p / (TABLE + "_tmp")
     (
-        buckets.repartitionByRange(n_parts, "variant")
-        .sortWithinPartitions("variant")
-        .write.mode("overwrite")
+        index_write(
+            buckets.repartitionByRange(n_parts, "variant")
+            .sortWithinPartitions("variant")
+        )
         .option("parquet.block.size", str(8 << 20))
         .parquet(str(tmp))
     )

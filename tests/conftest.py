@@ -32,3 +32,46 @@ def tiny_oracle():
     from probe_spark.fixtures import oracle_corpus
 
     return oracle_corpus(1000)
+
+
+def _parquet_layout(path) -> dict[str, set]:
+    """{column: {(compression, encodings)}} over every row group of every
+    parquet file under ``path``, read from the footers with pyarrow (no
+    Spark job)."""
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    out: dict[str, set] = {}
+    for f in sorted(Path(path).rglob("*.parquet")):
+        md = pq.read_metadata(f)
+        for i in range(md.num_row_groups):
+            rg = md.row_group(i)
+            for j in range(rg.num_columns):
+                c = rg.column(j)
+                out.setdefault(c.path_in_schema, set()).add(
+                    (c.compression, c.encodings)
+                )
+    return out
+
+
+@pytest.fixture(scope="session")
+def parquet_layout():
+    return _parquet_layout
+
+
+@pytest.fixture(scope="session")
+def assert_index_layout():
+    """Checks the index encoding contract on one table dir: every column
+    zstd-compressed, doc_id delta-encoded with no dictionary."""
+
+    def check(path) -> None:
+        layout = _parquet_layout(path)
+        assert layout, f"no row groups under {path}"
+        for col, seen in layout.items():
+            assert {comp for comp, _ in seen} == {"ZSTD"}, (path, col, seen)
+        assert {enc for _, enc in layout["doc_id"]} == {
+            ("DELTA_BINARY_PACKED",)
+        }, (path, layout["doc_id"])
+
+    return check

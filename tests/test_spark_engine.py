@@ -21,11 +21,22 @@ def engine(spark, tiny_index):
 
 
 def test_index_build_metrics(tiny_index):
-    _, metrics = tiny_index
+    from pathlib import Path
+
+    from probe_spark.indexer import _dir_bytes
+
+    path, metrics = tiny_index
     assert metrics["n_docs"] == 1000
     assert metrics["n_postings"] > 10000
     assert metrics["docs_per_sec"] > 0
     assert metrics["bytes_in"] > 0 and metrics["bytes_out"] > 0
+    # lineage bytes_out covers every per-bucket output table, the trigram
+    # lane (the largest) included
+    assert metrics["bytes_out"] == sum(
+        _dir_bytes(b)
+        for t in ("postings", "doc_lens", "tri_postings")
+        for b in Path(path, t).glob("bucket=*")
+    )
 
 
 def test_index_global_stats(spark, tiny_index, tiny_oracle):

@@ -180,7 +180,9 @@ def test_stream_crash_rollback_and_resume(spark, tmp_path):
     assert stats["n_docs"] == 80
 
 
-def test_stream_crash_rollforward_heals_fold(spark, tmp_path):
+def test_stream_crash_rollforward_heals_fold(
+    spark, tmp_path, assert_index_layout
+):
     """A batch that committed its pages but died before the dictionary /
     stats fold is rolled FORWARD: terms and stats are rebuilt, the next
     ingest proceeds with correct totals, and df values match a scratch
@@ -191,11 +193,15 @@ def test_stream_crash_rollforward_heals_fold(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from probe_spark.fixtures import pages_df
-    from probe_spark.indexer import build_index
+    from probe_spark.indexer import _dir_bytes, build_index
     from probe_spark.streaming.incremental import _read_state, ingest_batch
 
     ix = str(tmp_path / "ix")
-    build_index(spark, pages_df(spark, 50).drop("html", "warc_ts"), ix, n_buckets=2)
+    m = build_index(
+        spark, pages_df(spark, 50).drop("html", "warc_ts"), ix, n_buckets=2
+    )
+    # the build's per-table footprint accounts for the whole index dir
+    assert sum(m["bytes_by_table"].values()) == _dir_bytes(Path(ix))
     wave = (
         pages_df(spark, 80)
         .drop("html", "warc_ts")
@@ -203,6 +209,10 @@ def test_stream_crash_rollforward_heals_fold(spark, tmp_path):
     )
     assert ingest_batch(spark, wave, ix, epoch_id=0) == 30
     out = Path(ix)
+    # the ingest delta shares the base layout (zstd, delta doc_id)
+    for table in ("postings", "tri_postings", "doc_lens", "pages_indexed"):
+        (delta,) = (out / table).glob("bucket=stream_*")
+        assert_index_layout(delta)
     # simulate: fold/state never ran (also covers a LEGACY state file
     # missing the running totals -- it must not be trusted)
     (out / "stream_state.json").write_text(json.dumps({"next_doc_id": 80}))

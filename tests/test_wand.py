@@ -28,7 +28,7 @@ def test_compression_ratio(spark, compacted):
     """Blocks must beat the raw posting representation (20B/posting).
 
     Note: at 1000 docs most terms have df 1-2, so per-block metadata
-    dominates and snappy'd flat parquet can be smaller than the block
+    dominates and compressed flat parquet can be smaller than the block
     table; the varbyte win on long posting lists is asserted in
     test_codec.test_compression_wins.  Here we sanity-check against the
     uncompressed representation and that block payloads are ~1 byte/doc
