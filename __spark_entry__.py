@@ -44,7 +44,9 @@ def _documents_index(spark: SparkSession, sf_dir: str) -> str:
     # :v3 = bloom-free doc_lens (tri lane serves rescue).  The zstd /
     # delta doc_id encoding did not bump it: readers are encoding-agnostic,
     # so a cached index in the older snappy layout stays valid
-    # (tests/test_index_layout.py pins that).
+    # (tests/test_index_layout.py pins that).  Nor did the listed-trigram
+    # lane (manifest tri_cutoff): a cached index without a cutoff is a
+    # complete lane, which the engine still serves exactly.
     key = hashlib.md5(f"{sf_dir}:v3".encode()).hexdigest()[:12]
     ix = _CACHE_ROOT / key
     if (ix / "stats").exists() and not (

@@ -277,6 +277,10 @@ def main(argv: list[str] | None = None) -> int:
             },
             "rescue": {
                 "tri_intersect": SearchEngine._TRI_INTERSECT,
+                # lane selectivity rule (trigram.tri_cutoff); a built
+                # index records its cutoff as manifest.tri_cutoff
+                "tri_direct_frac": SearchEngine._TRI_DIRECT_FRAC,
+                "tri_direct_floor": SearchEngine._TRI_DIRECT_FLOOR,
                 "isin_pushdown_cap": SearchEngine._BLOOM_ISIN_CAP,
                 "bloom_min_docs_default": 50_000,
                 "bloom_bytes": trigram.BLOOM_BYTES,

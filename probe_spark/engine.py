@@ -11,9 +11,12 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      file_processing.rs:1350-1358 (``full_code_lower.contains(term)`` --
      true SUBSTRING semantics).  Served from the trigram substring-index
      lane (indexer.tri_rows, the public Zoekt/Code-Search design): the
-     rarest <=3 trigrams of the needle are intersected in the tri_postings
-     table and contains() verifies only those candidates -- O(trigram df)
-     per query.  Fallbacks, in order: trigram-bloom column prefilter
+     rarest <=3 LISTED trigrams of the needle (df <= the manifest's
+     tri_cutoff; the build writes no list for the others) are intersected
+     in the tri_postings table and contains() verifies only those
+     candidates -- O(trigram df) per query.  A needle with no listed
+     trigram is declined to the plain verify scan; one with a df-0
+     trigram is refuted.  Fallbacks, in order: trigram-bloom column prefilter
      (legacy index layouts), full containment scan (tiny corpora / <3-char
      needles).  The reference pays a full scan on EVERY query.
   4. boolean evaluation + expression scoring per doc: one shuffle
@@ -42,6 +45,12 @@ from pyspark.sql import functions as F
 from probe_spark import elastic, oracle
 from probe_spark.config import DEFAULT_BM25, BM25Params
 from probe_spark.elastic import QueryPlan, Term, walk_terms
+from probe_spark.trigram import (
+    TRI_DIRECT_FLOOR,
+    TRI_DIRECT_FRAC,
+    needle_tri_codes,
+    tri_cutoff,
+)
 
 
 def _term_in(col: str, values) -> "F.Column":
@@ -265,6 +274,20 @@ def _fused_chain_gates(
     return None  # mixed And/Or positives without a required term
 
 
+def _lineage_tri_rows(index_dir: Path, bucket_dir: str) -> int | None:
+    """Lane rows a bucket (``bucket=<b>`` dir name) committed, from its
+    lineage row; None when unrecorded.  Batch buckets log to
+    ``bucket_<b>.json``, stream deltas to ``<b>.json``."""
+    import json
+
+    b = bucket_dir.split("=", 1)[1]
+    name = f"bucket_{b}.json" if b.isdigit() else f"{b}.json"
+    f = index_dir / "lineage" / name
+    if not f.exists():
+        return None
+    return json.loads(f.read_text()).get("n_tri_postings")
+
+
 def _read_stats(stats_dir) -> tuple[int, float]:
     """(n_docs, avgdl) from the singleton stats table via pyarrow -- one
     tiny file read, no Spark job per engine construction."""
@@ -431,16 +454,20 @@ class SearchEngine:
         # the build manifest records which tokenizer produced the postings;
         # more_like_this must analyze the seed doc with the SAME one
         self._tokenizer = "probe"
+        # trigrams with df above the build's tri_cutoff have no posting
+        # list; a manifest without it is a complete lane (all listed)
+        self._tri_listed_max = float("inf")
         mf = p / "manifest.json"
         if mf.exists():
             import json
 
             try:
-                self._tokenizer = json.loads(mf.read_text()).get(
-                    "tokenizer", "probe"
-                )
+                manifest = json.loads(mf.read_text())
             except (OSError, ValueError):
-                pass
+                manifest = {}
+            self._tokenizer = manifest.get("tokenizer", "probe")
+            if manifest.get("tri_cutoff") is not None:
+                self._tri_listed_max = manifest["tri_cutoff"]
         self._postings_path = str(p / "postings")
         # the doc store IS the ingest snapshot (text is written once at
         # build time); doc_len lives in the slim doc_lens table and is
@@ -500,7 +527,9 @@ class SearchEngine:
         # bloom/doc scan.  Enabled only when it COVERS the corpus: every
         # postings bucket must have a tri bucket (a pre-tri-lane index
         # that later received tri-writing stream deltas would otherwise
-        # silently miss containment matches in the old buckets).
+        # silently miss containment matches in the old buckets), unless
+        # its lineage records that it wrote zero lane rows (all of its
+        # trigrams unlisted).
         self._tri_post_df = None
         self._tri_terms_df = None
         self._full_tri_dict = False
@@ -512,7 +541,14 @@ class SearchEngine:
         ):
             post_buckets = {d.name for d in post_root.glob("bucket=*")}
             tri_buckets = {d.name for d in tri_root.glob("bucket=*")}
-            if post_buckets and post_buckets <= tri_buckets:
+            if (
+                post_buckets
+                and tri_buckets
+                and all(
+                    _lineage_tri_rows(p, b) == 0
+                    for b in post_buckets - tri_buckets
+                )
+            ):
                 tri_df = spark.read.parquet(str(tri_root))
                 # layout guard: the lane stores 24-bit byte-trigram CODES
                 # (int); an index from the short-lived string-trigram layout
@@ -681,9 +717,10 @@ class SearchEngine:
     # a plain contains() scan at sf0.1 for a 45%-df needle).  Rare needles
     # -- the dominant case for real quoted/excluded terms at web scale --
     # stay index-served at O(df).  The df check is driver-side and free
-    # (tri dictionary is preloaded/memoized).
-    _TRI_DIRECT_FRAC = 0.05
-    _TRI_DIRECT_FLOOR = 1_000
+    # (tri dictionary is preloaded/memoized).  The rule is
+    # trigram.tri_cutoff, shared with the build; instances may override.
+    _TRI_DIRECT_FRAC = TRI_DIRECT_FRAC
+    _TRI_DIRECT_FLOOR = TRI_DIRECT_FLOOR
     # sentinel: lane PRESENT but declined for this needle (too common) --
     # tells _rescue_candidates to skip the bloom (same density pathology)
     # and verify with the plain scan
@@ -720,20 +757,36 @@ class SearchEngine:
                 out[t] = 0
         return out
 
+    def _tri_select(self, tris: list[int]):
+        """The lane's one selection rule for a needle's trigram codes:
+        [] when some trigram has df 0 (refuted: no doc can contain the
+        needle), _TRI_DECLINED when the rarest trigram is above the
+        selectivity cutoff or no trigram is listed, else the <=
+        _TRI_INTERSECT rarest listed trigrams as (tri, df), rarest first."""
+        dfs = self._tri_dfs(tris)
+        ranked = sorted(tris, key=lambda t: dfs[t])
+        if dfs[ranked[0]] == 0:
+            return []
+        sel = [(t, dfs[t]) for t in ranked if dfs[t] <= self._tri_listed_max]
+        cut = tri_cutoff(
+            self.n_docs, self._TRI_DIRECT_FRAC, self._TRI_DIRECT_FLOOR
+        )
+        if not sel or dfs[ranked[0]] > cut:
+            return self._TRI_DECLINED
+        return sel[: self._TRI_INTERSECT]
+
     def _tri_candidate_ids(self, needle: str):
         """Substring-index candidates for a rescue needle: doc_ids whose
-        haystack holds the needle's RAREST <=3 trigrams (a SUPERSET of the
-        true containment matches -- trigrams present but non-contiguous are
-        possible, so callers still verify contains()).  Returns a list of
-        ids (IN-pushdown into the doc-store read), a lazy DataFrame when
-        the candidate set exceeds the IN cap, [] when some trigram has df 0
-        (no doc can contain the needle), or None when the lane is absent,
-        the needle is shorter than one trigram, or the needle is too
-        COMMON for the prefilter to pay (_TRI_DIRECT_FRAC -- the caller
-        falls back to the plain verify scan it would mostly run anyway).
+        haystack holds the needle's RAREST <=3 listed trigrams (a SUPERSET
+        of the true containment matches -- trigrams present but
+        non-contiguous are possible, so callers still verify contains()).
+        Returns a list of ids (IN-pushdown into the doc-store read), a
+        lazy DataFrame when the candidate set exceeds the IN cap, or what
+        _tri_select returns otherwise ([] refuted, _TRI_DECLINED -- the
+        caller falls back to the plain verify scan it would mostly run
+        anyway); None when the lane is absent or the needle is shorter
+        than one trigram.
         Cost is O(sum of the selected trigram dfs) -- never O(corpus)."""
-        from probe_spark.trigram import needle_tri_codes
-
         if self._tri_post_df is None:
             return None
         tris = needle_tri_codes(needle)
@@ -741,16 +794,11 @@ class SearchEngine:
             return None
         if needle in self._tri_cand_cache:
             return self._tri_cand_cache[needle]
-        dfs = self._tri_dfs(tris)
-        if any(dfs[t] == 0 for t in tris):
-            out: list[int] | DataFrame | None = []
-        elif min(dfs.values()) > max(
-            self._TRI_DIRECT_FRAC * self.n_docs, self._TRI_DIRECT_FLOOR
-        ):
-            # unselective needle: candidates would blanket every row group
-            out = self._TRI_DECLINED
+        picked = self._tri_select(tris)
+        if picked is self._TRI_DECLINED or not picked:
+            out = picked
         else:
-            sel = sorted(tris, key=lambda t: dfs[t])[: self._TRI_INTERSECT]
+            sel = [t for t, _ in picked]
             post = self._tri_post_df.filter(F.col("tri").isin(sel))
             if len(sel) == 1:
                 cand_df = post.select("doc_id")
@@ -763,7 +811,7 @@ class SearchEngine:
                     .filter(F.col("c") == len(sel))
                     .select("doc_id")
                 )
-            if min(dfs[t] for t in sel) > self._BLOOM_ISIN_CAP:
+            if picked[0][1] > self._BLOOM_ISIN_CAP:
                 # provably too many candidates for an IN pushdown: hand
                 # back the lazy frame (caller semi-joins) without collecting
                 out = cand_df
@@ -883,8 +931,6 @@ class SearchEngine:
         known too large), so _rescue_frames afterwards is cache-hits
         only.  Single queries and legacy bloom-only layouts keep the
         per-needle path."""
-        from probe_spark.trigram import needle_tri_codes
-
         ex_key = bool(ex_fn)
         cold = sorted(
             {t for t in needles if (t, ex_key) not in self._verified_cache}
@@ -908,26 +954,20 @@ class SearchEngine:
             if not tris:
                 fullscan.append(t)  # sub-trigram needle: plain verify scan
                 continue
-            dfs = self._tri_dfs(tris)
-            if any(dfs[x] == 0 for x in tris):
+            sel = self._tri_select(tris)
+            if sel is self._TRI_DECLINED:
+                fullscan.append(t)  # lane declines: plain verify scan
+                continue
+            if not sel:
                 # refuted corpus-wide: cache the empty frame now
                 self._cache_verified((t, ex_key), [])
                 self._tri_cand_cache.setdefault(t, [])
                 continue
-            if min(dfs.values()) > max(
-                self._TRI_DIRECT_FRAC * self.n_docs, self._TRI_DIRECT_FLOOR
-            ):
-                fullscan.append(t)  # lane declines: plain verify scan
-                continue
-            sel = sorted(tris, key=lambda x: dfs[x])[: self._TRI_INTERSECT]
-            if min(dfs[x] for x in sel) > cap:
-                # provably more candidates than an IN pushdown takes: the
-                # per-needle path keeps the candidate frame LAZY and
-                # semi-joins it; mirror that as a lazy verify branch
-                n_sel[t] = -len(sel)
-            else:
-                n_sel[t] = len(sel)
-            pair_rows += [(t, int(x)) for x in sel]
+            # provably more candidates than an IN pushdown takes: the
+            # per-needle path keeps the candidate frame LAZY and
+            # semi-joins it; mirror that as a lazy verify branch (n < 0)
+            n_sel[t] = -len(sel) if sel[0][1] > cap else len(sel)
+            pair_rows += [(t, int(x)) for x, _ in sel]
         from pyspark.sql.window import Window
 
         def _cand_df(terms: dict[str, int]):

@@ -12,12 +12,22 @@ same mechanism Iceberg snapshots would give us):
                                 doc_text_df hydrates on demand)
   doc_lens/bucket=i/            slim lengths: doc_id, doc_len
   postings/bucket=i/            flat postings: term, doc_id, tf, doc_len
-  tri_postings/bucket=i/        trigram substring lane: tri, doc_id
+  tri_postings/bucket=i/        trigram substring lane: tri, doc_id, for
+                                LISTED trigrams only (df <= tri_cutoff)
+  tri_partial/bucket=i/         per-bucket trigram counts (tri, df)
   terms_partial/bucket=i/       per-bucket term aggregates (df, cf)
   terms/                        term dictionary: term, df, cf
-  tri_terms/                    trigram dictionary: tri, df
+  tri_terms/                    trigram dictionary: tri, df (true df of
+                                every trigram, summed from tri_partial)
   stats/                        singleton: n_docs, avgdl
   lineage/                      per-bucket build metrics + checkpoints
+
+Listed-trigram rule: ``manifest.tri_cutoff`` = trigram.tri_cutoff(n) of
+phase A's doc count.  A trigram with df above it is never read by the
+engine, so phase B drops its rows: each wave drops the trigrams whose df
+within the rows it writes already exceeds the cutoff.  df never falls, so
+"df <= tri_cutoff" still guarantees a complete posting list.  A manifest
+without ``tri_cutoff`` marks a complete lane (every trigram listed).
 
 Encoding contract: every table is written through ``index_write`` -- zstd,
 v2 data pages, and ``doc_id`` without a dictionary so its sorted runs
@@ -72,6 +82,8 @@ from pyspark.sql.types import (
 )
 
 from pyspark.sql.types import ArrayType, BinaryType
+
+from probe_spark.trigram import tri_cutoff
 
 # Parquet options of every index table.  doc_id is sorted inside each
 # posting run, so with its dictionary off the v2 writer delta + bit-packs
@@ -238,6 +250,53 @@ def tri_rows(token_rows: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     return token_rows.filter(F.col("term").isNull()).select(
         "doc_id", F.explode("tris").alias("tri"), *keep
     )
+
+
+# tri_partial / tri_terms rows; read back with this schema, which skips
+# Spark's schema-inference job
+TRI_DF_SCHEMA = "tri int, df long"
+
+
+def tri_counts(tri: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """(*keep, tri, df) partial counts of lane rows: the tri_partial table."""
+    return tri.groupBy(*keep, "tri").agg(F.count(F.lit(1)).alias("df"))
+
+
+def listed_tri_rows(
+    tri: DataFrame, dfs: DataFrame, cutoff: float | None
+) -> DataFrame:
+    """The lane rows worth writing: ``tri`` minus every trigram whose df,
+    summed over the (tri, df) rows of ``dfs``, exceeds ``cutoff``.  ``dfs``
+    counts at least the rows of ``tri``, so a dropped trigram's true df is
+    above the cutoff too.  A None cutoff (a complete lane) keeps every
+    row.  The dense set is at most (lane rows / cutoff) trigrams, a
+    constant multiple of the distinct trigrams per doc: a small broadcast."""
+    if cutoff is None:
+        return tri
+    dense = (
+        dfs.groupBy("tri")
+        .agg(F.sum("df").alias("df"))
+        .filter(F.col("df") > cutoff)
+        .select("tri")
+    )
+    listed = tri.join(F.broadcast(dense), "tri", "left_anti")
+    return listed.select(*tri.columns)
+
+
+def tri_dictionary(
+    spark: SparkSession, out: Path, pruned: bool
+) -> DataFrame | None:
+    """(tri, df) over the whole lane, or None when the index has no lane.
+    A pruned lane lacks the rows of dense trigrams, so df is summed from
+    tri_partial; a complete lane (no manifest cutoff) counts its rows."""
+    src = out / ("tri_partial" if pruned else "tri_postings")
+    if not (src.exists() and any(src.iterdir())):
+        return None
+    if pruned:
+        parts = spark.read.schema(TRI_DF_SCHEMA).parquet(str(src))
+        return parts.groupBy("tri").agg(F.sum("df").alias("df"))
+    lane = spark.read.parquet(str(src))
+    return lane.groupBy("tri").agg(F.count(F.lit(1)).alias("df"))
 
 
 def _assign_doc_ids(
@@ -516,6 +575,7 @@ def build_index(
         for stale in (
             "lineage", "postings", "doc_lens", "docs", "terms_partial",
             "terms", "stats", "blocks", "tri_postings", "tri_terms",
+            "tri_partial",
         ):
             shutil.rmtree(out / stale, ignore_errors=True)
         (out / "stream_state.json").unlink(missing_ok=True)
@@ -548,6 +608,7 @@ def build_index(
         manifest = {
             "n_buckets": n_buckets,
             "buckets": bucket_meta,
+            "tri_cutoff": tri_cutoff(sum(m["count"] for m in bucket_meta)),
             "tokenizer": tokenizer,
             "emit_bloom": emit_bloom,
             "doc_store": doc_store,
@@ -573,6 +634,7 @@ def build_index(
         manifest_path.write_text(json.dumps(manifest, indent=1))
 
     done = set(_read_lineage(index_dir)) if resume else set()
+    cutoff = manifest.get("tri_cutoff")  # None: resuming a complete lane
 
     # Phase B: per-bucket tokenize + write (resumable unit).  Buckets are
     # independent jobs; submit them from driver threads so Spark's
@@ -661,11 +723,19 @@ def build_index(
             )
         )
         index_write(lens_b.coalesce(2)).parquet(str(lens_dir))
-        # trigram substring-index lane for this bucket (rescue serving);
-        # sorted by tri for row-group pruning at query time
+        # trigram substring-index lane for this bucket (rescue serving):
+        # counts first, then the listed trigrams' rows, sorted by tri for
+        # row-group pruning at query time
         tri_dir = out / "tri_postings" / f"bucket={b}"
+        tri_part_dir = out / "tri_partial" / f"bucket={b}"
+        tri_b = tri_rows(rows)
+        index_write(tri_counts(tri_b).coalesce(2)).parquet(str(tri_part_dir))
         index_write(
-            tri_rows(rows)
+            listed_tri_rows(
+                tri_b,
+                spark.read.schema(TRI_DF_SCHEMA).parquet(str(tri_part_dir)),
+                cutoff,
+            )
             .repartition(max(2, par // 2), "tri")
             .sortWithinPartitions("tri", "doc_id")
         ).parquet(str(tri_dir))
@@ -694,6 +764,7 @@ def build_index(
                 "bytes_out": _dir_bytes(postings_dir)
                 + _dir_bytes(lens_dir)
                 + _dir_bytes(tri_dir),
+                "n_tri_postings": _committed_parquet_rows(tri_dir),
                 "wall_ms": wall_ms,
                 "finished_ts": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
@@ -855,10 +926,30 @@ def build_index(
         def _write_tri() -> None:
             # trigram substring-index lane (rescue serving, see tri_rows):
             # pure explode of the cached tokenize output's tris arrays --
-            # no extra text read, no Python
+            # no extra text read, no Python.  Per-bucket counts land first;
+            # summed over the wave they name the trigrams this wave drops.
+            tri = tri_rows(rows, keep=("bucket",))
+            tri_part_root = out / "tri_partial"
+            (
+                index_write(tri_counts(tri, keep=("bucket",)))
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("bucket")
+                .parquet(str(tri_part_root))
+            )
+            wave_parts = [
+                str(d)
+                for d in (tri_part_root / f"bucket={b}" for b in existing)
+                if d.exists()
+            ]
+            if not wave_parts:  # no doc of the wave holds a trigram
+                return
             (
                 index_write(
-                    tri_rows(rows, keep=("bucket",))
+                    listed_tri_rows(
+                        tri,
+                        spark.read.schema(TRI_DF_SCHEMA).parquet(*wave_parts),
+                        cutoff,
+                    )
                     .repartition(
                         max(2, par, int(total_bytes // (128 << 20))),
                         "bucket",
@@ -918,6 +1009,12 @@ def build_index(
                         _dir_bytes(out / t / f"bucket={b}")
                         for t in ("postings", "doc_lens", "tri_postings")
                     ),
+                    # zero rows is a bucket whose trigrams are all
+                    # unlisted: it has no tri_postings dir, yet the lane
+                    # covers it (engine coverage guard)
+                    "n_tri_postings": _committed_parquet_rows(
+                        out / "tri_postings" / f"bucket={b}"
+                    ),
                     # wall attributed by input share so the lineage sum
                     # equals the real wave wall (per-bucket walls from the
                     # old concurrent pool double-counted overlap)
@@ -976,16 +1073,11 @@ def build_index(
     index_write(sorted_dictionary(terms, spark)).parquet(str(out / "terms"))
 
     # trigram dictionary (tri, df): the driver-cached rarest-trigram
-    # selector for rescue serving.  Input is the slim (doc_id, tri) lane;
-    # vocab is charset-bounded (tiny vs the corpus), one agg job.
-    tri_root = out / "tri_postings"
-    if tri_root.exists() and any(tri_root.iterdir()):
-        index_write(
-            spark.read.parquet(str(tri_root))
-            .groupBy("tri")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .coalesce(4)
-        ).parquet(str(out / "tri_terms"))
+    # selector for rescue serving, re-aggregated from the per-bucket
+    # partials; vocab is charset-bounded (tiny vs the corpus), one agg job.
+    tri_dict = tri_dictionary(spark, out, pruned=cutoff is not None)
+    if tri_dict is not None:
+        index_write(tri_dict.coalesce(4)).parquet(str(out / "tri_terms"))
 
     lineage = _read_lineage(index_dir)
     if lineage and all("sum_dl" in r for r in lineage.values()):

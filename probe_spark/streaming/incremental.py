@@ -22,6 +22,11 @@ Design:
     stats from running totals carried in stream_state.json (doc counts and
     doc_len sums come from the committed delta's parquet footers -- no
     extra jobs over the index, and exact under retries/speculation);
+  * the trigram lane keeps the build's invariant "df <= tri_cutoff =>
+    complete list" (indexer docstring): the delta writes its tri_partial
+    counts, drops the trigrams whose folded df exceeds the manifest's
+    cutoff, and tri_terms folds the partial.  df never falls (no deletes),
+    so a trigram once unlisted stays unlisted;
   * the flat-postings query engine sees appended postings immediately;
     compaction folds deltas into block-max blocks on demand.
 """
@@ -38,17 +43,26 @@ from pyspark.sql import functions as F
 
 from probe_spark.indexer import (
     TOKENS_SCHEMA,
+    TRI_DF_SCHEMA,
     _assign_doc_ids,
     _make_tokenize_partition,
     _read_lineage,
     _tokenize_partition,
     index_write,
+    listed_tri_rows,
     sorted_dictionary,
+    tri_counts,
+    tri_dictionary,
     tri_rows,
     write_stats,
 )
 
 PAGES_SCHEMA = "url string, text string, lang string"
+
+
+def _read_manifest(index_dir: str) -> dict:
+    p = Path(index_dir) / "manifest.json"
+    return json.loads(p.read_text()) if p.exists() else {}
 
 
 def _read_state(index_dir: str) -> dict:
@@ -148,7 +162,10 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
             roll_forward = True
             folded.add(b)
         else:  # roll back the un-committed bucket
-            for t in ("postings", "doc_lens", "terms_partial", "tri_postings"):
+            for t in (
+                "postings", "doc_lens", "terms_partial", "tri_postings",
+                "tri_partial",
+            ):
                 shutil.rmtree(out / t / f"bucket={b}", ignore_errors=True)
             (out / "lineage" / f"{b}.json").unlink(missing_ok=True)
     if roll_forward:
@@ -203,41 +220,45 @@ def _fold_terms(spark: SparkSession, index_dir: str, new_partial: Path) -> None:
 
 
 def _rebuild_tri_terms(spark: SparkSession, index_dir: str) -> None:
-    """Idempotent tri-dictionary rebuild from the full tri_postings lane
-    (slim doc_id+tri input; used by crash recovery and as the healing
-    fold when tri_terms is absent)."""
+    """Idempotent tri-dictionary rebuild from every bucket's tri_partial
+    (a complete lane without a manifest cutoff counts its rows; used by
+    crash recovery and as the healing fold when tri_terms is absent)."""
     out = Path(index_dir)
-    tri_root = out / "tri_postings"
-    if not (tri_root.exists() and any(tri_root.iterdir())):
+    pruned = _read_manifest(index_dir).get("tri_cutoff") is not None
+    folded = tri_dictionary(spark, out, pruned)
+    if folded is None:
         return
-    folded = (
-        spark.read.parquet(str(tri_root))
-        .groupBy("tri")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
     tmp = out / "tri_terms_tmp"
     index_write(folded.coalesce(4)).parquet(str(tmp))
     shutil.rmtree(out / "tri_terms", ignore_errors=True)
     tmp.rename(out / "tri_terms")
 
 
-def _fold_tri_terms(spark: SparkSession, index_dir: str, delta_bucket: Path) -> None:
+def _folded_tri_dfs(spark: SparkSession, index_dir: str, delta_partial: Path):
+    """(tri, df) rows whose per-tri sum is the dictionary after folding
+    the delta: current tri_terms + the delta's tri_partial (or the delta
+    alone on an index without tri_terms)."""
+    t_dir = Path(index_dir) / "tri_terms"
+    read = spark.read.schema(TRI_DF_SCHEMA).parquet
+    delta = read(str(delta_partial))
+    if t_dir.exists() and any(t_dir.iterdir()):
+        return read(str(t_dir)).unionByName(delta)
+    return delta
+
+
+def _fold_tri_terms(
+    spark: SparkSession, index_dir: str, delta_partial: Path
+) -> None:
     """Incremental tri-dictionary fold: current tri_terms + the NEW
-    bucket's counts only (mirrors _fold_terms); full rebuild when
+    bucket's tri_partial only (mirrors _fold_terms); full rebuild when
     tri_terms is missing (e.g. first delta on a pre-tri-lane index)."""
     out = Path(index_dir)
     t_dir = out / "tri_terms"
     if not (t_dir.exists() and any(t_dir.iterdir())):
         _rebuild_tri_terms(spark, index_dir)
         return
-    delta = (
-        spark.read.parquet(str(delta_bucket))
-        .groupBy("tri")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
     folded = (
-        spark.read.parquet(str(t_dir))
-        .unionByName(delta)
+        _folded_tri_dfs(spark, index_dir, delta_partial)
         .groupBy("tri")
         .agg(F.sum("df").alias("df"))
     )
@@ -258,20 +279,15 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     batches back (no commit marker) or forward (committed but not folded
     into terms/stats)."""
     out = Path(index_dir)
-    manifest_path = out / "manifest.json"
-    manifest = {}
-    if manifest_path.exists():
-        import json as _json
-
-        manifest = _json.loads(manifest_path.read_text())
-        if manifest.get("doc_store") == "reference":
-            # the stream's pages_indexed delta IS the doc store copy; a
-            # slim reference layout has no text lane to append to, and its
-            # source table is an immutable snapshot the stream can't extend
-            raise ValueError(
-                "incremental ingest requires a copy-mode doc store; "
-                "rebuild with doc_store='copy' to stream into this index"
-            )
+    manifest = _read_manifest(index_dir)
+    if manifest.get("doc_store") == "reference":
+        # the stream's pages_indexed delta IS the doc store copy; a slim
+        # reference layout has no text lane to append to, and its source
+        # table is an immutable snapshot the stream can't extend
+        raise ValueError(
+            "incremental ingest requires a copy-mode doc store; "
+            "rebuild with doc_store='copy' to stream into this index"
+        )
     state = _read_state(index_dir) or _bootstrap_totals(spark, index_dir)
     state = _reconcile(spark, index_dir, state)
     base = int(state["next_doc_id"])
@@ -320,15 +336,27 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     # attempt, so a retried or speculative duplicate would inflate sum_dl
     # (and through it avgdl and every BM25 score) even though the commit
     # protocol discarded the losing attempt's files
-    from probe_spark.indexer import _committed_column_sum
+    from probe_spark.indexer import (
+        _committed_column_sum,
+        _committed_parquet_rows,
+    )
 
     sum_dl = _committed_column_sum(lens_delta, "doc_len")
     # trigram substring-index lane for the delta (rescue serving): explode
-    # of the cached tokenize output's tris arrays (indexer.tri_rows)
+    # of the cached tokenize output's tris arrays (indexer.tri_rows).  The
+    # delta's counts land first; the rows of trigrams whose folded df
+    # exceeds the manifest's cutoff are dropped
     tri_delta = out / "tri_postings" / f"bucket={bucket}"
-    index_write(tri_rows(rows).sortWithinPartitions("tri", "doc_id")).parquet(
-        str(tri_delta)
-    )
+    tri_part = out / "tri_partial" / f"bucket={bucket}"
+    tri = tri_rows(rows)
+    index_write(tri_counts(tri).coalesce(1)).parquet(str(tri_part))
+    index_write(
+        listed_tri_rows(
+            tri,
+            _folded_tri_dfs(spark, index_dir, tri_part),
+            manifest.get("tri_cutoff"),
+        ).sortWithinPartitions("tri", "doc_id")
+    ).parquet(str(tri_delta))
     tpart = out / "terms_partial" / f"bucket={bucket}"
     index_write(
         rows.filter(F.col("term").isNotNull())
@@ -347,6 +375,7 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
                 "bucket": bucket,
                 "n_docs": n_docs,
                 "sum_dl": sum_dl,
+                "n_tri_postings": _committed_parquet_rows(tri_delta),
                 "epoch": epoch_id,
                 "finished_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
@@ -361,7 +390,7 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     ).parquet(str(out / "pages_indexed" / f"bucket={bucket}"))
     rows.unpersist()
     _fold_terms(spark, index_dir, tpart)
-    _fold_tri_terms(spark, index_dir, tri_delta)
+    _fold_tri_terms(spark, index_dir, tri_part)
     # stats from running totals -- no job over the (ever-growing) index
     state = {
         "next_doc_id": base + n_docs,

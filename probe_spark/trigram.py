@@ -26,6 +26,26 @@ from __future__ import annotations
 
 import numpy as np
 
+# Selectivity rule of the trigram postings lane.  A trigram whose df
+# exceeds tri_cutoff(n) is too common to prune the containment verify: its
+# candidates blanket every parquet row group.  The engine never serves a
+# needle from such a list, so the build does not write it (only "useful"
+# grams are indexed, as in FREE: Cho & Rajagopalan, ICDE 2002); tri_terms
+# still records every trigram's true df.
+TRI_DIRECT_FRAC = 0.05
+TRI_DIRECT_FLOOR = 1_000
+
+
+def tri_cutoff(
+    n_docs: int, frac: float | None = None, floor: float | None = None
+) -> float:
+    """The lane's df cutoff ``max(frac * n_docs, floor)`` (module defaults
+    when unset): trigrams with df above it are unlisted."""
+    frac = TRI_DIRECT_FRAC if frac is None else frac
+    floor = TRI_DIRECT_FLOOR if floor is None else floor
+    return max(frac * n_docs, floor)
+
+
 BLOOM_BYTES = 1024
 BLOOM_BITS = BLOOM_BYTES * 8  # power of two: cheap masking
 _MULTS = (np.uint64(0x9E3779B97F4A7C15), np.uint64(0xC2B2AE3D27D4EB4F))

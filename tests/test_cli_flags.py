@@ -138,6 +138,7 @@ def test_config_subcommand(ix, capsys):
     assert cfg["query"]["max_terms"] == 256
     assert cfg["stats"]["n_docs"] == 1000
     assert "postings" in cfg["tables"] and "tri_postings" in cfg["tables"]
+    assert cfg["manifest"]["tri_cutoff"] == 1_000  # max(0.05 * 1000, floor)
     assert cfg["suggest_buckets"] is None  # no lane built on this index
 
 
@@ -160,6 +161,8 @@ def test_config_without_index(capsys):
     assert rc == 0
     cfg = json.loads(out.out)
     assert "stats" not in cfg and cfg["rescue"]["tri_intersect"] == 3
+    assert cfg["rescue"]["tri_direct_frac"] == 0.05
+    assert cfg["rescue"]["tri_direct_floor"] == 1_000
 
 
 # -- grep asymmetric context + color ----------------------------------------

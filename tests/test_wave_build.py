@@ -5,8 +5,15 @@ The knob exists to bound the build's in-flight block-manager footprint
 (persisted tokenize cache + three repartition shuffles per wave); it must
 be a pure scheduling choice -- every derived table byte-identical row-wise
 to the default single-wave layout, and lineage still one row per bucket so
-resume granularity is unchanged."""
+resume granularity is unchanged.
 
+Both builds patch TRI_DIRECT_FLOOR to 0 (cutoff 0.05 * 200 = 10), so the
+trigram lane is pruned: each wave drops the trigrams dense within it, and
+the listed trigrams (true df <= cutoff) must keep identical lists."""
+
+from pyspark.sql import functions as F
+
+from probe_spark import trigram
 from probe_spark.fixtures import pages_df
 from probe_spark.indexer import build_index
 
@@ -15,6 +22,7 @@ from tests.test_spark_engine import lambda_cols
 
 def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
     pages = pages_df(spark, 200)
+    monkeypatch.setattr(trigram, "TRI_DIRECT_FLOOR", 0)
 
     monkeypatch.delenv("PROBE_BUILD_WAVE_BUCKETS", raising=False)
     single_dir = tmp_path / "single"
@@ -27,7 +35,9 @@ def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
     assert m_waved["n_postings"] == m_single["n_postings"]
     assert m_waved["n_docs"] == m_single["n_docs"]
 
-    for table in ("pages_indexed", "doc_lens", "postings", "terms", "stats"):
+    for table in (
+        "pages_indexed", "doc_lens", "postings", "terms", "stats", "tri_terms",
+    ):
         a = (
             spark.read.parquet(f"{single_dir}/{table}")
             .toPandas()
@@ -41,6 +51,23 @@ def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
             .reset_index(drop=True)
         )
         assert a.equals(b), f"{table} differs between single-wave and waved build"
+
+    def listed_rows(ix):
+        listed = (
+            spark.read.parquet(f"{ix}/tri_terms")
+            .filter(F.col("df") <= 10)
+            .select("tri")
+        )
+        lane = spark.read.parquet(f"{ix}/tri_postings")
+        rows = lane.join(listed, "tri", "left_semi").select("tri", "doc_id")
+        return sorted(map(tuple, rows.collect()))
+
+    single_listed = listed_rows(single_dir)
+    assert single_listed and listed_rows(waved_dir) == single_listed
+    # the single wave prunes exactly: it lists nothing else
+    assert spark.read.parquet(f"{single_dir}/tri_postings").count() == len(
+        single_listed
+    )
 
     lineage = spark.read.json(f"{waved_dir}/lineage")
     assert lineage.select("bucket").distinct().count() == 5
