@@ -46,7 +46,9 @@ def _documents_index(spark: SparkSession, sf_dir: str) -> str:
     # so a cached index in the older snappy layout stays valid
     # (tests/test_index_layout.py pins that).  Nor did the listed-trigram
     # lane (manifest tri_cutoff): a cached index without a cutoff is a
-    # complete lane, which the engine still serves exactly.
+    # complete lane, which the engine still serves exactly.  Nor did
+    # sizing files by bytes (one sorted file per bucket per table):
+    # readers do not depend on file count.
     key = hashlib.md5(f"{sf_dir}:v3".encode()).hexdigest()[:12]
     ix = _CACHE_ROOT / key
     if (ix / "stats").exists() and not (

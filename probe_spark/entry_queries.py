@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import math
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,13 +40,21 @@ TERMS3 = ("spark", "join", "window")
 # schema runs a footer-inference JOB on every call (~0.1 s of pure fixed
 # cost per operator invocation); caching the INFERRED schema and passing
 # it back via .schema() makes repeat reads job-free.  Metadata only --
-# never rows -- and keyed by file mtime so a rewritten table re-infers.
+# never rows -- and keyed by the newest mtime of the path and every file
+# under it, so a table re-infers when a part file is added, removed or
+# rewritten in place (a rewrite leaves the directory's own mtime alone).
 _SCHEMA_CACHE: dict[tuple[str, float], object] = {}
+
+
+def _pq_mtime(path: str) -> float:
+    root = Path(path)
+    files = root.rglob("*") if root.is_dir() else ()
+    return max(f.stat().st_mtime for f in (root, *files))
 
 
 def _read_pq(spark: SparkSession, path: str) -> DataFrame:
     try:
-        key = (path, os.path.getmtime(path))
+        key = (path, _pq_mtime(path))
     except OSError:
         return spark.read.parquet(path)
     sch = _SCHEMA_CACHE.get(key)
@@ -82,7 +91,6 @@ def _table_rows(spark: SparkSession, sf_dir: str, table: str) -> int:
     the same pattern engine._read_stats uses).  Falls back to a Spark
     count if a footer is unreadable."""
     import pyarrow.parquet as pq
-    from pathlib import Path
 
     p = Path(f"{sf_dir}/{table}.parquet")
     try:
@@ -102,8 +110,6 @@ def _vec_by_id(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
     (the _table_rows pattern; the float32 -> Python-float widening is the
     same exact conversion the Spark head() path performed).  Falls back to
     a Spark lookup if the path is not a plain readable file."""
-    from pathlib import Path
-
     import pyarrow.parquet as pq
 
     p = Path(f"{sf_dir}/embeddings.parquet")
@@ -3283,7 +3289,9 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dup_frac(F.col("g3")).alias("dup_3gram_frac"),
         n.alias("_n"),
     )
-    return base.join(top_counts, "doc_id").select(
+    # left join: a null-text doc has no exploded word and keeps its row
+    # with a null top_word_frac
+    return base.join(top_counts, "doc_id", "left").select(
         "doc_id",
         "n_words",
         "dup_2gram_frac",

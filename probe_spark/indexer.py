@@ -34,6 +34,16 @@ v2 data pages, and ``doc_id`` without a dictionary so its sorted runs
 delta-encode (DELTA_BINARY_PACKED); readers are encoding-agnostic, so
 layouts written with other codecs stay valid.
 
+File sizing rule (``sorted_files``): files are sized by bytes, never by
+cores.  Each bucket of postings, doc_lens and terms_partial is
+k = max(1, ceil(bucket input bytes / FILE_BYTES)) files (TRI_FILE_BYTES
+for tri_postings and tri_partial): the write shuffles on
+(bucket, pmod(hash(key), k)), so a bucket's rows land in exactly k
+partitions and every file is a complete (key, doc_id)-sorted run.  The
+dictionaries (terms, tri_terms) are one file until their source outgrows
+the target; a streaming delta is one bucket sized by its input files.
+Readers do not depend on file count, so older layouts stay valid.
+
 Scale design notes (explicitly, per the north rule):
   * doc_id is the global url-lexicographic rank (FIXTURES.md SS1, mirroring
     probe's doc-index tie-break at ranking.rs:408-420), assigned WITHOUT a
@@ -47,13 +57,14 @@ Scale design notes (explicitly, per the north rule):
     build's write volume for nothing.
   * per-doc TF is computed map-side inside the tokenize mapInPandas UDF
     (one Arrow pass, no explode->groupBy shuffle for TF).
-  * postings within a bucket are hash-partitioned by term (a term's
-    postings land in exactly one file per bucket -- no sampling pass, and
-    skew-free since terms spread uniformly) and sorted by (term, doc_id),
-    so parquet row-group stats prune term lookups at query time; buckets
-    double as salt for hot-term skew -- a head term's postings are B
-    independent sorted runs merged at query or compaction time (SURVEY.md
-    SS4 skew handling).
+  * a bucket's postings are one (term, doc_id)-sorted file until the
+    bucket outgrows FILE_BYTES, then k files split by term hash (the
+    sizing rule above: a term's postings still sit in exactly one file
+    per bucket, no sampling pass, skew-free since terms spread
+    uniformly); parquet row-group stats prune term lookups at query
+    time.  Buckets double as salt for hot-term skew -- a head term's
+    postings are B independent sorted runs merged at query or compaction
+    time (SURVEY.md SS4 skew handling).
   * global aggregates need no extra passes over data: doc counts and
     doc_len sums come from committed parquet footers / a one-pass metrics
     agg (stats is written driver-side from lineage sums; exact under task
@@ -98,6 +109,54 @@ INDEX_PARQUET = {
 def index_write(df: DataFrame) -> DataFrameWriter:
     """The one writer for index tables: overwrite mode + INDEX_PARQUET."""
     return df.write.mode("overwrite").options(**INDEX_PARQUET)
+
+
+# Sizing targets, in bytes of a bucket's input (its doc-store share): a
+# bucket's table is one sorted file until its input outgrows the target.
+# Posting-keyed tables (postings, doc_lens, terms_partial, the term
+# dictionary) use FILE_BYTES, the trigram lane TRI_FILE_BYTES.
+FILE_BYTES = 256 << 20
+TRI_FILE_BYTES = 128 << 20
+
+
+def file_count(nbytes: int, target: int) -> int:
+    """Files per bucket of one table: max(1, ceil(nbytes / target))."""
+    return max(1, -(-int(nbytes) // target))
+
+
+def sorted_files(
+    df: DataFrame, files: int | dict, *order: str, unique: bool = False
+) -> DataFrame:
+    """Lay ``df`` out for an index write: each file sorted by ``order``,
+    rows placed by a hash of its first column (the key), so a key's rows
+    sit in one file per bucket.  ``files`` is the file count of a
+    single-bucket write, or {bucket: count} for a partitionBy("bucket")
+    write, where bucket b's rows land in exactly ``files[b]`` partitions
+    of its own.  A single-bucket table whose key is ``unique`` (doc_lens,
+    the partials) needs no placement, so it coalesces instead of
+    shuffling; use it only where ``df`` is cached or aggregated, since a
+    coalesce also narrows the stage that computes it."""
+    def sub(k):  # the key's file within its bucket
+        return F.pmod(F.hash(order[0]), k)
+
+    if isinstance(files, int):
+        placed = (
+            df.coalesce(files)
+            if unique
+            else df.repartitionById(files, sub(F.lit(files)))
+        )
+        return placed.sortWithinPartitions(*order)
+    # bucket b owns partitions [starts[b], starts[b] + files[b])
+    starts, n = {}, 0
+    for b in sorted(files):
+        starts[b], n = n, n + files[b]
+
+    def per_bucket(m: dict):
+        pairs = [F.lit(x) for kv in m.items() for x in kv]
+        return F.element_at(F.create_map(*pairs), F.col("bucket"))
+
+    pid = per_bucket(starts) + sub(per_bucket(files))
+    return df.repartitionById(n, pid).sortWithinPartitions("bucket", *order)
 
 
 TOKENS_SCHEMA = StructType(
@@ -252,9 +311,20 @@ def tri_rows(token_rows: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-# tri_partial / tri_terms rows; read back with this schema, which skips
-# Spark's schema-inference job
+# tri_partial / tri_terms and terms_partial / terms rows; read back with
+# these schemas, which skip Spark's schema-inference job
 TRI_DF_SCHEMA = "tri int, df long"
+TERMS_SCHEMA = "term string, df long, cf long"
+
+
+def term_counts(rows: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
+    """(*keep, term, df, cf) partial counts of the tokenize output's
+    posting rows: the terms_partial table."""
+    return (
+        rows.filter(F.col("term").isNotNull())
+        .groupBy(*keep, "term")
+        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+    )
 
 
 def tri_counts(tri: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
@@ -288,15 +358,19 @@ def tri_dictionary(
 ) -> DataFrame | None:
     """(tri, df) over the whole lane, or None when the index has no lane.
     A pruned lane lacks the rows of dense trigrams, so df is summed from
-    tri_partial; a complete lane (no manifest cutoff) counts its rows."""
+    tri_partial; a complete lane (no manifest cutoff) counts its rows.
+    Laid out for its write: one file until the source outgrows
+    TRI_FILE_BYTES (the driver reads it whole, so no order is kept)."""
     src = out / ("tri_partial" if pruned else "tri_postings")
     if not (src.exists() and any(src.iterdir())):
         return None
     if pruned:
         parts = spark.read.schema(TRI_DF_SCHEMA).parquet(str(src))
-        return parts.groupBy("tri").agg(F.sum("df").alias("df"))
-    lane = spark.read.parquet(str(src))
-    return lane.groupBy("tri").agg(F.count(F.lit(1)).alias("df"))
+        tri_dict = parts.groupBy("tri").agg(F.sum("df").alias("df"))
+    else:
+        lane = spark.read.parquet(str(src))
+        tri_dict = lane.groupBy("tri").agg(F.count(F.lit(1)).alias("df"))
+    return tri_dict.coalesce(file_count(_dir_bytes(src), TRI_FILE_BYTES))
 
 
 def _assign_doc_ids(
@@ -329,9 +403,10 @@ def _assign_doc_ids(
         .withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(F.count(F.lit(1)).alias("count"), F.min("url").alias("lo"))
-        .orderBy("pid")
         .collect()
     )
+    # <= P rows: sorted here, as a Spark orderBy would cost two more jobs
+    slice_rows.sort(key=lambda r: r["pid"])
     # nonempty slices in url order; slice i covers [lo_i, lo_{i+1})
     slices = [r for r in slice_rows if r["count"] > 0]
     bounds = [r["lo"] for r in slices[1:]]  # first slice needs no lower bound
@@ -409,6 +484,17 @@ def bytes_by_table(index_dir: Path) -> dict[str, int]:
     }
 
 
+def files_by_table(index_dir: Path) -> dict[str, int]:
+    """Parquet file count of every top-level table of an index dir (a
+    driver-side directory walk, no Spark job): the layout's per-file
+    overhead (footer, page index, checksum sidecar) scales with it."""
+    return {
+        p.name: sum(1 for _ in p.rglob("*.parquet"))
+        for p in sorted(Path(index_dir).iterdir())
+        if p.is_dir()
+    }
+
+
 def _committed_parquet_rows(path: Path) -> int:
     """Exact row count of a committed parquet dir from file footers
     (driver-side metadata read, no Spark job).  Unlike ``observe`` on the
@@ -456,15 +542,17 @@ def write_stats(index_dir: str, n_docs: int, avgdl: float) -> None:
     pq.write_table(table, out / "part-00000.parquet", compression="zstd")
 
 
-def sorted_dictionary(terms: DataFrame, spark: SparkSession) -> DataFrame:
-    """Term-dictionary write layout: range-partitioned + sorted by term,
-    so parquet min/max statistics turn dictionary lookups into row-group
-    reads instead of vocabulary scans -- prefix_search's StringStartsWith
-    and the engine's per-term df fallback (the web-vocab path where the
-    whole-dictionary preload is disabled) both push down to the scan.
-    Terms are unique strings, so the range partitioning is skew-free by
-    construction."""
-    n = max(4, spark.sparkContext.defaultParallelism // 2)
+def sorted_dictionary(terms: DataFrame, src_bytes: int) -> DataFrame:
+    """Term-dictionary write layout: sorted by term, so parquet min/max
+    statistics turn dictionary lookups into row-group reads instead of
+    vocabulary scans -- prefix_search's StringStartsWith and the engine's
+    per-term df fallback (the web-vocab path where the whole-dictionary
+    preload is disabled) both push down to the scan.  One file until
+    ``src_bytes`` (the on-disk bytes it is aggregated from) outgrows
+    FILE_BYTES, then term ranges: terms are unique strings, so the range
+    partitioning is skew-free by construction, and a single range needs
+    no sampling job."""
+    n = file_count(src_bytes, FILE_BYTES)
     return terms.repartitionByRange(n, "term").sortWithinPartitions("term")
 
 
@@ -547,7 +635,8 @@ def build_index(
         None (read from source_path).
 
     Returns build metrics (also persisted in the lineage table), plus
-    ``bytes_by_table``: the index footprint per top-level table.
+    ``bytes_by_table`` and ``files_by_table``: the index footprint and
+    parquet file count per top-level table.
     """
     if doc_store not in ("copy", "reference"):
         raise ValueError(f"doc_store must be 'copy' or 'reference': {doc_store!r}")
@@ -636,10 +725,14 @@ def build_index(
     done = set(_read_lineage(index_dir)) if resume else set()
     cutoff = manifest.get("tri_cutoff")  # None: resuming a complete lane
 
-    # Phase B: per-bucket tokenize + write (resumable unit).  Buckets are
-    # independent jobs; submit them from driver threads so Spark's
-    # scheduler interleaves their tasks and keeps all cores busy across
-    # the per-bucket barriers (standard concurrent-jobs pattern).
+    def _text_bytes(b: int) -> int:
+        """Input bytes of bucket b, the unit of task and file sizing."""
+        if manifest.get("doc_store") == "reference":
+            # slim store holds no text: the bucket's share of the source
+            return _dir_bytes(Path(source_path)) // max(n_buckets, 1)
+        return _dir_bytes(pages_indexed_dir / f"bucket={b}")
+
+    # Phase B: per-bucket tokenize + write (resumable unit).
     def _build_bucket(b: int) -> None:
         t0 = time.time()
         if not (pages_indexed_dir / f"bucket={b}").exists():
@@ -660,12 +753,10 @@ def build_index(
         # input text per tokenize task) with a floor of 2x cores so small
         # buckets still use the whole machine and stragglers even out
         par = spark.sparkContext.defaultParallelism
-        if manifest.get("doc_store") == "reference":
-            # slim store holds no text: size tasks by the source's share
-            bucket_bytes = _dir_bytes(Path(source_path)) // max(n_buckets, 1)
-        else:
-            bucket_bytes = _dir_bytes(pages_indexed_dir / f"bucket={b}")
+        bucket_bytes = _text_bytes(b)
         n_tasks = max(par * 2, int(bucket_bytes // (64 << 20)))
+        files = file_count(bucket_bytes, FILE_BYTES)
+        tri_files = file_count(bucket_bytes, TRI_FILE_BYTES)
         bucket_pages = spark.read.parquet(
             str(pages_indexed_dir / f"bucket={b}")
         )
@@ -694,27 +785,20 @@ def build_index(
         lens_dir = out / "doc_lens" / f"bucket={b}"
         postings_dir = out / "postings" / f"bucket={b}"
         tpart_dir = out / "terms_partial" / f"bucket={b}"
-        # postings first: this job materializes the persisted tokenization
-        # at full parallelism; the small doc_lens/terms_partial jobs below
-        # then read from cache.  Hash repartition by term (no sampling
-        # pass, unlike repartitionByRange) keeps a term's postings in one
-        # file per bucket; sortWithinPartitions gives tight row-group
-        # term ranges for query-time pruning.  Row counts/sums come from
-        # the COMMITTED parquet footers after each write (exact under task
-        # retries and speculation, unlike observe on the write) -- still
-        # no separate count jobs.
-        postings_b = (
-            rows.filter(F.col("term").isNotNull())
-            .select("term", "doc_id", "tf", "tf_url", "doc_len")
-            # postings bytes track input text bytes (~1 posting row per
-            # ~10 input bytes, heavily compressed); size the term-hash
-            # shuffle so each output file stays row-group friendly
-            .repartition(
-                max(2, par // 2, int(bucket_bytes // (256 << 20))), "term"
-            )
-            .sortWithinPartitions("term", "doc_id")
+        # postings first: this job materializes the persisted tokenization;
+        # the small doc_lens/terms_partial jobs below then read from cache.
+        # Files are sized by bytes (sorted_files): a term's postings sit in
+        # one (term, doc_id)-sorted file, whose row-group term ranges prune
+        # lookups at query time.  Row counts/sums come from the COMMITTED
+        # parquet footers after each write (exact under task retries and
+        # speculation, unlike observe on the write) -- still no separate
+        # count jobs.
+        postings_b = rows.filter(F.col("term").isNotNull()).select(
+            "term", "doc_id", "tf", "tf_url", "doc_len"
         )
-        index_write(postings_b).parquet(str(postings_dir))
+        index_write(sorted_files(postings_b, files, "term", "doc_id")).parquet(
+            str(postings_dir)
+        )
         lens_b = (
             rows.filter(F.col("term").isNull())
             .select(
@@ -722,31 +806,31 @@ def build_index(
                 *(["tri_bloom"] if emit_bloom else []),
             )
         )
-        index_write(lens_b.coalesce(2)).parquet(str(lens_dir))
+        index_write(
+            sorted_files(lens_b, files, "doc_id", unique=True)
+        ).parquet(str(lens_dir))
         # trigram substring-index lane for this bucket (rescue serving):
         # counts first, then the listed trigrams' rows, sorted by tri for
         # row-group pruning at query time
         tri_dir = out / "tri_postings" / f"bucket={b}"
         tri_part_dir = out / "tri_partial" / f"bucket={b}"
         tri_b = tri_rows(rows)
-        index_write(tri_counts(tri_b).coalesce(2)).parquet(str(tri_part_dir))
         index_write(
-            listed_tri_rows(
-                tri_b,
-                spark.read.schema(TRI_DF_SCHEMA).parquet(str(tri_part_dir)),
-                cutoff,
-            )
-            .repartition(max(2, par // 2), "tri")
-            .sortWithinPartitions("tri", "doc_id")
+            sorted_files(tri_counts(tri_b), tri_files, "tri", unique=True)
+        ).parquet(str(tri_part_dir))
+        listed_b = listed_tri_rows(
+            tri_b,
+            spark.read.schema(TRI_DF_SCHEMA).parquet(str(tri_part_dir)),
+            cutoff,
+        )
+        index_write(
+            sorted_files(listed_b, tri_files, "tri", "doc_id")
         ).parquet(str(tri_dir))
         # per-bucket term partials from the cached tokenization: the final
         # dictionary re-aggregates these (vocab-sized) instead of scanning
         # the full postings table again
         index_write(
-            rows.filter(F.col("term").isNotNull())
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-            .coalesce(2)
+            sorted_files(term_counts(rows), files, "term", unique=True)
         ).parquet(str(tpart_dir))
         n_postings = _committed_parquet_rows(postings_dir)
         n_docs = _committed_parquet_rows(lens_dir)
@@ -807,18 +891,16 @@ def build_index(
         in_bytes = {
             b: _dir_bytes(pages_indexed_dir / f"bucket={b}") for b in existing
         }
-        total_bytes = sum(in_bytes.values())
-        if manifest.get("doc_store") == "reference":
-            # slim store holds no text: size the wave by the source's
-            # share (the join below pulls the text from there)
-            total_bytes = int(
-                _dir_bytes(Path(source_path))
-                * len(existing)
-                / max(n_buckets, 1)
-            )
+        text_bytes = {b: _text_bytes(b) for b in existing}
+        total_bytes = sum(text_bytes.values())
         # data-proportional tasks (~64 MB input text each) with a floor
         # of 2x cores so small inputs still use the whole machine
         n_tasks = max(par * 2, int(total_bytes // (64 << 20)))
+        # output files per bucket and table, by bytes (sorted_files)
+        files = {b: file_count(n, FILE_BYTES) for b, n in text_bytes.items()}
+        tri_files = {
+            b: file_count(n, TRI_FILE_BYTES) for b, n in text_bytes.items()
+        }
         # bucket is recovered from doc_id via the manifest's offsets (docs
         # were assigned contiguous id ranges per bucket in phase A) -- the
         # tokenize UDF schema stays bucket-free and shared with the
@@ -869,22 +951,18 @@ def build_index(
         postings_root = out / "postings"
         lens_root = out / "doc_lens"
         tpart_root_ = out / "terms_partial"
-        # postings first: materializes the cache at full parallelism.
-        # Hash-repartition by (bucket, term) keeps a term's postings in one
-        # file per bucket; sortWithinPartitions gives tight row-group term
-        # ranges for query-time pruning (rows group by bucket first, so
-        # each bucket's file is term-sorted).  Task count tracks cores AND
-        # data so no stage underfills the machine.
+        # postings first: materializes the cache.  Each bucket's postings
+        # land in files[b] (term, doc_id)-sorted files, a term's in one
+        # of them; sorted runs give tight row-group term ranges for
+        # query-time pruning.
         (
             index_write(
-                rows.filter(F.col("term").isNotNull())
-                .select("bucket", "term", "doc_id", "tf", "tf_url", "doc_len")
-                .repartition(
-                    max(2, par, int(total_bytes // (256 << 20))),
-                    "bucket",
-                    "term",
+                sorted_files(
+                    rows.filter(F.col("term").isNotNull()).select(
+                        "bucket", "term", "doc_id", "tf", "tf_url", "doc_len"
+                    ),
+                    files, "term", "doc_id",
                 )
-                .sortWithinPartitions("bucket", "term", "doc_id")
             )
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket")
@@ -899,12 +977,13 @@ def build_index(
         def _write_lens() -> None:
             (
                 index_write(
-                    rows.filter(F.col("term").isNull())
-                    .select(
-                        "bucket", "doc_id", "doc_len",
-                        *(["tri_bloom"] if emit_bloom else []),
+                    sorted_files(
+                        rows.filter(F.col("term").isNull()).select(
+                            "bucket", "doc_id", "doc_len",
+                            *(["tri_bloom"] if emit_bloom else []),
+                        ),
+                        files, "doc_id",
                     )
-                    .repartition(max(2, par // 2), "bucket", "doc_id")
                 )
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
@@ -914,9 +993,9 @@ def build_index(
         def _write_tpart() -> None:
             (
                 index_write(
-                    rows.filter(F.col("term").isNotNull())
-                    .groupBy("bucket", "term")
-                    .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
+                    sorted_files(
+                        term_counts(rows, keep=("bucket",)), files, "term"
+                    )
                 )
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
@@ -931,7 +1010,11 @@ def build_index(
             tri = tri_rows(rows, keep=("bucket",))
             tri_part_root = out / "tri_partial"
             (
-                index_write(tri_counts(tri, keep=("bucket",)))
+                index_write(
+                    sorted_files(
+                        tri_counts(tri, keep=("bucket",)), tri_files, "tri"
+                    )
+                )
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(tri_part_root))
@@ -943,20 +1026,13 @@ def build_index(
             ]
             if not wave_parts:  # no doc of the wave holds a trigram
                 return
+            listed = listed_tri_rows(
+                tri,
+                spark.read.schema(TRI_DF_SCHEMA).parquet(*wave_parts),
+                cutoff,
+            )
             (
-                index_write(
-                    listed_tri_rows(
-                        tri,
-                        spark.read.schema(TRI_DF_SCHEMA).parquet(*wave_parts),
-                        cutoff,
-                    )
-                    .repartition(
-                        max(2, par, int(total_bytes // (128 << 20))),
-                        "bucket",
-                        "tri",
-                    )
-                    .sortWithinPartitions("bucket", "tri", "doc_id")
-                )
+                index_write(sorted_files(listed, tri_files, "tri", "doc_id"))
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(str(out / "tri_postings"))
@@ -996,7 +1072,7 @@ def build_index(
         wall_ms = int((time.time() - t0) * 1000)
         for b in existing:
             r = per.get(b)
-            share = in_bytes[b] / total_bytes if total_bytes else 0.0
+            share = text_bytes[b] / total_bytes if total_bytes else 0.0
             _append_lineage(
                 index_dir,
                 {
@@ -1061,23 +1137,24 @@ def build_index(
     # not the postings table); stats needs NO job -- counts and doc_len
     # sums already landed in lineage during phase B.
     tpart_root = out / "terms_partial"
-    terms_schema = "term string, df long, cf long"
     if tpart_root.exists() and any(tpart_root.iterdir()):
         terms = (
-            spark.read.parquet(str(tpart_root))
+            spark.read.schema(TERMS_SCHEMA).parquet(str(tpart_root))
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
         )
     else:
-        terms = spark.createDataFrame([], terms_schema)
-    index_write(sorted_dictionary(terms, spark)).parquet(str(out / "terms"))
+        terms = spark.createDataFrame([], TERMS_SCHEMA)
+    index_write(sorted_dictionary(terms, _dir_bytes(tpart_root))).parquet(
+        str(out / "terms")
+    )
 
     # trigram dictionary (tri, df): the driver-cached rarest-trigram
     # selector for rescue serving, re-aggregated from the per-bucket
     # partials; vocab is charset-bounded (tiny vs the corpus), one agg job.
     tri_dict = tri_dictionary(spark, out, pruned=cutoff is not None)
     if tri_dict is not None:
-        index_write(tri_dict.coalesce(4)).parquet(str(out / "tri_terms"))
+        index_write(tri_dict).parquet(str(out / "tri_terms"))
 
     lineage = _read_lineage(index_dir)
     if lineage and all("sum_dl" in r for r in lineage.values()):
@@ -1105,4 +1182,5 @@ def build_index(
         "docs_per_sec": tot["n_docs"] / wall_s,
         "postings_per_sec": tot["n_postings"] / wall_s,
         "bytes_by_table": bytes_by_table(out),
+        "files_by_table": files_by_table(out),
     }

@@ -16,12 +16,15 @@ Design:
     to arbitrarily large micro-batches, no single-partition window; note
     ids are arrival-order across batches, not global url rank, so
     tie-breaks are deterministic but differ from a from-scratch rebuild);
-  * append postings/pages_indexed/doc_lens under delta buckets; fold the
-    term dictionary incrementally (current terms + the new bucket's
-    partials -- NOT a re-scan of every historical partial) and update
-    stats from running totals carried in stream_state.json (doc counts and
-    doc_len sums come from the committed delta's parquet footers -- no
-    extra jobs over the index, and exact under retries/speculation);
+  * append postings/pages_indexed/doc_lens under delta buckets, each
+    sized like a batch bucket by the bytes of the files the micro-batch
+    read (indexer.sorted_files: one sorted file until it outgrows its
+    target); fold the term dictionary incrementally (current terms + the
+    new bucket's partials -- NOT a re-scan of every historical partial)
+    and update stats from running totals carried in stream_state.json
+    (doc counts and doc_len sums come from the committed delta's parquet
+    footers -- no extra jobs over the index, and exact under
+    retries/speculation);
   * the trigram lane keeps the build's invariant "df <= tri_cutoff =>
     complete list" (indexer docstring): the delta writes its tri_partial
     counts, drops the trigrams whose folded df exceeds the manifest's
@@ -42,15 +45,22 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from probe_spark.indexer import (
+    FILE_BYTES,
+    TERMS_SCHEMA,
     TOKENS_SCHEMA,
     TRI_DF_SCHEMA,
+    TRI_FILE_BYTES,
     _assign_doc_ids,
+    _dir_bytes,
     _make_tokenize_partition,
     _read_lineage,
     _tokenize_partition,
+    file_count,
     index_write,
     listed_tri_rows,
     sorted_dictionary,
+    sorted_files,
+    term_counts,
     tri_counts,
     tri_dictionary,
     tri_rows,
@@ -58,6 +68,17 @@ from probe_spark.indexer import (
 )
 
 PAGES_SCHEMA = "url string, text string, lang string"
+
+
+def _input_bytes(spark: SparkSession, df) -> int:
+    """Bytes of the files ``df`` reads (0 for an in-memory frame): a
+    driver-side file-status lookup on any Hadoop filesystem, no job."""
+    conf = spark._jsc.hadoopConfiguration()
+    total = 0
+    for f in df.inputFiles():
+        p = spark._jvm.org.apache.hadoop.fs.Path(f)
+        total += p.getFileSystem(conf).getFileStatus(p).getLen()
+    return total
 
 
 def _read_manifest(index_dir: str) -> dict:
@@ -169,12 +190,15 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
                 shutil.rmtree(out / t / f"bucket={b}", ignore_errors=True)
             (out / "lineage" / f"{b}.json").unlink(missing_ok=True)
     if roll_forward:
-        src = spark.read.parquet(str(out / "terms_partial"))
+        partials = out / "terms_partial"
+        src = spark.read.schema(TERMS_SCHEMA).parquet(str(partials))
         folded_terms = src.groupBy("term").agg(
             F.sum("df").alias("df"), F.sum("cf").alias("cf")
         )
         tmp = out / "terms_tmp"
-        index_write(sorted_dictionary(folded_terms, spark)).parquet(str(tmp))
+        index_write(
+            sorted_dictionary(folded_terms, _dir_bytes(partials))
+        ).parquet(str(tmp))
         shutil.rmtree(out / "terms", ignore_errors=True)
         tmp.rename(out / "terms")
         _rebuild_tri_terms(spark, index_dir)
@@ -204,17 +228,18 @@ def _fold_terms(spark: SparkSession, index_dir: str, new_partial: Path) -> None:
     re-scanned).  Self-heals from all partials if terms/ is missing."""
     out = Path(index_dir)
     terms_dir = out / "terms"
+    read = spark.read.schema(TERMS_SCHEMA).parquet
     if terms_dir.exists() and any(terms_dir.iterdir()):
-        src = spark.read.parquet(str(terms_dir)).unionByName(
-            spark.read.parquet(str(new_partial))
-        )
+        src = read(str(terms_dir)).unionByName(read(str(new_partial)))
+        src_bytes = _dir_bytes(terms_dir) + _dir_bytes(new_partial)
     else:  # pragma: no cover - healing path
-        src = spark.read.parquet(str(out / "terms_partial"))
+        src = read(str(out / "terms_partial"))
+        src_bytes = _dir_bytes(out / "terms_partial")
     folded = src.groupBy("term").agg(
         F.sum("df").alias("df"), F.sum("cf").alias("cf")
     )
     tmp = out / "terms_tmp"
-    index_write(sorted_dictionary(folded, spark)).parquet(str(tmp))
+    index_write(sorted_dictionary(folded, src_bytes)).parquet(str(tmp))
     shutil.rmtree(terms_dir, ignore_errors=True)
     tmp.rename(terms_dir)
 
@@ -229,7 +254,7 @@ def _rebuild_tri_terms(spark: SparkSession, index_dir: str) -> None:
     if folded is None:
         return
     tmp = out / "tri_terms_tmp"
-    index_write(folded.coalesce(4)).parquet(str(tmp))
+    index_write(folded).parquet(str(tmp))
     shutil.rmtree(out / "tri_terms", ignore_errors=True)
     tmp.rename(out / "tri_terms")
 
@@ -262,8 +287,11 @@ def _fold_tri_terms(
         .groupBy("tri")
         .agg(F.sum("df").alias("df"))
     )
+    src_bytes = _dir_bytes(t_dir) + _dir_bytes(delta_partial)
     tmp = out / "tri_terms_tmp"
-    index_write(folded.coalesce(4)).parquet(str(tmp))
+    index_write(
+        folded.coalesce(file_count(src_bytes, TRI_FILE_BYTES))
+    ).parquet(str(tmp))
     shutil.rmtree(t_dir, ignore_errors=True)
     tmp.rename(t_dir)
 
@@ -321,16 +349,23 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     )
     rows.persist()
     bucket = f"stream_{epoch_id}_{base}"
-    index_write(
-        rows.filter(F.col("term").isNotNull())
-        .select("term", "doc_id", "tf", "tf_url", "doc_len")
-        .sortWithinPartitions("term", "doc_id")
-    ).parquet(str(out / "postings" / f"bucket={bucket}"))
+    # the delta is one bucket: its files are sized like a batch bucket's,
+    # by the bytes of the files the micro-batch read (indexer.file_count)
+    in_bytes = _input_bytes(spark, batch_df)
+    files = file_count(in_bytes, FILE_BYTES)
+    tri_files = file_count(in_bytes, TRI_FILE_BYTES)
+    postings = rows.filter(F.col("term").isNotNull()).select(
+        "term", "doc_id", "tf", "tf_url", "doc_len"
+    )
+    index_write(sorted_files(postings, files, "term", "doc_id")).parquet(
+        str(out / "postings" / f"bucket={bucket}")
+    )
     lens_delta = out / "doc_lens" / f"bucket={bucket}"
     # bloom-free layout: the tri_postings delta below serves rescue
-    index_write(
-        rows.filter(F.col("term").isNull()).select("doc_id", "doc_len").coalesce(1)
-    ).parquet(str(lens_delta))
+    lens = rows.filter(F.col("term").isNull()).select("doc_id", "doc_len")
+    index_write(sorted_files(lens, files, "doc_id", unique=True)).parquet(
+        str(lens_delta)
+    )
     # sum from the COMMITTED delta files, not an Observation riding the
     # write: observe() merges metric rows from every completed task
     # attempt, so a retried or speculative duplicate would inflate sum_dl
@@ -349,20 +384,20 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     tri_delta = out / "tri_postings" / f"bucket={bucket}"
     tri_part = out / "tri_partial" / f"bucket={bucket}"
     tri = tri_rows(rows)
-    index_write(tri_counts(tri).coalesce(1)).parquet(str(tri_part))
     index_write(
-        listed_tri_rows(
-            tri,
-            _folded_tri_dfs(spark, index_dir, tri_part),
-            manifest.get("tri_cutoff"),
-        ).sortWithinPartitions("tri", "doc_id")
-    ).parquet(str(tri_delta))
+        sorted_files(tri_counts(tri), tri_files, "tri", unique=True)
+    ).parquet(str(tri_part))
+    listed = listed_tri_rows(
+        tri,
+        _folded_tri_dfs(spark, index_dir, tri_part),
+        manifest.get("tri_cutoff"),
+    )
+    index_write(sorted_files(listed, tri_files, "tri", "doc_id")).parquet(
+        str(tri_delta)
+    )
     tpart = out / "terms_partial" / f"bucket={bucket}"
     index_write(
-        rows.filter(F.col("term").isNotNull())
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-        .coalesce(1)
+        sorted_files(term_counts(rows), files, "term", unique=True)
     ).parquet(str(tpart))
     # PREPARE marker: the lineage row commits the bucket's existence (and
     # carries the totals) BEFORE the url-dedup table sees its pages -- a
@@ -386,7 +421,7 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     index_write(
         rows.filter(F.col("term").isNull())
         .select("doc_id", "url", "lang", "text")
-        .coalesce(2)
+        .coalesce(files)
     ).parquet(str(out / "pages_indexed" / f"bucket={bucket}"))
     rows.unpersist()
     _fold_terms(spark, index_dir, tpart)

@@ -69,7 +69,8 @@ def main() -> None:
             F.lit(0).cast("long").alias("cf"),
         )
     )
-    sorted_dictionary(terms, spark).write.mode("overwrite").parquet(
+    # ~16 bytes per (term, df, cf) row on disk sizes the file count
+    sorted_dictionary(terms, 16 * n_terms).write.mode("overwrite").parquet(
         str(ix / "terms")
     )
     # minimal index scaffolding so SearchEngine opens: stats + empty

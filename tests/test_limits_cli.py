@@ -144,6 +144,8 @@ def test_cli_build_search_grep(spark, tmp_path, capsys):
     ) == 0
     m = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert m["n_docs"] == 120
+    # one sorted file per bucket until a bucket outgrows its byte target
+    assert m["files_by_table"]["postings"] == 2
 
     assert main(
         ["search", "--index", str(tmp_path / "ix"), "--query", "firewall",

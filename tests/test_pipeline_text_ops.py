@@ -59,6 +59,45 @@ def test_repetition_hand_computed(spark, tmp_path):
     assert got[2]["top_word_frac"] == 1.0
 
 
+def test_repetition_keeps_null_text_doc(spark, tmp_path):
+    """A doc with null text keeps its row (null top_word_frac) instead of
+    vanishing in the top-word join."""
+    sf = _write_docs(
+        tmp_path, [(0, "a b a", "en", "s", 5), (1, None, "en", "s", 0)]
+    )
+    got = {
+        r["doc_id"]: r.asDict() for r in text_repetition(spark, sf).collect()
+    }
+    assert sorted(got) == [0, 1]
+    assert got[1]["top_word_frac"] is None
+    assert got[0]["top_word_frac"] == pytest.approx(round(2 / 3, 6))
+
+
+def test_read_pq_schema_cache_sees_part_file_rewrite(spark, tmp_path):
+    """Rewriting a part file in place with a new schema leaves the
+    directory's mtime alone; the schema cache must still re-infer."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from probe_spark.entry_queries import _read_pq
+
+    table = tmp_path / "t.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), part)
+    assert _read_pq(spark, str(table)).columns == ["a"]
+    dir_mtime = os.stat(table).st_mtime_ns
+    pq.write_table(pa.table({"a": [3], "b": ["x"]}), part)
+    st = os.stat(part)
+    # a later mtime even on coarse-grained filesystems
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 2 * 10**9))
+    assert os.stat(table).st_mtime_ns == dir_mtime
+    rows = _read_pq(spark, str(table)).collect()
+    assert [r.asDict() for r in rows] == [{"a": 3, "b": "x"}]
+
+
 def test_boilerplate_ngrams_df_threshold(spark, tmp_path):
     # "nav home link" appears once in each of 6 docs (df=6) and twice in
     # doc 0 (total=7); "uniq one two" appears in only one doc -> pruned.

@@ -119,10 +119,11 @@ def test_shard_manifest_single_corpus_shuffle(spark, tmp_path):
 
 
 def test_dictionary_sorted_and_prefix_pushed_down(spark, tiny_index):
-    """The term dictionary is written range-partitioned + sorted by term
-    (indexer.sorted_dictionary): prefix_search's StringStartsWith must
-    reach the scan's PushedFilters, and the on-disk files must carry
-    disjoint ordered term ranges so those filters actually prune."""
+    """The term dictionary is written sorted by term, range-partitioned
+    once it outgrows one file (indexer.sorted_dictionary):
+    prefix_search's StringStartsWith must reach the scan's PushedFilters,
+    and each file must be term-sorted, with the files' term ranges
+    disjoint and ordered, so those filters actually prune."""
     from pathlib import Path
 
     import pyarrow.parquet as pq
@@ -137,12 +138,17 @@ def test_dictionary_sorted_and_prefix_pushed_down(spark, tiny_index):
     plan = _formatted_plan(d)
     assert "PushedFilters" in plan
     assert re.search(r"PushedFilters: \[.*StringStartsWith\(term", plan), plan
-    # layout: per-file term min/max form an ordered, non-overlapping chain
+    # layout: each file is term-sorted (so its row groups carry tight,
+    # ordered ranges) and per-file term min/max form an ordered,
+    # non-overlapping chain (tiny_index's dictionary is one file; the
+    # split layout is covered by test_index_layout)
     spans = []
     for f in sorted(Path(f"{path}/terms").glob("*.parquet")):
         md = pq.ParquetFile(str(f)).metadata
         if not md.num_rows:
             continue
+        terms = pq.read_table(f, columns=["term"]).column("term").to_pylist()
+        assert terms == sorted(terms), f
         mins, maxs = [], []
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
@@ -152,7 +158,7 @@ def test_dictionary_sorted_and_prefix_pushed_down(spark, tiny_index):
                     mins.append(c.statistics.min)
                     maxs.append(c.statistics.max)
         spans.append((min(mins), max(maxs)))
-    assert len(spans) >= 2  # genuinely range-partitioned
+    assert spans
     spans.sort()
     for (lo1, hi1), (lo2, _hi2) in zip(spans, spans[1:]):
         assert lo1 <= hi1 <= lo2, spans

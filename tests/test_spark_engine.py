@@ -249,6 +249,13 @@ def test_resumability(spark, tmp_path):
         )
         assert a.equals(b), f"{table} differs between clean and resumed build"
 
+    # bucket 0 came from the per-bucket path, 1-2 from the resumed wave:
+    # both write one sorted file per bucket per table
+    from tests.test_index_layout import BUCKET_TABLES, assert_sorted_files
+
+    for table, order in BUCKET_TABLES.items():
+        assert_sorted_files(crash_dir / table, order)
+
     # lineage shows one completed checkpoint per bucket
     from probe_spark.indexer import _read_lineage
 

@@ -9,14 +9,19 @@ resume granularity is unchanged.
 
 Both builds patch TRI_DIRECT_FLOOR to 0 (cutoff 0.05 * 200 = 10), so the
 trigram lane is pruned: each wave drops the trigrams dense within it, and
-the listed trigrams (true df <= cutoff) must keep identical lists."""
+the listed trigrams (true df <= cutoff) must keep identical lists.
+
+The waved build also patches the file byte targets below its buckets'
+input, so every bucket splits into k > 1 files by key: file sizing is a
+layout choice too, and must leave every row unchanged."""
 
 from pyspark.sql import functions as F
 
-from probe_spark import trigram
+from probe_spark import indexer, trigram
 from probe_spark.fixtures import pages_df
 from probe_spark.indexer import build_index
 
+from tests.test_index_layout import assert_split_layout, split_target
 from tests.test_spark_engine import lambda_cols
 
 
@@ -29,14 +34,19 @@ def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
     m_single = build_index(spark, pages, str(single_dir), n_buckets=5)
 
     monkeypatch.setenv("PROBE_BUILD_WAVE_BUCKETS", "2")  # 5 buckets -> 3 waves
+    target = split_target(single_dir)
+    monkeypatch.setattr(indexer, "FILE_BYTES", target)
+    monkeypatch.setattr(indexer, "TRI_FILE_BYTES", target)
     waved_dir = tmp_path / "waved"
     m_waved = build_index(spark, pages, str(waved_dir), n_buckets=5)
+    assert_split_layout(waved_dir, target, m_waved["files_by_table"])
 
     assert m_waved["n_postings"] == m_single["n_postings"]
     assert m_waved["n_docs"] == m_single["n_docs"]
 
     for table in (
         "pages_indexed", "doc_lens", "postings", "terms", "stats", "tri_terms",
+        "terms_partial", "tri_partial",
     ):
         a = (
             spark.read.parquet(f"{single_dir}/{table}")
