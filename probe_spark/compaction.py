@@ -213,8 +213,8 @@ def compact_index(
 
     todo = [b for b in buckets if b not in state["buckets"]]
     if todo:
-        # concurrent bucket jobs, same pattern as the build's phase B --
-        # sequential per-bucket jobs would serialize the whole compaction
+        # concurrent bucket jobs: sequential per-bucket jobs would
+        # serialize the whole compaction
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(len(todo), 4)) as ex:

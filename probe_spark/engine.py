@@ -10,7 +10,7 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      against text+url, mirroring the exact-term rescue at
      file_processing.rs:1350-1358 (``full_code_lower.contains(term)`` --
      true SUBSTRING semantics).  Served from the trigram substring-index
-     lane (indexer.tri_rows, the public Zoekt/Code-Search design): the
+     lane (indexer._slice_tables, the public Zoekt/Code-Search design): the
      rarest <=3 LISTED trigrams of the needle (df <= the manifest's
      tri_cutoff; the build writes no list for the others) are intersected
      in the tri_postings table and contains() verifies only those
@@ -522,7 +522,7 @@ class SearchEngine:
         # per-query df-count action is only paid on first sight
         self._rescue_df_cache: dict[tuple[str, bool], int] = {}
         self._full_dict = False
-        # trigram substring-index lane (indexer.tri_rows): serves the
+        # trigram substring-index lane (indexer._slice_tables): serves the
         # containment rescue in O(trigram df) instead of an O(corpus)
         # bloom/doc scan.  Enabled only when it COVERS the corpus: every
         # postings bucket must have a tri bucket (a pre-tri-lane index

@@ -5,7 +5,7 @@ Iceberg catalog -- this sandbox has no Iceberg runtime jars, so snapshot
 semantics are provided by an explicit manifest + lineage table, which is the
 same mechanism Iceberg snapshots would give us):
 
-  manifest.json                 build parameters + bucket offsets (phase A)
+  manifest.json                 build parameters + url slices (slicing)
   pages_indexed/bucket=i/       THE doc store: doc_id, url, lang, text
                                 (doc_store="reference" drops text: the
                                 durable source keeps the only copy and
@@ -14,64 +14,88 @@ same mechanism Iceberg snapshots would give us):
   postings/bucket=i/            flat postings: term, doc_id, tf, doc_len
   tri_postings/bucket=i/        trigram substring lane: tri, doc_id, for
                                 LISTED trigrams only (df <= tri_cutoff)
-  tri_partial/bucket=i/         per-bucket trigram counts (tri, df)
-  terms_partial/bucket=i/       per-bucket term aggregates (df, cf)
+  tri_partial/bucket=i/         per-slice trigram counts (tri, df)
+  terms_partial/bucket=i/       per-slice term aggregates (df, cf)
   terms/                        term dictionary: term, df, cf
   tri_terms/                    trigram dictionary: tri, df (true df of
                                 every trigram, summed from tri_partial)
   stats/                        singleton: n_docs, avgdl
   lineage/                      per-bucket build metrics + checkpoints
 
-Listed-trigram rule: ``manifest.tri_cutoff`` = trigram.tri_cutoff(n) of
-phase A's doc count.  A trigram with df above it is never read by the
-engine, so phase B drops its rows: each wave drops the trigrams whose df
-within the rows it writes already exceeds the cutoff.  df never falls, so
-"df <= tri_cutoff" still guarantees a complete posting list.  A manifest
-without ``tri_cutoff`` marks a complete lane (every trigram listed).
+The build in one pass (``build_index``):
+  * slicing -- a url-column-only job range-partitions the urls into
+    slices and collects each slice's (count, min url); slices ascend in
+    url, so slice i's doc ids are offset_i + rank within the slice.  A
+    bucket is k = file_count(bucket input bytes, FILE_BYTES) consecutive
+    slices (input bytes from ``df.inputFiles()``; an in-memory frame
+    counts as 0, so k = 1).  The core count never enters.
+  * write -- ONE mapInArrow task per slice (pages placed by
+    ``repartitionById`` on the slice id): it sorts its rows by url, sets
+    doc_id = offset + rank, tokenizes each doc (``_doc_tokenizer``, the
+    same per-doc code ``_tokenize_partition`` runs), builds the slice's
+    pages_indexed, doc_lens, postings, terms_partial, tri_partial and
+    unpruned trigram rows as Arrow tables, sorts each with
+    ``Table.sort_by`` and writes them with pyarrow into
+    ``_attempts/<taskAttemptId>/``.  The task returns one small row
+    (slice, attempt, counts, its own wall time).
+  * trigram pass -- listed-trigram rule: ``manifest.tri_cutoff`` =
+    trigram.tri_cutoff(n) of the slicing's doc count.  A trigram with df
+    above it is never read by the engine, so its rows are dropped: the
+    driver sums the tri_partial files of the winning attempts (plus the
+    committed buckets of a resumed build) into the exact global df, and
+    one more mapInArrow job (a task per slice) drops the dense trigrams'
+    rows from the staged lane.  A manifest without ``tri_cutoff`` marks a
+    complete lane (every trigram listed).
+  * dictionaries -- terms and tri_terms are the key-sorted sums of the
+    partials, computed with pyarrow on the driver while the partials total
+    under FILE_BYTES (one file); above that a Spark aggregate lays them
+    out as key ranges (``fold_dictionary``).
+  * commit -- bucket by bucket the driver renames the winning attempts'
+    files into ``<table>/bucket=b/part-<slice>.parquet`` and then writes
+    the bucket's lineage row, the resume marker.  Only attempts returned
+    by ``collect()`` land: a speculative or failed duplicate never does.
+    ``_attempts/`` is deleted at the end (and by every fresh build or
+    resume, which also clears what a killed run left behind).
 
-Encoding contract: every table is written through ``index_write`` -- zstd,
-v2 data pages, and ``doc_id`` without a dictionary so its sorted runs
-delta-encode (DELTA_BINARY_PACKED); readers are encoding-agnostic, so
-layouts written with other codecs stay valid.
+So a bucket of k slices is k files per table: (key, doc_id)-sorted runs
+over disjoint, ascending doc-id ranges (one sorted file per bucket when
+k = 1).  Readers do not depend on file count, so older layouts stay
+valid.  The writer runs one task per slice, so choose ``n_buckets`` >=
+cores: with fewer slices than cores the build leaves cores idle (the
+tokenize stage used to run 2x cores tasks).  That trade was measured on
+4 cores only; on a many-core machine it is unmeasured.
 
-File sizing rule (``sorted_files``): files are sized by bytes, never by
-cores.  Each bucket of postings, doc_lens and terms_partial is
-k = max(1, ceil(bucket input bytes / FILE_BYTES)) files (TRI_FILE_BYTES
-for tri_postings and tri_partial): the write shuffles on
-(bucket, pmod(hash(key), k)), so a bucket's rows land in exactly k
-partitions and every file is a complete (key, doc_id)-sorted run.  The
-dictionaries (terms, tri_terms) are one file until their source outgrows
-the target; a streaming delta is one bucket sized by its input files.
-Readers do not depend on file count, so older layouts stay valid.
+Encoding contract: pyarrow writes every table the build and ingest
+produce with ``INDEX_ARROW`` -- zstd level 3, v2 data pages, no stored
+Arrow schema, ``doc_id`` and ``tri`` DELTA_BINARY_PACKED, ``term`` and
+``url`` DELTA_BYTE_ARRAY, ``text`` DELTA_LENGTH_BYTE_ARRAY, and a
+dictionary only on the low-cardinality columns.  Spark-written tables
+(the dictionary fallback, compaction blocks, suggest buckets) go through
+``index_write`` (INDEX_PARQUET): zstd, v2 pages, doc_id without a
+dictionary.  Readers are encoding-agnostic, so layouts written with
+other codecs stay valid.
 
 Scale design notes (explicitly, per the north rule):
   * doc_id is the global url-lexicographic rank (FIXTURES.md SS1, mirroring
     probe's doc-index tie-break at ranking.rs:408-420), assigned WITHOUT a
-    global sort: range-partition by url into B buckets, rank within each
-    bucket (Window.partitionBy(bucket)), then add per-bucket offsets
-    computed from bucket counts -- two narrow passes, no driver collect of
-    data rows.
-  * the document text is written ONCE (pages_indexed, phase A); phase B
-    derives only slim columns from it (doc_lens, postings).  At web scale
-    the text dominates bytes -- a second doc-store copy would double the
-    build's write volume for nothing.
-  * per-doc TF is computed map-side inside the tokenize mapInPandas UDF
-    (one Arrow pass, no explode->groupBy shuffle for TF).
-  * a bucket's postings are one (term, doc_id)-sorted file until the
-    bucket outgrows FILE_BYTES, then k files split by term hash (the
-    sizing rule above: a term's postings still sit in exactly one file
-    per bucket, no sampling pass, skew-free since terms spread
-    uniformly); parquet row-group stats prune term lookups at query
-    time.  Buckets double as salt for hot-term skew -- a head term's
-    postings are B independent sorted runs merged at query or compaction
-    time (SURVEY.md SS4 skew handling).
+    global sort: range-slice the urls, rank within each slice inside its
+    task, add per-slice offsets computed from slice counts -- no driver
+    collect of data rows.
+  * the document text is read and written ONCE: the slice task writes the
+    doc store and derives the slim columns (doc_lens, postings) from the
+    same rows.  A slice's rows sit in one task's memory, bounded by the
+    FILE_BYTES slice sizing for file inputs.
+  * a term's postings are B independent sorted runs, one per bucket
+    (buckets double as salt for hot-term skew, SURVEY.md SS4), merged at
+    query or compaction time; parquet row-group stats prune term lookups.
   * global aggregates need no extra passes over data: doc counts and
-    doc_len sums come from committed parquet footers / a one-pass metrics
-    agg (stats is written driver-side from lineage sums; exact under task
-    retries and speculation), and the term dictionary is re-aggregated
-    from per-bucket partials computed while the tokenization is cached.
+    doc_len sums come from the winning attempts' result rows (exact under
+    task retries and speculation, since only those attempts' files land),
+    and the dictionaries are re-aggregated from the per-slice partials.
   * builds are resumable: each bucket commits a lineage row after its
-    files land; re-running skips completed buckets (kill-resume tested).
+    files land; a resume re-reads the source, rebuilds the buckets without
+    a lineage row from the manifest's slice bounds and offsets, and
+    raises if a slice's row count no longer matches the manifest.
   * doc_len is denormalized into postings rows so BM25 scoring needs no
     join against the doc store.
 """
@@ -79,12 +103,16 @@ Scale design notes (explicitly, per the north rule):
 from __future__ import annotations
 
 import json
+import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession, Window
+import pyarrow as pa
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -92,31 +120,58 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from pyspark.sql.types import ArrayType, BinaryType
-
 from probe_spark.trigram import tri_cutoff
 
-# Parquet options of every index table.  doc_id is sorted inside each
-# posting run, so with its dictionary off the v2 writer delta + bit-packs
-# it (DELTA_BINARY_PACKED); term/tri/tf keep dictionary + RLE.
+# Parquet options of every Spark-written index table.  doc_id is sorted
+# inside each posting run, so with its dictionary off the v2 writer delta +
+# bit-packs it (DELTA_BINARY_PACKED); term/tri/tf keep dictionary + RLE.
 INDEX_PARQUET = {
     "compression": "zstd",
     "parquet.writer.version": "v2",
     "parquet.enable.dictionary#doc_id": "false",
 }
 
+# pyarrow writer options of every table the slice writer produces (see the
+# module docstring); a column without an entry in column_encoding is
+# dictionary-encoded only if it is listed in use_dictionary.
+INDEX_ARROW = {
+    "compression": "zstd",
+    "compression_level": 3,
+    "data_page_version": "2.0",
+    "store_schema": False,
+    "column_encoding": {
+        "doc_id": "DELTA_BINARY_PACKED",
+        "tri": "DELTA_BINARY_PACKED",
+        "term": "DELTA_BYTE_ARRAY",
+        "url": "DELTA_BYTE_ARRAY",
+        "text": "DELTA_LENGTH_BYTE_ARRAY",
+    },
+    "use_dictionary": ["lang", "tf", "tf_url", "doc_len", "df", "cf"],
+}
+
 
 def index_write(df: DataFrame) -> DataFrameWriter:
-    """The one writer for index tables: overwrite mode + INDEX_PARQUET."""
+    """The Spark writer for index tables: overwrite mode + INDEX_PARQUET."""
     return df.write.mode("overwrite").options(**INDEX_PARQUET)
 
 
-# Sizing targets, in bytes of a bucket's input (its doc-store share): a
-# bucket's table is one sorted file until its input outgrows the target.
-# Posting-keyed tables (postings, doc_lens, terms_partial, the term
-# dictionary) use FILE_BYTES, the trigram lane TRI_FILE_BYTES.
+def write_arrow(table: pa.Table, path: Path) -> None:
+    """The pyarrow writer for index tables: one file, INDEX_ARROW."""
+    import pyarrow.parquet as pq
+
+    cols = set(table.column_names)
+    enc = {c: e for c, e in INDEX_ARROW["column_encoding"].items() if c in cols}
+    dic = [c for c in INDEX_ARROW["use_dictionary"] if c in cols]
+    pq.write_table(
+        table, str(path), **{**INDEX_ARROW, "column_encoding": enc,
+                             "use_dictionary": dic},
+    )
+
+
+# Sizing target, in bytes of input: a bucket is one slice (one file per
+# table) until its input outgrows it; the dictionaries are summed on the
+# driver while their partials total under it.
 FILE_BYTES = 256 << 20
-TRI_FILE_BYTES = 128 << 20
 
 
 def file_count(nbytes: int, target: int) -> int:
@@ -124,39 +179,15 @@ def file_count(nbytes: int, target: int) -> int:
     return max(1, -(-int(nbytes) // target))
 
 
-def sorted_files(
-    df: DataFrame, files: int | dict, *order: str, unique: bool = False
-) -> DataFrame:
-    """Lay ``df`` out for an index write: each file sorted by ``order``,
-    rows placed by a hash of its first column (the key), so a key's rows
-    sit in one file per bucket.  ``files`` is the file count of a
-    single-bucket write, or {bucket: count} for a partitionBy("bucket")
-    write, where bucket b's rows land in exactly ``files[b]`` partitions
-    of its own.  A single-bucket table whose key is ``unique`` (doc_lens,
-    the partials) needs no placement, so it coalesces instead of
-    shuffling; use it only where ``df`` is cached or aggregated, since a
-    coalesce also narrows the stage that computes it."""
-    def sub(k):  # the key's file within its bucket
-        return F.pmod(F.hash(order[0]), k)
-
-    if isinstance(files, int):
-        placed = (
-            df.coalesce(files)
-            if unique
-            else df.repartitionById(files, sub(F.lit(files)))
-        )
-        return placed.sortWithinPartitions(*order)
-    # bucket b owns partitions [starts[b], starts[b] + files[b])
-    starts, n = {}, 0
-    for b in sorted(files):
-        starts[b], n = n, n + files[b]
-
-    def per_bucket(m: dict):
-        pairs = [F.lit(x) for kv in m.items() for x in kv]
-        return F.element_at(F.create_map(*pairs), F.col("bucket"))
-
-    pid = per_bucket(starts) + sub(per_bucket(files))
-    return df.repartitionById(n, pid).sortWithinPartitions("bucket", *order)
+def _input_bytes(spark: SparkSession, df: DataFrame) -> int:
+    """Bytes of the files ``df`` reads (0 for an in-memory frame): a
+    driver-side file-status lookup on any Hadoop filesystem, no job."""
+    conf = spark._jsc.hadoopConfiguration()
+    total = 0
+    for f in df.inputFiles():
+        p = spark._jvm.org.apache.hadoop.fs.Path(f)
+        total += p.getFileSystem(conf).getFileStatus(p).getLen()
+    return total
 
 
 TOKENS_SCHEMA = StructType(
@@ -174,19 +205,17 @@ TOKENS_SCHEMA = StructType(
         StructField("tf_url", IntegerType()),
         StructField("tri_bloom", BinaryType()),
         # distinct 24-bit byte-trigram codes of the containment haystack
-        # (trigram.doc_bloom_and_codes) -- exploded into the tri_postings
-        # substring-index lane by phase B; doc rows only, null on postings
+        # (trigram.doc_bloom_and_codes) -- the tri_postings lane's rows;
+        # doc rows only, null on postings
         StructField("tris", ArrayType(IntegerType())),
     ]
 )
 
 
-def _make_tokenize_partition(
-    tokenizer: str = "probe",
-    emit_doc_payload: bool = True,
-    emit_bloom: bool = False,
-):
-    """Factory for the tokenize mapInPandas fn.  ``tokenizer``:
+def _doc_tokenizer(tokenizer: str = "probe", emit_bloom: bool = False):
+    """The one per-doc tokenize step of the build, ingest and the bench
+    kernel: ``doc(url, text) -> (doc_len, tf, tf_url, bloom, tris)``.
+    ``tokenizer``:
 
       * "probe"  -- the full shared textkit pipeline (text ++ url tokens),
         identical bytes-in/tokens-out as the oracle (the production path);
@@ -196,207 +225,235 @@ def _make_tokenize_partition(
         machinery (postings/terms/stats/blocks) end-to-end while the
         tokenizer itself is verified by its own parity suite.
 
-    ``emit_doc_payload=False`` nulls out url/lang/text in the doc row:
-    the batch build wrote the doc store in phase A, so echoing the text
-    through Arrow and into the phase-B cache would only burn bandwidth
-    (the streaming path keeps the payload -- it writes pages_indexed from
-    this same pass).
+    ``tf`` maps term -> count over text and url tokens, ``tf_url`` the url
+    tokens' share.  ``tris`` are the distinct trigram codes of the
+    containment haystack; ``emit_bloom`` also returns the legacy 1 KiB
+    per-doc trigram bloom (None otherwise) -- the tri_postings lane
+    supersedes it, one haystack pass either way."""
+    from probe_spark.textkit import tokenize
+    from probe_spark.trigram import doc_bloom_and_codes, doc_tri_codes
 
-    ``emit_bloom=False`` (default) skips the legacy 1 KiB/doc trigram
-    bloom: the tri_postings lane built from ``tris`` fully supersedes it
-    for fresh layouts, and at web scale the bloom column alone is ~1 KiB
-    x corpus of write volume that no query would read."""
+    if tokenizer == "simple":
+        def toks(text, url):
+            # single-space split of text only: no url tokens
+            return [t for t in (text or "").split(" ") if t], []
+    else:
+        def toks(text, url):
+            # preprocess_text_with_url = tokenize(text) ++ tokenize(url)
+            # (T11); the parts are kept separate so tf_url can record the
+            # url-token share per term
+            return tokenize(text or ""), tokenize(url or "")
+
+    def doc(url, text):
+        text_toks, url_toks = toks(text, url)
+        tf: dict[str, int] = {}
+        for t in text_toks:
+            tf[t] = tf.get(t, 0) + 1
+        tf_url: dict[str, int] = {}
+        for t in url_toks:
+            tf_url[t] = tf_url.get(t, 0) + 1
+            tf[t] = tf.get(t, 0) + 1
+        if emit_bloom:
+            bloom, tris = doc_bloom_and_codes(text, url)
+        else:
+            bloom, tris = None, doc_tri_codes(text, url)
+        return len(text_toks) + len(url_toks), tf, tf_url, bloom, tris
+
+    return doc
+
+
+def _make_tokenize_partition(tokenizer: str = "probe", emit_bloom: bool = False):
+    """mapInPandas fn over (doc_id, url, lang, text) batches emitting
+    TOKENS_SCHEMA rows: one doc row (doc_len, tris, tri_bloom) and one
+    posting row per distinct term, from ``_doc_tokenizer``."""
 
     def fn(iterator):
         import pandas as pd
 
-        from probe_spark.textkit import tokenize
-        from probe_spark.trigram import doc_bloom_and_codes, doc_tri_codes
-
-        if tokenizer == "simple":
-            def _toks(text, url):
-                # single-space split of text only: no url tokens
-                return [t for t in (text or "").split(" ") if t], []
-        else:
-            def _toks(text, url):
-                # preprocess_text_with_url = tokenize(text) ++ tokenize(url)
-                # (T11); the parts are kept separate so tf_url can record
-                # the url-token share per term
-                return tokenize(text or ""), tokenize(url or "")
-
+        doc = _doc_tokenizer(tokenizer, emit_bloom)
         for pdf in iterator:
-            out = {
-                "doc_id": [],
-                "url": [],
-                "lang": [],
-                "text": [],
-                "doc_len": [],
-                "term": [],
-                "tf": [],
-                "tf_url": [],
-                "tri_bloom": [],
-                "tris": [],
-            }
+            out = {f.name: [] for f in TOKENS_SCHEMA.fields}
+
+            def row(*values):  # one TOKENS_SCHEMA row
+                for col, v in zip(out.values(), values):
+                    col.append(v)
+
             for doc_id, url, lang, text in zip(
                 pdf["doc_id"], pdf["url"], pdf["lang"], pdf["text"]
             ):
-                text_toks, url_toks = _toks(text, url)
-                counts: dict[str, int] = {}
-                for t in text_toks:
-                    counts[t] = counts.get(t, 0) + 1
-                url_counts: dict[str, int] = {}
-                for t in url_toks:
-                    url_counts[t] = url_counts.get(t, 0) + 1
-                    counts[t] = counts.get(t, 0) + 1
-                dl = len(text_toks) + len(url_toks)
-                # doc-store row: tris (trigram postings lane), plus the
-                # legacy bloom when requested -- one haystack pass either way
-                if emit_bloom:
-                    bloom, codes = doc_bloom_and_codes(text, url)
-                else:
-                    bloom, codes = None, doc_tri_codes(text, url)
-                out["doc_id"].append(doc_id)
-                out["url"].append(url if emit_doc_payload else None)
-                out["lang"].append(lang if emit_doc_payload else None)
-                out["text"].append(text if emit_doc_payload else None)
-                out["doc_len"].append(dl)
-                out["term"].append(None)
-                out["tf"].append(0)
-                out["tf_url"].append(0)
-                out["tri_bloom"].append(bloom)
-                out["tris"].append(codes)
-                # posting rows
-                for t, c in counts.items():
-                    out["doc_id"].append(doc_id)
-                    out["url"].append(None)
-                    out["lang"].append(None)
-                    out["text"].append(None)
-                    out["doc_len"].append(dl)
-                    out["term"].append(t)
-                    out["tf"].append(c)
-                    out["tf_url"].append(url_counts.get(t, 0))
-                    out["tri_bloom"].append(None)
-                    out["tris"].append(None)
+                dl, tf, tf_url, bloom, tris = doc(url, text)
+                row(doc_id, url, lang, text, dl, None, 0, 0, bloom, tris)
+                for t, c in tf.items():
+                    row(doc_id, None, None, None, dl, t, c, tf_url.get(t, 0),
+                        None, None)
             yield pd.DataFrame(out)
 
     return fn
 
 
-# the production (full probe pipeline) tokenize fn -- the name the rest of
-# the codebase (incremental ingest, bench kernel) imports
+# the production (full probe pipeline) tokenize fn, which the bench kernel
+# imports
 _tokenize_partition = _make_tokenize_partition("probe")
 
 
-def tri_rows(token_rows: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, tri) -- each doc's DISTINCT 24-bit byte-trigram codes of
-    the lowercased ``text + "\\n" + url`` haystack (the exact string the
-    containment rescue tests, oracle.doc_term_freqs / the reference's
-    ``full_code_lower.contains(term)`` at file_processing.rs:1353-1358).
-
-    This is the substring-index lane (the public Zoekt / Google Code
-    Search trigram design): a rescue needle can only occur in docs whose
-    haystack holds ALL of the needle's trigrams, so query time intersects
-    the rarest few trigram posting lists and verifies containment on that
-    candidate set only -- O(trigram df) per query instead of the O(corpus)
-    bloom-column scan.
-
-    Input is the TOKENIZE OUTPUT (doc rows carry the ``tris`` array,
-    computed by the same numpy haystack pass as the bloom,
-    trigram.doc_bloom_and_codes); this is a pure explode -- no extra read
-    of the text and no per-position substring calls (a JVM
-    transform+substring formulation was measured at ~7x the whole build's
-    cost: substring(s, i, 3) re-seeks the UTF-8 string per position)."""
-    return token_rows.filter(F.col("term").isNull()).select(
-        "doc_id", F.explode("tris").alias("tri"), *keep
-    )
-
-
-# tri_partial / tri_terms and terms_partial / terms rows; read back with
-# these schemas, which skip Spark's schema-inference job
+# tri_partial / tri_terms and terms_partial / terms rows; Spark read-backs
+# pass these schemas, which skip Spark's schema-inference job
 TRI_DF_SCHEMA = "tri int, df long"
 TERMS_SCHEMA = "term string, df long, cf long"
+# the dictionaries: {table: (key, summed columns, partial table, schema)}
+DICTIONARIES = {
+    "terms": ("term", ("df", "cf"), "terms_partial", TERMS_SCHEMA),
+    "tri_terms": ("tri", ("df",), "tri_partial", TRI_DF_SCHEMA),
+}
+_ARROW_TYPES = {"term": pa.string(), "tri": pa.int32(), "df": pa.int64(),
+                "cf": pa.int64()}
 
 
-def term_counts(rows: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """(*keep, term, df, cf) partial counts of the tokenize output's
-    posting rows: the terms_partial table."""
-    return (
-        rows.filter(F.col("term").isNotNull())
-        .groupBy(*keep, "term")
-        .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-    )
+def _ranked(pages: pa.Table, offset: int):
+    """A slice's rows in url order, and their doc ids: offset + rank."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    pages = pages.take(pc.sort_indices(pages["url"]))
+    return pages, np.arange(offset, offset + pages.num_rows, dtype=np.int64)
 
 
-def tri_counts(tri: DataFrame, keep: tuple[str, ...] = ()) -> DataFrame:
-    """(*keep, tri, df) partial counts of lane rows: the tri_partial table."""
-    return tri.groupBy(*keep, "tri").agg(F.count(F.lit(1)).alias("df"))
+def _slice_tables(
+    pages: pa.Table,
+    offset: int,
+    tokenizer: str = "probe",
+    emit_bloom: bool = False,
+    keep_text: bool = True,
+) -> dict[str, pa.Table]:
+    """Every table of one url slice, as sorted Arrow tables: the rows are
+    ranked by url (doc_id = offset + rank) and tokenized by
+    ``_doc_tokenizer``.  ``tri_lane`` is the unpruned trigram lane; the
+    trigram pass turns it into tri_postings.  ``keep_text=False`` (the
+    reference doc store) leaves text out of pages_indexed."""
+    import numpy as np
+
+    pages, doc_ids = _ranked(pages, offset)
+    n = pages.num_rows
+    doc = _doc_tokenizer(tokenizer, emit_bloom)
+    lens = np.zeros(n, dtype=np.int64)
+    blooms, tris = [], []
+    terms, owner, tfs, tf_urls = [], [], [], []
+    for i, (url, text) in enumerate(
+        zip(pages["url"].to_pylist(), pages["text"].to_pylist())
+    ):
+        lens[i], tf, tf_url, bloom, codes = doc(url, text)
+        blooms.append(bloom)
+        tris.append(codes)
+        terms.extend(tf)
+        tfs.extend(tf.values())
+        tf_urls.extend(tf_url.get(t, 0) for t in tf)
+        owner.extend([i] * len(tf))
+    owner = np.asarray(owner, dtype=np.int64)
+    postings = pa.table(
+        {
+            "term": pa.array(terms, pa.string()),
+            "doc_id": doc_ids[owner],
+            "tf": pa.array(tfs, pa.int32()),
+            "tf_url": pa.array(tf_urls, pa.int32()),
+            "doc_len": lens[owner],
+        }
+    ).sort_by([("term", "ascending"), ("doc_id", "ascending")])
+    n_tris = np.fromiter(map(len, tris), dtype=np.int64, count=n)
+    lane = pa.table(
+        {
+            "tri": pa.array(
+                np.concatenate([np.empty(0, np.int32), *tris]), pa.int32()
+            ),
+            "doc_id": np.repeat(doc_ids, n_tris),
+        }
+    ).sort_by([("tri", "ascending"), ("doc_id", "ascending")])
+    tp = postings.group_by("term").aggregate([("doc_id", "count"), ("tf", "sum")])
+    tri_p = lane.group_by("tri").aggregate([("doc_id", "count")])
+    store = {"doc_id": doc_ids, "url": pages["url"], "lang": pages["lang"]}
+    if keep_text:
+        store["text"] = pages["text"]
+    lens_cols = {"doc_id": doc_ids, "doc_len": lens}
+    if emit_bloom:
+        lens_cols["tri_bloom"] = pa.array(blooms, pa.binary())
+    return {
+        "pages_indexed": pa.table(store),
+        "doc_lens": pa.table(lens_cols),
+        "postings": postings,
+        "terms_partial": pa.table(
+            {
+                "term": tp["term"],
+                "df": tp["doc_id_count"],
+                "cf": tp["tf_sum"].cast(pa.int64()),
+            }
+        ).sort_by("term"),
+        "tri_partial": pa.table(
+            {"tri": tri_p["tri"], "df": tri_p["doc_id_count"]}
+        ).sort_by("tri"),
+        "tri_lane": lane,
+    }
 
 
-def listed_tri_rows(
-    tri: DataFrame, dfs: DataFrame, cutoff: float | None
-) -> DataFrame:
-    """The lane rows worth writing: ``tri`` minus every trigram whose df,
-    summed over the (tri, df) rows of ``dfs``, exceeds ``cutoff``.  ``dfs``
-    counts at least the rows of ``tri``, so a dropped trigram's true df is
-    above the cutoff too.  A None cutoff (a complete lane) keeps every
-    row.  The dense set is at most (lane rows / cutoff) trigrams, a
-    constant multiple of the distinct trigrams per doc: a small broadcast."""
-    if cutoff is None:
-        return tri
-    dense = (
-        dfs.groupBy("tri")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > cutoff)
-        .select("tri")
-    )
-    listed = tri.join(F.broadcast(dense), "tri", "left_anti")
-    return listed.select(*tri.columns)
+# one row per slice task: the slice, the attempt that wrote it, its
+# counts and its own wall time
+SLICE_RESULT = (
+    "sid int, attempt long, n_docs long, n_postings long, sum_dl long, "
+    "n_tri long, wall_ms long"
+)
 
 
-def tri_dictionary(
-    spark: SparkSession, out: Path, pruned: bool
-) -> DataFrame | None:
-    """(tri, df) over the whole lane, or None when the index has no lane.
-    A pruned lane lacks the rows of dense trigrams, so df is summed from
-    tri_partial; a complete lane (no manifest cutoff) counts its rows.
-    Laid out for its write: one file until the source outgrows
-    TRI_FILE_BYTES (the driver reads it whole, so no order is kept)."""
-    src = out / ("tri_partial" if pruned else "tri_postings")
-    if not (src.exists() and any(src.iterdir())):
-        return None
-    if pruned:
-        parts = spark.read.schema(TRI_DF_SCHEMA).parquet(str(src))
-        tri_dict = parts.groupBy("tri").agg(F.sum("df").alias("df"))
-    else:
-        lane = spark.read.parquet(str(src))
-        tri_dict = lane.groupBy("tri").agg(F.count(F.lit(1)).alias("df"))
-    return tri_dict.coalesce(file_count(_dir_bytes(src), TRI_FILE_BYTES))
+def _slice_writer(
+    staging: str, offsets: dict[int, int], tokenizer: str, emit_bloom: bool,
+    keep_text: bool,
+):
+    """mapInArrow fn of the write stage: one partition is one slice, whose
+    tables land in ``<staging>/<taskAttemptId>/<table>.parquet`` (an empty
+    table writes no file)."""
+
+    def run(batches):
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        t0 = time.perf_counter()
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        pages = pa.Table.from_batches(batches)
+        (sid,) = pc.unique(pages["sid"]).to_pylist()
+        tables = _slice_tables(
+            pages, offsets[sid], tokenizer, emit_bloom, keep_text
+        )
+        att = TaskContext.get().taskAttemptId()
+        d = Path(staging) / str(att)
+        d.mkdir(parents=True, exist_ok=True)
+        for name, t in tables.items():
+            if t.num_rows:
+                write_arrow(t, d / f"{name}.parquet")
+        lens = tables["doc_lens"]["doc_len"]
+        yield pa.RecordBatch.from_pydict(
+            {
+                "sid": pa.array([sid], pa.int32()),
+                "attempt": [att],
+                "n_docs": [len(lens)],
+                "n_postings": [tables["postings"].num_rows],
+                "sum_dl": [pc.sum(lens).as_py() or 0],
+                "n_tri": [tables["tri_lane"].num_rows],
+                "wall_ms": [int((time.perf_counter() - t0) * 1000)],
+            }
+        )
+
+    return run
 
 
-def _assign_doc_ids(
-    spark: SparkSession, pages: DataFrame, n_buckets: int
-) -> tuple[DataFrame, list[dict]]:
-    """Phase A: doc_id = global url rank via url-range slices + offsets.
-
-    Two passes, but only the SECOND touches the text bytes:
-
-      1. a url-COLUMN-ONLY job range-partitions the urls into P slices
-         (P = cluster parallelism) and collects per-slice (count, min url).
-         Column pruning means the heavy text/html bytes never enter this
-         shuffle -- at web scale urls are <0.1% of the table;
-      2. the full rows are assigned their slice by comparing url against
-         the broadcast slice boundaries (a JVM-side aggregate over a
-         literal array -- equal urls can't straddle a boundary because the
-         range partitioner keeps equal keys together), then ranked within
-         the slice (one width-bounded sort shuffle) and offset by the
-         slice's running count.
-
-    Compared to range-shuffling the full rows this removes a full pass
-    over the text (the old persist + count materialization) and the range
-    partitioner's SAMPLING job over the wide table.  Contiguous slices map
-    onto buckets (slices ascend in url), so bucket = slice*B//P stays a
-    deterministic url-range bucketing."""
-    par = max(n_buckets, spark.sparkContext.defaultParallelism)
+def _slice_pages(
+    spark: SparkSession, pages: DataFrame, n_buckets: int, k: int = 1
+) -> list[dict]:
+    """Slicing: a url-COLUMN-ONLY job range-partitions the urls into
+    n_buckets * k slices and collects each slice's (count, min url).
+    Column pruning keeps the text out of this shuffle.  Returns the
+    nonempty slices in url order: {pid, bucket, count, offset, lo}, where
+    slice i covers urls [lo_i, lo_{i+1}) and bucket = i * n_buckets // P,
+    so a bucket is a contiguous run of slices."""
+    par = n_buckets * k
     slice_rows = (
         pages.select("url")
         .repartitionByRange(par, "url")
@@ -407,46 +464,70 @@ def _assign_doc_ids(
     )
     # <= P rows: sorted here, as a Spark orderBy would cost two more jobs
     slice_rows.sort(key=lambda r: r["pid"])
-    # nonempty slices in url order; slice i covers [lo_i, lo_{i+1})
-    slices = [r for r in slice_rows if r["count"] > 0]
-    bounds = [r["lo"] for r in slices[1:]]  # first slice needs no lower bound
-    acc = 0
-    bucket_meta = []
-    for i, row in enumerate(slices):
-        bucket_meta.append(
+    slices, acc = [], 0
+    for i, row in enumerate(r for r in slice_rows if r["count"] > 0):
+        slices.append(
             {
                 "pid": i,
                 "bucket": i * n_buckets // par,
                 "count": row["count"],
                 "offset": acc,
-                # slice's min url: reference-mode phase B pushes each
-                # bucket's [lo, next_lo) url range into the source scan
                 "lo": row["lo"],
             }
         )
         acc += row["count"]
-    offset_df = spark.createDataFrame(
-        [(m["pid"], m["offset"], m["bucket"]) for m in bucket_meta]
-        or [(0, 0, 0)],
-        ["pid", "offset", "bucket"],
-    )
+    return slices
+
+
+def _place(pages: DataFrame, slices: list[dict], todo=None) -> DataFrame:
+    """``pages`` with its slice id ``sid`` (url against the slices' lower
+    bounds: equal urls never straddle a bound, since the range partitioner
+    keeps equal keys together), restricted to the slices in ``todo`` (all
+    when None) and placed one slice per partition."""
+    bounds = [s["lo"] for s in slices[1:]]  # the first slice has no bound
     if bounds:
         sid = F.aggregate(
             F.array(*[F.lit(b) for b in bounds]),
             F.lit(0),
-            lambda acc_, b: acc_ + F.when(F.col("url") >= b, 1).otherwise(0),
+            lambda acc, b: acc + F.when(F.col("url") >= b, 1).otherwise(0),
         )
     else:
         sid = F.lit(0)
-    w = Window.partitionBy("pid").orderBy("url")
-    indexed = (
-        pages.withColumn("pid", sid)
-        .withColumn("rank_in_pid", F.row_number().over(w) - 1)
-        .join(F.broadcast(offset_df), "pid")
-        .withColumn("doc_id", F.col("offset") + F.col("rank_in_pid"))
-        .drop("rank_in_pid", "offset", "pid")
+    placed = pages.withColumn("sid", sid.cast("int"))
+    if todo is not None:
+        placed = placed.filter(F.col("sid").isin(list(todo)))
+    return placed.repartitionById(max(len(slices), 1), "sid")
+
+
+def _assign_doc_ids(
+    spark: SparkSession, pages: DataFrame, n_buckets: int
+) -> tuple[DataFrame, list[dict]]:
+    """Slicing plus the slice tasks' ranking, as a DataFrame: ``pages``
+    with doc_id (the global url rank) and bucket, and the slices."""
+    slices = _slice_pages(spark, pages, n_buckets)
+    meta = {s["pid"]: (s["offset"], s["bucket"]) for s in slices}
+    schema = StructType(
+        pages.schema.fields
+        + [StructField("doc_id", LongType()), StructField("bucket", IntegerType())]
     )
-    return indexed, bucket_meta
+
+    def rank(batches):
+        import pyarrow.compute as pc
+
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        (sid,) = pc.unique(t["sid"]).to_pylist()
+        offset, bucket = meta[sid]
+        t, doc_ids = _ranked(t.drop_columns(["sid"]), offset)
+        yield from (
+            t.append_column("doc_id", pa.array(doc_ids))
+            .append_column("bucket", pa.array([bucket] * len(doc_ids), pa.int32()))
+            .to_batches()
+        )
+
+    return _place(pages, slices).mapInArrow(rank, schema), slices
 
 
 def _read_lineage(index_dir: str) -> dict[int, dict]:
@@ -495,38 +576,9 @@ def files_by_table(index_dir: Path) -> dict[str, int]:
     }
 
 
-def _committed_parquet_rows(path: Path) -> int:
-    """Exact row count of a committed parquet dir from file footers
-    (driver-side metadata read, no Spark job).  Unlike ``observe`` on the
-    write, this counts only files the commit protocol kept, so it stays
-    exact under task retries and speculative duplicates (Observation rows
-    from a losing attempt are merged into the metric even though its
-    files are discarded)."""
-    import pyarrow.parquet as pq
-
-    return sum(
-        pq.read_metadata(f).num_rows for f in Path(path).rglob("*.parquet")
-    )
-
-
-def _committed_column_sum(path: Path, col: str) -> int:
-    """Sum one integer column of a committed parquet dir via a driver-side
-    pyarrow column read (single-column projection; retry/speculation-proof
-    for the same reason as _committed_parquet_rows)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as ds
-
-    files = sorted(str(f) for f in Path(path).rglob("*.parquet"))
-    if not files:
-        return 0
-    t = ds.dataset(files, format="parquet").to_table(columns=[col])
-    return int(pc.sum(t.column(col)).as_py() or 0)
-
-
 def write_stats(index_dir: str, n_docs: int, avgdl: float) -> None:
     """Write the singleton stats table driver-side (pyarrow) -- the inputs
-    already landed in lineage during phase B, so no Spark job."""
-    import pyarrow as pa
+    already landed in lineage, so no Spark job."""
     import pyarrow.parquet as pq
 
     out = Path(index_dir) / "stats"
@@ -542,8 +594,10 @@ def write_stats(index_dir: str, n_docs: int, avgdl: float) -> None:
     pq.write_table(table, out / "part-00000.parquet", compression="zstd")
 
 
-def sorted_dictionary(terms: DataFrame, src_bytes: int) -> DataFrame:
-    """Term-dictionary write layout: sorted by term, so parquet min/max
+def sorted_dictionary(
+    terms: DataFrame, src_bytes: int, key: str = "term"
+) -> DataFrame:
+    """Dictionary write layout: sorted by ``key``, so parquet min/max
     statistics turn dictionary lookups into row-group reads instead of
     vocabulary scans -- prefix_search's StringStartsWith and the engine's
     per-term df fallback (the web-vocab path where the whole-dictionary
@@ -553,22 +607,202 @@ def sorted_dictionary(terms: DataFrame, src_bytes: int) -> DataFrame:
     partitioning is skew-free by construction, and a single range needs
     no sampling job."""
     n = file_count(src_bytes, FILE_BYTES)
-    return terms.repartitionByRange(n, "term").sortWithinPartitions("term")
+    return terms.repartitionByRange(n, key).sortWithinPartitions(key)
 
 
-def _bucket_url_range(
-    bucket_meta: list[dict], b: int
-) -> tuple[str | None, str | None]:
-    """[lo, hi) url range of bucket ``b`` from the manifest's slice
-    metadata (slices ascend in url; a bucket is a contiguous slice run).
-    Returns (None, None) bounds where open-ended (first/last bucket, or a
-    legacy manifest without per-slice ``lo``)."""
-    lows = [m.get("lo") for m in bucket_meta if m["bucket"] == b]
-    if not lows or any(lo is None for lo in lows):
-        return None, None
-    nxt = [m.get("lo") for m in bucket_meta if m["bucket"] > b]
-    hi = min(nxt) if nxt and all(x is not None for x in nxt) else None
-    return min(lows), hi
+def parquet_files(*paths: Path) -> list[str]:
+    """Every parquet file under ``paths`` (files or dirs; a missing path
+    has none), sorted."""
+    return sorted(
+        str(f)
+        for p in map(Path, paths)
+        for f in ([p] if p.is_file() else p.rglob("*.parquet"))
+    )
+
+
+def summed(spark: SparkSession, files: list[str], table: str):
+    """The key-sorted sums of dictionary ``table``'s partial rows in
+    ``files``: a pyarrow Table summed on the driver while the files total
+    under FILE_BYTES, else a (lazy) Spark DataFrame."""
+    key, cols, _, schema = DICTIONARIES[table]
+    if sum(Path(f).stat().st_size for f in files) >= FILE_BYTES:
+        return (
+            spark.read.schema(schema).parquet(*files)
+            .groupBy(key)
+            .agg(*[F.sum(c).alias(c) for c in cols])
+        )
+    import pyarrow.dataset as ds
+
+    arrow_schema = pa.schema([(c, _ARROW_TYPES[c]) for c in (key, *cols)])
+    t = ds.dataset(files, schema=arrow_schema, format="parquet").to_table()
+    t = t.group_by(key).aggregate([(c, "sum") for c in cols])
+    return pa.table(
+        {key: t[key], **{c: t[f"{c}_sum"].cast(pa.int64()) for c in cols}}
+    ).sort_by(key)
+
+
+def fold_dictionary(
+    spark: SparkSession, out: Path, table: str, files: list[str]
+) -> None:
+    """(Re)write dictionary ``table`` (terms or tri_terms) as ``summed``
+    over ``files``: one sorted pyarrow file, or above FILE_BYTES a Spark
+    write laid out by sorted_dictionary.  Written to a temp dir and
+    swapped in, so ``files`` may include the table's own old files."""
+    key = DICTIONARIES[table][0]
+    dic = summed(spark, files, table)
+    tmp = out / f"{table}_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    if isinstance(dic, pa.Table):
+        tmp.mkdir(parents=True)
+        write_arrow(dic, tmp / "part-00000.parquet")
+    else:
+        src_bytes = sum(Path(f).stat().st_size for f in files)
+        index_write(sorted_dictionary(dic, src_bytes, key)).parquet(str(tmp))
+    shutil.rmtree(out / table, ignore_errors=True)
+    tmp.rename(out / table)
+
+
+def rebuild_tri_terms(spark: SparkSession, out: Path, cutoff) -> None:
+    """tri_terms over every committed bucket: the summed tri_partial of a
+    listed lane, or, for a complete lane (no manifest cutoff: a layout
+    that may predate tri_partial), the lane's own rows counted."""
+    if cutoff is not None:
+        fold_dictionary(spark, out, "tri_terms", parquet_files(out / "tri_partial"))
+    elif (out / "tri_postings").exists():
+        lane = spark.read.parquet(str(out / "tri_postings"))
+        counted = lane.groupBy("tri").agg(F.count(F.lit(1)).alias("df"))
+        index_write(counted.coalesce(1)).parquet(str(out / "tri_terms"))
+
+
+def dense_tris(
+    spark: SparkSession, files: list[str], cutoff: float | None
+) -> list[int]:
+    """The trigrams whose df, summed over the tri_partial rows of
+    ``files``, exceeds ``cutoff`` (none for a complete lane).  The set is
+    at most (lane rows / cutoff) trigrams: small by construction."""
+    if cutoff is None or not files:
+        return []
+    dfs = summed(spark, files, "tri_terms")
+    if isinstance(dfs, pa.Table):
+        import pyarrow.compute as pc
+
+        return dfs.filter(pc.greater(dfs["df"], cutoff))["tri"].to_pylist()
+    return [r["tri"] for r in dfs.filter(F.col("df") > cutoff).collect()]
+
+
+def write_slices(
+    spark: SparkSession,
+    pages: DataFrame,
+    slices: list[dict],
+    staging: Path,
+    todo: list[int],
+    tokenizer: str = "probe",
+    emit_bloom: bool = False,
+    keep_text: bool = True,
+) -> dict[int, dict]:
+    """The write stage: one task per slice in ``todo`` (slice ids) stages
+    its tables under ``staging``.  Returns {slice id: result row} of the
+    attempts ``collect()`` returned, each with ``files`` = {table: staged
+    file}.  Raises if a slice's row count differs from its ``count``
+    (unless that is None)."""
+    offsets = {s["pid"]: s["offset"] for s in slices}
+    fn = _slice_writer(str(staging), offsets, tokenizer, emit_bloom, keep_text)
+    rows = _place(pages, slices, todo).mapInArrow(fn, SLICE_RESULT).collect()
+    results = {r["sid"]: r.asDict() for r in rows}
+    for sid in todo:
+        got = results.get(sid, {}).get("n_docs", 0)
+        if slices[sid]["count"] not in (None, got):
+            raise ValueError(
+                f"url slice {sid} holds {got} docs, the manifest records "
+                f"{slices[sid]['count']}: the source changed since slicing"
+            )
+    for r in results.values():
+        d = staging / str(r["attempt"])
+        r["files"] = {
+            t: d / f"{t}.parquet"
+            for t in ("pages_indexed", "doc_lens", "postings", "terms_partial",
+                      "tri_partial", "tri_lane")
+        }
+    return results
+
+
+def prune_lane(
+    spark: SparkSession, results: dict[int, dict], dense: list[int]
+) -> None:
+    """The trigram pass: sets each slice's ``files["tri_postings"]`` to
+    its staged lane minus the ``dense`` trigrams' rows (one task per slice,
+    written next to the lane, no file when nothing is left), its
+    ``n_tri`` to the rows kept, and adds the task's wall time."""
+    lanes = {
+        sid: str(r["files"]["tri_lane"])
+        for sid, r in results.items()
+        if r["files"]["tri_lane"].exists()
+    }
+    for r in results.values():  # nothing to drop: the lane is listed
+        r["files"]["tri_postings"] = r["files"]["tri_lane"]
+    if not dense or not lanes:
+        return
+    order = sorted(lanes)
+
+    def run(batches):
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        drop = pa.array(dense, pa.int32())
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                t0 = time.perf_counter()
+                sid = order[i]
+                lane = pq.read_table(lanes[sid])
+                kept = lane.filter(pc.invert(pc.is_in(lane["tri"], drop)))
+                path = ""
+                if kept.num_rows:
+                    att = TaskContext.get().taskAttemptId()
+                    path = f"{lanes[sid][:-len('.parquet')]}.{att}.parquet"
+                    write_arrow(kept, Path(path))
+                yield pa.RecordBatch.from_pydict(
+                    {
+                        "sid": pa.array([sid], pa.int32()),
+                        "path": [path],
+                        "n_tri": [kept.num_rows],
+                        "wall_ms": [int((time.perf_counter() - t0) * 1000)],
+                    }
+                )
+
+    n = len(order)
+    for row in (
+        spark.range(0, n, 1, n)
+        .mapInArrow(run, "sid int, path string, n_tri long, wall_ms long")
+        .collect()
+    ):
+        r = results[row["sid"]]
+        r["files"]["tri_postings"] = Path(row["path"]) if row["path"] else None
+        r["n_tri"] = row["n_tri"]
+        r["wall_ms"] += row["wall_ms"]
+
+
+def commit_slices(
+    out: Path, bucket, results: list[tuple[int, dict]], tables
+) -> None:
+    """Rename the staged ``tables`` files of the given (slice id, result)
+    pairs into ``<table>/bucket=<bucket>/part-<slice>.parquet``, replacing
+    whatever the bucket held.  Only these attempts' files land: a stray
+    attempt (a speculative or failed duplicate) stays in staging."""
+    for table in tables:
+        d = out / table / f"bucket={bucket}"
+        shutil.rmtree(d, ignore_errors=True)
+        for sid, r in results:
+            src = r["files"].get(table)
+            if src is not None and src.exists():
+                d.mkdir(parents=True, exist_ok=True)
+                src.rename(d / f"part-{sid:05d}.parquet")
+
+
+BUCKET_TABLES = (
+    "pages_indexed", "doc_lens", "postings", "terms_partial", "tri_partial",
+    "tri_postings",
+)
 
 
 def doc_text_df(spark: SparkSession, index_dir: str, docs: DataFrame) -> DataFrame:
@@ -610,12 +844,12 @@ def build_index(
 ) -> dict:
     """Build (or resume) the inverted index from a pages DataFrame.
 
-    ``fail_buckets`` injects a failure after the named buckets complete --
-    used by the kill-resume test only.  ``tokenizer`` selects the tokenize
-    UDF (see _make_tokenize_partition); it is recorded in the manifest and
+    ``fail_buckets`` injects a failure after the named buckets commit --
+    used by the kill-resume tests only.  ``tokenizer`` selects the
+    tokenizer (see _doc_tokenizer); it is recorded in the manifest and
     honored on resume.  ``emit_bloom`` additionally writes the legacy
     per-doc trigram bloom column into doc_lens (the tri_postings lane
-    supersedes it; see _make_tokenize_partition).
+    supersedes it).
 
     ``doc_store``:
       * "copy" (default) -- pages_indexed carries the text: the index is
@@ -623,48 +857,69 @@ def build_index(
         extract read no external table.
       * "reference" -- for sources that are already DURABLE tables (the
         Iceberg premise, SURVEY SS2.12): pages_indexed shrinks to a slim
-        (doc_id, url, lang) map and text is NEVER copied -- phase B joins
-        each bucket's slim rows against the source (url-range pushdown
-        from the manifest's slice boundaries), and query-time text
-        consumers hydrate through doc_text_df().  At web scale this
-        halves build write volume (text dominates bytes) for the price of
-        a per-bucket join and a query-time join on the rescue/grep paths.
-        Requires ``source_path`` (re-readable parquet/Iceberg dir whose
-        rows are keyed by UNIQUE url -- the crawl-snapshot premise; the
-        streaming path enforces it via dropDuplicates).  ``pages`` may be
-        None (read from source_path).
+        (doc_id, url, lang) map and text is NEVER copied -- the slice
+        tasks tokenize the source rows, and query-time text consumers
+        hydrate through doc_text_df().  At web scale this halves build
+        write volume (text dominates bytes) for the price of a query-time
+        join on the rescue/grep paths.  Requires ``source_path``
+        (re-readable parquet/Iceberg dir whose rows are keyed by UNIQUE
+        url -- the crawl-snapshot premise; the streaming path enforces it
+        via dropDuplicates).  ``pages`` may be None (read from
+        source_path).
 
-    Returns build metrics (also persisted in the lineage table), plus
+    A resume rebuilds every bucket without a lineage row from ``pages``
+    (or, when None, ``source_path``), which must hold the rows the
+    interrupted build sliced.
+
+    Returns build metrics (also persisted in the lineage table);
     ``bytes_by_table`` and ``files_by_table``: the index footprint and
-    parquet file count per top-level table.
+    parquet file count per top-level table; ``phase_ms``: driver wall time
+    of slicing, write, trigram pass, dictionaries and commit; ``jobs``:
+    the Spark jobs the call started.
     """
     if doc_store not in ("copy", "reference"):
         raise ValueError(f"doc_store must be 'copy' or 'reference': {doc_store!r}")
     if doc_store == "reference" and not source_path:
         raise ValueError("doc_store='reference' requires source_path")
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    job0 = dag.nextJobId()
+    phase_ms: dict[str, int] = {}
+    t0 = [time.perf_counter()]
+
+    def lap(phase: str) -> None:
+        now = time.perf_counter()
+        phase_ms[phase] = int((now - t0[0]) * 1000)
+        t0[0] = now
+
     out = Path(index_dir)
     out.mkdir(parents=True, exist_ok=True)
     manifest_path = out / "manifest.json"
-    pages_indexed_dir = out / "pages_indexed"
+    staging = out / "_attempts"
+    shutil.rmtree(staging, ignore_errors=True)  # a killed run's leftovers
 
-    if resume and manifest_path.exists():
+    resuming = resume and manifest_path.exists()
+    if resuming:
         manifest = json.loads(manifest_path.read_text())
         n_buckets = manifest["n_buckets"]
         tokenizer = manifest.get("tokenizer", "probe")
         emit_bloom = manifest.get("emit_bloom", emit_bloom)
         doc_store = manifest.get("doc_store", "copy")
         source_path = manifest.get("source_path")
-    else:
+    if pages is None:
+        if not source_path:
+            raise ValueError(
+                "build_index needs pages: this index records no source_path "
+                "to read them from (pass the pages the build was started with)"
+            )
+        pages = spark.read.parquet(source_path)
+    if not resuming:
         # fresh build: drop checkpoints AND derived tables of any previous
-        # build in this dir -- per-bucket writes overwrite only their own
+        # build in this dir -- per-bucket commits replace only their own
         # bucket, so a rebuild with fewer buckets would otherwise leave
         # stale higher-numbered bucket dirs polluting postings/terms/blocks
-        import shutil
-
         for stale in (
-            "lineage", "postings", "doc_lens", "docs", "terms_partial",
-            "terms", "stats", "blocks", "tri_postings", "tri_terms",
-            "tri_partial",
+            *BUCKET_TABLES, "lineage", "docs", "terms", "stats", "blocks",
+            "tri_terms",
         ):
             shutil.rmtree(out / stale, ignore_errors=True)
         (out / "stream_state.json").unlink(missing_ok=True)
@@ -680,176 +935,81 @@ def build_index(
                 raise ValueError(
                     f"{bad} rows violate the text == extract_text(html) invariant"
                 )
-        # Phase A: ingest snapshot with doc ids.  Only the columns the
-        # index needs travel through the shuffle (html, once validated,
-        # stays behind -- at web scale it dominates the bytes).  In
-        # reference mode the TEXT stays behind too: the slice-rank sort
-        # shuffles only (url, lang), and the doc store written below is a
-        # slim id map.
-        if pages is None:
-            pages = spark.read.parquet(source_path)
-        pages = (
-            pages.select("url", "lang")
-            if doc_store == "reference"
-            else pages.select("url", "text", "lang")
-        )
-        indexed, bucket_meta = _assign_doc_ids(spark, pages, n_buckets)
+    # only the columns the index needs travel through the placement
+    # shuffle (html, once validated, stays behind)
+    pages = pages.select("url", "text", "lang")
+    if not resuming:
+        k = file_count(_input_bytes(spark, pages) // n_buckets, FILE_BYTES)
+        slices = _slice_pages(spark, pages, n_buckets, k)
         manifest = {
             "n_buckets": n_buckets,
-            "buckets": bucket_meta,
-            "tri_cutoff": tri_cutoff(sum(m["count"] for m in bucket_meta)),
+            "buckets": slices,
+            "tri_cutoff": tri_cutoff(sum(s["count"] for s in slices)),
             "tokenizer": tokenizer,
             "emit_bloom": emit_bloom,
             "doc_store": doc_store,
             "source_path": source_path,
             "created_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         }
-        # NOTE: overlapping this write with phase B (persisting `indexed`
-        # and tokenizing from the cache while a driver thread writes the
-        # doc store) was A/B-measured at 32 cores and LOST by ~20 s per
-        # 150k-doc build: the extra materialization + memory-bandwidth
-        # contention on the tokenize critical path outweigh the serialized
-        # write it saves.  Phase A stays synchronous.
-        doc_cols = (
-            ["doc_id", "url", "lang", "bucket"]
-            if doc_store == "reference"
-            else ["doc_id", "url", "lang", "text", "bucket"]
-        )
-        (
-            index_write(indexed.select(*doc_cols))
-            .partitionBy("bucket")
-            .parquet(str(pages_indexed_dir))
-        )
         manifest_path.write_text(json.dumps(manifest, indent=1))
-
-    done = set(_read_lineage(index_dir)) if resume else set()
+    slices = manifest["buckets"]
+    done = set(_read_lineage(index_dir)) if resuming else set()
     cutoff = manifest.get("tri_cutoff")  # None: resuming a complete lane
+    todo = [s["pid"] for s in slices if s["bucket"] not in done]
+    lap("slicing")
 
-    def _text_bytes(b: int) -> int:
-        """Input bytes of bucket b, the unit of task and file sizing."""
-        if manifest.get("doc_store") == "reference":
-            # slim store holds no text: the bucket's share of the source
-            return _dir_bytes(Path(source_path)) // max(n_buckets, 1)
-        return _dir_bytes(pages_indexed_dir / f"bucket={b}")
+    results = (
+        write_slices(
+            spark, pages, slices, staging, todo, tokenizer, emit_bloom,
+            keep_text=doc_store == "copy",
+        )
+        if todo
+        else {}
+    )
+    lap("write")
 
-    # Phase B: per-bucket tokenize + write (resumable unit).
-    def _build_bucket(b: int) -> None:
-        t0 = time.time()
-        if not (pages_indexed_dir / f"bucket={b}").exists():
-            # empty url range (tiny inputs): commit an empty checkpoint
-            _append_lineage(
-                index_dir,
-                {
-                    "bucket": b, "n_docs": 0, "n_postings": 0, "sum_dl": 0,
-                    "bytes_in": 0, "bytes_out": 0, "wall_ms": 0,
-                    "finished_ts": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                },
-            )
-            return
-        # task sizing is data-proportional, not a fixed fan-out: at web
-        # scale one bucket can be terabytes, so split by bytes (~64 MB of
-        # input text per tokenize task) with a floor of 2x cores so small
-        # buckets still use the whole machine and stragglers even out
-        par = spark.sparkContext.defaultParallelism
-        bucket_bytes = _text_bytes(b)
-        n_tasks = max(par * 2, int(bucket_bytes // (64 << 20)))
-        files = file_count(bucket_bytes, FILE_BYTES)
-        tri_files = file_count(bucket_bytes, TRI_FILE_BYTES)
-        bucket_pages = spark.read.parquet(
-            str(pages_indexed_dir / f"bucket={b}")
+    def partials(table: str) -> list[str]:
+        """The winning attempts' ``table`` files plus the committed
+        buckets' (a resume): summed, the exact global counts."""
+        return parquet_files(
+            *(r["files"][table] for r in results.values()),
+            *(out / table / f"bucket={b}" for b in sorted(done)),
         )
-        if manifest.get("doc_store") == "reference":
-            # hydrate text from the durable source, url-range pushdown
-            # from the manifest's slice boundaries: on a url-clustered
-            # source (Iceberg sort order) each bucket job scans only its
-            # own slice of the table
-            src = spark.read.parquet(source_path).select("url", "text")
-            lo, hi = _bucket_url_range(manifest["buckets"], b)
-            if lo is not None:
-                src = src.filter(F.col("url") >= lo)
-            if hi is not None:
-                src = src.filter(F.col("url") < hi)
-            bucket_pages = bucket_pages.select("doc_id", "url", "lang").join(
-                src, "url", "inner"
-            )
-        bucket_pages = bucket_pages.select(
-            "doc_id", "url", "lang", "text"
-        ).repartition(n_tasks)
-        rows = bucket_pages.mapInPandas(
-            _make_tokenize_partition(tokenizer, emit_bloom=emit_bloom),
-            TOKENS_SCHEMA,
+
+    tri_parts = partials("tri_partial")
+    prune_lane(spark, results, dense_tris(spark, tri_parts, cutoff))
+    lap("trigram_pass")
+
+    fold_dictionary(spark, out, "terms", partials("terms_partial"))
+    if cutoff is not None:
+        fold_dictionary(spark, out, "tri_terms", tri_parts)
+    lap("dictionaries")
+
+    for b in range(n_buckets):
+        if b in done:
+            continue
+        mine = sorted(
+            (s["pid"], results[s["pid"]]) for s in slices if s["bucket"] == b
         )
-        rows.persist()
-        lens_dir = out / "doc_lens" / f"bucket={b}"
-        postings_dir = out / "postings" / f"bucket={b}"
-        tpart_dir = out / "terms_partial" / f"bucket={b}"
-        # postings first: this job materializes the persisted tokenization;
-        # the small doc_lens/terms_partial jobs below then read from cache.
-        # Files are sized by bytes (sorted_files): a term's postings sit in
-        # one (term, doc_id)-sorted file, whose row-group term ranges prune
-        # lookups at query time.  Row counts/sums come from the COMMITTED
-        # parquet footers after each write (exact under task retries and
-        # speculation, unlike observe on the write) -- still no separate
-        # count jobs.
-        postings_b = rows.filter(F.col("term").isNotNull()).select(
-            "term", "doc_id", "tf", "tf_url", "doc_len"
-        )
-        index_write(sorted_files(postings_b, files, "term", "doc_id")).parquet(
-            str(postings_dir)
-        )
-        lens_b = (
-            rows.filter(F.col("term").isNull())
-            .select(
-                "doc_id", "doc_len",
-                *(["tri_bloom"] if emit_bloom else []),
-            )
-        )
-        index_write(
-            sorted_files(lens_b, files, "doc_id", unique=True)
-        ).parquet(str(lens_dir))
-        # trigram substring-index lane for this bucket (rescue serving):
-        # counts first, then the listed trigrams' rows, sorted by tri for
-        # row-group pruning at query time
-        tri_dir = out / "tri_postings" / f"bucket={b}"
-        tri_part_dir = out / "tri_partial" / f"bucket={b}"
-        tri_b = tri_rows(rows)
-        index_write(
-            sorted_files(tri_counts(tri_b), tri_files, "tri", unique=True)
-        ).parquet(str(tri_part_dir))
-        listed_b = listed_tri_rows(
-            tri_b,
-            spark.read.schema(TRI_DF_SCHEMA).parquet(str(tri_part_dir)),
-            cutoff,
-        )
-        index_write(
-            sorted_files(listed_b, tri_files, "tri", "doc_id")
-        ).parquet(str(tri_dir))
-        # per-bucket term partials from the cached tokenization: the final
-        # dictionary re-aggregates these (vocab-sized) instead of scanning
-        # the full postings table again
-        index_write(
-            sorted_files(term_counts(rows), files, "term", unique=True)
-        ).parquet(str(tpart_dir))
-        n_postings = _committed_parquet_rows(postings_dir)
-        n_docs = _committed_parquet_rows(lens_dir)
-        sum_dl = _committed_column_sum(lens_dir, "doc_len")
-        rows.unpersist()
-        wall_ms = int((time.time() - t0) * 1000)
+        commit_slices(out, b, mine, BUCKET_TABLES)
+        rows = [r for _, r in mine]
         _append_lineage(
             index_dir,
             {
                 "bucket": b,
-                "n_docs": n_docs,
-                "n_postings": n_postings,
-                "sum_dl": sum_dl,
-                "bytes_in": _dir_bytes(pages_indexed_dir / f"bucket={b}"),
-                "bytes_out": _dir_bytes(postings_dir)
-                + _dir_bytes(lens_dir)
-                + _dir_bytes(tri_dir),
-                "n_tri_postings": _committed_parquet_rows(tri_dir),
-                "wall_ms": wall_ms,
+                **{
+                    k: sum(r[k] for r in rows)
+                    for k in ("n_docs", "n_postings", "sum_dl", "wall_ms")
+                },
+                "bytes_in": _dir_bytes(out / "pages_indexed" / f"bucket={b}"),
+                "bytes_out": sum(
+                    _dir_bytes(out / t / f"bucket={b}")
+                    for t in ("postings", "doc_lens", "tri_postings")
+                ),
+                # zero rows is a bucket whose trigrams are all unlisted: it
+                # has no tri_postings dir, yet the lane covers it (engine
+                # coverage guard)
+                "n_tri_postings": sum(r["n_tri"] for r in rows),
                 "finished_ts": time.strftime(
                     "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
                 ),
@@ -857,330 +1017,25 @@ def build_index(
         )
         if b in fail_buckets:
             raise RuntimeError(f"injected failure after bucket {b}")
-
-    def _empty_lineage(b: int) -> None:
-        _append_lineage(
-            index_dir,
-            {
-                "bucket": b, "n_docs": 0, "n_postings": 0, "sum_dl": 0,
-                "bytes_in": 0, "bytes_out": 0, "wall_ms": 0,
-                "finished_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            },
-        )
-
-    def _build_buckets_batch(todo: list[int]) -> None:
-        """All pending buckets in ONE job set (tokenize+postings, doc_lens,
-        terms_partial, metrics = 4 jobs total) instead of 3 jobs PER bucket
-        through a thread pool: per-bucket job barriers cost idle cores at
-        every bucket tail, and the loss grows with core count (the round-2
-        scaling residual).  Buckets stay the partition key -- writes use
-        dynamic partition overwrite into the same bucket=i layout, so
-        resume granularity (skip committed buckets, redo the rest) and the
-        reader layout are unchanged; lineage for the whole wave commits
-        after its writes land, mirroring a single Iceberg commit."""
-        t0 = time.time()
-        existing = [
-            b for b in todo if (pages_indexed_dir / f"bucket={b}").exists()
-        ]
-        for b in todo:
-            if b not in existing:  # empty url range (tiny inputs)
-                _empty_lineage(b)
-        if not existing:
-            return
-        par = spark.sparkContext.defaultParallelism
-        in_bytes = {
-            b: _dir_bytes(pages_indexed_dir / f"bucket={b}") for b in existing
-        }
-        text_bytes = {b: _text_bytes(b) for b in existing}
-        total_bytes = sum(text_bytes.values())
-        # data-proportional tasks (~64 MB input text each) with a floor
-        # of 2x cores so small inputs still use the whole machine
-        n_tasks = max(par * 2, int(total_bytes // (64 << 20)))
-        # output files per bucket and table, by bytes (sorted_files)
-        files = {b: file_count(n, FILE_BYTES) for b, n in text_bytes.items()}
-        tri_files = {
-            b: file_count(n, TRI_FILE_BYTES) for b, n in text_bytes.items()
-        }
-        # bucket is recovered from doc_id via the manifest's offsets (docs
-        # were assigned contiguous id ranges per bucket in phase A) -- the
-        # tokenize UDF schema stays bucket-free and shared with the
-        # incremental/streaming paths
-        starts: dict[int, int] = {}
-        for m in manifest["buckets"]:
-            starts[m["bucket"]] = min(
-                starts.get(m["bucket"], m["offset"]), m["offset"]
-            )
-        blist = sorted(starts.items())
-        bounds = [s for _b, s in blist[1:]]
-        bids = [b for b, _s in blist]
-        if bounds:
-            idx = F.aggregate(
-                F.array(*[F.lit(s) for s in bounds]),
-                F.lit(0),
-                lambda a, s: a + F.when(F.col("doc_id") >= s, 1).otherwise(0),
-            )
-            bucket_col = F.element_at(
-                F.array(*[F.lit(b) for b in bids]), idx + 1
-            )
-        else:
-            bucket_col = F.lit(bids[0] if bids else 0)
-        srcs = [str(pages_indexed_dir / f"bucket={b}") for b in existing]
-        wave_pages = spark.read.parquet(*srcs)
-        if manifest.get("doc_store") == "reference":
-            # hydrate text from the durable source (one shuffle join for
-            # the whole wave -- the text still moves through the cluster
-            # exactly once, it just never lands in a second copy on disk)
-            src_df = spark.read.parquet(source_path).select("url", "text")
-            wave_pages = wave_pages.select("doc_id", "url", "lang").join(
-                src_df, "url", "inner"
-            )
-        rows = (
-            wave_pages
-            .select("doc_id", "url", "lang", "text")
-            .repartition(n_tasks)
-            .mapInPandas(
-                _make_tokenize_partition(
-                    tokenizer, emit_doc_payload=False, emit_bloom=emit_bloom
-                ),
-                TOKENS_SCHEMA,
-            )
-            .drop("url", "lang", "text")
-            .withColumn("bucket", bucket_col)
-        )
-        rows.persist()
-        postings_root = out / "postings"
-        lens_root = out / "doc_lens"
-        tpart_root_ = out / "terms_partial"
-        # postings first: materializes the cache.  Each bucket's postings
-        # land in files[b] (term, doc_id)-sorted files, a term's in one
-        # of them; sorted runs give tight row-group term ranges for
-        # query-time pruning.
-        (
-            index_write(
-                sorted_files(
-                    rows.filter(F.col("term").isNotNull()).select(
-                        "bucket", "term", "doc_id", "tf", "tf_url", "doc_len"
-                    ),
-                    files, "term", "doc_id",
-                )
-            )
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(str(postings_root))
-        )
-
-        # the remaining jobs are small and all read the now-materialized
-        # cache: submit them from driver threads so their stages interleave
-        # (sequential submission would serialize three short, narrow jobs)
-        per: dict[int, dict] = {}
-
-        def _write_lens() -> None:
-            (
-                index_write(
-                    sorted_files(
-                        rows.filter(F.col("term").isNull()).select(
-                            "bucket", "doc_id", "doc_len",
-                            *(["tri_bloom"] if emit_bloom else []),
-                        ),
-                        files, "doc_id",
-                    )
-                )
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(str(lens_root))
-            )
-
-        def _write_tpart() -> None:
-            (
-                index_write(
-                    sorted_files(
-                        term_counts(rows, keep=("bucket",)), files, "term"
-                    )
-                )
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(str(tpart_root_))
-            )
-
-        def _write_tri() -> None:
-            # trigram substring-index lane (rescue serving, see tri_rows):
-            # pure explode of the cached tokenize output's tris arrays --
-            # no extra text read, no Python.  Per-bucket counts land first;
-            # summed over the wave they name the trigrams this wave drops.
-            tri = tri_rows(rows, keep=("bucket",))
-            tri_part_root = out / "tri_partial"
-            (
-                index_write(
-                    sorted_files(
-                        tri_counts(tri, keep=("bucket",)), tri_files, "tri"
-                    )
-                )
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(str(tri_part_root))
-            )
-            wave_parts = [
-                str(d)
-                for d in (tri_part_root / f"bucket={b}" for b in existing)
-                if d.exists()
-            ]
-            if not wave_parts:  # no doc of the wave holds a trigram
-                return
-            listed = listed_tri_rows(
-                tri,
-                spark.read.schema(TRI_DF_SCHEMA).parquet(*wave_parts),
-                cutoff,
-            )
-            (
-                index_write(sorted_files(listed, tri_files, "tri", "doc_id"))
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(str(out / "tri_postings"))
-            )
-
-        def _metrics() -> None:
-            # per-bucket build metrics in one pass over the cache
-            # (replaces the per-bucket write Observations)
-            for r in (
-                rows.groupBy("bucket")
-                .agg(
-                    F.count(F.when(F.col("term").isNull(), 1)).alias("n_docs"),
-                    F.coalesce(
-                        F.sum(
-                            F.when(F.col("term").isNull(), F.col("doc_len"))
-                        ),
-                        F.lit(0),
-                    ).alias("sum_dl"),
-                    F.count(F.when(F.col("term").isNotNull(), 1)).alias(
-                        "n_postings"
-                    ),
-                )
-                .collect()
-            ):
-                per[r["bucket"]] = r
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            futs = [
-                ex.submit(f)
-                for f in (_write_lens, _write_tpart, _write_tri, _metrics)
-            ]
-            for fu in futs:
-                fu.result()
-        rows.unpersist()
-        wall_ms = int((time.time() - t0) * 1000)
-        for b in existing:
-            r = per.get(b)
-            share = text_bytes[b] / total_bytes if total_bytes else 0.0
-            _append_lineage(
-                index_dir,
-                {
-                    "bucket": b,
-                    "n_docs": int(r["n_docs"]) if r else 0,
-                    "n_postings": int(r["n_postings"]) if r else 0,
-                    "sum_dl": int(r["sum_dl"]) if r else 0,
-                    "bytes_in": in_bytes[b],
-                    "bytes_out": sum(
-                        _dir_bytes(out / t / f"bucket={b}")
-                        for t in ("postings", "doc_lens", "tri_postings")
-                    ),
-                    # zero rows is a bucket whose trigrams are all
-                    # unlisted: it has no tri_postings dir, yet the lane
-                    # covers it (engine coverage guard)
-                    "n_tri_postings": _committed_parquet_rows(
-                        out / "tri_postings" / f"bucket={b}"
-                    ),
-                    # wall attributed by input share so the lineage sum
-                    # equals the real wave wall (per-bucket walls from the
-                    # old concurrent pool double-counted overlap)
-                    "wall_ms": int(wall_ms * share),
-                    "finished_ts": time.strftime(
-                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
-                    ),
-                },
-            )
-
-    todo = [b for b in range(n_buckets) if b not in done]
-    if fail_buckets:
-        # deterministic failure injection needs sequential order (and the
-        # per-bucket commit granularity the kill-resume suite exercises)
-        for b in todo:
-            _build_bucket(b)
-    elif todo:
-        # PROBE_BUILD_WAVE_BUCKETS bounds the build's in-flight scratch:
-        # one wave's persisted tokenize cache + its three repartition
-        # shuffles is the peak block-manager footprint, and the single
-        # all-buckets wave holds the WHOLE corpus's worth at once (a 5M-doc
-        # build filled an 80 GiB tmpfs scratch and got the JVM oom-killed
-        # on this box).  Chunking todo into waves of K buckets divides that
-        # peak by ceil(len(todo)/K) for a small tail-parallelism cost per
-        # wave barrier; on a real cluster it bounds per-executor shuffle
-        # scratch the same way.  Default (unset/0) keeps the single wave.
-        import os as _os
-
-        wave = int(_os.environ.get("PROBE_BUILD_WAVE_BUCKETS", "0") or 0)
-        if wave <= 0 or wave >= len(todo):
-            _build_buckets_batch(todo)
-        else:
-            import gc as _gc
-
-            for i in range(0, len(todo), wave):
-                _build_buckets_batch(todo[i : i + wave])
-                # drop py4j refs so ContextCleaner can delete the finished
-                # wave's shuffle files + cache blocks before the next wave
-                _gc.collect()
-                spark.sparkContext._jvm.System.gc()
-
-    # Phase C: finalize global aggregates (idempotent overwrite).  The term
-    # dictionary re-aggregates the per-bucket partials (vocab-sized input,
-    # not the postings table); stats needs NO job -- counts and doc_len
-    # sums already landed in lineage during phase B.
-    tpart_root = out / "terms_partial"
-    if tpart_root.exists() and any(tpart_root.iterdir()):
-        terms = (
-            spark.read.schema(TERMS_SCHEMA).parquet(str(tpart_root))
-            .groupBy("term")
-            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        )
-    else:
-        terms = spark.createDataFrame([], TERMS_SCHEMA)
-    index_write(sorted_dictionary(terms, _dir_bytes(tpart_root))).parquet(
-        str(out / "terms")
-    )
-
-    # trigram dictionary (tri, df): the driver-cached rarest-trigram
-    # selector for rescue serving, re-aggregated from the per-bucket
-    # partials; vocab is charset-bounded (tiny vs the corpus), one agg job.
-    tri_dict = tri_dictionary(spark, out, pruned=cutoff is not None)
-    if tri_dict is not None:
-        index_write(tri_dict).parquet(str(out / "tri_terms"))
+    if cutoff is None:
+        rebuild_tri_terms(spark, out, cutoff)
 
     lineage = _read_lineage(index_dir)
-    if lineage and all("sum_dl" in r for r in lineage.values()):
-        n_docs_tot = sum(r["n_docs"] for r in lineage.values())
-        sum_dl_tot = sum(r["sum_dl"] for r in lineage.values())
-        write_stats(
-            index_dir,
-            n_docs_tot,
-            (sum_dl_tot / n_docs_tot) if n_docs_tot else 0.0,
-        )
-    else:  # pragma: no cover - legacy lineage without sum_dl
-        lens = spark.read.parquet(str(out / "doc_lens"))
-        stats = lens.agg(
-            F.count(F.lit(1)).alias("n_docs"), F.avg("doc_len").alias("avgdl")
-        )
-        index_write(stats).parquet(str(out / "stats"))
-
+    n_docs_tot = sum(r["n_docs"] for r in lineage.values())
+    sum_dl_tot = sum(r["sum_dl"] for r in lineage.values())
+    write_stats(index_dir, n_docs_tot, sum_dl_tot / n_docs_tot if n_docs_tot else 0.0)
+    shutil.rmtree(staging, ignore_errors=True)
     tot = {
         k: sum(r[k] for r in lineage.values())
         for k in ("n_docs", "n_postings", "bytes_in", "bytes_out", "wall_ms")
     }
     wall_s = max(tot["wall_ms"], 1) / 1000.0
-    return {
+    metrics = {
         **tot,
         "docs_per_sec": tot["n_docs"] / wall_s,
         "postings_per_sec": tot["n_postings"] / wall_s,
         "bytes_by_table": bytes_by_table(out),
         "files_by_table": files_by_table(out),
     }
+    lap("commit")
+    return {**metrics, "phase_ms": phase_ms, "jobs": dag.nextJobId() - job0}

@@ -58,8 +58,9 @@ def get_spark(
     # the same partition in a fresh worker and wins; Spark then kills the
     # wedged attempt.  Conservative thresholds (only tasks >=4x the
     # median after 90% of the stage finished) keep duplicate work ~zero
-    # in healthy runs; every write path goes through Spark's commit
-    # protocol, so a losing attempt's output is discarded atomically.
+    # in healthy runs; every write path goes through a commit protocol
+    # (Spark's, or the index writer's: it commits only the attempts its
+    # job returned), so a losing attempt's output never lands.
     # On a real cluster this is the standard straggler defense.
     if os.environ.get("PROBE_SPARK_SPECULATION", "1").lower() not in (
         "0",

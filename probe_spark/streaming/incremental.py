@@ -10,26 +10,27 @@ Streaming checkpoint.
 Design:
   * readStream over the pages directory (file source tracks processed files
     in the checkpoint -- the streaming analog of snapshot-scoped builds);
-  * foreachBatch: tokenize the micro-batch with the SAME shared pipeline,
-    assign doc_ids above the current high-water mark via RANGED rank
-    (_assign_doc_ids: range-partition by url + per-slice offsets -- scales
-    to arbitrarily large micro-batches, no single-partition window; note
-    ids are arrival-order across batches, not global url rank, so
-    tie-breaks are deterministic but differ from a from-scratch rebuild);
-  * append postings/pages_indexed/doc_lens under delta buckets, each
-    sized like a batch bucket by the bytes of the files the micro-batch
-    read (indexer.sorted_files: one sorted file until it outgrows its
-    target); fold the term dictionary incrementally (current terms + the
-    new bucket's partials -- NOT a re-scan of every historical partial)
-    and update stats from running totals carried in stream_state.json
-    (doc counts and doc_len sums come from the committed delta's parquet
-    footers -- no extra jobs over the index, and exact under
-    retries/speculation);
+  * foreachBatch: the micro-batch is ONE delta bucket through the batch
+    build's writer (indexer.write_slices): k url slices, k sized like a
+    batch bucket by the bytes of the files the micro-batch read (an
+    in-memory frame is one slice, which needs no slicing job; k > 1 runs
+    the build's url-column slicing job), and one Arrow task per slice
+    ranks, tokenizes and writes every table of its slice.
+    Ids continue above the current high-water mark (note ids are
+    arrival-order across batches, not global url rank, so tie-breaks are
+    deterministic but differ from a from-scratch rebuild);
   * the trigram lane keeps the build's invariant "df <= tri_cutoff =>
-    complete list" (indexer docstring): the delta writes its tri_partial
-    counts, drops the trigrams whose folded df exceeds the manifest's
-    cutoff, and tri_terms folds the partial.  df never falls (no deletes),
-    so a trigram once unlisted stays unlisted;
+    complete list" (indexer docstring): the trigrams whose folded df (the
+    current tri_terms plus the delta's tri_partial) exceeds the manifest's
+    cutoff are dropped from the delta's lane.  df never falls (no
+    deletes), so a trigram once unlisted stays unlisted;
+  * commit: the winning attempts' files are renamed into
+    ``<table>/bucket=stream_<epoch>_<base>/``, pages_indexed last (the
+    COMMIT marker, see ingest_batch); then terms and tri_terms fold the
+    new bucket's partials (NOT a re-scan of every historical partial), and
+    stats update from running totals carried in stream_state.json (doc
+    counts and doc_len sums come from the winning attempts' result rows
+    -- no extra jobs over the index, and exact under retries/speculation);
   * the flat-postings query engine sees appended postings immediately;
     compaction folds deltas into block-max blocks on demand.
 """
@@ -45,40 +46,24 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from probe_spark.indexer import (
+    BUCKET_TABLES,
+    DICTIONARIES,
     FILE_BYTES,
-    TERMS_SCHEMA,
-    TOKENS_SCHEMA,
-    TRI_DF_SCHEMA,
-    TRI_FILE_BYTES,
-    _assign_doc_ids,
-    _dir_bytes,
-    _make_tokenize_partition,
+    _input_bytes,
     _read_lineage,
-    _tokenize_partition,
+    _slice_pages,
+    commit_slices,
+    dense_tris,
     file_count,
-    index_write,
-    listed_tri_rows,
-    sorted_dictionary,
-    sorted_files,
-    term_counts,
-    tri_counts,
-    tri_dictionary,
-    tri_rows,
+    fold_dictionary,
+    parquet_files,
+    prune_lane,
+    rebuild_tri_terms,
+    write_slices,
     write_stats,
 )
 
 PAGES_SCHEMA = "url string, text string, lang string"
-
-
-def _input_bytes(spark: SparkSession, df) -> int:
-    """Bytes of the files ``df`` reads (0 for an in-memory frame): a
-    driver-side file-status lookup on any Hadoop filesystem, no job."""
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    for f in df.inputFiles():
-        p = spark._jvm.org.apache.hadoop.fs.Path(f)
-        total += p.getFileSystem(conf).getFileStatus(p).getLen()
-    return total
 
 
 def _read_manifest(index_dir: str) -> dict:
@@ -168,8 +153,6 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
         recompute totals from lineage.
 
     No-op (no jobs) when everything is folded -- the normal case."""
-    import shutil
-
     out = Path(index_dir)
     folded = set(state.get("folded", []))
     rows = _read_stream_lineage(index_dir)
@@ -190,18 +173,12 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
                 shutil.rmtree(out / t / f"bucket={b}", ignore_errors=True)
             (out / "lineage" / f"{b}.json").unlink(missing_ok=True)
     if roll_forward:
-        partials = out / "terms_partial"
-        src = spark.read.schema(TERMS_SCHEMA).parquet(str(partials))
-        folded_terms = src.groupBy("term").agg(
-            F.sum("df").alias("df"), F.sum("cf").alias("cf")
+        fold_dictionary(
+            spark, out, "terms", parquet_files(out / "terms_partial")
         )
-        tmp = out / "terms_tmp"
-        index_write(
-            sorted_dictionary(folded_terms, _dir_bytes(partials))
-        ).parquet(str(tmp))
-        shutil.rmtree(out / "terms", ignore_errors=True)
-        tmp.rename(out / "terms")
-        _rebuild_tri_terms(spark, index_dir)
+        rebuild_tri_terms(
+            spark, out, _read_manifest(index_dir).get("tri_cutoff")
+        )
     # totals from lineage (batch + surviving stream rows) are authoritative
     lineage = _read_lineage(index_dir)
     srows = _read_stream_lineage(index_dir)
@@ -222,90 +199,32 @@ def _reconcile(spark: SparkSession, index_dir: str, state: dict) -> dict:
     return state
 
 
-def _fold_terms(spark: SparkSession, index_dir: str, new_partial: Path) -> None:
-    """Incremental dictionary fold: current terms + the NEW bucket's
-    partials only (vocab-sized inputs; historical partials are not
-    re-scanned).  Self-heals from all partials if terms/ is missing."""
+def _fold_terms(spark: SparkSession, index_dir: str, bucket: str) -> None:
+    """Incremental dictionary fold: terms and tri_terms plus the NEW
+    bucket's partials only (historical partials are not re-scanned).  A
+    missing dictionary self-heals from all partials."""
     out = Path(index_dir)
-    terms_dir = out / "terms"
-    read = spark.read.schema(TERMS_SCHEMA).parquet
-    if terms_dir.exists() and any(terms_dir.iterdir()):
-        src = read(str(terms_dir)).unionByName(read(str(new_partial)))
-        src_bytes = _dir_bytes(terms_dir) + _dir_bytes(new_partial)
-    else:  # pragma: no cover - healing path
-        src = read(str(out / "terms_partial"))
-        src_bytes = _dir_bytes(out / "terms_partial")
-    folded = src.groupBy("term").agg(
-        F.sum("df").alias("df"), F.sum("cf").alias("cf")
-    )
-    tmp = out / "terms_tmp"
-    index_write(sorted_dictionary(folded, src_bytes)).parquet(str(tmp))
-    shutil.rmtree(terms_dir, ignore_errors=True)
-    tmp.rename(terms_dir)
-
-
-def _rebuild_tri_terms(spark: SparkSession, index_dir: str) -> None:
-    """Idempotent tri-dictionary rebuild from every bucket's tri_partial
-    (a complete lane without a manifest cutoff counts its rows; used by
-    crash recovery and as the healing fold when tri_terms is absent)."""
-    out = Path(index_dir)
-    pruned = _read_manifest(index_dir).get("tri_cutoff") is not None
-    folded = tri_dictionary(spark, out, pruned)
-    if folded is None:
-        return
-    tmp = out / "tri_terms_tmp"
-    index_write(folded).parquet(str(tmp))
-    shutil.rmtree(out / "tri_terms", ignore_errors=True)
-    tmp.rename(out / "tri_terms")
-
-
-def _folded_tri_dfs(spark: SparkSession, index_dir: str, delta_partial: Path):
-    """(tri, df) rows whose per-tri sum is the dictionary after folding
-    the delta: current tri_terms + the delta's tri_partial (or the delta
-    alone on an index without tri_terms)."""
-    t_dir = Path(index_dir) / "tri_terms"
-    read = spark.read.schema(TRI_DF_SCHEMA).parquet
-    delta = read(str(delta_partial))
-    if t_dir.exists() and any(t_dir.iterdir()):
-        return read(str(t_dir)).unionByName(delta)
-    return delta
-
-
-def _fold_tri_terms(
-    spark: SparkSession, index_dir: str, delta_partial: Path
-) -> None:
-    """Incremental tri-dictionary fold: current tri_terms + the NEW
-    bucket's tri_partial only (mirrors _fold_terms); full rebuild when
-    tri_terms is missing (e.g. first delta on a pre-tri-lane index)."""
-    out = Path(index_dir)
-    t_dir = out / "tri_terms"
-    if not (t_dir.exists() and any(t_dir.iterdir())):
-        _rebuild_tri_terms(spark, index_dir)
-        return
-    folded = (
-        _folded_tri_dfs(spark, index_dir, delta_partial)
-        .groupBy("tri")
-        .agg(F.sum("df").alias("df"))
-    )
-    src_bytes = _dir_bytes(t_dir) + _dir_bytes(delta_partial)
-    tmp = out / "tri_terms_tmp"
-    index_write(
-        folded.coalesce(file_count(src_bytes, TRI_FILE_BYTES))
-    ).parquet(str(tmp))
-    shutil.rmtree(t_dir, ignore_errors=True)
-    tmp.rename(t_dir)
+    for table, (_key, _cols, partial, _schema) in DICTIONARIES.items():
+        cur = parquet_files(out / table)
+        files = (
+            cur + parquet_files(out / partial / f"bucket={bucket}")
+            if cur
+            else parquet_files(out / partial)
+        )
+        fold_dictionary(spark, out, table, files)
 
 
 def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -> int:
     """Fold one micro-batch of pages into the index; returns docs added.
 
-    Crash safety is two-phase: the lineage row is the PREPARE marker
-    (written after postings/doc_lens/terms_partial land), the
-    pages_indexed bucket is the COMMIT marker (written next; it is also
-    the url-dedup table, so an uncommitted batch is re-ingested rather
-    than silently skipped).  _reconcile at batch start rolls interrupted
-    batches back (no commit marker) or forward (committed but not folded
-    into terms/stats)."""
+    The batch is one delta bucket through the build's writer
+    (indexer.write_slices).  Crash safety is two-phase: the lineage row is
+    the PREPARE marker (written after postings/doc_lens/partials land),
+    the pages_indexed part, renamed in last, is the COMMIT marker (it is
+    also the url-dedup table, so an uncommitted batch is re-ingested
+    rather than silently skipped).  _reconcile at batch start rolls
+    interrupted batches back (no commit marker) or forward (committed but
+    not folded into terms/stats)."""
     out = Path(index_dir)
     manifest = _read_manifest(index_dir)
     if manifest.get("doc_store") == "reference":
@@ -325,83 +244,49 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
         # are skipped (the streaming analog of the session-cache dedup, S8)
         existing = spark.read.parquet(str(out / "pages_indexed")).select("url")
         fresh = fresh.join(existing, "url", "leftanti")
-    # ranged doc-id assignment (same machinery as the batch build's phase A:
-    # range-partition by url, rank per slice, add offsets) -- arbitrarily
-    # large micro-batches never funnel through one partition
-    indexed, bucket_meta = _assign_doc_ids(spark, fresh, 1)
-    n_docs = sum(m["count"] for m in bucket_meta)
-    if n_docs == 0:
-        _write_state(index_dir, state)
-        return 0
-    pages = indexed.withColumn(
-        "doc_id", F.col("doc_id") + F.lit(base)
-    ).drop("bucket")
+    # one bucket of k url slices, sized like a batch bucket by the bytes
+    # of the files the micro-batch read; ids continue above the index.  A
+    # single slice needs no slicing job: its count is the write's
+    k = file_count(_input_bytes(spark, batch_df), FILE_BYTES)
+    slices = (
+        _slice_pages(spark, fresh, 1, k)
+        if k > 1
+        else [{"pid": 0, "bucket": 0, "count": None, "offset": 0}]
+    )
+    for s in slices:
+        s["offset"] += base
+    staging = out / "_attempts"
+    shutil.rmtree(staging, ignore_errors=True)
     # honor the tokenizer the index was BUILT with (manifest.json records
     # it): streaming probe-tokenized postings into a tokenizer='simple'
     # index would silently mix incompatible term vocabularies
-    tokenize_fn = (
-        _tokenize_partition
-        if manifest.get("tokenizer", "probe") == "probe"
-        else _make_tokenize_partition(manifest["tokenizer"])
+    results = write_slices(
+        spark, fresh, slices, staging, [s["pid"] for s in slices],
+        manifest.get("tokenizer", "probe"),
     )
-    rows = pages.select("doc_id", "url", "lang", "text").mapInPandas(
-        tokenize_fn, TOKENS_SCHEMA
+    # the lane keeps "df <= cutoff => complete list" against the folded
+    # df: the current dictionary plus the delta's partials
+    folded = parquet_files(out / "tri_terms") or parquet_files(
+        out / "tri_partial"
     )
-    rows.persist()
+    delta = parquet_files(*(r["files"]["tri_partial"] for r in results.values()))
+    prune_lane(
+        spark, results,
+        dense_tris(spark, folded + delta, manifest.get("tri_cutoff")),
+    )
+    n_docs = sum(r["n_docs"] for r in results.values())
+    if n_docs == 0:
+        _write_state(index_dir, state)
+        return 0
     bucket = f"stream_{epoch_id}_{base}"
-    # the delta is one bucket: its files are sized like a batch bucket's,
-    # by the bytes of the files the micro-batch read (indexer.file_count)
-    in_bytes = _input_bytes(spark, batch_df)
-    files = file_count(in_bytes, FILE_BYTES)
-    tri_files = file_count(in_bytes, TRI_FILE_BYTES)
-    postings = rows.filter(F.col("term").isNotNull()).select(
-        "term", "doc_id", "tf", "tf_url", "doc_len"
+    parts = sorted(results.items())
+    commit_slices(
+        out, bucket, parts, [t for t in BUCKET_TABLES if t != "pages_indexed"]
     )
-    index_write(sorted_files(postings, files, "term", "doc_id")).parquet(
-        str(out / "postings" / f"bucket={bucket}")
-    )
-    lens_delta = out / "doc_lens" / f"bucket={bucket}"
-    # bloom-free layout: the tri_postings delta below serves rescue
-    lens = rows.filter(F.col("term").isNull()).select("doc_id", "doc_len")
-    index_write(sorted_files(lens, files, "doc_id", unique=True)).parquet(
-        str(lens_delta)
-    )
-    # sum from the COMMITTED delta files, not an Observation riding the
-    # write: observe() merges metric rows from every completed task
-    # attempt, so a retried or speculative duplicate would inflate sum_dl
-    # (and through it avgdl and every BM25 score) even though the commit
-    # protocol discarded the losing attempt's files
-    from probe_spark.indexer import (
-        _committed_column_sum,
-        _committed_parquet_rows,
-    )
-
-    sum_dl = _committed_column_sum(lens_delta, "doc_len")
-    # trigram substring-index lane for the delta (rescue serving): explode
-    # of the cached tokenize output's tris arrays (indexer.tri_rows).  The
-    # delta's counts land first; the rows of trigrams whose folded df
-    # exceeds the manifest's cutoff are dropped
-    tri_delta = out / "tri_postings" / f"bucket={bucket}"
-    tri_part = out / "tri_partial" / f"bucket={bucket}"
-    tri = tri_rows(rows)
-    index_write(
-        sorted_files(tri_counts(tri), tri_files, "tri", unique=True)
-    ).parquet(str(tri_part))
-    listed = listed_tri_rows(
-        tri,
-        _folded_tri_dfs(spark, index_dir, tri_part),
-        manifest.get("tri_cutoff"),
-    )
-    index_write(sorted_files(listed, tri_files, "tri", "doc_id")).parquet(
-        str(tri_delta)
-    )
-    tpart = out / "terms_partial" / f"bucket={bucket}"
-    index_write(
-        sorted_files(term_counts(rows), files, "term", unique=True)
-    ).parquet(str(tpart))
     # PREPARE marker: the lineage row commits the bucket's existence (and
     # carries the totals) BEFORE the url-dedup table sees its pages -- a
     # crash from here until the fold is healed by _reconcile
+    sum_dl = sum(r["sum_dl"] for _, r in parts)
     lineage = out / "lineage"
     lineage.mkdir(exist_ok=True)
     (lineage / f"{bucket}.json").write_text(
@@ -410,22 +295,17 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
                 "bucket": bucket,
                 "n_docs": n_docs,
                 "sum_dl": sum_dl,
-                "n_tri_postings": _committed_parquet_rows(tri_delta),
+                "n_tri_postings": sum(r["n_tri"] for _, r in parts),
                 "epoch": epoch_id,
                 "finished_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }
         )
     )
-    # COMMIT marker: pages_indexed is also the url-dedup table, so writing
+    # COMMIT marker: pages_indexed is also the url-dedup table, so landing
     # it LAST means an interrupted batch is re-ingested, never skipped
-    index_write(
-        rows.filter(F.col("term").isNull())
-        .select("doc_id", "url", "lang", "text")
-        .coalesce(files)
-    ).parquet(str(out / "pages_indexed" / f"bucket={bucket}"))
-    rows.unpersist()
-    _fold_terms(spark, index_dir, tpart)
-    _fold_tri_terms(spark, index_dir, tri_part)
+    commit_slices(out, bucket, parts, ["pages_indexed"])
+    shutil.rmtree(staging, ignore_errors=True)
+    _fold_terms(spark, index_dir, bucket)
     # stats from running totals -- no job over the (ever-growing) index
     state = {
         "next_doc_id": base + n_docs,

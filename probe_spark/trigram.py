@@ -95,10 +95,10 @@ def doc_bloom(text: str, url: str) -> bytes:
 def doc_bloom_and_codes(text: str, url: str) -> tuple[bytes, np.ndarray]:
     """(bloom bytes, distinct 24-bit trigram codes as int32) for one doc's
     haystack -- one pass feeds BOTH the bloom column and the trigram
-    postings lane (indexer phase B).  Codes are byte trigrams of the UTF-8
-    haystack: a needle substring's byte windows are a subset of the hay's
-    byte windows, so posting-list intersection on codes is a superset
-    filter exactly like the bloom, with zero hash collisions (the code IS
+    postings lane (the indexer's slice writer).  Codes are byte trigrams
+    of the UTF-8 haystack: a needle substring's byte windows are a subset
+    of the hay's byte windows, so posting-list intersection on codes is a
+    superset filter exactly like the bloom, with zero hash collisions (the code IS
     the 3 bytes)."""
     hay = (text or "").lower() + "\n" + (url or "").lower()
     codes = _tri_codes(hay.encode("utf-8"))

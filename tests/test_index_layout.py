@@ -1,8 +1,8 @@
 """On-disk index layout: every table zstd-compressed with delta-encoded
-doc ids (indexer.INDEX_PARQUET), each bucket of a table one sorted file
-until its input outgrows the table's byte target (indexer.sorted_files),
-and indexes written in the older snappy + dictionary layout still serve
-identical results."""
+doc ids (indexer.INDEX_ARROW), each bucket of a table one sorted file
+until its input outgrows FILE_BYTES (then one sorted file per url slice,
+over ascending doc-id ranges), and indexes written in the older snappy +
+dictionary layout still serve identical results."""
 
 import shutil
 from pathlib import Path
@@ -11,7 +11,7 @@ import pytest
 
 LAYOUT_TABLES = ("postings", "tri_postings", "doc_lens", "pages_indexed")
 
-# every per-bucket table written by phase B and by ingest, with the
+# every per-bucket table written by the build and by ingest, with the
 # order each of its files is sorted by (the first column is the key)
 BUCKET_TABLES = {
     "postings": ("term", "doc_id"),
@@ -48,12 +48,18 @@ def assert_sorted_files(
     return per
 
 
-def assert_key_in_one_file(files: list[Path], key: str) -> None:
-    """No value of ``key`` has rows in two of ``files`` (one bucket)."""
-    seen: dict = {}
-    for f in files:
-        for (k,) in set(_sorted_keys(f, (key,))):
-            assert seen.setdefault(k, f) == f, (key, k, f, seen[k])
+def assert_doc_ranges_ascend(files: list[Path]) -> None:
+    """The files of one bucket, in name order, hold disjoint, ascending
+    doc-id ranges (one url slice each)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    spans = [
+        tuple(pc.min_max(pq.read_table(f, columns=["doc_id"])["doc_id"])
+              .as_py().values())
+        for f in files
+    ]
+    assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:])), spans
 
 
 @pytest.mark.parametrize("table", sorted(BUCKET_TABLES))
@@ -69,35 +75,21 @@ def test_dictionaries_one_file(tiny_index):
     assert len(list((Path(path) / "tri_terms").glob("*.parquet"))) == 1
 
 
-def split_target(ix: Path) -> int:
-    """A byte target a third of the smallest bucket's input: a build with
-    FILE_BYTES and TRI_FILE_BYTES patched to it splits every bucket."""
-    from probe_spark.indexer import _dir_bytes
+def assert_split_layout(ix: Path, k: int, files_by_table: dict) -> None:
+    """The layout of a build whose buckets are k > 1 url slices: each
+    bucket is k sorted files over ascending doc-id ranges, and the term
+    dictionary, its partials above FILE_BYTES, is range-split into sorted
+    files with disjoint, ordered term ranges.  (test_file_bytes_build
+    checks that its rows equal the default layout's.)"""
+    from probe_spark.indexer import FILE_BYTES, _dir_bytes, file_count
 
-    return min(
-        _dir_bytes(d) for d in (ix / "pages_indexed").glob("bucket=*")
-    ) // 3
-
-
-def assert_split_layout(ix: Path, target: int, files_by_table: dict) -> None:
-    """The layout of a build with its byte targets patched to ``target``:
-    each bucket is k > 1 sorted files, a term's (trigram's) postings sit
-    in one of them, and the term dictionary is range-split into sorted
-    files with disjoint, ordered term ranges.  (test_wave_build checks
-    that its rows equal the default layout's.)"""
-    from probe_spark.indexer import _dir_bytes, file_count
-
-    k_max = max(
-        file_count(_dir_bytes(d), target)
-        for d in (ix / "pages_indexed").glob("bucket=*")
-    )
     for table, order in BUCKET_TABLES.items():
-        per = assert_sorted_files(ix / table, order, max_files=k_max)
+        per = assert_sorted_files(ix / table, order, max_files=k)
         assert all(len(files) > 1 for files in per.values()), table
-        if "doc_id" in order[1:]:
+        if "doc_id" in order:
             for files in per.values():
-                assert_key_in_one_file(files, order[0])
-    n_terms = file_count(_dir_bytes(ix / "terms_partial"), target)
+                assert_doc_ranges_ascend(files)
+    n_terms = file_count(_dir_bytes(ix / "terms_partial"), FILE_BYTES)
     assert files_by_table["terms"] == n_terms > 1
     spans = []
     for f in (ix / "terms").glob("*.parquet"):
@@ -125,8 +117,9 @@ def _pages_50(spark, tmp_path: Path, lo: int):
 def test_ingest_delta_sized_like_a_bucket(
     spark, tiny_index, tmp_path, monkeypatch
 ):
-    """A 50-doc delta is one sorted file per table; with the byte targets
-    patched below its input it splits like a batch bucket."""
+    """A 50-doc delta is one sorted file per table; with FILE_BYTES
+    patched below its input it splits into url slices like a batch
+    bucket."""
     from probe_spark import indexer
     from probe_spark.streaming import incremental
 
@@ -143,17 +136,16 @@ def test_ingest_delta_sized_like_a_bucket(
     target = in_bytes // 3
     for mod in (indexer, incremental):
         monkeypatch.setattr(mod, "FILE_BYTES", target)
-        monkeypatch.setattr(mod, "TRI_FILE_BYTES", target)
     assert incremental.ingest_batch(spark, batch, str(ix), epoch_id=1050) == 50
     k = indexer.file_count(in_bytes, target)
     for table, order in BUCKET_TABLES.items():
         per = assert_sorted_files(
             ix / table, order, max_files=k, glob="bucket=stream_1050_*"
         )
-        if "doc_id" in order[1:]:
+        if "doc_id" in order:
             (files,) = per.values()
             assert len(files) > 1, table
-            assert_key_in_one_file(files, order[0])
+            assert_doc_ranges_ascend(files)
 
 
 @pytest.mark.parametrize("table", LAYOUT_TABLES)

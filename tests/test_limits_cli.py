@@ -146,6 +146,11 @@ def test_cli_build_search_grep(spark, tmp_path, capsys):
     assert m["n_docs"] == 120
     # one sorted file per bucket until a bucket outgrows its byte target
     assert m["files_by_table"]["postings"] == 2
+    # the build record: driver wall time per phase and Spark jobs started
+    assert set(m["phase_ms"]) == {
+        "slicing", "write", "trigram_pass", "dictionaries", "commit"
+    }
+    assert m["jobs"] > 0
 
     assert main(
         ["search", "--index", str(tmp_path / "ix"), "--query", "firewall",

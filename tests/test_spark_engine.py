@@ -249,8 +249,8 @@ def test_resumability(spark, tmp_path):
         )
         assert a.equals(b), f"{table} differs between clean and resumed build"
 
-    # bucket 0 came from the per-bucket path, 1-2 from the resumed wave:
-    # both write one sorted file per bucket per table
+    # bucket 0 came from the killed build, 1-2 from the resume: both
+    # write one sorted file per bucket per table
     from tests.test_index_layout import BUCKET_TABLES, assert_sorted_files
 
     for table, order in BUCKET_TABLES.items():

@@ -119,7 +119,7 @@ def test_bloom_candidate_ids_refutes_absent_term(spark, tiny_index):
 
 
 # ---------------------------------------------------------------------------
-# Trigram postings lane (tri_postings / tri_terms, indexer.tri_rows)
+# Trigram postings lane (tri_postings / tri_terms, indexer._slice_tables)
 # ---------------------------------------------------------------------------
 
 

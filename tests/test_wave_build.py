@@ -1,19 +1,14 @@
-"""PROBE_BUILD_WAVE_BUCKETS: chunked-wave builds must produce an index
-identical to the single-wave build.
+"""Slice sizing is a layout choice: a build whose buckets split into
+several url slices (FILE_BYTES patched below the bucket input) must write
+the same rows as the default build, whose buckets are one slice each.
 
-The knob exists to bound the build's in-flight block-manager footprint
-(persisted tokenize cache + three repartition shuffles per wave); it must
-be a pure scheduling choice -- every derived table byte-identical row-wise
-to the default single-wave layout, and lineage still one row per bucket so
-resume granularity is unchanged.
+Both builds read their pages from parquet, so the buckets are sized by
+input bytes.  Patching FILE_BYTES also puts the partials above it, so the
+split build sums its dictionaries through the Spark fallback.
 
 Both builds patch TRI_DIRECT_FLOOR to 0 (cutoff 0.05 * 200 = 10), so the
-trigram lane is pruned: each wave drops the trigrams dense within it, and
-the listed trigrams (true df <= cutoff) must keep identical lists.
-
-The waved build also patches the file byte targets below its buckets'
-input, so every bucket splits into k > 1 files by key: file sizing is a
-layout choice too, and must leave every row unchanged."""
+trigram lane is pruned, exactly, in both: the listed trigrams (true
+df <= cutoff) keep identical lists and nothing else is written."""
 
 from pyspark.sql import functions as F
 
@@ -21,46 +16,49 @@ from probe_spark import indexer, trigram
 from probe_spark.fixtures import pages_df
 from probe_spark.indexer import build_index
 
-from tests.test_index_layout import assert_split_layout, split_target
+from tests.test_index_layout import assert_split_layout
 from tests.test_spark_engine import lambda_cols
 
 
-def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
-    pages = pages_df(spark, 200)
+def test_file_bytes_build_equals_default(spark, tmp_path, monkeypatch):
+    pages_df(spark, 200).select("url", "text", "lang").write.parquet(
+        str(tmp_path / "pages")
+    )
+    pages = spark.read.parquet(str(tmp_path / "pages"))
     monkeypatch.setattr(trigram, "TRI_DIRECT_FLOOR", 0)
 
-    monkeypatch.delenv("PROBE_BUILD_WAVE_BUCKETS", raising=False)
     single_dir = tmp_path / "single"
     m_single = build_index(spark, pages, str(single_dir), n_buckets=5)
 
-    monkeypatch.setenv("PROBE_BUILD_WAVE_BUCKETS", "2")  # 5 buckets -> 3 waves
-    target = split_target(single_dir)
+    bucket_bytes = indexer._input_bytes(spark, pages) // 5
+    target = bucket_bytes // 3 + 1
     monkeypatch.setattr(indexer, "FILE_BYTES", target)
-    monkeypatch.setattr(indexer, "TRI_FILE_BYTES", target)
-    waved_dir = tmp_path / "waved"
-    m_waved = build_index(spark, pages, str(waved_dir), n_buckets=5)
-    assert_split_layout(waved_dir, target, m_waved["files_by_table"])
+    split_dir = tmp_path / "split"
+    m_split = build_index(spark, pages, str(split_dir), n_buckets=5)
+    k = indexer.file_count(bucket_bytes, target)
+    assert k == 3
+    assert_split_layout(split_dir, k, m_split["files_by_table"])
 
-    assert m_waved["n_postings"] == m_single["n_postings"]
-    assert m_waved["n_docs"] == m_single["n_docs"]
+    assert m_split["n_postings"] == m_single["n_postings"]
+    assert m_split["n_docs"] == m_single["n_docs"]
 
     for table in (
         "pages_indexed", "doc_lens", "postings", "terms", "stats", "tri_terms",
         "terms_partial", "tri_partial",
     ):
-        a = (
-            spark.read.parquet(f"{single_dir}/{table}")
-            .toPandas()
-            .sort_values(by=lambda_cols(spark, f"{single_dir}/{table}"))
-            .reset_index(drop=True)
+        def rows(ix):
+            path = f"{ix}/{table}"
+            df = spark.read.parquet(path).toPandas()
+            if table.endswith("_partial"):  # per-slice partials, summed
+                key = df.columns[0]
+                df = df.groupby(["bucket", key], as_index=False).sum()
+            return df.sort_values(by=lambda_cols(spark, path)).reset_index(
+                drop=True
+            )
+
+        assert rows(single_dir).equals(rows(split_dir)), (
+            f"{table} differs between the default and the split build"
         )
-        b = (
-            spark.read.parquet(f"{waved_dir}/{table}")
-            .toPandas()
-            .sort_values(by=lambda_cols(spark, f"{waved_dir}/{table}"))
-            .reset_index(drop=True)
-        )
-        assert a.equals(b), f"{table} differs between single-wave and waved build"
 
     def listed_rows(ix):
         listed = (
@@ -73,11 +71,10 @@ def test_wave_chunked_build_equals_single_wave(spark, tmp_path, monkeypatch):
         return sorted(map(tuple, rows.collect()))
 
     single_listed = listed_rows(single_dir)
-    assert single_listed and listed_rows(waved_dir) == single_listed
-    # the single wave prunes exactly: it lists nothing else
-    assert spark.read.parquet(f"{single_dir}/tri_postings").count() == len(
-        single_listed
-    )
+    assert single_listed and listed_rows(split_dir) == single_listed
+    for ix in (single_dir, split_dir):  # the lane lists nothing else
+        lane = spark.read.parquet(f"{ix}/tri_postings")
+        assert lane.count() == len(single_listed)
 
-    lineage = spark.read.json(f"{waved_dir}/lineage")
+    lineage = spark.read.json(f"{split_dir}/lineage")
     assert lineage.select("bucket").distinct().count() == 5
