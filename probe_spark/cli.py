@@ -264,7 +264,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if ok else 1
 
     if args.cmd == "config":  # driver-side, no Spark session
-        from probe_spark import dedup, trigram, watchdog
+        from probe_spark import dedup, watchdog
         from probe_spark.config import DEFAULT_BM25
         from probe_spark.engine import SearchEngine
 
@@ -281,9 +281,7 @@ def main(argv: list[str] | None = None) -> int:
                 # index records its cutoff as manifest.tri_cutoff
                 "tri_direct_frac": SearchEngine._TRI_DIRECT_FRAC,
                 "tri_direct_floor": SearchEngine._TRI_DIRECT_FLOOR,
-                "isin_pushdown_cap": SearchEngine._BLOOM_ISIN_CAP,
-                "bloom_min_docs_default": 50_000,
-                "bloom_bytes": trigram.BLOOM_BYTES,
+                "isin_pushdown_cap": SearchEngine._ISIN_CAP,
             },
             "dedup": {"band_bucket_cap": dedup.BAND_BUCKET_CAP},
             "wand": {

@@ -14,11 +14,11 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      rarest <=3 LISTED trigrams of the needle (df <= the manifest's
      tri_cutoff; the build writes no list for the others) are intersected
      in the tri_postings table and contains() verifies only those
-     candidates -- O(trigram df) per query.  A needle with no listed
-     trigram is declined to the plain verify scan; one with a df-0
-     trigram is refuted.  Fallbacks, in order: trigram-bloom column prefilter
-     (legacy index layouts), full containment scan (tiny corpora / <3-char
-     needles).  The reference pays a full scan on EVERY query.
+     candidates -- O(trigram df) per query.  A needle with a df-0 trigram
+     is refuted.  Every other needle -- no listed trigram, rarest trigram
+     above the cutoff, shorter than 3 bytes, or an index without the lane
+     -- is verified by the plain containment scan.  The reference pays a
+     full scan on EVERY query.
   4. boolean evaluation + expression scoring per doc: one shuffle
      (groupBy doc_id), then either
        - pure-Column fast path for disjunctive bags (no required/excluded/
@@ -368,16 +368,10 @@ class SearchEngine:
         spark: SparkSession,
         index_dir: str,
         params: BM25Params = DEFAULT_BM25,
-        bloom_min_docs: int = 50_000,
     ):
-        """``bloom_min_docs``: below this corpus size the trigram-bloom
-        prefilter is skipped -- a full containment scan of a tiny doc store
-        is cheaper than the prefilter's extra job (the bloom pays off when
-        text bytes dwarf bloom bytes + job overhead, i.e. at scale)."""
         self.spark = spark
         self.index_dir = str(index_dir)
         self.params = params
-        self.bloom_min_docs = bloom_min_docs
         self._index_fp: tuple | None = None
         self._reopen()
 
@@ -476,7 +470,6 @@ class SearchEngine:
             p / "pages_indexed" if (p / "pages_indexed").exists() else p / "docs"
         )
         self._terms_path = str(p / "terms")
-        self._cached_cand = None
         # create readers once: repeated spark.read.parquet re-lists files
         # and re-infers partitioning on every query
         for old in getattr(self, "_pinned_frames", ()):
@@ -501,7 +494,6 @@ class SearchEngine:
         # table exceeds the bound and lookups fall back to the term-pruned
         # parquet read, memoized per term.
         self._df_cache: dict[str, int] = {}
-        self._bloom_cache: dict[str, list[int] | None] = {}
         self._tri_cand_cache: dict[str, object] = {}
         self._tri_df_cache: dict[str, int] = {}
         # verified-containment memo (adaptive exact-form postings): once a
@@ -524,7 +516,7 @@ class SearchEngine:
         self._full_dict = False
         # trigram substring-index lane (indexer._slice_tables): serves the
         # containment rescue in O(trigram df) instead of an O(corpus)
-        # bloom/doc scan.  Enabled only when it COVERS the corpus: every
+        # doc scan.  Enabled only when it COVERS the corpus: every
         # postings bucket must have a tri bucket (a pre-tri-lane index
         # that later received tri-writing stream deltas would otherwise
         # silently miss containment matches in the old buckets), unless
@@ -656,52 +648,11 @@ class SearchEngine:
             docs = docs.filter(ext.isin(ext_vals))
         return docs
 
-    # above this many bloom candidates the isin-pushdown stops paying for
-    # itself; verify with the plain full scan instead
-    _BLOOM_ISIN_CAP = 50_000
-
-    def _bloom_candidate_ids(self, needle: str):
-        """Trigram-bloom prefilter (trigram.py): doc_ids whose bloom holds
-        every trigram of ``needle`` -- a SUPERSET of the true containment
-        matches, from the slim doc_lens table.  Returns a list (collected;
-        verify scan pushes ``doc_id IN (...)`` into parquet row groups), or
-        a lazy candidate DataFrame when the list would exceed the IN cap
-        (caller semi-joins), or None when the prefilter is unavailable."""
-        if (
-            self._doc_lens_df is None
-            or "tri_bloom" not in self._doc_lens_df.columns
-            or self.n_docs < self.bloom_min_docs
-            or len(needle.encode("utf-8")) < 3
-        ):
-            return None
-        if needle in self._bloom_cache:
-            return self._bloom_cache[needle]
-
-        @F.pandas_udf("boolean")
-        def _hit(blooms):
-            import pandas as pd
-
-            from probe_spark.trigram import bloom_batch_might_contain
-
-            if len(blooms) == 0:
-                return pd.Series([], dtype=bool)
-            return pd.Series(bloom_batch_might_contain(blooms, needle))
-
-        cand_df = self._doc_lens_df.filter(_hit(F.col("tri_bloom"))).select(
-            "doc_id"
-        )
-        rows = cand_df.limit(self._BLOOM_ISIN_CAP + 1).collect()
-        if len(rows) > self._BLOOM_ISIN_CAP:
-            # too many candidates for an IN pushdown: hand back the lazy
-            # candidate frame -- the caller semi-joins it (contains() runs
-            # on far fewer rows even though the text read is not pruned)
-            out: list[int] | DataFrame | None = cand_df
-        else:
-            out = [int(r["doc_id"]) for r in rows]
-        if len(self._bloom_cache) > 1000:  # bound driver memory
-            self._bloom_cache.clear()
-        self._bloom_cache[needle] = out
-        return out
+    # above this many rescue candidates (lane candidates or verified
+    # matches) the doc_id IN pushdown stops paying for itself: the
+    # candidate frame stays lazy (semi-join) and the verified set is not
+    # memoized
+    _ISIN_CAP = 50_000
 
     # intersect at most this many (rarest) trigrams of a rescue needle --
     # each additional list narrows candidates but adds read volume; the
@@ -722,8 +673,7 @@ class SearchEngine:
     _TRI_DIRECT_FRAC = TRI_DIRECT_FRAC
     _TRI_DIRECT_FLOOR = TRI_DIRECT_FLOOR
     # sentinel: lane PRESENT but declined for this needle (too common) --
-    # tells _rescue_candidates to skip the bloom (same density pathology)
-    # and verify with the plain scan
+    # the rescue verifies it with the plain scan
     _TRI_DECLINED = object()
 
     def _tri_dfs(self, tris: list[int]) -> dict[int, int]:
@@ -811,13 +761,13 @@ class SearchEngine:
                     .filter(F.col("c") == len(sel))
                     .select("doc_id")
                 )
-            if picked[0][1] > self._BLOOM_ISIN_CAP:
+            if picked[0][1] > self._ISIN_CAP:
                 # provably too many candidates for an IN pushdown: hand
                 # back the lazy frame (caller semi-joins) without collecting
                 out = cand_df
             else:
-                rows = cand_df.limit(self._BLOOM_ISIN_CAP + 1).collect()
-                if len(rows) > self._BLOOM_ISIN_CAP:
+                rows = cand_df.limit(self._ISIN_CAP + 1).collect()
+                if len(rows) > self._ISIN_CAP:
                     out = cand_df
                 else:
                     out = [int(r["doc_id"]) for r in rows]
@@ -825,20 +775,6 @@ class SearchEngine:
             self._tri_cand_cache.clear()
         self._tri_cand_cache[needle] = out
         return out
-
-    def _rescue_candidates(self, needle: str):
-        """Best available containment prefilter for a rescue needle:
-        trigram postings lane first (index-served, O(df)), trigram bloom
-        second (columnar O(corpus) superset), else None (full scan).  A
-        lane DECLINE (needle too common to prune) also skips the bloom:
-        its candidate set would be just as dense, so the bloom scan would
-        only add an O(corpus) pass before the inevitable verify scan."""
-        ids = self._tri_candidate_ids(needle)
-        if ids is self._TRI_DECLINED:
-            return None
-        if ids is not None:
-            return ids
-        return self._bloom_candidate_ids(needle)
 
     # cache a needle's verified match set only when it fits an IN-pushdown
     # anyway; bound the number of memoized needles driver-side
@@ -859,7 +795,7 @@ class SearchEngine:
         invalidates via the _reopen fingerprint."""
         import pandas as pd
 
-        cap = self._BLOOM_ISIN_CAP
+        cap = self._ISIN_CAP
         sel = scan_frame.select("doc_id")
         if isinstance(ids, list):
             # candidate superset already <= cap, so the verified set is too
@@ -905,11 +841,6 @@ class SearchEngine:
         self._verified_ids[key] = ids
         return lit
 
-    def _candidate_rows(self, plan: QueryPlan) -> DataFrame:
-        """(term, doc_id, tf, doc_len) rows for every query term, incl.
-        containment rescue for exact/excluded terms."""
-        return self._term_rows(plan, list(plan.term_indices))
-
     def warm_rescue_needles(self, needles: list[str], ex_fn: bool) -> None:
         """Batch-verify COLD rescue needles in ONE Spark action.
 
@@ -929,8 +860,8 @@ class SearchEngine:
         populate _verified_cache with the same three states the
         per-needle path produces (literal frame / empty frame / None =
         known too large), so _rescue_frames afterwards is cache-hits
-        only.  Single queries and legacy bloom-only layouts keep the
-        per-needle path."""
+        only.  Single queries and indexes without the trigram lane keep
+        the per-needle path."""
         ex_key = bool(ex_fn)
         cold = sorted(
             {t for t in needles if (t, ex_key) not in self._verified_cache}
@@ -945,7 +876,7 @@ class SearchEngine:
             self._verified_cache.clear()
             self._verified_ids.clear()
             cold = sorted(set(needles))
-        cap = self._BLOOM_ISIN_CAP
+        cap = self._ISIN_CAP
         pair_rows: list[tuple[str, int]] = []
         n_sel: dict[str, int] = {}
         fullscan: list[str] = []
@@ -1088,7 +1019,9 @@ class SearchEngine:
                 scans.append(lit_df)
                 continue
             base = docs
-            ids = self._rescue_candidates(t)
+            ids = self._tri_candidate_ids(t)
+            if ids is self._TRI_DECLINED:
+                ids = None  # too common to prune: plain verify scan
             if isinstance(ids, DataFrame):
                 base = docs.join(ids, "doc_id", "leftsemi")
             elif ids is not None:
@@ -1119,13 +1052,14 @@ class SearchEngine:
             scans.append(scan_frame)
         return scans
 
-    def _term_rows(self, plan: QueryPlan, terms: list[str]) -> DataFrame:
+    def _term_rows(
+        self, plan: QueryPlan, terms: list[str], *, exclude_filenames: bool
+    ) -> DataFrame:
         """(term, doc_id, tf, doc_len) rows for the GIVEN terms only, with
         the containment rescue applied to those that are rescue terms
         (lets WandEngine fetch just the excluded-term rows)."""
-        ex_fn = getattr(self, "_exclude_fn", False)
         post = self._postings_df.filter(F.col("term").isin(list(terms)))
-        if ex_fn:
+        if exclude_filenames:
             # -n: drop url-token-only matches (tf_url = url-token share of
             # tf, written at build time); the surviving rows keep the FULL
             # tf for scoring (see search() docstring)
@@ -1139,10 +1073,10 @@ class SearchEngine:
         rescues = sorted(t for t in oracle.rescue_terms(plan) if t in terms)
         if not rescues:
             return post
-        scans = self._rescue_frames(rescues, ex_fn)
+        scans = self._rescue_frames(rescues, exclude_filenames)
         if not scans:
-            # every rescue term was bloom-refuted corpus-wide: no doc can
-            # contain any of them, token postings alone decide
+            # every rescue term was refuted or verified empty corpus-wide:
+            # no doc contains any of them, token postings alone decide
             return post
         scan_df = scans[0]
         for s in scans[1:]:
@@ -1183,7 +1117,9 @@ class SearchEngine:
                 self._df_cache[t] = out.get(t, 0)
         return out
 
-    def _query_dfs(self, plan: QueryPlan, cand: DataFrame) -> dict[str, int]:
+    def _query_dfs(
+        self, plan: QueryPlan, cand: DataFrame, *, exclude_filenames: bool
+    ) -> dict[str, int]:
         """Global df per query term: regular terms from the terms dictionary
         (driver cache / term-pruned parquet); rescue terms from the
         candidate rows (their containment scan defines their df).
@@ -1204,7 +1140,7 @@ class SearchEngine:
         for t in excl_only:
             out[t] = 1
         scored_rescues = sorted(rescues - excl_only)
-        ex_key = bool(getattr(self, "_exclude_fn", False))
+        ex_key = bool(exclude_filenames)
         for t in list(scored_rescues):
             if (t, ex_key) in self._rescue_df_cache:
                 # a rescue term's df is a corpus-wide constant of the index
@@ -1270,10 +1206,12 @@ class SearchEngine:
         bounded by k."""
         self.check_refresh()
         plan = elastic.create_query_plan(query, exact)
-        self._boost_coverage = boost_coverage
-        self._exclude_fn = exclude_filenames
         extra = ("matched_keywords", "score_breakdown") if with_matches else ()
-        scored, cand, idfs, zero_score = self._match_frames(plan)
+        scored, cand, idfs, zero_score = self._match_frames(
+            plan,
+            boost_coverage=boost_coverage,
+            exclude_filenames=exclude_filenames,
+        )
 
         if zero_score:
             # universal / stopword-only / only-excluded: score-0 docs in
@@ -1302,15 +1240,6 @@ class SearchEngine:
             .select("doc_id", "url", "score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
-
-    def _reset_match_state(self) -> None:
-        """Clear per-query scoring state (coverage boost, filename
-        exclusion) so index-native entry points that don't expose those
-        options (more_like_this / prefix_search / facets) can't inherit
-        them from a prior ``search(...)`` on the same engine --
-        files_only() guards the same way via try/finally."""
-        self._boost_coverage = False
-        self._exclude_fn = False
 
     def more_like_this(
         self,
@@ -1365,7 +1294,6 @@ class SearchEngine:
                 [], "rank int, doc_id long, url string, score double"
             )
         plan = elastic.plan_from_index_terms(sel)
-        self._reset_match_state()
         scored, _cand, _idfs, _zero = self._match_frames(plan)
         return self._ranked(self._topk_hits(scored, k, exclude_doc_id=seed_id))
 
@@ -1499,7 +1427,6 @@ class SearchEngine:
                 [], "rank int, doc_id long, url string, score double"
             )
         plan = elastic.plan_from_index_terms(sel)
-        self._reset_match_state()
         scored, _cand, _idfs, _zero = self._match_frames(plan)
         return self._ranked(self._topk_hits(scored, k))
 
@@ -1527,7 +1454,6 @@ class SearchEngine:
 
         self.check_refresh()
         plan = elastic.create_query_plan(query, False)
-        self._reset_match_state()
         scored, _cand, _idfs, zero = self._match_frames(plan)
         if zero:
             m = scored.select("doc_id", F.lit(0.0).alias("score"))
@@ -1618,10 +1544,11 @@ class SearchEngine:
         scored_parts: list[DataFrame] = []
         zero_parts: list[DataFrame] = []
         for qid in sorted(queries):
-            plan = plans[qid]
-            self._boost_coverage = boost_coverage
-            self._exclude_fn = exclude_filenames
-            scored, _cand, _idfs, zero_score = self._match_frames(plan)
+            scored, _cand, _idfs, zero_score = self._match_frames(
+                plans[qid],
+                boost_coverage=boost_coverage,
+                exclude_filenames=exclude_filenames,
+            )
             if zero_score:
                 # universal / stopword-only / only-excluded: score-0 docs
                 # in doc_id order, cut per branch (the k-row cut must see
@@ -1986,11 +1913,9 @@ class SearchEngine:
         --max-results still applies downstream."""
         self.check_refresh()
         plan = elastic.create_query_plan(query, exact)
-        self._exclude_fn = exclude_filenames
-        try:
-            scored, _cand, _idfs, zero_score = self._match_frames(plan)
-        finally:
-            self._exclude_fn = False
+        scored, _cand, _idfs, zero_score = self._match_frames(
+            plan, exclude_filenames=exclude_filenames
+        )
         out = scored.select("doc_id")
         if zero_score:
             out = scored.select("doc_id", "url")
@@ -1999,13 +1924,20 @@ class SearchEngine:
         return out.select("doc_id", "url").orderBy(F.asc("doc_id"))
 
     def _match_frames(
-        self, plan: QueryPlan
+        self,
+        plan: QueryPlan,
+        *,
+        boost_coverage: bool = False,
+        exclude_filenames: bool = False,
     ) -> tuple[DataFrame, DataFrame | None, dict[str, float] | None, bool]:
         """Shared match+score pipeline: returns (frame, cand, idfs,
         zero_score).  zero_score=True frames are (doc_id, url, score=0)
         doc sets (universal / stopword-only / only-excluded); otherwise
         the frame is (doc_id, score) of ALL matching docs, unranked and
-        unlimited -- search() applies top-k, files_only() doesn't."""
+        unlimited -- search() applies top-k, files_only() doesn't.  The
+        query options arrive as arguments and are passed down; the engine
+        itself holds no per-query state, so concurrent queries on one
+        engine cannot see each other's options."""
         fdocs = self._filtered_docs(plan)
 
         if plan.is_universal_query:
@@ -2032,27 +1964,13 @@ class SearchEngine:
         if _bag_plus_exclusions(plan) and oracle.rescue_terms(
             plan
         ) == self._excl_only_rescues(plan):
-            return self._match_bag_excluded(plan, fdocs)
+            return self._match_bag_excluded(
+                plan, fdocs, boost_coverage, exclude_filenames
+            )
 
-        cand = self._candidate_rows(plan)
-        ex_key = bool(getattr(self, "_exclude_fn", False))
-        rescues_all = oracle.rescue_terms(plan)
-        scored_rescues = rescues_all - self._excl_only_rescues(plan)
-        if any(
-            # SCORED rescue queries run two actions over the candidate rows
-            # (the df-count and the scoring job); cache the rows so any
-            # embedded doc-store scan runs once (evicted lazily on the next
-            # rescue query).  Purely-excluded rescues skip the df job
-            # entirely (df substituted in _query_dfs) and memoized dfs
-            # skip it too -- in both cases there is a single action and
-            # persisting would be pure overhead.
-            (t, ex_key) not in self._rescue_df_cache
-            for t in scored_rescues
-        ):
-            if self._cached_cand is not None:
-                self._cached_cand.unpersist()
-            cand = cand.persist()
-            self._cached_cand = cand
+        cand = self._term_rows(
+            plan, list(plan.term_indices), exclude_filenames=exclude_filenames
+        )
 
         if plan.has_only_excluded_terms:
             # everything NOT containing the excluded terms, score 0,
@@ -2069,20 +1987,24 @@ class SearchEngine:
 
         # global df BEFORE field filters narrow the candidate set -- stats
         # are corpus-wide (SURVEY.md SS7.0), filters only restrict results
-        dfs = self._query_dfs(plan, cand)
+        dfs = self._query_dfs(plan, cand, exclude_filenames=exclude_filenames)
 
         if fdocs is not None:
             cand = cand.join(fdocs.select("doc_id"), "doc_id", "leftsemi")
         idfs = {t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices}
 
         if _is_disjunctive_bag(plan):
-            scored = self._score_disjunctive(cand, plan, idfs)
+            scored = self._score_disjunctive(cand, plan, idfs, boost_coverage)
         else:
-            scored = self._score_general(cand, plan, idfs)
+            scored = self._score_general(cand, plan, idfs, boost_coverage)
         return scored, cand, idfs, False
 
     def _match_bag_excluded(
-        self, plan: QueryPlan, fdocs: DataFrame | None
+        self,
+        plan: QueryPlan,
+        fdocs: DataFrame | None,
+        boost_coverage: bool,
+        exclude_filenames: bool,
     ) -> tuple[DataFrame, DataFrame, dict[str, float], bool]:
         """Fast path for "keywords -noise" queries (_bag_plus_exclusions):
         positives scored on the codegen disjunctive path straight off the
@@ -2096,7 +2018,9 @@ class SearchEngine:
         pos_terms = [t for t in plan.term_indices if t not in excl]
         excl_terms = [t for t in plan.term_indices if t in excl]
         # positives are plain bag terms (never rescues): postings only
-        pos_cand = self._term_rows(plan, pos_terms)
+        pos_cand = self._term_rows(
+            plan, pos_terms, exclude_filenames=exclude_filenames
+        )
         dfs = self.term_dfs(pos_terms)
         idfs = {
             t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in pos_terms
@@ -2109,20 +2033,19 @@ class SearchEngine:
             pos_cand = pos_cand.join(
                 fdocs.select("doc_id"), "doc_id", "leftsemi"
             )
-        scored = self._score_disjunctive(pos_cand, plan, idfs)
+        scored = self._score_disjunctive(pos_cand, plan, idfs, boost_coverage)
         # drop set = token postings ∪ containment matches of the excluded
         # terms, doc_id only -- no doc_len join, no (term, doc_id) merge:
         # the anti-join neither needs tf nor cares about duplicate rows
-        ex_fn = getattr(self, "_exclude_fn", False)
         post_excl = self._postings_df.filter(
             F.col("term").isin(excl_terms)
         )
-        if ex_fn:
+        if exclude_filenames:
             post_excl = post_excl.filter(
                 (F.col("tf") - F.col("tf_url")) > 0
             )
         drop = post_excl.select("doc_id")
-        for frame in self._rescue_frames(sorted(excl_terms), ex_fn):
+        for frame in self._rescue_frames(sorted(excl_terms), exclude_filenames):
             drop = drop.unionByName(frame.select("doc_id"))
         scored = scored.join(drop, "doc_id", "leftanti")
         return scored, pos_cand, idfs, False
@@ -2201,7 +2124,11 @@ class SearchEngine:
         )
 
     def _score_disjunctive(
-        self, cand: DataFrame, plan: QueryPlan, idfs: dict[str, float]
+        self,
+        cand: DataFrame,
+        plan: QueryPlan,
+        idfs: dict[str, float],
+        boost_coverage: bool,
     ) -> DataFrame:
         """Pure-Column BM25 sum, whole-stage codegen.
 
@@ -2240,7 +2167,7 @@ class SearchEngine:
                 "doc_id",
                 (F.lit(idfs.get(term, 0.0)) * tf_part).alias("score"),
             ).filter(F.col("score") > 0.0)
-            if getattr(self, "_boost_coverage", False):
+            if boost_coverage:
                 # exactly one positive term matched; the denominator is ALL
                 # query terms (incl. excluded -- result_ranking.rs:8-18 via
                 # oracle.coverage_boost), so cov < 1 when exclusions ride
@@ -2303,7 +2230,7 @@ class SearchEngine:
             score_col.alias("score"),
             matched_col.alias("_matched"),
         ).filter(F.col("score") > 0.0)
-        if getattr(self, "_boost_coverage", False):
+        if boost_coverage:
             n_terms = len(plan.term_indices)
             cov = F.least(
                 F.col("_matched").cast("double") / F.lit(float(n_terms)),
@@ -2321,7 +2248,11 @@ class SearchEngine:
         return scored.drop("_matched")
 
     def _score_general(
-        self, cand: DataFrame, plan: QueryPlan, idfs: dict[str, float]
+        self,
+        cand: DataFrame,
+        plan: QueryPlan,
+        idfs: dict[str, float],
+        boost_coverage: bool,
     ) -> DataFrame:
         """Vectorized boolean scorer: pivot candidate rows into per-term tf
         columns with one whole-stage-codegen conditional agg (the only
@@ -2341,7 +2272,6 @@ class SearchEngine:
         term_list = plan.terms  # index order; one tf column per query term
         avgdl = self.avgdl
         params = self.params
-        boost = getattr(self, "_boost_coverage", False)
         n_terms = len(term_indices)
 
         out_schema = StructType(
@@ -2380,7 +2310,7 @@ class SearchEngine:
                 keep, scores = eval_and_score(
                     ast, term_indices, lanes, dl, avgdl, idfs, params
                 )
-                if boost:
+                if boost_coverage:
                     from probe_spark.oracle import (
                         COVERAGE_BOOST_EXP,
                         COVERAGE_BOOST_MULT,
@@ -2408,6 +2338,7 @@ class SearchEngine:
         k: int = 10,
         exact: bool = False,
         timeout: float | None = None,
+        boost_coverage: bool = False,
         exclude_filenames: bool = False,
     ) -> list[tuple[int, float]]:
         """Collect top-k as [(doc_id, score)] -- the oracle-comparable shape.
@@ -2422,15 +2353,18 @@ class SearchEngine:
         TakeOrderedAndProject action for single-term queries instead of
         the 2-3 jobs the hydrated DataFrame path pays.  The k rows and
         their order are identical to search(): same scored frame, same
-        (score desc, doc_id asc) cut."""
+        (score desc, doc_id asc) cut.  ``boost_coverage`` and
+        ``exclude_filenames`` are search()'s options."""
         from probe_spark.watchdog import query_deadline
 
         with query_deadline(self.spark, timeout):
             self.check_refresh()
             plan = elastic.create_query_plan(query, exact)
-            self._boost_coverage = False
-            self._exclude_fn = exclude_filenames
-            scored, _cand, _idfs, zero_score = self._match_frames(plan)
+            scored, _cand, _idfs, zero_score = self._match_frames(
+                plan,
+                boost_coverage=boost_coverage,
+                exclude_filenames=exclude_filenames,
+            )
             order = (
                 [F.asc("doc_id")]
                 if zero_score

@@ -112,7 +112,6 @@ from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     IntegerType,
     LongType,
     StringType,
@@ -203,18 +202,17 @@ TOKENS_SCHEMA = StructType(
         # drop url-only matches at query time (engine._term_rows); mostly 0
         # so it RLE-compresses to ~nothing
         StructField("tf_url", IntegerType()),
-        StructField("tri_bloom", BinaryType()),
         # distinct 24-bit byte-trigram codes of the containment haystack
-        # (trigram.doc_bloom_and_codes) -- the tri_postings lane's rows;
+        # (trigram.doc_tri_codes) -- the tri_postings lane's rows;
         # doc rows only, null on postings
         StructField("tris", ArrayType(IntegerType())),
     ]
 )
 
 
-def _doc_tokenizer(tokenizer: str = "probe", emit_bloom: bool = False):
+def _doc_tokenizer(tokenizer: str = "probe"):
     """The one per-doc tokenize step of the build, ingest and the bench
-    kernel: ``doc(url, text) -> (doc_len, tf, tf_url, bloom, tris)``.
+    kernel: ``doc(url, text) -> (doc_len, tf, tf_url, tris)``.
     ``tokenizer``:
 
       * "probe"  -- the full shared textkit pipeline (text ++ url tokens),
@@ -227,11 +225,9 @@ def _doc_tokenizer(tokenizer: str = "probe", emit_bloom: bool = False):
 
     ``tf`` maps term -> count over text and url tokens, ``tf_url`` the url
     tokens' share.  ``tris`` are the distinct trigram codes of the
-    containment haystack; ``emit_bloom`` also returns the legacy 1 KiB
-    per-doc trigram bloom (None otherwise) -- the tri_postings lane
-    supersedes it, one haystack pass either way."""
+    containment haystack (the tri_postings lane's rows)."""
     from probe_spark.textkit import tokenize
-    from probe_spark.trigram import doc_bloom_and_codes, doc_tri_codes
+    from probe_spark.trigram import doc_tri_codes
 
     if tokenizer == "simple":
         def toks(text, url):
@@ -253,24 +249,21 @@ def _doc_tokenizer(tokenizer: str = "probe", emit_bloom: bool = False):
         for t in url_toks:
             tf_url[t] = tf_url.get(t, 0) + 1
             tf[t] = tf.get(t, 0) + 1
-        if emit_bloom:
-            bloom, tris = doc_bloom_and_codes(text, url)
-        else:
-            bloom, tris = None, doc_tri_codes(text, url)
-        return len(text_toks) + len(url_toks), tf, tf_url, bloom, tris
+        tris = doc_tri_codes(text, url)
+        return len(text_toks) + len(url_toks), tf, tf_url, tris
 
     return doc
 
 
-def _make_tokenize_partition(tokenizer: str = "probe", emit_bloom: bool = False):
+def _make_tokenize_partition(tokenizer: str = "probe"):
     """mapInPandas fn over (doc_id, url, lang, text) batches emitting
-    TOKENS_SCHEMA rows: one doc row (doc_len, tris, tri_bloom) and one
+    TOKENS_SCHEMA rows: one doc row (doc_len, tris) and one
     posting row per distinct term, from ``_doc_tokenizer``."""
 
     def fn(iterator):
         import pandas as pd
 
-        doc = _doc_tokenizer(tokenizer, emit_bloom)
+        doc = _doc_tokenizer(tokenizer)
         for pdf in iterator:
             out = {f.name: [] for f in TOKENS_SCHEMA.fields}
 
@@ -281,11 +274,11 @@ def _make_tokenize_partition(tokenizer: str = "probe", emit_bloom: bool = False)
             for doc_id, url, lang, text in zip(
                 pdf["doc_id"], pdf["url"], pdf["lang"], pdf["text"]
             ):
-                dl, tf, tf_url, bloom, tris = doc(url, text)
-                row(doc_id, url, lang, text, dl, None, 0, 0, bloom, tris)
+                dl, tf, tf_url, tris = doc(url, text)
+                row(doc_id, url, lang, text, dl, None, 0, 0, tris)
                 for t, c in tf.items():
                     row(doc_id, None, None, None, dl, t, c, tf_url.get(t, 0),
-                        None, None)
+                        None)
             yield pd.DataFrame(out)
 
     return fn
@@ -322,7 +315,6 @@ def _slice_tables(
     pages: pa.Table,
     offset: int,
     tokenizer: str = "probe",
-    emit_bloom: bool = False,
     keep_text: bool = True,
 ) -> dict[str, pa.Table]:
     """Every table of one url slice, as sorted Arrow tables: the rows are
@@ -334,15 +326,14 @@ def _slice_tables(
 
     pages, doc_ids = _ranked(pages, offset)
     n = pages.num_rows
-    doc = _doc_tokenizer(tokenizer, emit_bloom)
+    doc = _doc_tokenizer(tokenizer)
     lens = np.zeros(n, dtype=np.int64)
-    blooms, tris = [], []
+    tris = []
     terms, owner, tfs, tf_urls = [], [], [], []
     for i, (url, text) in enumerate(
         zip(pages["url"].to_pylist(), pages["text"].to_pylist())
     ):
-        lens[i], tf, tf_url, bloom, codes = doc(url, text)
-        blooms.append(bloom)
+        lens[i], tf, tf_url, codes = doc(url, text)
         tris.append(codes)
         terms.extend(tf)
         tfs.extend(tf.values())
@@ -372,12 +363,9 @@ def _slice_tables(
     store = {"doc_id": doc_ids, "url": pages["url"], "lang": pages["lang"]}
     if keep_text:
         store["text"] = pages["text"]
-    lens_cols = {"doc_id": doc_ids, "doc_len": lens}
-    if emit_bloom:
-        lens_cols["tri_bloom"] = pa.array(blooms, pa.binary())
     return {
         "pages_indexed": pa.table(store),
-        "doc_lens": pa.table(lens_cols),
+        "doc_lens": pa.table({"doc_id": doc_ids, "doc_len": lens}),
         "postings": postings,
         "terms_partial": pa.table(
             {
@@ -402,8 +390,7 @@ SLICE_RESULT = (
 
 
 def _slice_writer(
-    staging: str, offsets: dict[int, int], tokenizer: str, emit_bloom: bool,
-    keep_text: bool,
+    staging: str, offsets: dict[int, int], tokenizer: str, keep_text: bool
 ):
     """mapInArrow fn of the write stage: one partition is one slice, whose
     tables land in ``<staging>/<taskAttemptId>/<table>.parquet`` (an empty
@@ -419,9 +406,7 @@ def _slice_writer(
             return
         pages = pa.Table.from_batches(batches)
         (sid,) = pc.unique(pages["sid"]).to_pylist()
-        tables = _slice_tables(
-            pages, offsets[sid], tokenizer, emit_bloom, keep_text
-        )
+        tables = _slice_tables(pages, offsets[sid], tokenizer, keep_text)
         att = TaskContext.get().taskAttemptId()
         d = Path(staging) / str(att)
         d.mkdir(parents=True, exist_ok=True)
@@ -697,7 +682,6 @@ def write_slices(
     staging: Path,
     todo: list[int],
     tokenizer: str = "probe",
-    emit_bloom: bool = False,
     keep_text: bool = True,
 ) -> dict[int, dict]:
     """The write stage: one task per slice in ``todo`` (slice ids) stages
@@ -706,7 +690,7 @@ def write_slices(
     file}.  Raises if a slice's row count differs from its ``count``
     (unless that is None)."""
     offsets = {s["pid"]: s["offset"] for s in slices}
-    fn = _slice_writer(str(staging), offsets, tokenizer, emit_bloom, keep_text)
+    fn = _slice_writer(str(staging), offsets, tokenizer, keep_text)
     rows = _place(pages, slices, todo).mapInArrow(fn, SLICE_RESULT).collect()
     results = {r["sid"]: r.asDict() for r in rows}
     for sid in todo:
@@ -838,7 +822,6 @@ def build_index(
     validate_extraction: bool = False,
     fail_buckets: frozenset[int] = frozenset(),
     tokenizer: str = "probe",
-    emit_bloom: bool = False,
     doc_store: str = "copy",
     source_path: str | None = None,
 ) -> dict:
@@ -847,9 +830,7 @@ def build_index(
     ``fail_buckets`` injects a failure after the named buckets commit --
     used by the kill-resume tests only.  ``tokenizer`` selects the
     tokenizer (see _doc_tokenizer); it is recorded in the manifest and
-    honored on resume.  ``emit_bloom`` additionally writes the legacy
-    per-doc trigram bloom column into doc_lens (the tri_postings lane
-    supersedes it).
+    honored on resume.
 
     ``doc_store``:
       * "copy" (default) -- pages_indexed carries the text: the index is
@@ -902,7 +883,6 @@ def build_index(
         manifest = json.loads(manifest_path.read_text())
         n_buckets = manifest["n_buckets"]
         tokenizer = manifest.get("tokenizer", "probe")
-        emit_bloom = manifest.get("emit_bloom", emit_bloom)
         doc_store = manifest.get("doc_store", "copy")
         source_path = manifest.get("source_path")
     if pages is None:
@@ -946,7 +926,6 @@ def build_index(
             "buckets": slices,
             "tri_cutoff": tri_cutoff(sum(s["count"] for s in slices)),
             "tokenizer": tokenizer,
-            "emit_bloom": emit_bloom,
             "doc_store": doc_store,
             "source_path": source_path,
             "created_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
@@ -960,7 +939,7 @@ def build_index(
 
     results = (
         write_slices(
-            spark, pages, slices, staging, todo, tokenizer, emit_bloom,
+            spark, pages, slices, staging, todo, tokenizer,
             keep_text=doc_store == "copy",
         )
         if todo

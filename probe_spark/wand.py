@@ -562,7 +562,11 @@ class WandEngine:
         with query_deadline(self.spark, timeout):
             if exclude_filenames:
                 return self._fallback.search_local(
-                    query, k, exact=exact, exclude_filenames=True
+                    query,
+                    k,
+                    exact=exact,
+                    boost_coverage=boost_coverage,
+                    exclude_filenames=True,
                 )
             return self._search_local_inner(query, k, exact, boost_coverage)
 
@@ -588,14 +592,18 @@ class WandEngine:
         if not _wand_supported(plan) or (set(excl) & pos_kws):
             # a keyword both excluded and positive mixes containment-rescue
             # df with dictionary df -- the flat engine owns that corner
-            return self._fallback.search_local(query, k, exact=exact)
+            return self._fallback.search_local(
+                query, k, exact=exact, boost_coverage=boost_coverage
+            )
         disjunctive = _is_disjunctive_bag(plan)
         terms = list(plan.term_indices)
         if not terms:
             return []
         pos_terms = [t for t in terms if t not in plan.excluded_terms]
         if not pos_terms:
-            return self._fallback.search_local(query, k, exact=exact)
+            return self._fallback.search_local(
+                query, k, exact=exact, boost_coverage=boost_coverage
+            )
         rescues = oracle.rescue_terms(plan)
         dict_terms = [t for t in pos_terms if t not in rescues]
         pos_rescues = sorted(t for t in pos_terms if t in rescues)
@@ -606,7 +614,9 @@ class WandEngine:
             # the flat engine's rescue path (token postings ∪ substring
             # scan, tf = max); their df is the containment count -- same
             # semantics as SearchEngine._query_dfs
-            rescue_rows = self._fallback._term_rows(plan, pos_rescues).persist()
+            rescue_rows = self._fallback._term_rows(
+                plan, pos_rescues, exclude_filenames=False
+            ).persist()
             for r in (
                 rescue_rows.groupBy("term")
                 .agg(F.count(F.lit(1)).alias("df"))
@@ -642,7 +652,9 @@ class WandEngine:
             # no blocks table at all: nothing compacted yet
             if rescue_rows is not None:
                 rescue_rows.unpersist()
-            return self._fallback.search_local(query, k, exact=exact)
+            return self._fallback.search_local(
+                query, k, exact=exact, boost_coverage=boost_coverage
+            )
         blocks = (
             self._blocks_df.filter(F.col("term").isin(dict_terms))
             if dict_terms
@@ -712,7 +724,9 @@ class WandEngine:
             # positive keyword), so exclusion rows outside them are pruned.
             from probe_spark.compaction import BLOCKS_SCHEMA, encode_posting_group
 
-            excl_rows = self._fallback._term_rows(plan, excl)
+            excl_rows = self._fallback._term_rows(
+                plan, excl, exclude_filenames=False
+            )
             excl_blocks = (
                 excl_rows.withColumn(
                     "seg", F.shiftright(F.col("doc_id"), SEG_BITS)

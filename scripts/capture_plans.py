@@ -60,9 +60,9 @@ def main() -> None:
         eng.search_local('"warmup phrase"', 10)
         for name, q in HEADLINE.items():
             plan = elastic.create_query_plan(q, False)
-            eng._boost_coverage = False
-            eng._exclude_fn = False
-            scored, _c, _i, zs = eng._match_frames(plan)
+            scored, _c, _i, zs = eng._match_frames(
+                plan, boost_coverage=False, exclude_filenames=False
+            )
             order = (
                 [F.asc("doc_id")]
                 if zs

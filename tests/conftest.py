@@ -20,9 +20,7 @@ def tiny_index(spark, tmp_path_factory):
 
     d = tmp_path_factory.mktemp("ix") / "tiny"
     pages = pages_df(spark, 1000)
-    # emit_bloom=True: several tests exercise the legacy bloom prefilter
-    # path directly (default builds are bloom-free, tri-lane-served)
-    metrics = build_index(spark, pages, str(d), n_buckets=4, emit_bloom=True)
+    metrics = build_index(spark, pages, str(d), n_buckets=4)
     yield str(d), metrics
     shutil.rmtree(d, ignore_errors=True)
 

@@ -36,13 +36,13 @@ def test_postings_term_filter_pushed_down(spark, tiny_index):
 
 
 def test_rescue_scan_docid_pushdown(spark, tiny_index):
-    """The bloom-pruned containment verify pushes doc_id IN (...) into the
+    """The lane-pruned containment verify pushes doc_id IN (...) into the
     doc-store scan, so non-candidate row groups are skipped."""
     from probe_spark.engine import SearchEngine
 
     path, _ = tiny_index
-    eng = SearchEngine(spark, path, bloom_min_docs=0)
-    ids = eng._bloom_candidate_ids("parsejsontohtml5")
+    eng = SearchEngine(spark, path)
+    ids = eng._tri_candidate_ids("parsejsontohtml5")
     assert ids  # the fixture corpus contains this string
     from pyspark.sql import functions as F
 

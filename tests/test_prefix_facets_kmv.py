@@ -158,7 +158,7 @@ def test_prefix_and_facets_ignore_prior_search_state(spark, prefix_index):
     )
 
     dirty = SearchEngine(spark, prefix_index)
-    # leaves _boost_coverage=True / _exclude_fn=True behind
+    # a boosted -n search first: its options must not reach later calls
     dirty.search("mango apple", boost_coverage=True, exclude_filenames=True).collect()
     got_prefix = [
         (r["url"], r["score"]) for r in dirty.prefix_search("ma", k=10).collect()

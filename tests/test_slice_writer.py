@@ -97,11 +97,11 @@ def test_resume_checks_its_source(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "tokenizer,emit_bloom", [("probe", False), ("simple", False), ("probe", True)]
+    "tokenizer,keep_text", [("probe", False), ("simple", False), ("probe", True)]
 )
-def test_writer_and_tokenize_partition_agree(tokenizer, emit_bloom):
+def test_writer_and_tokenize_partition_agree(tokenizer, keep_text):
     """Both paths run indexer._doc_tokenizer: identical (term, tf, tf_url,
-    doc_len, tris) rows, and tri_bloom with emit_bloom."""
+    doc_len, tris) rows; the doc store keeps text only with keep_text."""
     import pandas as pd
 
     docs = sorted(make_pages(120), key=lambda p: p.url)
@@ -114,7 +114,7 @@ def test_writer_and_tokenize_partition_agree(tokenizer, emit_bloom):
         }
     )
     tok = pd.concat(
-        list(indexer._make_tokenize_partition(tokenizer, emit_bloom)(iter([pdf])))
+        list(indexer._make_tokenize_partition(tokenizer)(iter([pdf])))
     )
     post = tok[tok["term"].notnull()]
     doc_rows = tok[tok["term"].isnull()].set_index("doc_id")
@@ -123,7 +123,7 @@ def test_writer_and_tokenize_partition_agree(tokenizer, emit_bloom):
         pdf.drop(columns="doc_id").sample(frac=1, random_state=0),
         preserve_index=False,
     )
-    tables = indexer._slice_tables(shuffled, 0, tokenizer, emit_bloom)
+    tables = indexer._slice_tables(shuffled, 0, tokenizer, keep_text)
     want_post = sorted(
         zip(post["term"], post["doc_id"], post["tf"], post["tf_url"], post["doc_len"])
     )
@@ -132,14 +132,15 @@ def test_writer_and_tokenize_partition_agree(tokenizer, emit_bloom):
         zip(*(got[c].to_pylist() for c in ("term", "doc_id", "tf", "tf_url", "doc_len")))
     ) == want_post
     lens = tables["doc_lens"].to_pydict()
+    assert set(lens) == {"doc_id", "doc_len"}
     assert lens["doc_len"] == doc_rows["doc_len"].tolist()
+    store = tables["pages_indexed"]
+    assert ("text" in store.column_names) == keep_text
+    if keep_text:
+        assert store["text"].to_pylist() == doc_rows["text"].tolist()
     lane = tables["tri_lane"].to_pydict()
     tris: dict[int, set] = {}
     for t, d in zip(lane["tri"], lane["doc_id"]):
         tris.setdefault(d, set()).add(t)
     for d, codes in doc_rows["tris"].items():
         assert tris.get(d, set()) == {int(c) for c in codes}, d
-    if emit_bloom:
-        assert lens["tri_bloom"] == doc_rows["tri_bloom"].tolist()
-    else:
-        assert "tri_bloom" not in lens

@@ -349,3 +349,45 @@ def test_pin_hot_identity_and_refresh(spark, tiny_index):
     )
     for f in hot._pinned_frames:
         f.unpersist()
+
+
+def test_concurrent_queries_keep_their_options(spark, tiny_index, monkeypatch):
+    """Query options are per call: a boosted search on another thread, run
+    while this -n query is held inside _match_frames on the same engine,
+    must not change its rows."""
+    import threading
+
+    from probe_spark.engine import SearchEngine
+
+    path, _ = tiny_index
+    eng = SearchEngine(spark, path)
+    q = "error handling retry"
+    serial = eng.search_local(q, k=10, exclude_filenames=True)
+    entered, release = threading.Event(), threading.Event()
+    out: dict = {}
+    filtered_docs = eng._filtered_docs
+
+    def held(plan):  # holds thread A only
+        if threading.current_thread() is a:
+            entered.set()
+            release.wait(timeout=120)
+        return filtered_docs(plan)
+
+    def run_a():
+        try:
+            out["rows"] = eng.search_local(q, k=10, exclude_filenames=True)
+        except Exception as e:  # surfaced by the assert below
+            out["error"] = e
+
+    monkeypatch.setattr(eng, "_filtered_docs", held)
+    a = threading.Thread(target=run_a)
+    a.start()
+    try:
+        assert entered.wait(timeout=120)
+        eng.search(q, k=10, boost_coverage=True).collect()
+    finally:
+        release.set()
+        a.join(timeout=300)
+    assert not a.is_alive()
+    assert "error" not in out, out.get("error")
+    assert out["rows"] == serial

@@ -196,7 +196,7 @@ def test_queries_identical_across_builds(engines, query):
     [
         {},
         {"_TRI_DIRECT_FLOOR": 0, "_TRI_DIRECT_FRAC": 0.0},
-        {"_BLOOM_ISIN_CAP": 1},
+        {"_ISIN_CAP": 1},
     ],
     ids=["in-pushdown", "declined-fullscan", "lazy-toolarge"],
 )

@@ -1,83 +1,49 @@
-"""Trigram bloom prefilter (trigram.py): superset property (no false
-negatives -- the correctness invariant), selectivity sanity, and engine
-integration for quoted/negated terms."""
+"""Trigram postings lane (trigram.py, tri_postings / tri_terms): the
+superset property of the codes (no false negatives -- the correctness
+invariant), and engine integration for quoted/negated terms."""
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from probe_spark.trigram import (
-    BLOOM_BYTES,
-    bloom_batch_might_contain,
-    bloom_build,
-    doc_bloom,
-)
+from probe_spark.trigram import doc_tri_codes, needle_tri_codes
 
 
 @given(
     st.text(min_size=0, max_size=400),
-    st.integers(min_value=0, max_value=400),
+    st.text(min_size=0, max_size=100),
+    st.integers(min_value=0, max_value=520),
     st.integers(min_value=0, max_value=40),
 )
 @settings(max_examples=200, deadline=None)
-def test_no_false_negatives_on_substrings(text, start, length):
-    """Every substring of the haystack must pass the bloom check: its
-    trigrams are a subset of the haystack's trigrams by construction."""
-    hay = text.lower()
-    bloom = bloom_build(hay.encode("utf-8"))
+def test_no_false_negatives_on_substrings(text, url, start, length):
+    """Every substring of the containment haystack (text and url) has its
+    trigram codes among the doc's: intersecting posting lists can never
+    drop a doc that contains the needle."""
+    hay = text.lower() + "\n" + url.lower()
     sub = hay[start : start + length]
-    assert bloom_batch_might_contain([bloom], sub)[0]
-
-
-def test_doc_bloom_covers_url():
-    bloom = doc_bloom("some body text", "https://Example.com/Path-Segment")
-    for needle in ("example.com", "path-segment", "body text"):
-        assert bloom_batch_might_contain([bloom], needle)[0]
+    assert set(needle_tri_codes(sub)) <= set(doc_tri_codes(text, url).tolist())
 
 
 def test_short_needles_pass():
-    """<3-byte needles have no trigrams: the filter must not reject (the
+    """<3-byte needles have no trigrams: the lane cannot prune them (the
     engine falls back to the verify scan)."""
-    bloom = bloom_build(b"abcdef")
-    assert bloom_batch_might_contain([bloom], "xy")[0]
-    assert bloom_batch_might_contain([bloom], "")[0]
+    assert needle_tri_codes("xy") == []
+    assert needle_tri_codes("") == []
 
 
-def test_selectivity_on_unrelated_needles():
-    """Statistical sanity: long needles that share no trigrams with the
-    haystack are nearly always refused (superset filter, low FPR)."""
-    rng = np.random.default_rng(7)
-    hay = "".join(rng.choice(list("abcdefghij"), 2000))
-    bloom = bloom_build(hay.encode("utf-8"))
-    needles = [
-        "".join(rng.choice(list("QRSTUVWXYZ0123456789"), 12)).lower()
-        for _ in range(200)
-    ]
-    hits = sum(
-        int(bloom_batch_might_contain([bloom], n)[0])
-        for n in needles
-        if n not in hay
-    )
-    assert hits < 10  # ~0 expected; generous bound for hash collisions
-
-
-def test_bloom_size():
-    assert len(bloom_build(b"hello world")) == BLOOM_BYTES
-
-
-def test_engine_quoted_term_uses_bloom_and_matches_oracle(
+def test_engine_quoted_term_uses_tri_lane_and_matches_oracle(
     spark, tiny_index, tiny_oracle
 ):
-    """Quoted terms must return identical results through the bloom-pruned
+    """Quoted terms must return identical results through the lane-pruned
     rescue path, including a corpus-wide-refuted term (zero candidates)."""
     from probe_spark.engine import SearchEngine
     from probe_spark.oracle import search as oracle_search
 
     path, _ = tiny_index
-    eng = SearchEngine(spark, path, bloom_min_docs=0)  # force the prefilter
-    assert "tri_bloom" in eng._doc_lens_df.columns
+    eng = SearchEngine(spark, path)
+    assert isinstance(eng._tri_candidate_ids("parsejsontohtml5"), list)
     for q in ('"error handling"', '"parseJSONToHTML5"', '"zzqqxxnowhere"'):
         got = eng.search_local(q, k=10)
         expected = oracle_search(tiny_oracle, q, k=10)
@@ -86,7 +52,7 @@ def test_engine_quoted_term_uses_bloom_and_matches_oracle(
             assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (q, gd)
 
 
-def test_bloom_semijoin_path_above_isin_cap(spark, tiny_index, tiny_oracle):
+def test_tri_semijoin_path_above_isin_cap(spark, tiny_index, tiny_oracle):
     """When candidates exceed the IN cap, the verify scan semi-joins the
     lazy candidate frame -- results stay identical."""
     from pyspark.sql import DataFrame
@@ -95,27 +61,15 @@ def test_bloom_semijoin_path_above_isin_cap(spark, tiny_index, tiny_oracle):
     from probe_spark.oracle import search as oracle_search
 
     path, _ = tiny_index
-    eng = SearchEngine(spark, path, bloom_min_docs=0)
-    eng._BLOOM_ISIN_CAP = 1  # force the semi-join branch
-    assert isinstance(eng._bloom_candidate_ids("error handling"), DataFrame)
+    eng = SearchEngine(spark, path)
+    eng._ISIN_CAP = 1  # force the semi-join branch
+    assert isinstance(eng._tri_candidate_ids("error handling"), DataFrame)
     q = '"error handling" retry'
     got = eng.search_local(q, k=10)
     expected = oracle_search(tiny_oracle, q, k=10)
     assert [d for d, _ in got] == [d for d, _ in expected]
     for (gd, gs), (_, es) in zip(got, expected):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), gd
-
-
-def test_bloom_candidate_ids_refutes_absent_term(spark, tiny_index):
-    from probe_spark.engine import SearchEngine
-
-    path, _ = tiny_index
-    eng = SearchEngine(spark, path, bloom_min_docs=0)
-    assert eng._bloom_candidate_ids("zzqqxxnowhere") == []
-    assert eng._bloom_candidate_ids("ab") is None  # too short
-    # below the size gate the prefilter stays out of the way
-    gated = SearchEngine(spark, path)  # default bloom_min_docs
-    assert gated._bloom_candidate_ids("zzqqxxnowhere") is None
 
 
 # ---------------------------------------------------------------------------
@@ -192,6 +146,7 @@ def test_tri_lane_refutes_absent_needles(spark, tiny_index):
     ix, _ = tiny_index
     eng = SearchEngine(spark, ix)
     assert eng._tri_candidate_ids("zqxjkvvqzz") == []
+    assert eng._tri_candidate_ids("ab") is None  # shorter than a trigram
     # and the refutation feeds the rescue path: excluded impossible term
     # behaves like a plain query
     a = eng.search("firewall", k=5).collect()
@@ -237,8 +192,6 @@ def test_tri_lane_declines_unselective_needles(spark, tiny_index):
     eng._TRI_DIRECT_FRAC = 0.0001
     needle = "firewall whitel"  # present in many tiny-index docs
     assert eng._tri_candidate_ids(needle) is eng._TRI_DECLINED
-    # decline skips bloom too: the rescue prefilter reports "no prefilter"
-    assert eng._rescue_candidates(needle) is None
     # and the full query still matches the lane-served engine exactly
     served = SearchEngine(spark, ix)
     q = '"firewall whitel"'

@@ -446,3 +446,42 @@ def test_pin_hot_survives_blocks_refresh(spark, compacted):
     assert eng.search_local("firewall", 5)
     new.unpersist()
     eng._fallback.unpin()
+
+
+def test_wand_exclude_filenames_leaves_no_state(spark, compacted):
+    """A -n search routes to the flat engine; later queries on the same
+    WAND engine must not inherit it (their rescue rows would be built from
+    the text alone)."""
+    from probe_spark.wand import WandEngine
+
+    path, _ = compacted
+    queries = ('"site12"', 'error "example.com/"')
+    want = [WandEngine(spark, path).search_local(q, k=10) for q in queries]
+    assert want[0]  # the needle is a url substring
+    eng = WandEngine(spark, path)
+    eng.search("error handling", k=10, exclude_filenames=True).collect()
+    assert [eng.search_local(q, k=10) for q in queries] == want
+
+
+def test_wand_fallback_keeps_boost_coverage(
+    spark, tiny_index, tiny_oracle, tmp_path
+):
+    """Without a blocks table every query takes the flat fallback, which
+    must still apply the coverage boost."""
+    import shutil
+
+    from probe_spark.wand import WandEngine
+
+    path, _ = tiny_index
+    flat = tmp_path / "flat"
+    shutil.copytree(
+        path, flat, ignore=shutil.ignore_patterns("blocks", "compaction.json")
+    )
+    eng = WandEngine(spark, str(flat))
+    assert eng._blocks_df is None
+    q = "error handling retry"
+    got = eng.search_local(q, k=10, boost_coverage=True)
+    expected = oracle_search(tiny_oracle, q, k=10, boost_coverage=True)
+    assert [d for d, _ in got] == [d for d, _ in expected]
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), gd

@@ -28,7 +28,7 @@ def _frames_rows(eng, needles, ex_fn=False):
     [
         {},  # default caps: IN-pushdown class
         {"_TRI_DIRECT_FLOOR": 0, "_TRI_DIRECT_FRAC": 0.0},  # all declined
-        {"_BLOOM_ISIN_CAP": 1},  # lazy semi-join + too-large verified sets
+        {"_ISIN_CAP": 1},  # lazy semi-join + too-large verified sets
     ],
     ids=["in-pushdown", "declined-fullscan", "lazy-toolarge"],
 )
