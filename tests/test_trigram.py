@@ -26,6 +26,18 @@ def test_no_false_negatives_on_substrings(text, url, start, length):
     assert set(needle_tri_codes(sub)) <= set(doc_tri_codes(text, url).tolist())
 
 
+def test_doc_tri_codes_cover_url():
+    """The url is part of the haystack: needles drawn from it (and from
+    the body) keep all their trigram codes among the doc's."""
+    codes = set(
+        doc_tri_codes("some body text", "https://Example.com/Path-Segment")
+        .tolist()
+    )
+    for needle in ("example.com", "path-segment", "body text"):
+        assert set(needle_tri_codes(needle)) <= codes, needle
+    assert not set(needle_tri_codes("zzqqxxnowhere")) <= codes
+
+
 def test_short_needles_pass():
     """<3-byte needles have no trigrams: the lane cannot prune them (the
     engine falls back to the verify scan)."""
@@ -138,6 +150,19 @@ def test_tri_lane_enabled_and_candidates_superset(spark, tiny_index):
         .collect()
     }
     assert truth and truth <= set(ids)
+
+
+def test_tri_candidate_ids_refutes_absent_term(spark, tiny_index):
+    from probe_spark.engine import SearchEngine
+
+    path, _ = tiny_index
+    eng = SearchEngine(spark, path)
+    assert eng._tri_candidate_ids("zzqqxxnowhere") == []
+    assert eng._tri_candidate_ids("ab") is None  # too short
+    # without the lane the prefilter stays out of the way
+    eng._tri_post_df = None
+    eng._tri_cand_cache.clear()
+    assert eng._tri_candidate_ids("zzqqxxnowhere") is None
 
 
 def test_tri_lane_refutes_absent_needles(spark, tiny_index):
