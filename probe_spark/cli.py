@@ -264,7 +264,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if ok else 1
 
     if args.cmd == "config":  # driver-side, no Spark session
-        from probe_spark import dedup, watchdog
+        from probe_spark import dedup, indexer, watchdog
         from probe_spark.config import DEFAULT_BM25
         from probe_spark.engine import SearchEngine
 
@@ -274,6 +274,9 @@ def main(argv: list[str] | None = None) -> int:
                 "max_terms": 256,
                 "default_timeout_s": watchdog.DEFAULT_TIMEOUT_S,
                 "default_reranker": "bm25",
+                # queries without a rescue term whose pruned reads fit
+                # this many bytes are served on the driver, no Spark job
+                "driver_read_bytes": indexer.DRIVER_READ_BYTES,
             },
             "rescue": {
                 "tri_intersect": SearchEngine._TRI_INTERSECT,

@@ -2,6 +2,20 @@
 
 Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
 
+  0. driver lane (``search_local``, and ``search`` without with_matches):
+     a query with no rescue term that is not universal is served on the
+     driver with zero Spark jobs when its reads fit
+     ``indexer.DRIVER_READ_BYTES`` (bytes of the column chunks decoded).
+     pyarrow reads only the postings row groups whose cached footer
+     min/max on ``term`` cover a query term; field filters read doc_id,
+     lang and url of the candidate docs the same way; rows pivot into tf
+     lanes and score with lanes.score_wide, the batch scorer step 4's
+     pandas UDF runs; top-k is cut by (score desc, doc_id asc).  search()
+     hydrates the k urls likewise and returns a local relation.  Over the
+     budget, at budget 0, or when a footer lacks a needed column, steps
+     1-6 run unchanged.  Opening an engine runs no Spark job either: the
+     dictionaries load with pyarrow and the Spark readers are created on
+     first Spark-path use.
   1. parse query -> AST + QueryPlan (driver, pure Python, shared w/ oracle)
   2. posting retrieval: filter the term-sorted postings parquet with
      ``term IN (...)`` -- parquet row-group stats prune non-matching row
@@ -349,6 +363,124 @@ def parquet_rows(table_dir) -> int:
     return total
 
 
+def _int_column(footers, name: str) -> bool:
+    """True when every file in ``footers`` stores ``name`` as an integer."""
+    import pyarrow as pa
+
+    if not footers:
+        return False
+    for _, md in footers:
+        schema = md.schema.to_arrow_schema()
+        if name not in schema.names or not pa.types.is_integer(
+            schema.field(name).type
+        ):
+            return False
+    return True
+
+
+def read_footers(table) -> list | None:
+    """(path, FileMetaData) of every parquet file a Spark reader of
+    ``table`` (a file or a directory) lists: files and directories whose
+    name starts with '_' or '.' are hidden, as Spark hides them.  None when
+    a footer is unreadable."""
+    import pyarrow.parquet as pq
+
+    root = Path(table)
+    files = (
+        [root]
+        if root.is_file()
+        else sorted(
+            f
+            for f in root.rglob("*.parquet")
+            if not any(
+                part[0] in "_." for part in f.relative_to(root).parts
+            )
+        )
+    )
+    try:
+        return [(str(f), pq.read_metadata(str(f))) for f in files]
+    except (OSError, ValueError):  # unreadable footer: no driver read
+        return None
+
+
+def pruned_read(footers, key: str, values, columns: list[str]):
+    """The rows whose ``key`` is in ``values``, as one Arrow table of
+    ``columns``, read with pyarrow from only the row groups whose footer
+    min/max on ``key`` can hold a value (a row group without min/max
+    stats is read).  None -- the caller runs its Spark plan -- when the
+    footers are missing or unreadable, a file lacks one of ``columns``,
+    or the row groups' ``columns`` chunks total more than
+    indexer.DRIVER_READ_BYTES (at 0 nothing is read)."""
+    import bisect
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from probe_spark import indexer
+
+    budget = indexer.DRIVER_READ_BYTES
+    if not footers or budget <= 0:
+        return None
+    vals = sorted(set(values))
+    picked, total = [], 0
+    for path, md in footers:
+        paths = [md.schema.column(j).path for j in range(md.num_columns)]
+        tops = [c.split(".")[0] for c in paths]
+        if key not in paths or not set(columns) <= set(tops):
+            return None
+        kj = paths.index(key)
+        groups = []
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if not rg.num_rows:
+                continue
+            st = rg.column(kj).statistics
+            if st is not None and st.has_min_max:
+                try:
+                    i = bisect.bisect_left(vals, st.min)
+                    if i == len(vals) or vals[i] > st.max:
+                        continue
+                except TypeError:  # stats of another type: read the group
+                    pass
+            total += sum(
+                rg.column(j).total_uncompressed_size
+                for j, top in enumerate(tops)
+                if top in columns
+            )
+            if total > budget:
+                return None
+            groups.append(g)
+        if groups:
+            picked.append((path, md, groups))
+    schema = footers[0][1].schema.to_arrow_schema()
+    parts = [
+        pa.schema([schema.field(c) for c in columns]).empty_table()
+    ]
+    value_set = pa.array(vals, type=schema.field(key).type)
+    for path, md, groups in picked:
+        t = pq.ParquetFile(path, metadata=md).read_row_groups(
+            groups, columns=columns
+        )
+        parts.append(t.filter(pc.is_in(t[key], value_set=value_set)))
+    return pa.concat_tables(parts, promote_options="permissive")
+
+
+def _filter_values(plan: QueryPlan) -> tuple[list, list, list]:
+    """A query's field filters, normalized: (lang values, url substrings,
+    url extensions) -- lang alias-normalized, the others lowercased."""
+    from probe_spark.config import normalize_lang
+
+    def vals(*fields):
+        return [v for f in fields for v in plan.filters.get(f, [])]
+
+    return (
+        [normalize_lang(v) for v in vals("lang", "language")],
+        [v.lower() for v in vals("file", "path", "filename", "dir", "directory")],
+        [v.lower().lstrip(".") for v in vals("ext", "extension")],
+    )
+
+
 def _empty_matches(hits: DataFrame) -> DataFrame:
     """Typed empty rich-result columns for paths with no positive keyword
     postings (universal / stopword-only / only-excluded queries)."""
@@ -362,7 +494,41 @@ def _empty_matches(hits: DataFrame) -> DataFrame:
     )
 
 
+class _SparkReader:
+    """An engine attribute holding the Spark reader of one index table,
+    created on first use: ``spark.read.parquet`` lists files and infers
+    the schema with a Spark job, which queries the driver lane serves never
+    need.  The table path comes from ``engine._reader_paths`` (None: the
+    table is absent or disabled, and the attribute reads None); assigning
+    the attribute replaces the reader until the next _reopen."""
+
+    def __set_name__(self, owner, name: str) -> None:
+        self.name = name
+
+    def __get__(self, eng, owner=None):
+        if eng is None:
+            return self
+        readers = eng._readers
+        if self.name not in readers:
+            path = eng._reader_paths.get(self.name)
+            readers[self.name] = (
+                None if path is None else eng.spark.read.parquet(str(path))
+            )
+        return readers[self.name]
+
+    def __set__(self, eng, value) -> None:
+        eng._readers[self.name] = value
+
+
 class SearchEngine:
+    _postings_df = _SparkReader()
+    _docs_df = _SparkReader()
+    _terms_df = _SparkReader()
+    _doc_lens_df = _SparkReader()
+    _tri_post_df = _SparkReader()
+    _tri_terms_df = _SparkReader()
+    _suggest_buckets_df = _SparkReader()
+
     def __init__(
         self,
         spark: SparkSession,
@@ -439,7 +605,6 @@ class SearchEngine:
         self._pinned_frames = ()
 
     def _reopen(self) -> None:
-        spark = self.spark
         p = Path(self.index_dir)
         self._index_fp = self._index_fingerprint()
         # singleton stats come straight from the parquet file driver-side
@@ -470,32 +635,39 @@ class SearchEngine:
             p / "pages_indexed" if (p / "pages_indexed").exists() else p / "docs"
         )
         self._terms_path = str(p / "terms")
-        # create readers once: repeated spark.read.parquet re-lists files
-        # and re-infers partitioning on every query
+        # Spark readers are created on first Spark-path use (_SparkReader):
+        # opening an engine reads footers and dictionaries with pyarrow and
+        # runs no Spark job.  Footers are cached per table path, read on
+        # first use; both caches live here, so an on-disk change (new delta
+        # buckets included) drops them with the others.
         for old in getattr(self, "_pinned_frames", ()):
             old.unpersist()
         self._pinned_frames: tuple = ()
-        self._postings_df = spark.read.parquet(self._postings_path)
-        self._docs_df = spark.read.parquet(self._docs_path)
+        self._readers: dict[str, DataFrame | None] = {}
+        self._footer_cache: dict[str, list | None] = {}
+        lens_path = p / "doc_lens"
+        self._reader_paths: dict[str, str | None] = {
+            "_postings_df": self._postings_path,
+            "_docs_df": self._docs_path,
+            "_terms_df": self._terms_path,
+            "_doc_lens_df": str(lens_path) if lens_path.exists() else None,
+            "_tri_post_df": None,
+            "_tri_terms_df": None,
+        }
         if getattr(self, "_pin", False):
             # re-apply hot pinning across an incremental-ingest reopen;
             # materialization is lazy (first query fills the cache)
             self.pin_hot(materialize=False)
         self._docs_text_df = None  # lazy: see _docs_text()
-        self._terms_df = spark.read.parquet(self._terms_path)
-        lens_path = p / "doc_lens"
-        self._doc_lens_df = (
-            spark.read.parquet(str(lens_path)) if lens_path.exists() else None
-        )
         # driver-side term-stats cache (standard IR engine practice): df
         # lookups repeat across queries, and a Spark job per query just to
         # read <=256 dictionary rows is pure fixed overhead.  Small
-        # dictionaries load whole (one job at init); at web scale the
-        # table exceeds the bound and lookups fall back to the term-pruned
+        # dictionaries load whole (pyarrow, below); at web scale the table
+        # exceeds the bound and lookups fall back to the term-pruned
         # parquet read, memoized per term.
         self._df_cache: dict[str, int] = {}
         self._tri_cand_cache: dict[str, object] = {}
-        self._tri_df_cache: dict[str, int] = {}
+        self._tri_df_cache: dict[int, int] = {}
         # verified-containment memo (adaptive exact-form postings): once a
         # rescue needle's TRUE match set is known and small, later queries
         # serve it as a literal postings frame -- no doc-store touch at
@@ -522,17 +694,20 @@ class SearchEngine:
         # silently miss containment matches in the old buckets), unless
         # its lineage records that it wrote zero lane rows (all of its
         # trigrams unlisted).
-        self._tri_post_df = None
-        self._tri_terms_df = None
         self._full_tri_dict = False
+        self._tri_terms_path = p / "tri_terms"
         tri_root, post_root = p / "tri_postings", p / "postings"
         if (
             tri_root.exists()
-            and (p / "tri_terms").exists()
+            and self._tri_terms_path.exists()
             and post_root.exists()
         ):
             post_buckets = {d.name for d in post_root.glob("bucket=*")}
             tri_buckets = {d.name for d in tri_root.glob("bucket=*")}
+            # layout guard, from the footer schemas: the lane stores
+            # 24-bit byte-trigram CODES (int); an index from the
+            # short-lived string-trigram layout would silently refute
+            # every needle -- disable instead
             if (
                 post_buckets
                 and tri_buckets
@@ -540,21 +715,10 @@ class SearchEngine:
                     _lineage_tri_rows(p, b) == 0
                     for b in post_buckets - tri_buckets
                 )
+                and _int_column(self._footers(str(tri_root)), "tri")
             ):
-                tri_df = spark.read.parquet(str(tri_root))
-                # layout guard: the lane stores 24-bit byte-trigram CODES
-                # (int); an index from the short-lived string-trigram layout
-                # would silently refute every needle -- disable instead
-                from pyspark.sql.types import IntegerType, LongType
-
-                if isinstance(
-                    tri_df.schema["tri"].dataType, (IntegerType, LongType)
-                ):
-                    self._tri_post_df = tri_df
-                    self._tri_terms_df = spark.read.parquet(
-                        str(p / "tri_terms")
-                    )
-                    self._tri_terms_path = p / "tri_terms"
+                self._reader_paths["_tri_post_df"] = str(tri_root)
+                self._reader_paths["_tri_terms_df"] = str(self._tri_terms_path)
         # SymSpell suggest lane (symspell.py): precomputed delete-
         # neighborhood table; loaded only when its manifest fingerprint
         # matches the live index, else suggest falls back to the brute
@@ -562,25 +726,66 @@ class SearchEngine:
         from probe_spark import symspell
 
         (
-            self._suggest_buckets_df,
+            self._reader_paths["_suggest_buckets_df"],
             self._suggest_max_dist,
-        ) = symspell.load_if_fresh(spark, self.index_dir)
+        ) = symspell.fresh_table(self.index_dir)
         # guard the whole-dictionary preload by VOCABULARY size, not doc
         # count (web vocab at 1M docs can be tens of millions of terms);
-        # row counts come from parquet footers -- driver-side, no job
-        if self._vocab_rows(p / "terms") <= 2_000_000:
-            pdf = self._terms_df.select("term", "df").toPandas()
-            self._df_cache = dict(
-                zip(pdf["term"], (int(x) for x in pdf["df"]))
-            )
+        # row counts come from the parquet footers
+        terms = self._preload(self._terms_path, "term")
+        if terms is not None:
+            self._df_cache = terms
             self._full_dict = True
 
     # -- helpers ------------------------------------------------------------
 
-    @staticmethod
-    def _vocab_rows(terms_dir: Path) -> int:
-        """Term-dictionary row count via the shared parquet_rows helper."""
-        return parquet_rows(terms_dir)
+    def _footers(self, table: str) -> list | None:
+        """read_footers of ``table``, cached until the next _reopen."""
+        if table not in self._footer_cache:
+            self._footer_cache[table] = read_footers(table)
+        return self._footer_cache[table]
+
+    def _pruned(self, table: str, key: str, values, columns: list[str]):
+        """pruned_read over ``table``'s cached footers."""
+        return pruned_read(self._footers(table), key, values, columns)
+
+    # dictionaries up to this many rows are read whole onto the driver
+    _DICT_PRELOAD_ROWS = 2_000_000
+
+    def _preload(self, table, key: str) -> dict | None:
+        """{key: df} of a whole dictionary table, read with pyarrow, when
+        its footers count at most _DICT_PRELOAD_ROWS rows; else None."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        footers = self._footers(str(table))
+        if not footers or (
+            sum(md.num_rows for _, md in footers) > self._DICT_PRELOAD_ROWS
+        ):
+            return None
+        t = pa.concat_tables(
+            [
+                pq.ParquetFile(f, metadata=md).read(columns=[key, "df"])
+                for f, md in footers
+            ],
+            promote_options="permissive",
+        )
+        return dict(zip(t[key].to_pylist(), t["df"].to_pylist()))
+
+    def _dict_lookup(self, reader: str, key: str, keys: list) -> dict:
+        """{key: df} for ``keys`` present in a dictionary too large to
+        preload: a footer-pruned pyarrow read when it fits the driver
+        budget, else a pruned Spark lookup."""
+        t = self._pruned(self._reader_paths[reader], key, keys, [key, "df"])
+        if t is not None:
+            return dict(zip(t[key].to_pylist(), t["df"].to_pylist()))
+        rows = (
+            getattr(self, reader)
+            .filter(F.col(key).isin(keys))
+            .select(key, "df")
+            .collect()
+        )
+        return {r[key]: int(r["df"]) for r in rows}
 
     def _docs(self) -> DataFrame:
         return self._docs_df
@@ -602,23 +807,9 @@ class SearchEngine:
     def _filtered_docs(self, plan: QueryPlan) -> DataFrame | None:
         """Apply field filters (F1/F3 web mapping): lang equality, url
         substring.  Returns None when no filters are active."""
-        from probe_spark.config import LANG_ALIASES, normalize_lang
+        from probe_spark.config import LANG_ALIASES
 
-        lang_vals = [
-            normalize_lang(v)
-            for f in ("lang", "language")
-            for v in plan.filters.get(f, [])
-        ]
-        url_subs = [
-            v.lower()
-            for f in ("file", "path", "filename", "dir", "directory")
-            for v in plan.filters.get(f, [])
-        ]
-        ext_vals = [
-            v.lower().lstrip(".")
-            for f in ("ext", "extension")
-            for v in plan.filters.get(f, [])
-        ]
+        lang_vals, url_subs, ext_vals = _filter_values(plan)
         if not lang_vals and not url_subs and not ext_vals:
             return None
         docs = self._docs()
@@ -678,28 +869,17 @@ class SearchEngine:
 
     def _tri_dfs(self, tris: list[int]) -> dict[int, int]:
         """Per-trigram df from the tri dictionary: lazy whole-dictionary
-        driver preload when small (first rescue query pays one tiny job),
-        pruned parquet lookups memoized per trigram otherwise."""
+        driver preload when small (pyarrow, no Spark job), pruned lookups
+        memoized per trigram otherwise."""
         if not self._full_tri_dict and not self._tri_df_cache:
-            if self._vocab_rows(self._tri_terms_path) <= 2_000_000:
-                pdf = self._tri_terms_df.select("tri", "df").toPandas()
-                self._tri_df_cache = dict(
-                    zip(
-                        (int(x) for x in pdf["tri"]),
-                        (int(x) for x in pdf["df"]),
-                    )
-                )
+            full = self._preload(self._tri_terms_path, "tri")
+            if full is not None:
+                self._tri_df_cache = full
                 self._full_tri_dict = True
         out = {t: self._tri_df_cache[t] for t in tris if t in self._tri_df_cache}
         missing = [t for t in tris if t not in out]
         if missing and not self._full_tri_dict:
-            rows = (
-                self._tri_terms_df.filter(F.col("tri").isin(missing))
-                .select("tri", "df")
-                .collect()
-            )
-            for r in rows:
-                out[r["tri"]] = int(r["df"])
+            out.update(self._dict_lookup("_tri_terms_df", "tri", missing))
             for t in missing:
                 self._tri_df_cache[t] = out.setdefault(t, 0)
         else:
@@ -1105,14 +1285,7 @@ class SearchEngine:
         out = {t: self._df_cache[t] for t in terms if t in self._df_cache}
         missing = [t for t in terms if t not in out]
         if missing and not self._full_dict:
-            rows = (
-                self._terms_df
-                .filter(F.col("term").isin(missing))
-                .select("term", "df")
-                .collect()
-            )
-            for r in rows:
-                out[r["term"]] = int(r["df"])
+            out.update(self._dict_lookup("_terms_df", "term", missing))
             for t in missing:  # absent from dictionary => df 0, memoize too
                 self._df_cache[t] = out.get(t, 0)
         return out
@@ -1181,6 +1354,108 @@ class SearchEngine:
             t for t in rescues if t in plan.excluded_terms and t not in pos_kws
         }
 
+    # -- driver lane ---------------------------------------------------------
+
+    def _driver_hits(
+        self,
+        plan: QueryPlan,
+        k: int,
+        *,
+        boost_coverage: bool,
+        exclude_filenames: bool,
+    ) -> list[tuple[int, float]] | None:
+        """Top-k [(doc_id, score)] served on the driver with no Spark job,
+        or None when the Spark plan serves the query: it is universal or
+        has a rescue term, a table's footers lack a needed column, or a
+        read exceeds the driver budget (pruned_read).  Postings come from
+        the row groups whose footer term range covers a query term; field
+        filters read doc_id/lang/url of the candidate docs; the batch
+        scorer is _score_general's (lanes.score_wide), so the rows are the
+        Spark plan's."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        from probe_spark.lanes import score_wide, wide_frame
+
+        if plan.is_universal_query or oracle.rescue_terms(plan):
+            return None
+        cols = ["term", "doc_id", "tf", "doc_len"]
+        if exclude_filenames:
+            cols.append("tf_url")
+        rows = self._pruned(self._postings_path, "term", plan.term_indices, cols)
+        if rows is None:
+            return None
+        if exclude_filenames:
+            # -n: url-token-only matches drop out, as in _term_rows
+            rows = rows.filter(
+                pc.greater(pc.subtract(rows["tf"], rows["tf_url"]), 0)
+            )
+        if any(_filter_values(plan)):
+            ok = self._driver_filter(plan, pc.unique(rows["doc_id"]))
+            if ok is None:
+                return None
+            rows = rows.filter(pc.is_in(rows["doc_id"], value_set=ok))
+        dfs = self.term_dfs(list(plan.term_indices))
+        idfs = {
+            t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices
+        }
+        scored = score_wide(
+            wide_frame(rows, plan.terms),
+            plan.ast,
+            dict(plan.term_indices),
+            plan.terms,
+            self.avgdl,
+            idfs,
+            self.params,
+            boost_coverage,
+        )
+        ids = scored["doc_id"].to_numpy()
+        sc = scored["score"].to_numpy()
+        return [(int(ids[i]), float(sc[i])) for i in np.lexsort((ids, -sc))[:k]]
+
+    def _driver_filter(self, plan: QueryPlan, ids):
+        """The ``ids`` that pass the query's field filters, as an Arrow
+        array, from a pruned read of the doc store; None over the budget.
+        Same semantics as _filtered_docs: alias-normalized lang equality,
+        lowercase url containment, oracle.url_extension; a null label
+        never passes its filter."""
+        import pyarrow as pa
+
+        from probe_spark.config import normalize_lang
+
+        lang_vals, url_subs, ext_vals = _filter_values(plan)
+        cols = ["doc_id"]
+        if lang_vals:
+            cols.append("lang")
+        if url_subs or ext_vals:
+            cols.append("url")
+        docs = self._pruned(self._docs_path, "doc_id", ids.to_pylist(), cols)
+        if docs is None:
+            return None
+        col = {c: docs[c].to_pylist() for c in cols}
+        none = [None] * docs.num_rows
+
+        def passes(lang, url) -> bool:
+            if lang_vals and (lang is None or normalize_lang(lang) not in lang_vals):
+                return False
+            if url_subs or ext_vals:
+                if url is None or not all(x in url.lower() for x in url_subs):
+                    return False
+                if ext_vals and oracle.url_extension(url) not in ext_vals:
+                    return False
+            return True
+
+        return pa.array(
+            [
+                d
+                for d, lang, url in zip(
+                    col["doc_id"], col.get("lang", none), col.get("url", none)
+                )
+                if passes(lang, url)
+            ],
+            type=docs.schema.field("doc_id").type,
+        )
+
     # -- public API ----------------------------------------------------------
 
     def search(
@@ -1206,6 +1481,12 @@ class SearchEngine:
         bounded by k."""
         self.check_refresh()
         plan = elastic.create_query_plan(query, exact)
+        if not with_matches:
+            ranked = self._driver_ranked(
+                plan, k, boost_coverage, exclude_filenames
+            )
+            if ranked is not None:
+                return ranked
         extra = ("matched_keywords", "score_breakdown") if with_matches else ()
         scored, cand, idfs, zero_score = self._match_frames(
             plan,
@@ -1223,6 +1504,52 @@ class SearchEngine:
         if with_matches:
             hits = self._hydrate_matches(hits, cand, idfs)
         return self._ranked(hits, extra)
+
+    def _driver_ranked(
+        self,
+        plan: QueryPlan,
+        k: int,
+        boost_coverage: bool,
+        exclude_filenames: bool,
+    ) -> DataFrame | None:
+        """search()'s (rank, doc_id, url, score) frame from the driver lane:
+        the hits' urls come from a pruned doc-store read, and the frame is
+        a local relation built from an Arrow table, so collecting it runs
+        no Spark job.  None when the Spark plan serves the query."""
+        import pyarrow as pa
+
+        hits = self._driver_hits(
+            plan,
+            k,
+            boost_coverage=boost_coverage,
+            exclude_filenames=exclude_filenames,
+        )
+        if hits is None:
+            return None
+        ids = [d for d, _ in hits]
+        docs = self._pruned(self._docs_path, "doc_id", ids, ["doc_id", "url"])
+        if docs is None:
+            return None
+        url = dict(zip(docs["doc_id"].to_pylist(), docs["url"].to_pylist()))
+        schema = pa.schema(
+            [
+                pa.field("rank", pa.int32(), nullable=False),
+                ("doc_id", pa.int64()),
+                ("url", pa.string()),
+                ("score", pa.float64()),
+            ]
+        )
+        return self.spark.createDataFrame(
+            pa.table(
+                [
+                    range(1, len(ids) + 1),
+                    ids,
+                    [url.get(d) for d in ids],
+                    [sc for _, sc in hits],
+                ],
+                schema=schema,
+            )
+        )
 
     def _topk_hits(
         self, scored: DataFrame, k: int, exclude_doc_id: int | None = None
@@ -2256,8 +2583,9 @@ class SearchEngine:
     ) -> DataFrame:
         """Vectorized boolean scorer: pivot candidate rows into per-term tf
         columns with one whole-stage-codegen conditional agg (the only
-        shuffle), then evaluate + score the AST as numpy lane ops
-        (lanes.eval_and_score) over the Arrow batch -- no per-doc Python.
+        shuffle), then evaluate + score the AST as numpy lane ops over the
+        Arrow batch (lanes.score_wide, the driver lane's batch scorer too)
+        -- no per-doc Python.
         Rank identity vs the scalar oracle (evaluate + score_expr) is pinned
         bit-for-bit by tests/test_lanes.py and the q01-q25 suite."""
         from pyspark.sql.types import (
@@ -2272,7 +2600,6 @@ class SearchEngine:
         term_list = plan.terms  # index order; one tf column per query term
         avgdl = self.avgdl
         params = self.params
-        n_terms = len(term_indices)
 
         out_schema = StructType(
             [
@@ -2289,45 +2616,18 @@ class SearchEngine:
         wide = cand.groupBy("doc_id").agg(*aggs)
 
         def score_batch(iterator):
-            import numpy as np
-            import pandas as pd
+            from probe_spark.lanes import score_wide
 
-            from probe_spark.lanes import eval_and_score
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
             for pdf in iterator:
-                if not len(pdf):
-                    yield empty
-                    continue
-                lanes: dict[str, np.ndarray] = {}
-                for i, t in enumerate(term_list):
-                    col = pdf[f"_tf{i}"]
-                    if col.notna().any():
-                        lanes[t] = col.fillna(0).to_numpy(np.int64)
-                dl = pdf["doc_len"].to_numpy(np.int64)
-                keep, scores = eval_and_score(
-                    ast, term_indices, lanes, dl, avgdl, idfs, params
-                )
-                if boost_coverage:
-                    from probe_spark.oracle import (
-                        COVERAGE_BOOST_EXP,
-                        COVERAGE_BOOST_MULT,
-                    )
-
-                    matched = np.zeros(len(pdf), dtype=np.int64)
-                    for lane in lanes.values():
-                        matched += lane > 0
-                    cov = np.minimum(matched / float(n_terms), 1.0) if n_terms else 0.0
-                    scores = scores * (
-                        1.0 + cov**COVERAGE_BOOST_EXP * COVERAGE_BOOST_MULT
-                    )
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy(np.int64)[keep],
-                        "score": scores[keep],
-                    }
+                yield score_wide(
+                    pdf,
+                    ast,
+                    term_indices,
+                    term_list,
+                    avgdl,
+                    idfs,
+                    params,
+                    boost_coverage,
                 )
 
         return wide.mapInPandas(score_batch, out_schema)
@@ -2353,13 +2653,23 @@ class SearchEngine:
         TakeOrderedAndProject action for single-term queries instead of
         the 2-3 jobs the hydrated DataFrame path pays.  The k rows and
         their order are identical to search(): same scored frame, same
-        (score desc, doc_id asc) cut.  ``boost_coverage`` and
-        ``exclude_filenames`` are search()'s options."""
+        (score desc, doc_id asc) cut.  Rescue-free queries under the driver
+        budget skip Spark altogether (_driver_hits, module docstring step
+        0).  ``boost_coverage`` and ``exclude_filenames`` are search()'s
+        options."""
         from probe_spark.watchdog import query_deadline
 
         with query_deadline(self.spark, timeout):
             self.check_refresh()
             plan = elastic.create_query_plan(query, exact)
+            hits = self._driver_hits(
+                plan,
+                k,
+                boost_coverage=boost_coverage,
+                exclude_filenames=exclude_filenames,
+            )
+            if hits is not None:
+                return hits
             scored, _cand, _idfs, zero_score = self._match_frames(
                 plan,
                 boost_coverage=boost_coverage,

@@ -105,33 +105,29 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _vec_by_id(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
-    """ONE embedding row, driver-side: stream parquet batches with pyarrow
-    and stop at the first hit -- no Spark job for a single bounded row
-    (the _table_rows pattern; the float32 -> Python-float widening is the
-    same exact conversion the Spark head() path performed).  Falls back to
-    a Spark lookup if the path is not a plain readable file."""
-    import pyarrow.parquet as pq
+    """ONE embedding row.  On the driver when the read is bounded: only
+    the row groups whose vec_id footer min/max cover the id are read with
+    pyarrow (engine.pruned_read, under indexer.DRIVER_READ_BYTES);
+    otherwise a Spark filter.  The float32 -> Python-float widening is
+    exact on both paths.  Raises KeyError for an id the table lacks."""
+    from probe_spark.engine import pruned_read, read_footers
 
-    p = Path(f"{sf_dir}/embeddings.parquet")
-    try:
-        files = [p] if p.is_file() else sorted(p.rglob("*.parquet"))
-        for f in files:
-            for batch in pq.ParquetFile(str(f)).iter_batches(
-                columns=["vec_id", "embedding"], batch_size=8192
-            ):
-                ids = batch.column("vec_id").to_pylist()
-                if vec_id in ids:
-                    row = batch.column("embedding")[ids.index(vec_id)]
-                    return [float(x) for x in row.as_py()]
-    except Exception:
-        pass
-    qrow = (
-        _emb(spark, sf_dir)
-        .filter(F.col("vec_id") == vec_id)
-        .select("embedding")
-        .head()
-    )
-    return [float(x) for x in qrow["embedding"]]
+    path = f"{sf_dir}/embeddings.parquet"
+    t = pruned_read(read_footers(path), "vec_id", [vec_id], ["vec_id", "embedding"])
+    if t is not None:
+        rows = t.column("embedding").to_pylist()
+    else:
+        rows = [
+            r["embedding"]
+            for r in _emb(spark, sf_dir)
+            .filter(F.col("vec_id") == vec_id)
+            .select("embedding")
+            .limit(1)
+            .collect()
+        ]
+    if not rows:
+        raise KeyError(f"vec_id {vec_id} is not in {path}")
+    return [float(x) for x in rows[0]]
 
 
 def _tokens(docs: DataFrame) -> DataFrame:

@@ -172,6 +172,12 @@ def write_arrow(table: pa.Table, path: Path) -> None:
 # driver while their partials total under it.
 FILE_BYTES = 256 << 20
 
+# Driver read budget, in bytes of the column chunks a read decodes: a
+# query (or a single-row lookup) whose footer-pruned row groups fit it is
+# served with pyarrow on the driver with no Spark job; above it, or at 0,
+# the Spark plan runs (engine.pruned_read).
+DRIVER_READ_BYTES = 64 << 20
+
 
 def file_count(nbytes: int, target: int) -> int:
     """Files per bucket of one table: max(1, ceil(nbytes / target))."""

@@ -26,6 +26,9 @@ operation -- so both hosts produce the same bits.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from probe_spark.config import BM25Params
 from probe_spark.elastic import And, Expr, Term, has_required_term
@@ -152,6 +155,82 @@ def eval_and_score(
 
     score_valid, scores = score(ast)
     return eval_mask & score_valid, scores
+
+
+def coverage_boosted(
+    scores: np.ndarray, tf_lanes, n_terms: int
+) -> np.ndarray:
+    """``scores`` times the R7 coverage boost (oracle.coverage_boost):
+    matched = how many of ``tf_lanes`` are present per doc, over the
+    query's ``n_terms`` terms."""
+    from probe_spark.oracle import COVERAGE_BOOST_EXP, COVERAGE_BOOST_MULT
+
+    matched = np.zeros(len(scores), dtype=np.int64)
+    for lane in tf_lanes:
+        matched += lane > 0
+    cov = np.minimum(matched / float(n_terms), 1.0) if n_terms else 0.0
+    return scores * (1.0 + cov**COVERAGE_BOOST_EXP * COVERAGE_BOOST_MULT)
+
+
+def score_wide(
+    pdf: pd.DataFrame,
+    ast: Expr,
+    term_indices: dict[str, int],
+    term_list: list[str],
+    avgdl: float,
+    idfs: dict[str, float],
+    params: BM25Params,
+    boost_coverage: bool,
+) -> pd.DataFrame:
+    """(doc_id, score) of the docs of one pivoted batch that the query
+    keeps.  ``pdf`` holds doc_id, doc_len and one nullable tf column
+    ``_tf{i}`` per term of ``term_list`` (null = absent): the rows of
+    engine._score_general's conditional aggregation, or of wide_frame on
+    the driver.  The one batch scorer of both hosts: lanes, eval_and_score,
+    the coverage boost and the keep mask."""
+    if not len(pdf):
+        return pd.DataFrame({"doc_id": [], "score": []}).astype(
+            {"doc_id": "int64", "score": "float64"}
+        )
+    tf_lanes: dict[str, np.ndarray] = {}
+    for i, t in enumerate(term_list):
+        col = pdf[f"_tf{i}"]
+        if col.notna().any():
+            tf_lanes[t] = col.fillna(0).to_numpy(np.int64)
+    keep, scores = eval_and_score(
+        ast,
+        term_indices,
+        tf_lanes,
+        pdf["doc_len"].to_numpy(np.int64),
+        avgdl,
+        idfs,
+        params,
+    )
+    if boost_coverage:
+        scores = coverage_boosted(scores, tf_lanes.values(), len(term_indices))
+    return pd.DataFrame(
+        {"doc_id": pdf["doc_id"].to_numpy(np.int64)[keep], "score": scores[keep]}
+    )
+
+
+def wide_frame(rows: pa.Table, term_list: list[str]) -> pd.DataFrame:
+    """Pivot (term, doc_id, tf, doc_len) rows into score_wide's input: one
+    row per doc, doc_len, and per term the max tf of its rows (null when
+    the doc has none) -- the driver-side form of _score_general's
+    groupBy(doc_id) conditional aggregation."""
+    ids, inv = np.unique(
+        rows["doc_id"].to_numpy().astype(np.int64), return_inverse=True
+    )
+    dl = np.zeros(len(ids), dtype=np.int64)
+    dl[inv] = rows["doc_len"].to_numpy()
+    tf = rows["tf"].to_numpy().astype(np.float64)
+    out = {"doc_id": ids, "doc_len": dl}
+    for i, t in enumerate(term_list):
+        m = pc.equal(rows["term"], t).to_numpy(zero_copy_only=False)
+        lane = np.full(len(ids), np.nan)
+        np.fmax.at(lane, inv[m], tf[m])
+        out[f"_tf{i}"] = lane
+    return pd.DataFrame(out)
 
 
 def _walk(expr: Expr):

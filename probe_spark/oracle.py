@@ -313,7 +313,7 @@ def apply_filters(
 # result_ranking.rs:12 constants (boost = 1 + cov^EXP * MULT) -- the
 # SINGLE source for every host of the formula (scalar below, the SQL
 # column form in engine._score_disjunctive, the numpy form in
-# engine._score_general); change here, not in the hosts
+# lanes.coverage_boosted); change here, not in the hosts
 COVERAGE_BOOST_EXP = 1.5
 COVERAGE_BOOST_MULT = 2.0
 

@@ -166,13 +166,12 @@ def _jsonable(fp: tuple):
     return json.loads(json.dumps(fp))
 
 
-def load_if_fresh(
-    spark: SparkSession, index_dir: str
-) -> tuple[DataFrame | None, int]:
-    """(buckets_df, built_max_dist) when the table exists AND its manifest
+def fresh_table(index_dir: str) -> tuple[str | None, int]:
+    """(table path, built_max_dist) when the table exists AND its manifest
     fingerprint matches the index's current state; (None, 0) otherwise --
     a stale lane silently yields to the always-correct brute scan rather
-    than serving suggestions from a dictionary that no longer exists."""
+    than serving suggestions from a dictionary that no longer exists.
+    Driver-side file reads only, no Spark job."""
     from probe_spark.engine import index_fingerprint
 
     p = Path(index_dir)
@@ -185,4 +184,14 @@ def load_if_fresh(
         return None, 0
     if m.get("fingerprint") != _jsonable(index_fingerprint(index_dir)):
         return None, 0
-    return spark.read.parquet(str(p / TABLE)), int(m.get("max_dist", 0))
+    return str(p / TABLE), int(m.get("max_dist", 0))
+
+
+def load_if_fresh(
+    spark: SparkSession, index_dir: str
+) -> tuple[DataFrame | None, int]:
+    """(buckets_df, built_max_dist) of the fresh_table, or (None, 0)."""
+    path, max_dist = fresh_table(index_dir)
+    if path is None:
+        return None, 0
+    return spark.read.parquet(path), max_dist

@@ -435,7 +435,7 @@ class WandEngine:
             import pandas as pd
 
             from probe_spark.codec import decode_doc_block, varbyte_decode
-            from probe_spark.lanes import eval_and_score
+            from probe_spark.lanes import coverage_boosted, eval_and_score
 
             empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
                 {"doc_id": "int64", "score": "float64"}
@@ -474,18 +474,7 @@ class WandEngine:
                 ast, term_indices, sub, dl_lane[cand], avgdl, idfs, params
             )
             if boost and n_terms:
-                from probe_spark.oracle import (
-                    COVERAGE_BOOST_EXP,
-                    COVERAGE_BOOST_MULT,
-                )
-
-                matched = np.zeros(len(cand), dtype=np.int64)
-                for lane in sub.values():
-                    matched += lane > 0
-                cov = np.minimum(matched / float(n_terms), 1.0)
-                scores = scores * (
-                    1.0 + cov**COVERAGE_BOOST_EXP * COVERAGE_BOOST_MULT
-                )
+                scores = coverage_boosted(scores, sub.values(), n_terms)
             ids = (cand[keep] + base).astype(np.int64)
             sc = scores[keep]
             if len(ids) == 0:

@@ -161,6 +161,7 @@ def test_config_without_index(capsys):
     assert rc == 0
     cfg = json.loads(out.out)
     assert "stats" not in cfg and cfg["rescue"]["tri_intersect"] == 3
+    assert cfg["query"]["driver_read_bytes"] == 64 << 20
     assert cfg["rescue"]["tri_direct_frac"] == 0.05
     assert cfg["rescue"]["tri_direct_floor"] == 1_000
 

@@ -66,11 +66,14 @@ def test_docs_url_projection_prunes_text(spark, tiny_index):
     assert "text" not in m.group(1), m.group(1)
 
 
-def test_disjunctive_query_whole_stage_codegen(spark, tiny_index):
+def test_disjunctive_query_whole_stage_codegen(spark, tiny_index, monkeypatch):
     """The OR-bag scoring path must stay JVM-side (whole-stage codegen
-    spans, no Python evaluation in the hot loop)."""
+    spans, no Python evaluation in the hot loop).  Budget 0: the Spark
+    plan, not the driver lane, serves the query."""
+    from probe_spark import indexer
     from probe_spark.engine import SearchEngine
 
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
     path, _ = tiny_index
     eng = SearchEngine(spark, path)
     df = eng.search("firewall whitelist process", k=10)

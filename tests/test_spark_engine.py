@@ -72,7 +72,22 @@ def test_df_matches_oracle(spark, tiny_index, tiny_oracle):
 @pytest.mark.parametrize("qid", sorted(QUERIES))
 def test_rank_identity(engine, tiny_oracle, qid):
     """Engine top-10 must equal the oracle top-10: same doc_ids, same order,
-    f64-identical scores (FIXTURES.md SS5 invariant 3)."""
+    f64-identical scores (FIXTURES.md SS5 invariant 3).  At the default
+    driver budget: rescue-free queries are served by the driver lane."""
+    _check_rank_identity(engine, tiny_oracle, qid)
+
+
+@pytest.mark.parametrize("qid", sorted(QUERIES))
+def test_rank_identity_spark_plan(engine, tiny_oracle, qid, monkeypatch):
+    """The same identity at driver budget 0: every query runs its Spark
+    plan."""
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    _check_rank_identity(engine, tiny_oracle, qid)
+
+
+def _check_rank_identity(engine, tiny_oracle, qid):
     query = QUERIES[qid]
     expected = oracle_search(tiny_oracle, query, k=10)
     got = engine.search_local(query, k=10)
@@ -354,7 +369,24 @@ def test_pin_hot_identity_and_refresh(spark, tiny_index):
 def test_concurrent_queries_keep_their_options(spark, tiny_index, monkeypatch):
     """Query options are per call: a boosted search on another thread, run
     while this -n query is held inside _match_frames on the same engine,
-    must not change its rows."""
+    must not change its rows.  Budget 0: both run their Spark plans."""
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    _check_concurrent_options(spark, tiny_index, monkeypatch, "_filtered_docs")
+
+
+def test_concurrent_driver_queries_keep_their_options(
+    spark, tiny_index, monkeypatch
+):
+    """The driver-lane twin: thread A's -n query is held inside its pruned
+    postings read while the boosted search runs on the driver lane too."""
+    j0 = int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+    _check_concurrent_options(spark, tiny_index, monkeypatch, "_pruned")
+    assert int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId()) == j0
+
+
+def _check_concurrent_options(spark, tiny_index, monkeypatch, hold_in):
     import threading
 
     from probe_spark.engine import SearchEngine
@@ -365,13 +397,13 @@ def test_concurrent_queries_keep_their_options(spark, tiny_index, monkeypatch):
     serial = eng.search_local(q, k=10, exclude_filenames=True)
     entered, release = threading.Event(), threading.Event()
     out: dict = {}
-    filtered_docs = eng._filtered_docs
+    inner = getattr(eng, hold_in)
 
-    def held(plan):  # holds thread A only
+    def held(*args):  # holds thread A only
         if threading.current_thread() is a:
             entered.set()
             release.wait(timeout=120)
-        return filtered_docs(plan)
+        return inner(*args)
 
     def run_a():
         try:
@@ -379,7 +411,7 @@ def test_concurrent_queries_keep_their_options(spark, tiny_index, monkeypatch):
         except Exception as e:  # surfaced by the assert below
             out["error"] = e
 
-    monkeypatch.setattr(eng, "_filtered_docs", held)
+    monkeypatch.setattr(eng, hold_in, held)
     a = threading.Thread(target=run_a)
     a.start()
     try:
