@@ -9,8 +9,9 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      pyarrow reads only the postings row groups whose cached footer
      min/max on ``term`` cover a query term; field filters read doc_id,
      lang and url of the candidate docs the same way; rows pivot into tf
-     lanes and score with lanes.score_wide, the batch scorer step 4's
-     pandas UDF runs; top-k is cut by (score desc, doc_id asc).  search()
+     lanes and score with lanes.eval_and_score on its numpy backend, the
+     AST walk step 4 runs on Columns; top-k is cut by (score desc, doc_id
+     asc).  search()
      hydrates the k urls likewise and returns a local relation.  Over the
      budget, at budget 0, or when a footer lacks a needed column, steps
      1-6 run unchanged.  Opening an engine runs no Spark job either: the
@@ -33,12 +34,12 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      above the cutoff, shorter than 3 bytes, or an index without the lane
      -- is verified by the plain containment scan.  The reference pays a
      full scan on EVERY query.
-  4. boolean evaluation + expression scoring per doc: one shuffle
-     (groupBy doc_id), then either
-       - pure-Column fast path for disjunctive bags (no required/excluded/
-         exact/multi-keyword terms): whole-stage-codegen BM25 sum, or
-       - an Arrow-vectorized pandas UDF hosting the SAME oracle scorer
-         (score_expr + evaluate) for full boolean semantics
+  4. boolean evaluation + expression scoring per doc: one Column plan, no
+     UDF.  A conditional aggregation (groupBy doc_id, the one shuffle;
+     skipped when a single term is scored) pivots the rows into per-term
+     tf lanes, and lanes.eval_and_score's Column backend emits the AST's
+     evaluate + score_expr as one whole-stage-codegen expression -- the
+     same op sequence the driver lane runs over numpy arrays
   5. top-k: orderBy(score desc, doc_id asc).limit(k) -- Spark's
      TakeOrderedAndProject turns this into a per-partition top-k + driver
      merge, no global sort
@@ -59,6 +60,7 @@ from pyspark.sql import functions as F
 from probe_spark import elastic, oracle
 from probe_spark.config import DEFAULT_BM25, BM25Params
 from probe_spark.elastic import QueryPlan, Term, walk_terms
+from probe_spark.lanes import COLUMNS, eval_and_score, score_rows, tf_part
 from probe_spark.trigram import (
     TRI_DIRECT_FLOOR,
     TRI_DIRECT_FRAC,
@@ -86,41 +88,6 @@ def _term_in(col: str, values) -> "F.Column":
     return F.expr("%s IN (%s)" % (col, quoted))
 
 
-def _is_disjunctive_bag(plan: QueryPlan) -> bool:
-    """True when the query is a pure OR-bag of optional non-exact terms:
-    score == sum of per-term BM25 and match == any term present.  This is
-    the whole-stage-codegen fast path (no Python in the hot loop)."""
-    if plan.ast is None or plan.has_required_anywhere or plan.excluded_terms:
-        return False
-    all_kws: list[str] = []
-    for t in walk_terms(plan.ast):
-        if t.exact or t.excluded or t.required:
-            return False
-        # multi-keyword terms (compound splits, e.g. "deadline" ->
-        # dead+line) sum INSIDE the Term first, then node totals add --
-        # the flat keyword sum here is the same value but a different f64
-        # association (observed flipping the last ulp at 100k docs), so
-        # those route to the lane scorer which mirrors the tree exactly
-        if len(t.lowercase_keywords) > 1:
-            return False
-        all_kws.extend(t.lowercase_keywords)
-    # a keyword repeated across Term nodes contributes once per node to the
-    # expression score (e.g. "repository OR repositori" where the exception
-    # dual-emit puts "repositori" in both terms) -- the flat per-term sum
-    # would undercount, so bail to the general scorer
-    if len(all_kws) != len(set(all_kws)):
-        return False
-
-    def only_or(e) -> bool:
-        if isinstance(e, Term):
-            return True
-        if isinstance(e, elastic.Or):
-            return only_or(e.left) and only_or(e.right)
-        return False
-
-    return only_or(plan.ast)
-
-
 def _bag_plus_exclusions(plan: QueryPlan) -> bool:
     """True when the query is a pure OR-bag of optional single-keyword
     terms AND-combined with purely-excluded terms -- probe's dominant
@@ -128,8 +95,9 @@ def _bag_plus_exclusions(plan: QueryPlan) -> bool:
     keyword present) AND (no excluded term present), and kept docs get an
     exact 0.0 contribution from every excluded term, so the score is the
     same f64 sum the lane scorer produces -- letting the engine score
-    positives on the codegen disjunctive path and apply exclusions as
-    one anti-join instead of pivoting every term into lanes."""
+    positives straight off the postings and apply exclusions as one
+    anti-join instead of merging the excluded terms' rescue rows into
+    the pivot."""
     if (
         plan.ast is None
         or plan.has_required_anywhere
@@ -403,6 +371,46 @@ def read_footers(table) -> list | None:
         return None
 
 
+def spark_schema(table, footers):
+    """The schema ``spark.read.parquet(table)`` infers, built from the
+    cached ``footers`` (read_footers of ``table``) with no Spark job.  Data
+    columns come from the first file, as Spark reads them: the row schema
+    a Spark writer stored in the footer, else the converted Arrow schema.
+    Each ``key=value`` directory level appends a partition column, typed
+    as Spark's inference types the index's partition values (bucket
+    numbers and ``stream_*`` delta ids): int when every value is digits,
+    else string.  None (the
+    caller lets Spark infer) without footers or on a type that does not
+    convert."""
+    import json
+
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import IntegerType, StringType, StructType
+
+    if not footers:
+        return None
+    md = footers[0][1]
+    row = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    try:
+        schema = (
+            StructType.fromJson(json.loads(row))
+            if row
+            else from_arrow_schema(md.schema.to_arrow_schema())
+        )
+    except (TypeError, ValueError):
+        return None
+    parts: dict[str, list[str]] = {}
+    for path, _ in footers:
+        for d in Path(path).relative_to(table).parts[:-1]:
+            key, eq, value = d.partition("=")
+            if eq:
+                parts.setdefault(key, []).append(value)
+    for key, values in parts.items():
+        digits = all(v.isdigit() for v in values)
+        schema = schema.add(key, IntegerType() if digits else StringType())
+    return schema
+
+
 def pruned_read(footers, key: str, values, columns: list[str]):
     """The rows whose ``key`` is in ``values``, as one Arrow table of
     ``columns``, read with pyarrow from only the row groups whose footer
@@ -496,11 +504,13 @@ def _empty_matches(hits: DataFrame) -> DataFrame:
 
 class _SparkReader:
     """An engine attribute holding the Spark reader of one index table,
-    created on first use: ``spark.read.parquet`` lists files and infers
-    the schema with a Spark job, which queries the driver lane serves never
-    need.  The table path comes from ``engine._reader_paths`` (None: the
-    table is absent or disabled, and the attribute reads None); assigning
-    the attribute replaces the reader until the next _reopen."""
+    created on first use, which queries the driver lane serves never
+    need.  The reader gets its schema from the cached footers
+    (spark_schema), so creating it runs no Spark job; Spark infers it, at
+    one job, only when the footers cannot say.  The table path comes from
+    ``engine._reader_paths`` (None: the table is absent or disabled, and
+    the attribute reads None); assigning the attribute replaces the
+    reader until the next _reopen."""
 
     def __set_name__(self, owner, name: str) -> None:
         self.name = name
@@ -511,9 +521,14 @@ class _SparkReader:
         readers = eng._readers
         if self.name not in readers:
             path = eng._reader_paths.get(self.name)
-            readers[self.name] = (
-                None if path is None else eng.spark.read.parquet(str(path))
-            )
+            if path is None:
+                readers[self.name] = None
+            else:
+                schema = spark_schema(path, eng._footers(str(path)))
+                reader = eng.spark.read
+                if schema is not None:
+                    reader = reader.schema(schema)
+                readers[self.name] = reader.parquet(str(path))
         return readers[self.name]
 
     def __set__(self, eng, value) -> None:
@@ -1369,13 +1384,11 @@ class SearchEngine:
         has a rescue term, a table's footers lack a needed column, or a
         read exceeds the driver budget (pruned_read).  Postings come from
         the row groups whose footer term range covers a query term; field
-        filters read doc_id/lang/url of the candidate docs; the batch
-        scorer is _score_general's (lanes.score_wide), so the rows are the
-        Spark plan's."""
+        filters read doc_id/lang/url of the candidate docs; the scorer is
+        lanes.eval_and_score, on the numpy backend where the Spark plan
+        runs its Column backend, so the rows are the Spark plan's."""
         import numpy as np
         import pyarrow.compute as pc
-
-        from probe_spark.lanes import score_wide, wide_frame
 
         if plan.is_universal_query or oracle.rescue_terms(plan):
             return None
@@ -1399,18 +1412,15 @@ class SearchEngine:
         idfs = {
             t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices
         }
-        scored = score_wide(
-            wide_frame(rows, plan.terms),
+        ids, sc = score_rows(
+            rows,
             plan.ast,
             dict(plan.term_indices),
-            plan.terms,
             self.avgdl,
             idfs,
             self.params,
             boost_coverage,
         )
-        ids = scored["doc_id"].to_numpy()
-        sc = scored["score"].to_numpy()
         return [(int(ids[i]), float(sc[i])) for i in np.lexsort((ids, -sc))[:k]]
 
     def _driver_filter(self, plan: QueryPlan, ids):
@@ -1945,7 +1955,7 @@ class SearchEngine:
         Here eligible queries become DATA instead of plans: a broadcast
         (query_id, term, idf, pos) table is joined once against the
         term-pruned postings, scored per (query_id, doc_id) with the
-        SAME sorted-position ordered f64 sum as _score_disjunctive, and
+        SAME keyword-order f64 sum as the lane scorer's left-deep AST, and
         top-k'd with one window -- one postings scan and one shuffle
         REGARDLESS of batch size, the relevance-labeling /
         offline-eval-sweep plan a 100-TB corpus needs.
@@ -1972,11 +1982,10 @@ class SearchEngine:
         the branch-union plan and the outputs are unioned.  Rows are
         value-identical to search_batch -- f64-exact: a one-element
         ordered sum is 0.0 + x == x for the single-term case and the
-        multi-term association mirrors _score_disjunctive -- pinned by
+        multi-term association mirrors the lane scorer's -- pinned by
         the fused-vs-branch identity test.  boost_coverage batches
-        delegate wholesale: the single-term branch applies the boost as
-        a Python-computed literal (oracle.coverage_boost) whose pow can
-        differ from the JVM's in the last ulp."""
+        delegate wholesale to search_batch, whose lane scorer looks the
+        boost up in lanes.boost_table."""
         if not queries:
             raise ValueError("search_batch_fused: empty query set")
         if boost_coverage:
@@ -2140,16 +2149,11 @@ class SearchEngine:
                             F.lit(1).alias("src"),
                         )
                     )
-            p_ = self.params
-            tf = F.col("tf").cast("double")
-            tf_part = (tf * F.lit(p_.k1 + 1.0)) / (
-                tf
-                + F.lit(p_.k1)
-                * (
-                    F.lit(1.0 - p_.b)
-                    + F.lit(p_.b)
-                    * (F.col("doc_len").cast("double") / F.lit(self.avgdl))
-                )
+            tfp = tf_part(
+                F.col("tf").cast("double"),
+                F.col("doc_len").cast("double"),
+                self.avgdl,
+                self.params,
             )
             joined = post.join(F.broadcast(qt), "term").filter(
                 # containment-marker rows (src=1) pair only with marker qt
@@ -2170,7 +2174,7 @@ class SearchEngine:
                     # prefix would sum identically -- 0.0 + 0.0 == 0.0 --
                     # but bloats every dropped doc's array for nothing)
                     F.when(
-                        F.col("excl") == 0, F.col("idf") * tf_part
+                        F.col("excl") == 0, F.col("idf") * tfp
                     ).alias("term_score"),
                 )
                 .groupBy("query_id", "doc_id")
@@ -2320,10 +2324,9 @@ class SearchEngine:
             cand = cand.join(fdocs.select("doc_id"), "doc_id", "leftsemi")
         idfs = {t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices}
 
-        if _is_disjunctive_bag(plan):
-            scored = self._score_disjunctive(cand, plan, idfs, boost_coverage)
-        else:
-            scored = self._score_general(cand, plan, idfs, boost_coverage)
+        scored = self._score_lanes(
+            cand, plan, list(plan.term_indices), idfs, boost_coverage
+        )
         return scored, cand, idfs, False
 
     def _match_bag_excluded(
@@ -2334,8 +2337,9 @@ class SearchEngine:
         exclude_filenames: bool,
     ) -> tuple[DataFrame, DataFrame, dict[str, float], bool]:
         """Fast path for "keywords -noise" queries (_bag_plus_exclusions):
-        positives scored on the codegen disjunctive path straight off the
-        postings (no rescue union, no groupBy merge), exclusions applied
+        positives scored by the lane scorer straight off the postings (no
+        rescue union, no groupBy merge; excluded terms get no lane, which
+        the scorer treats as absent), exclusions applied
         as ONE anti-join against the excluded terms' match rows (token
         postings ∪ containment, usually a memoized literal frame after
         the needle's first sighting).  Kept docs receive exactly 0.0 from
@@ -2360,7 +2364,9 @@ class SearchEngine:
             pos_cand = pos_cand.join(
                 fdocs.select("doc_id"), "doc_id", "leftsemi"
             )
-        scored = self._score_disjunctive(pos_cand, plan, idfs, boost_coverage)
+        scored = self._score_lanes(
+            pos_cand, plan, pos_terms, idfs, boost_coverage
+        )
         # drop set = token postings ∪ containment matches of the excluded
         # terms, doc_id only -- no doc_len join, no (term, doc_id) merge:
         # the anti-join neither needs tf nor cares about duplicate rows
@@ -2396,22 +2402,17 @@ class SearchEngine:
         k, not the corpus.  When the engine applies a coverage boost (R7)
         the per-term entries are rescaled by score/sum(raw contributions)
         so the breakdown always sums to the REPORTED score."""
-        p = self.params
-        tf = F.col("tf").cast("double")
-        tf_part = (tf * F.lit(p.k1 + 1.0)) / (
-            tf
-            + F.lit(p.k1)
-            * (
-                F.lit(1.0 - p.b)
-                + F.lit(p.b)
-                * (F.col("doc_len").cast("double") / F.lit(self.avgdl))
-            )
+        tfp = tf_part(
+            F.col("tf").cast("double"),
+            F.col("doc_len").cast("double"),
+            self.avgdl,
+            self.params,
         )
         if idfs:
             idf_map = F.create_map(
                 *[x for t, v in sorted(idfs.items()) for x in (F.lit(t), F.lit(v))]
             )
-            contrib = F.coalesce(idf_map[F.col("term")], F.lit(0.0)) * tf_part
+            contrib = F.coalesce(idf_map[F.col("term")], F.lit(0.0)) * tfp
         else:  # empty literal map would be void-typed and fail analysis
             contrib = F.lit(0.0)
         mk = (
@@ -2450,187 +2451,51 @@ class SearchEngine:
             ),
         )
 
-    def _score_disjunctive(
+    def _score_lanes(
         self,
         cand: DataFrame,
         plan: QueryPlan,
+        terms: list[str],
         idfs: dict[str, float],
         boost_coverage: bool,
     ) -> DataFrame:
-        """Pure-Column BM25 sum, whole-stage codegen.
-
-        Doubles are summed in the SAME order as the oracle (AST keyword
-        order) via sort-by-position + sequential F.aggregate -- a plain
-        F.sum adds in shuffle-arrival order, which is nondeterministic in
-        the last ulp and can flip near-tied ranks between runs."""
-        p = self.params
-        kw_pos = {
-            kw: i
-            for i, kw in enumerate(
-                kw
-                # excluded terms contribute no rows here (pure bags have
-                # none; the bag+exclusions path feeds positives only) --
-                # keeping them out preserves the single-positive-term
-                # no-shuffle branch and the positives' relative sum order
-                for t in walk_terms(plan.ast)
-                if not t.excluded
-                for kw in t.lowercase_keywords
+        """(doc_id, score) of the docs the query keeps: lanes.eval_and_score
+        on its Column backend, one Catalyst expression with no Python node.
+        Each of ``terms`` becomes a tf lane column (0 where the doc has no
+        row); a query term outside ``terms`` has no lane and counts as
+        absent.  Rank identity vs the scalar oracle (evaluate +
+        score_expr) is pinned bit-for-bit by tests/test_lanes.py and the
+        q01-q25 suite."""
+        if len(terms) == 1:
+            # one row per doc already: postings are unique per (term,
+            # doc_id) and the rescue merge groups by (term, doc_id) -- no
+            # pivot, no shuffle, straight scan -> score -> top-k
+            wide = cand.select("doc_id", "doc_len", F.col("tf").alias("_tf0"))
+        else:
+            # ONE conditional aggregation pivots the candidate rows into
+            # per-term tf columns (the only shuffle)
+            wide = cand.groupBy("doc_id").agg(
+                F.first("doc_len").alias("doc_len"),
+                *[
+                    F.coalesce(
+                        F.max(F.when(F.col("term") == t, F.col("tf"))),
+                        F.lit(0),
+                    ).alias(f"_tf{i}")
+                    for i, t in enumerate(terms)
+                ],
             )
-        }
-        tf = F.col("tf").cast("double")
-        tf_part = (tf * F.lit(p.k1 + 1.0)) / (
-            tf
-            + F.lit(p.k1)
-            * (
-                F.lit(1.0 - p.b)
-                + F.lit(p.b) * (F.col("doc_len").cast("double") / F.lit(self.avgdl))
-            )
+        keep, score = eval_and_score(
+            plan.ast,
+            dict(plan.term_indices),
+            {t: F.col(f"_tf{i}") for i, t in enumerate(terms)},
+            F.col("doc_len"),
+            self.avgdl,
+            idfs,
+            self.params,
+            boost_terms=len(plan.term_indices) if boost_coverage else 0,
+            ops=COLUMNS,
         )
-        if len(kw_pos) == 1:
-            # single-term query: one posting row per doc, nothing to sum --
-            # no shuffle at all, straight scan -> score -> top-k
-            term = next(iter(kw_pos))
-            scored = cand.select(
-                "doc_id",
-                (F.lit(idfs.get(term, 0.0)) * tf_part).alias("score"),
-            ).filter(F.col("score") > 0.0)
-            if boost_coverage:
-                # exactly one positive term matched; the denominator is ALL
-                # query terms (incl. excluded -- result_ranking.rs:8-18 via
-                # oracle.coverage_boost), so cov < 1 when exclusions ride
-                # along with the single positive
-                scored = scored.withColumn(
-                    "score",
-                    F.col("score")
-                    * F.lit(
-                        oracle.coverage_boost(1, len(plan.term_indices))
-                    ),
-                )
-            return scored
-        # Multi-term bag: ONE conditional aggregation pivots the candidate
-        # rows into per-keyword (tf, doc_len) columns, and the BM25 sum is
-        # plain column math over them -- no collect_list/array_sort/lambda
-        # F.aggregate (higher-order functions are interpreted, and their
-        # plans cost Catalyst 2-3x the analysis/optimization time of a
-        # conditional agg; guide SS1.2 step 2 / SS4.1 "prefer built-ins").
-        # f64 identity with the old array fold: parts are added in the same
-        # kw_pos order starting from the first term, unmatched terms
-        # contribute an exact 0.0, and x + 0.0 == x for the non-negative
-        # BM25 parts, so every doc's sum sees the identical sequence of
-        # f64 additions (pinned by the q01-q25 rank-identity suite).
-        ordered = sorted(kw_pos, key=kw_pos.get)
-        wide = cand.groupBy("doc_id").agg(
-            F.first("doc_len").alias("doc_len"),
-            *[
-                F.max(F.when(F.col("term") == t, F.col("tf"))).alias(
-                    f"_tf{i}"
-                )
-                for i, t in enumerate(ordered)
-            ],
-        )
-
-        def _part(i: int, t: str):
-            tfd = F.col(f"_tf{i}").cast("double")
-            tfp_i = (tfd * F.lit(p.k1 + 1.0)) / (
-                tfd
-                + F.lit(p.k1)
-                * (
-                    F.lit(1.0 - p.b)
-                    + F.lit(p.b)
-                    * (F.col("doc_len").cast("double") / F.lit(self.avgdl))
-                )
-            )
-            return F.when(
-                F.col(f"_tf{i}").isNotNull(),
-                F.lit(idfs.get(t, 0.0)) * tfp_i,
-            ).otherwise(F.lit(0.0))
-
-        score_col = _part(0, ordered[0])
-        matched_col = F.col("_tf0").isNotNull().cast("int")
-        for i, t in enumerate(ordered[1:], start=1):
-            score_col = score_col + _part(i, t)
-            matched_col = matched_col + F.col(f"_tf{i}").isNotNull().cast(
-                "int"
-            )
-        scored = wide.select(
-            "doc_id",
-            score_col.alias("score"),
-            matched_col.alias("_matched"),
-        ).filter(F.col("score") > 0.0)
-        if boost_coverage:
-            n_terms = len(plan.term_indices)
-            cov = F.least(
-                F.col("_matched").cast("double") / F.lit(float(n_terms)),
-                F.lit(1.0),
-            )
-            scored = scored.withColumn(
-                "score",
-                F.col("score")
-                * (
-                    F.lit(1.0)
-                    + F.pow(cov, F.lit(oracle.COVERAGE_BOOST_EXP))
-                    * F.lit(oracle.COVERAGE_BOOST_MULT)
-                ),
-            )
-        return scored.drop("_matched")
-
-    def _score_general(
-        self,
-        cand: DataFrame,
-        plan: QueryPlan,
-        idfs: dict[str, float],
-        boost_coverage: bool,
-    ) -> DataFrame:
-        """Vectorized boolean scorer: pivot candidate rows into per-term tf
-        columns with one whole-stage-codegen conditional agg (the only
-        shuffle), then evaluate + score the AST as numpy lane ops over the
-        Arrow batch (lanes.score_wide, the driver lane's batch scorer too)
-        -- no per-doc Python.
-        Rank identity vs the scalar oracle (evaluate + score_expr) is pinned
-        bit-for-bit by tests/test_lanes.py and the q01-q25 suite."""
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        ast = plan.ast
-        term_indices = dict(plan.term_indices)
-        term_list = plan.terms  # index order; one tf column per query term
-        avgdl = self.avgdl
-        params = self.params
-
-        out_schema = StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("score", DoubleType()),
-            ]
-        )
-
-        aggs = [F.first("doc_len").alias("doc_len")]
-        for i, t in enumerate(term_list):
-            aggs.append(
-                F.max(F.when(F.col("term") == t, F.col("tf"))).alias(f"_tf{i}")
-            )
-        wide = cand.groupBy("doc_id").agg(*aggs)
-
-        def score_batch(iterator):
-            from probe_spark.lanes import score_wide
-
-            for pdf in iterator:
-                yield score_wide(
-                    pdf,
-                    ast,
-                    term_indices,
-                    term_list,
-                    avgdl,
-                    idfs,
-                    params,
-                    boost_coverage,
-                )
-
-        return wide.mapInPandas(score_batch, out_schema)
+        return wide.filter(keep).select("doc_id", score.alias("score"))
 
     def search_local(
         self,

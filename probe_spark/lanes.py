@@ -1,16 +1,24 @@
-"""Vectorized (numpy-lane) boolean evaluation + BM25 expression scoring.
+"""Boolean evaluation + BM25 expression scoring over per-keyword tf lanes,
+with two backends.
 
-Compiles the elastic AST into numpy array operations over per-keyword tf
-lanes -- the Arrow-side replacement for calling ``elastic.evaluate`` +
-``oracle.score_expr`` doc-by-doc inside executor Python (the scalar
-reference-parity implementations remain the oracle; the differential suite
-in tests/test_lanes.py pins bit-for-bit equality).
+``eval_and_score`` compiles the elastic AST into one sequence of lane ops
+-- masks (``&``, ``|``, ``~``, ``>``), IEEE adds/multiplies/divides,
+``where``, a constant and a cast to f64 -- and emits it over either
+backend:
+  * ``NumpyOps``: lanes are numpy arrays, one slot per candidate doc.  The
+    driver lane (``score_rows``) and WAND's in-segment scorers run it;
+  * ``COLUMNS``: lanes are Spark Columns of a one-row-per-doc frame.  The
+    Spark plans' scorer (engine._score_lanes) runs it as one Catalyst
+    expression, so no Python node enters a serving plan.
+The scalar reference-parity implementations (``elastic.evaluate`` +
+``oracle.score_expr``) remain the oracle; the differential suite in
+tests/test_lanes.py pins bit-for-bit equality of both backends with it.
 
 Semantics mirrored exactly:
-  * evaluate (/root/reference/src/search/elastic_query.rs:363-446):
+  * evaluate (elastic_query.rs:363-446):
     required-first rule, optional any-keyword rule, excluded none-present
     rule;
-  * score_expr_bm25_optimized (/root/reference/src/ranking.rs:228-276):
+  * score_expr_bm25_optimized (ranking.rs:228-276):
     Term = sum of keyword scores in keyword order; excluded drops the doc
     when its total > 0 (else contributes 0); required drops when total == 0;
     And sums both sides or drops; Or sums the matching sides.
@@ -20,43 +28,116 @@ f64-identity argument (vs the scalar oracle): the scalar Term loop adds
 tf_part, 0.0)``.  Adding +0.0 leaves any non-negative IEEE double unchanged,
 accumulation order (keyword order within a Term, AST order across nodes) is
 identical, and every individual multiply/divide is the same IEEE-754 double
-operation -- so both hosts produce the same bits.
+operation -- so every host produces the same bits.  Catalyst does not
+reassociate floating-point arithmetic, so the Column backend keeps the
+order too.  The coverage boost is looked up, never recomputed: every host
+indexes ``boost_table`` (the scalar ``oracle.coverage_boost`` values) by a
+doc's matched-term count, because pow differs across numpy, the JVM and
+Python in the last ulp.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark.sql import functions as F
 
+from probe_spark import oracle
 from probe_spark.config import BM25Params
-from probe_spark.elastic import And, Expr, Term, has_required_term
+from probe_spark.elastic import (
+    And,
+    Expr,
+    Term,
+    has_required_term,
+    is_only_excluded_terms,
+)
+
+
+class NumpyOps:
+    """numpy backend: lanes are arrays over ``n`` docs."""
+
+    def __init__(self, n: int) -> None:
+        self.n = n
+
+    def const(self, v):
+        return np.full(self.n, v)
+
+    where = staticmethod(np.where)
+
+    @staticmethod
+    def f64(x):
+        return np.asarray(x, dtype=np.float64)
+
+    @staticmethod
+    def lookup(table: list[float], i):
+        return np.asarray(table)[i]
+
+
+class ColumnOps:
+    """Spark Column backend: lanes are Columns of a one-row-per-doc frame."""
+
+    const = staticmethod(F.lit)
+
+    @staticmethod
+    def where(cond, a, b):
+        return F.when(cond, a).otherwise(b)
+
+    @staticmethod
+    def f64(x):
+        return x.cast("double")
+
+    @staticmethod
+    def lookup(table: list[float], i):
+        return F.element_at(F.array(*[F.lit(v) for v in table]), i + 1)
+
+
+COLUMNS = ColumnOps()
+
+
+def tf_part(f, dl, avgdl: float, params: BM25Params):
+    """BM25 tf part (ranking.rs:203-208) of f64 ``f`` at f64 doc length
+    ``dl``: numpy arrays or Columns alike.  The one association every host
+    uses; the caller decides ``avgdl > 0`` (oracle.bm25_tf_part's guard)."""
+    return (f * (params.k1 + 1.0)) / (
+        f + params.k1 * ((1.0 - params.b) + params.b * (dl / avgdl))
+    )
+
+
+def boost_table(n_terms: int) -> list[float]:
+    """oracle.coverage_boost(m, n_terms) for m = 0..n_terms: the R7 boost
+    every host indexes by a doc's matched-term count."""
+    return [oracle.coverage_boost(m, n_terms) for m in range(n_terms + 1)]
 
 
 def eval_and_score(
     ast: Expr,
     term_indices: dict[str, int],
-    tf_lanes: dict[str, np.ndarray],
-    dl: np.ndarray,
+    tf_lanes: dict,
+    dl,
     avgdl: float,
     idfs: dict[str, float],
     params: BM25Params,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Evaluate + score ``n`` candidate docs at once.
+    *,
+    boost_terms: int = 0,
+    ops=None,
+):
+    """Evaluate + score every doc of the lanes at once.
 
-    ``tf_lanes``: keyword -> int lane of per-doc tf (0 = absent; keywords
-    with no postings may be missing entirely).  ``dl``: per-doc lengths.
-    Returns ``(keep: bool[n], score: float64[n])`` -- ``keep`` is True where
-    the scalar pipeline would emit the doc, ``score`` is its score there
-    (undefined where keep is False).
-    """
-    n = len(dl)
-    zeros_f = np.zeros(n, dtype=np.float64)
-    zeros_b = np.zeros(n, dtype=bool)
-    ones_b = np.ones(n, dtype=bool)
+    ``tf_lanes``: keyword -> integer lane of per-doc tf (0 = absent;
+    keywords with no postings may be missing entirely).  ``dl``: per-doc
+    lengths.  ``boost_terms`` > 0 multiplies the score by the coverage
+    boost over that many query terms (matched = present lanes).  ``ops``
+    is the backend, NumpyOps(len(dl)) by default.  Returns ``(keep,
+    score)`` -- ``keep`` is True where the scalar pipeline would emit the
+    doc, ``score`` is its score there (undefined where keep is False)."""
+    if ops is None:
+        ops = NumpyOps(len(dl))
+    zeros_f = ops.const(0.0)
+    zeros_b = ops.const(False)
+    ones_b = ops.const(True)
 
-    def present(kw: str) -> np.ndarray:
+    def present(kw: str):
         lane = tf_lanes.get(kw)
         return zeros_b if lane is None else lane > 0
 
@@ -65,8 +146,6 @@ def eval_and_score(
     # matches -- UNLESS the query is only-excluded terms, where an empty
     # match is exactly what qualifies (callers normally route only-excluded
     # queries through their fast path, but stay faithful regardless)
-    from probe_spark.elastic import is_only_excluded_terms
-
     if is_only_excluded_terms(ast):
         nonempty = ones_b
     else:
@@ -85,7 +164,7 @@ def eval_and_score(
                 for kw in t.lowercase_keywords:
                     req_ok = req_ok & present(kw)
 
-    def eval_inner(expr: Expr) -> np.ndarray:
+    def eval_inner(expr: Expr):
         if isinstance(expr, Term):
             kws = expr.lowercase_keywords
             if not kws:
@@ -115,30 +194,25 @@ def eval_and_score(
     eval_mask = nonempty & req_ok & eval_inner(ast)
 
     # --- score_expr (ranking.rs:228-276) -----------------------------------
-    dlf = np.asarray(dl, dtype=np.float64)
-    if avgdl > 0.0:
-        # denominator tail of tf_part, shared by every keyword of the doc
-        dl_norm = params.k1 * (1.0 - params.b + params.b * (dlf / avgdl))
-    else:
-        dl_norm = None  # all-empty corpus: tf_part is 0 (oracle.bm25_tf_part)
+    dlf = ops.f64(dl)
 
-    def term_total(expr: Term) -> np.ndarray:
+    def term_total(expr: Term):
         total = zeros_f
         for kw in expr.lowercase_keywords:
             lane = tf_lanes.get(kw)
             if lane is None:
                 continue  # f == 0 everywhere: scalar adds nothing
-            f = lane.astype(np.float64)
-            if dl_norm is None:
-                tfp = zeros_f
-            else:
-                tfp = (f * (params.k1 + 1.0)) / (f + dl_norm)
-            total = total + np.where(
-                lane > 0, idfs.get(kw, 0.0) * tfp, 0.0
+            # all-empty corpus (avgdl 0): tf_part is 0 (oracle.bm25_tf_part),
+            # decided here so no zero divisor reaches a backend
+            tfp = (
+                tf_part(ops.f64(lane), dlf, avgdl, params)
+                if avgdl > 0.0
+                else zeros_f
             )
+            total = total + ops.where(lane > 0, idfs.get(kw, 0.0) * tfp, 0.0)
         return total
 
-    def score(expr: Expr) -> tuple[np.ndarray, np.ndarray]:
+    def score(expr: Expr):
         if isinstance(expr, Term):
             total = term_total(expr)
             if expr.excluded:
@@ -151,86 +225,54 @@ def eval_and_score(
         if isinstance(expr, And):
             return lv & rv, ls + rs
         # Or: (l or 0.0) + (r or 0.0); invalid sides contribute 0
-        return lv | rv, np.where(lv, ls, 0.0) + np.where(rv, rs, 0.0)
+        return lv | rv, ops.where(lv, ls, 0.0) + ops.where(rv, rs, 0.0)
 
     score_valid, scores = score(ast)
+    if boost_terms:
+        matched = ops.const(0)
+        for lane in tf_lanes.values():
+            matched = matched + ops.where(lane > 0, 1, 0)
+        scores = scores * ops.lookup(boost_table(boost_terms), matched)
     return eval_mask & score_valid, scores
 
 
-def coverage_boosted(
-    scores: np.ndarray, tf_lanes, n_terms: int
-) -> np.ndarray:
-    """``scores`` times the R7 coverage boost (oracle.coverage_boost):
-    matched = how many of ``tf_lanes`` are present per doc, over the
-    query's ``n_terms`` terms."""
-    from probe_spark.oracle import COVERAGE_BOOST_EXP, COVERAGE_BOOST_MULT
-
-    matched = np.zeros(len(scores), dtype=np.int64)
-    for lane in tf_lanes:
-        matched += lane > 0
-    cov = np.minimum(matched / float(n_terms), 1.0) if n_terms else 0.0
-    return scores * (1.0 + cov**COVERAGE_BOOST_EXP * COVERAGE_BOOST_MULT)
-
-
-def score_wide(
-    pdf: pd.DataFrame,
+def score_rows(
+    rows: pa.Table,
     ast: Expr,
     term_indices: dict[str, int],
-    term_list: list[str],
     avgdl: float,
     idfs: dict[str, float],
     params: BM25Params,
     boost_coverage: bool,
-) -> pd.DataFrame:
-    """(doc_id, score) of the docs of one pivoted batch that the query
-    keeps.  ``pdf`` holds doc_id, doc_len and one nullable tf column
-    ``_tf{i}`` per term of ``term_list`` (null = absent): the rows of
-    engine._score_general's conditional aggregation, or of wide_frame on
-    the driver.  The one batch scorer of both hosts: lanes, eval_and_score,
-    the coverage boost and the keep mask."""
-    if not len(pdf):
-        return pd.DataFrame({"doc_id": [], "score": []}).astype(
-            {"doc_id": "int64", "score": "float64"}
-        )
-    tf_lanes: dict[str, np.ndarray] = {}
-    for i, t in enumerate(term_list):
-        col = pdf[f"_tf{i}"]
-        if col.notna().any():
-            tf_lanes[t] = col.fillna(0).to_numpy(np.int64)
-    keep, scores = eval_and_score(
-        ast,
-        term_indices,
-        tf_lanes,
-        pdf["doc_len"].to_numpy(np.int64),
-        avgdl,
-        idfs,
-        params,
-    )
-    if boost_coverage:
-        scores = coverage_boosted(scores, tf_lanes.values(), len(term_indices))
-    return pd.DataFrame(
-        {"doc_id": pdf["doc_id"].to_numpy(np.int64)[keep], "score": scores[keep]}
-    )
-
-
-def wide_frame(rows: pa.Table, term_list: list[str]) -> pd.DataFrame:
-    """Pivot (term, doc_id, tf, doc_len) rows into score_wide's input: one
-    row per doc, doc_len, and per term the max tf of its rows (null when
-    the doc has none) -- the driver-side form of _score_general's
-    groupBy(doc_id) conditional aggregation."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, score) arrays of the docs the query keeps, from (term,
+    doc_id, tf, doc_len) rows: one lane slot per distinct doc, each term's
+    lane the max tf of its rows (0 where the doc has none; a term with no
+    row has no lane).  The driver lane's scorer."""
     ids, inv = np.unique(
         rows["doc_id"].to_numpy().astype(np.int64), return_inverse=True
     )
     dl = np.zeros(len(ids), dtype=np.int64)
     dl[inv] = rows["doc_len"].to_numpy()
-    tf = rows["tf"].to_numpy().astype(np.float64)
-    out = {"doc_id": ids, "doc_len": dl}
-    for i, t in enumerate(term_list):
+    tf = rows["tf"].to_numpy().astype(np.int64)
+    tf_lanes: dict[str, np.ndarray] = {}
+    for t in term_indices:
         m = pc.equal(rows["term"], t).to_numpy(zero_copy_only=False)
-        lane = np.full(len(ids), np.nan)
-        np.fmax.at(lane, inv[m], tf[m])
-        out[f"_tf{i}"] = lane
-    return pd.DataFrame(out)
+        if m.any():
+            lane = np.zeros(len(ids), dtype=np.int64)
+            np.maximum.at(lane, inv[m], tf[m])
+            tf_lanes[t] = lane
+    keep, scores = eval_and_score(
+        ast,
+        term_indices,
+        tf_lanes,
+        dl,
+        avgdl,
+        idfs,
+        params,
+        boost_terms=len(term_indices) if boost_coverage else 0,
+    )
+    return ids[keep], scores[keep]
 
 
 def _walk(expr: Expr):

@@ -310,10 +310,10 @@ def apply_filters(
     return keep
 
 
-# result_ranking.rs:12 constants (boost = 1 + cov^EXP * MULT) -- the
-# SINGLE source for every host of the formula (scalar below, the SQL
-# column form in engine._score_disjunctive, the numpy form in
-# lanes.coverage_boosted); change here, not in the hosts
+# result_ranking.rs:12 constants (boost = 1 + cov^EXP * MULT).  Only
+# coverage_boost below computes the formula: every other host looks its
+# values up in lanes.boost_table by matched count, because pow differs
+# across numpy, the JVM and Python in the last ulp
 COVERAGE_BOOST_EXP = 1.5
 COVERAGE_BOOST_MULT = 2.0
 

@@ -24,9 +24,9 @@ final exact sort.
 Two in-segment scorers:
   * disjunctive OR-bags: dense numpy accumulation (no Python per doc);
   * general boolean (required/And/Or, multi-keyword terms): candidates =
-    intersection of must-keyword postings, then the ORACLE's evaluate +
-    score_expr per candidate -- one implementation, two hosts, so rank
-    identity is structural.
+    intersection of must-keyword postings, then lanes.eval_and_score on
+    its numpy backend -- the scorer the flat engine runs on its Column
+    backend, so rank identity is structural.
 Exact/excluded (containment-rescue) terms and field filters fall back to
 the flat-postings engine (engine.py).
 
@@ -50,7 +50,8 @@ from pyspark.sql.types import (
 from probe_spark import elastic, oracle
 from probe_spark.compaction import SEG_BITS, SEG_SIZE
 from probe_spark.config import DEFAULT_BM25, BM25Params
-from probe_spark.engine import SearchEngine, _is_disjunctive_bag
+from probe_spark.engine import SearchEngine
+from probe_spark.lanes import boost_table, tf_part
 
 _SCORE_SCHEMA = StructType(
     [
@@ -114,6 +115,42 @@ def _must_keywords(plan) -> frozenset[str]:
         return must(e.left) & must(e.right)
 
     return frozenset(must(ast))
+
+
+def _is_disjunctive_bag(plan) -> bool:
+    """True when the query is a pure OR-bag of optional non-exact terms:
+    score == sum of per-term BM25 and match == any term present.  Such a
+    query is scored by the dense accumulation of _score_segs (with
+    intra-segment block skipping) instead of the boolean lane scorer."""
+    if plan.ast is None or plan.has_required_anywhere or plan.excluded_terms:
+        return False
+    all_kws: list[str] = []
+    for t in elastic.walk_terms(plan.ast):
+        if t.exact or t.excluded or t.required:
+            return False
+        # multi-keyword terms (compound splits, e.g. "deadline" ->
+        # dead+line) sum INSIDE the Term first, then node totals add --
+        # the flat keyword sum here is the same value but a different f64
+        # association (observed flipping the last ulp at 100k docs), so
+        # those route to the lane scorer which mirrors the tree exactly
+        if len(t.lowercase_keywords) > 1:
+            return False
+        all_kws.extend(t.lowercase_keywords)
+    # a keyword repeated across Term nodes contributes once per node to the
+    # expression score (e.g. "repository OR repositori" where the exception
+    # dual-emit puts "repositori" in both terms) -- the flat per-term sum
+    # would undercount, so bail to the lane scorer
+    if len(all_kws) != len(set(all_kws)):
+        return False
+
+    def only_or(e) -> bool:
+        if isinstance(e, elastic.Term):
+            return True
+        if isinstance(e, elastic.Or):
+            return only_or(e.left) and only_or(e.right)
+        return False
+
+    return only_or(plan.ast)
 
 
 class WandEngine:
@@ -220,18 +257,13 @@ class WandEngine:
         """tf_part at a block's most favorable point (max_tf, min_dl) --
         increasing in tf, decreasing in dl, so it dominates every doc in
         the block at CURRENT global stats."""
-        p = self.params
-        mtf = F.col("max_tf").cast("double")
         if self.avgdl <= 0:  # empty corpus
             return F.lit(0.0)
-        return (mtf * F.lit(p.k1 + 1.0)) / (
-            mtf
-            + F.lit(p.k1)
-            * (
-                F.lit(1.0 - p.b)
-                + F.lit(p.b)
-                * (F.col("min_dl").cast("double") / F.lit(self.avgdl))
-            )
+        return tf_part(
+            F.col("max_tf").cast("double"),
+            F.col("min_dl").cast("double"),
+            self.avgdl,
+            self.params,
         )
 
     def _seg_stats(self) -> DataFrame:
@@ -339,12 +371,11 @@ class WandEngine:
                 # accumulation loop below, evaluated at the block's
                 # (max_tf, min_dl) corner: tf_part is increasing in tf and
                 # decreasing in dl, so ub dominates every doc in the block
-                mtf = pdf["max_tf"].to_numpy(dtype=np.float64)
-                mdl = pdf["min_dl"].to_numpy(dtype=np.float64)
-                tfp = (mtf * (params.k1 + 1.0)) / (
-                    mtf
-                    + params.k1
-                    * (1.0 - params.b + params.b * (mdl / avgdl))
+                tfp = tf_part(
+                    pdf["max_tf"].to_numpy(dtype=np.float64),
+                    pdf["min_dl"].to_numpy(dtype=np.float64),
+                    avgdl,
+                    params,
                 )
                 ub = (
                     pdf["term"].map(idfs).fillna(0.0).to_numpy(np.float64)
@@ -378,21 +409,13 @@ class WandEngine:
                 d = decode_doc_block(docs)
                 t = varbyte_decode(tfs).astype(np.float64)
                 l = varbyte_decode(dls).astype(np.float64)
-                tp = (t * (params.k1 + 1.0)) / (
-                    t + params.k1 * (1.0 - params.b + params.b * (l / avgdl))
-                )
+                tp = tf_part(t, l, avgdl, params)
                 idx = (d - base).astype(np.int64)
                 acc[idx] += idf * tp
                 if boost:
                     nmatch[idx] += 1
             if boost and n_terms:
-                from probe_spark.oracle import (
-                    COVERAGE_BOOST_EXP,
-                    COVERAGE_BOOST_MULT,
-                )
-
-                cov = np.minimum(nmatch / float(n_terms), 1.0)
-                acc = acc * (1.0 + cov**COVERAGE_BOOST_EXP * COVERAGE_BOOST_MULT)
+                acc = acc * np.asarray(boost_table(n_terms))[nmatch]
             nz = np.flatnonzero(acc)
             if len(nz) == 0:
                 return pd.DataFrame({"doc_id": [], "score": []}).astype(
@@ -435,7 +458,7 @@ class WandEngine:
             import pandas as pd
 
             from probe_spark.codec import decode_doc_block, varbyte_decode
-            from probe_spark.lanes import coverage_boosted, eval_and_score
+            from probe_spark.lanes import eval_and_score
 
             empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
                 {"doc_id": "int64", "score": "float64"}
@@ -471,10 +494,15 @@ class WandEngine:
                 return empty
             sub = {t: lane[cand] for t, lane in tf_lane.items()}
             keep, scores = eval_and_score(
-                ast, term_indices, sub, dl_lane[cand], avgdl, idfs, params
+                ast,
+                term_indices,
+                sub,
+                dl_lane[cand],
+                avgdl,
+                idfs,
+                params,
+                boost_terms=n_terms if boost else 0,
             )
-            if boost and n_terms:
-                scores = coverage_boosted(scores, sub.values(), n_terms)
             ids = (cand[keep] + base).astype(np.int64)
             sc = scores[keep]
             if len(ids) == 0:

@@ -5,6 +5,7 @@ same pruned read bounds entry_queries._vec_by_id."""
 
 import random
 import shutil
+from pathlib import Path
 
 import pytest
 
@@ -165,6 +166,53 @@ def test_ingest_then_driver_query(spark, small_index, tmp_path):
     assert got != before and max(d for d, _ in got) >= 120
     assert got == oracle_search(_oracle(ix), q, k=50)
     assert got == SearchEngine(spark, str(ix)).search_local(q, k=50)
+
+
+_READERS = (
+    "_postings_df",
+    "_docs_df",
+    "_terms_df",
+    "_doc_lens_df",
+    "_tri_post_df",
+    "_tri_terms_df",
+)
+
+
+def _check_readers(spark, path) -> None:
+    """Every Spark reader of a fresh engine is created with no job and has
+    the schema Spark infers for its table."""
+    from probe_spark.engine import SearchEngine
+
+    eng = SearchEngine(spark, str(path))
+    j0 = _jobs(spark)
+    readers = {name: getattr(eng, name) for name in _READERS}
+    assert _jobs(spark) == j0
+    for name, reader in readers.items():
+        assert reader is not None, name
+        inferred = spark.read.parquet(eng._reader_paths[name]).schema
+        assert reader.schema == inferred, (name, reader.schema, inferred)
+
+
+def test_spark_readers_take_footer_schemas(spark, tiny_index, small_index, tmp_path):
+    """Readers get their schema from the cached footers: a batch index has
+    an int ``bucket`` partition column, and a ``bucket=stream_*`` delta
+    makes it a string, as Spark's own inference types it."""
+    from probe_spark.streaming.incremental import ingest_batch
+
+    def bucket_type(path) -> str:
+        schema = spark.read.parquet(str(path / "postings")).schema
+        return schema["bucket"].dataType.typeName()
+
+    _check_readers(spark, tiny_index[0])
+    assert bucket_type(Path(tiny_index[0])) == "integer"
+    ix = tmp_path / "ix"
+    shutil.copytree(small_index, ix)
+    df = spark.createDataFrame(
+        _pages(10, 3, "delta"), "url string, text string, lang string"
+    )
+    assert ingest_batch(spark, df, str(ix), epoch_id=0) == 10
+    _check_readers(spark, ix)
+    assert bucket_type(ix) == "string"
 
 
 # -- _vec_by_id: one embedding row through the pruned read ------------------

@@ -7,7 +7,8 @@ fails loudly.  Pure plan-level predicate -- no Spark session.
 """
 
 from probe_spark import elastic
-from probe_spark.engine import _bag_plus_exclusions, _is_disjunctive_bag
+from probe_spark.engine import _bag_plus_exclusions
+from probe_spark.wand import _is_disjunctive_bag
 
 
 def plan(q: str):

@@ -7,6 +7,8 @@ import re
 
 import pytest
 
+from bench import HEADLINE
+
 
 def _formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
@@ -66,22 +68,27 @@ def test_docs_url_projection_prunes_text(spark, tiny_index):
     assert "text" not in m.group(1), m.group(1)
 
 
-def test_disjunctive_query_whole_stage_codegen(spark, tiny_index, monkeypatch):
-    """The OR-bag scoring path must stay JVM-side (whole-stage codegen
-    spans, no Python evaluation in the hot loop).  Budget 0: the Spark
-    plan, not the driver lane, serves the query."""
+_PYTHON_NODES = re.compile(
+    r"MapInPandas|MapInArrow|PythonMapInArrow|ArrowEvalPython|BatchEvalPython"
+)
+
+
+@pytest.mark.parametrize("shape", sorted(HEADLINE))
+def test_disjunctive_query_whole_stage_codegen(spark, tiny_index, monkeypatch, shape):
+    """Every headline shape is scored JVM-side (whole-stage codegen spans,
+    no Python node anywhere in the plan).  Budget 0: the Spark plan, not
+    the driver lane, serves the query."""
     from probe_spark import indexer
     from probe_spark.engine import SearchEngine
 
     monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
     path, _ = tiny_index
     eng = SearchEngine(spark, path)
-    df = eng.search("firewall whitelist process", k=10)
+    df = eng.search(HEADLINE[shape], k=10)
     plan = _formatted_plan(df)
     # (WholeStageCodegen ids only materialize in the final adaptive plan,
     # so assert the absence of Python nodes -- the load-bearing property)
-    assert "BatchEvalPython" not in plan  # no row-at-a-time Python UDF
-    assert "ArrowEvalPython" not in plan  # disjunctive path needs no UDF
+    assert not _PYTHON_NODES.search(plan), plan
     assert "AdaptiveSparkPlan" in plan  # AQE on (skew/coalesce re-planning)
 
 
