@@ -285,6 +285,8 @@ def main(argv: list[str] | None = None) -> int:
                 "tri_direct_frac": SearchEngine._TRI_DIRECT_FRAC,
                 "tri_direct_floor": SearchEngine._TRI_DIRECT_FLOOR,
                 "isin_pushdown_cap": SearchEngine._ISIN_CAP,
+                # needles the rescue memo holds before it is cleared
+                "memo_needles": SearchEngine._VERIFIED_NEEDLE_CAP,
             },
             "dedup": {"band_bucket_cap": dedup.BAND_BUCKET_CAP},
             "wand": {

@@ -32,7 +32,12 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      candidates -- O(trigram df) per query.  A needle with a df-0 trigram
      is refuted.  Every other needle -- no listed trigram, rarest trigram
      above the cutoff, shorter than 3 bytes, or an index without the lane
-     -- is verified by the plain containment scan.  The reference pays a
+     -- is verified by the plain containment scan.  One resolver
+     (warm_rescue_needles) serves every needle of a query or a batch: it
+     classifies the cold ones on the driver, runs at most one candidate
+     collect and one verify collect for all of them, and memoizes each as
+     an id list (or "too large") in one memo, _verified_ids;
+     _rescue_frames turns the memo into one frame.  The reference pays a
      full scan on EVERY query.
   4. boolean evaluation + expression scoring per doc: one Column plan, no
      UDF.  A conditional aggregation (groupBy doc_id, the one shuffle;
@@ -86,6 +91,14 @@ def _term_in(col: str, values) -> "F.Column":
         "'%s'" % v.replace("\\", "\\\\").replace("'", "\\'") for v in vals
     )
     return F.expr("%s IN (%s)" % (col, quoted))
+
+
+def _union_all(frames: list[DataFrame]) -> DataFrame:
+    """unionByName over a non-empty list of frames."""
+    out = frames[0]
+    for f in frames[1:]:
+        out = out.unionByName(f)
+    return out
 
 
 def _bag_plus_exclusions(plan: QueryPlan) -> bool:
@@ -681,20 +694,16 @@ class SearchEngine:
         # exceeds the bound and lookups fall back to the term-pruned
         # parquet read, memoized per term.
         self._df_cache: dict[str, int] = {}
-        self._tri_cand_cache: dict[str, object] = {}
         self._tri_df_cache: dict[int, int] = {}
-        # verified-containment memo (adaptive exact-form postings): once a
-        # rescue needle's TRUE match set is known and small, later queries
-        # serve it as a literal postings frame -- no doc-store touch at
-        # all.  Keyed by (needle, exclude_filenames) because -n changes
-        # the haystack (text-only).  Value: a reusable literal DataFrame,
-        # or None = known too large to cache (scan stays embedded).
-        # Invalidation: this dict lives in _reopen, so any on-disk index
-        # change (check_refresh fingerprint) drops it with the others.
-        self._verified_cache: dict[tuple[str, bool], DataFrame | None] = {}
-        # raw verified id lists beside the literal frames (same keys /
-        # lifecycle): lets batch callers build ONE combined literal frame
-        # for B warm needles instead of B one-task union branches
+        # the rescue memo (adaptive exact-form postings), filled only by
+        # warm_rescue_needles: once a rescue needle's TRUE match set is
+        # known and small, later queries serve it as literal postings rows
+        # -- no doc-store touch at all.  Keyed by (needle,
+        # exclude_filenames) because -n changes the haystack (text-only).
+        # Value: the sorted verified id list, or None = known too large to
+        # memoize (the verify scan stays in the plan).  Invalidation: this
+        # dict lives in _reopen, so any on-disk index change
+        # (check_refresh fingerprint) drops it with the others.
         self._verified_ids: dict[tuple[str, bool], list[int] | None] = {}
         # rescue-term df memo (same keying/invalidation): the df of a
         # rescue term is a corpus-wide constant of the index, so the
@@ -803,6 +812,8 @@ class SearchEngine:
         return {r[key]: int(r["df"]) for r in rows}
 
     def _docs(self) -> DataFrame:
+        """The doc store; the engine reads _docs_df, bench.py's op_facets
+        calls this."""
         return self._docs_df
 
     def _docs_text(self) -> DataFrame:
@@ -827,7 +838,7 @@ class SearchEngine:
         lang_vals, url_subs, ext_vals = _filter_values(plan)
         if not lang_vals and not url_subs and not ext_vals:
             return None
-        docs = self._docs()
+        docs = self._docs_df
         if lang_vals:
             # alias-normalize the doc label too (lang:rs == lang:rust,
             # search_runner.rs:1904-1921) -- tiny literal map, JVM-side
@@ -920,332 +931,207 @@ class SearchEngine:
             return self._TRI_DECLINED
         return sel[: self._TRI_INTERSECT]
 
-    def _tri_candidate_ids(self, needle: str):
-        """Substring-index candidates for a rescue needle: doc_ids whose
-        haystack holds the needle's RAREST <=3 listed trigrams (a SUPERSET
-        of the true containment matches -- trigrams present but
-        non-contiguous are possible, so callers still verify contains()).
-        Returns a list of ids (IN-pushdown into the doc-store read), a
-        lazy DataFrame when the candidate set exceeds the IN cap, or what
-        _tri_select returns otherwise ([] refuted, _TRI_DECLINED -- the
-        caller falls back to the plain verify scan it would mostly run
-        anyway); None when the lane is absent or the needle is shorter
-        than one trigram.
-        Cost is O(sum of the selected trigram dfs) -- never O(corpus)."""
+    def _tri_pick(self, needle: str):
+        """_tri_select's verdict for one needle ([] refuted, _TRI_DECLINED,
+        or the selected (tri, df) list); None when the lane cannot prune
+        it -- no lane, or a needle shorter than one trigram."""
         if self._tri_post_df is None:
             return None
         tris = needle_tri_codes(needle)
-        if not tris:  # needle shorter than one trigram
-            return None
-        if needle in self._tri_cand_cache:
-            return self._tri_cand_cache[needle]
-        picked = self._tri_select(tris)
-        if picked is self._TRI_DECLINED or not picked:
-            out = picked
-        else:
-            sel = [t for t, _ in picked]
-            post = self._tri_post_df.filter(F.col("tri").isin(sel))
-            if len(sel) == 1:
-                cand_df = post.select("doc_id")
-            else:
-                # (tri, doc_id) rows are distinct (array_distinct at build),
-                # so count(*) == len(sel) <=> the doc holds ALL selected
-                cand_df = (
-                    post.groupBy("doc_id")
-                    .agg(F.count(F.lit(1)).alias("c"))
-                    .filter(F.col("c") == len(sel))
-                    .select("doc_id")
+        return self._tri_select(tris) if tris else None
+
+    def _tri_cand_rows(self, picks: dict[str, list]) -> DataFrame:
+        """Lazy (term, doc_id) trigram candidates of lane-served needles
+        ({needle: selected (tri, df) list}): the docs holding every
+        selected trigram of the needle, a SUPERSET of its containment
+        matches (trigrams present but non-contiguous are possible).  One
+        ``tri IN`` scan per needle; grouped -- one shuffle for all -- only
+        when some needle selects more than one trigram."""
+        rows = _union_all(
+            [
+                self._tri_post_df.filter(
+                    F.col("tri").isin([c for c, _ in sel])
+                ).select(
+                    F.lit(t).alias("term"), F.lit(len(sel)).alias("n"), "doc_id"
                 )
-            if picked[0][1] > self._ISIN_CAP:
-                # provably too many candidates for an IN pushdown: hand
-                # back the lazy frame (caller semi-joins) without collecting
-                out = cand_df
-            else:
-                rows = cand_df.limit(self._ISIN_CAP + 1).collect()
-                if len(rows) > self._ISIN_CAP:
-                    out = cand_df
-                else:
-                    out = [int(r["doc_id"]) for r in rows]
-        if len(self._tri_cand_cache) > 1000:  # bound driver memory
-            self._tri_cand_cache.clear()
-        self._tri_cand_cache[needle] = out
+                for t, sel in sorted(picks.items())
+            ]
+        )
+        if any(len(sel) > 1 for sel in picks.values()):
+            # (tri, doc_id) rows are distinct (array_distinct at build), so
+            # n rows <=> the doc holds ALL n selected trigrams
+            rows = (
+                rows.groupBy("term", "n", "doc_id")
+                .count()
+                .filter(F.col("count") == F.col("n"))
+            )
+        return rows.select("term", "doc_id")
+
+    def _tri_candidates(self, picks: dict) -> dict:
+        """The resolver's candidate step: {needle: candidates} for the
+        lane-served needles among ``picks`` ({needle: _tri_pick verdict}).
+        Needles whose rarest selected trigram has df <= _ISIN_CAP (so
+        their candidates do too) get an id list, all from ONE collect; the
+        others get their lazy (doc_id) frame -- provably too many for an
+        IN pushdown, so the verify scan semi-joins it.  Cost is O(sum of
+        the selected trigram dfs) -- never O(corpus)."""
+        picks = {
+            t: p for t, p in picks.items() if p and p is not self._TRI_DECLINED
+        }
+        out: dict = {
+            t: self._tri_cand_rows({t: sel}).select("doc_id")
+            for t, sel in picks.items()
+            if sel[0][1] > self._ISIN_CAP
+        }
+        bounded = {t: sel for t, sel in picks.items() if t not in out}
+        if bounded:
+            out.update({t: [] for t in bounded})
+            for r in self._tri_cand_rows(bounded).collect():
+                out[r["term"]].append(int(r["doc_id"]))
         return out
 
-    # cache a needle's verified match set only when it fits an IN-pushdown
-    # anyway; bound the number of memoized needles driver-side
+    def _tri_candidate_ids(self, needle: str):
+        """One needle through the resolver's candidate step: an id list, a
+        lazy DataFrame over the IN cap, or _tri_pick's verdict ([]
+        refuted, _TRI_DECLINED, None)."""
+        pick = self._tri_pick(needle)
+        return self._tri_candidates({needle: pick}).get(needle, pick)
+
+    def _verify_scan(self, needle: str, cands, ex_fn: bool) -> DataFrame:
+        """Lazy (term, doc_id) containment matches of one needle over the
+        doc store: restricted to a candidate id list (one JVM-parsed
+        ``doc_id IN`` -- a python-side .isin pays a py4j conversion per
+        id), semi-joined to a lazy candidate frame, or a plain scan when
+        ``cands`` is None.  -n checks the TEXT only."""
+        docs = self._docs_text().select(
+            "doc_id",
+            F.lower(F.col("text")).alias("_t"),
+            F.lower(F.col("url")).alias("_u"),
+        )
+        if isinstance(cands, list):
+            docs = docs.filter(
+                F.expr("doc_id IN (%s)" % ",".join(map(str, cands)))
+            )
+        elif cands is not None:
+            docs = docs.join(cands, "doc_id", "leftsemi")
+        hit = F.col("_t").contains(needle)
+        if not ex_fn:
+            hit = hit | F.col("_u").contains(needle)
+        return docs.filter(hit).select(F.lit(needle).alias("term"), "doc_id")
+
+    # memoize at most this many needles driver-side; a needle's verified
+    # set is memoized only when it fits an IN pushdown (_ISIN_CAP) anyway
     _VERIFIED_NEEDLE_CAP = 128
 
-    def _try_verify_cache(
-        self, key: tuple[str, bool], scan_frame: DataFrame, ids
-    ) -> DataFrame | None:
-        """First sight of a rescue needle: materialize its TRUE containment
-        match set (one bounded action -- the same scan the query plan would
-        embed, run once instead of per-query) and memoize it as a literal
-        postings frame.  Returns the frame to union into the candidate
-        rows: the literal frame when the set fits the cap, the original
-        scan (and a None cache marker = uncacheable) when it doesn't, or
-        None when the verified set is empty (no doc contains the needle).
-        At web scale this is standard adaptive caching of hot filters: the
-        cap keeps driver/plan memory bounded, and any on-disk index change
-        invalidates via the _reopen fingerprint."""
-        import pandas as pd
-
-        cap = self._ISIN_CAP
-        sel = scan_frame.select("doc_id")
-        if isinstance(ids, list):
-            # candidate superset already <= cap, so the verified set is too
-            rows = sel.collect()
-        else:
-            rows = sel.limit(cap + 1).collect()
-            if len(rows) > cap:
-                self._verified_cache[key] = None  # known too large
-                self._verified_ids[key] = None
-                return scan_frame
-        doc_ids = sorted(int(r["doc_id"]) for r in rows)
-        if len(self._verified_cache) > self._VERIFIED_NEEDLE_CAP:
-            self._verified_cache.clear()
-            self._verified_ids.clear()
-        lit = self._cache_verified(key, doc_ids)
-        return lit if doc_ids else None
-
-    def _cache_verified(
-        self, key: tuple[str, bool], ids: list[int] | None
-    ) -> DataFrame | None:
-        """Materialize a verified id list into the literal-frame caches --
-        the single constructor for the three cache states (literal frame /
-        empty frame / None = known too large).  Callers manage capacity."""
-        if ids is None:
-            self._verified_cache[key] = None
-            self._verified_ids[key] = None
-            return None
-        import pandas as pd
-
-        ids = sorted(ids)
-        if ids:
-            lit = self.spark.createDataFrame(
-                pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64")})
-            )
-        else:
-            lit = self.spark.createDataFrame([], "doc_id long")
-        lit = lit.select(
-            F.lit(key[0]).alias("term"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.lit(1).cast("int").alias("tf"),
-        )
-        self._verified_cache[key] = lit
-        self._verified_ids[key] = ids
-        return lit
-
     def warm_rescue_needles(self, needles: list[str], ex_fn: bool) -> None:
-        """Batch-verify COLD rescue needles in ONE Spark action.
+        """The one rescue resolver: memoize the TRUE containment match set
+        of every cold needle in ``needles`` (filter-then-verify: trigram
+        candidates, then contains()).
 
-        The per-needle path (_rescue_frames -> _try_verify_cache) pays up
-        to two serialized driver round-trips per cold needle: the trigram
-        candidate collect and the verified-set collect.  A query BATCH
-        with B distinct excluded/exact needles therefore spends O(B)
-        actions of pure driver latency before its single data action --
-        measured 43 s of serial plan-build time for a 200-query log at
-        150k docs, the Amdahl fraction behind the 0.37 serving-scaling
-        efficiency in BENCH r4.  Here every cold needle's verify scan
-        becomes ONE union job: trigram-pruned branches (doc_id IN
-        pushdown from a single batched candidate collect) plus one shared
-        full-scan branch for lane-declined / sub-trigram needles, capped
-        per needle by a row_number window so the driver collect stays
-        bounded exactly as the per-needle path bounds it.  Results
-        populate _verified_cache with the same three states the
-        per-needle path produces (literal frame / empty frame / None =
-        known too large), so _rescue_frames afterwards is cache-hits
-        only.  Single queries and indexes without the trigram lane keep
-        the per-needle path."""
+        Each cold needle is classified on the driver (_tri_pick): refuted
+        needles memoize as empty with no job; lane-served ones get their
+        candidates from ONE collect (_tri_candidates); declined,
+        sub-trigram and lane-less needles are verified by the plain scan.
+        Then ONE collect verifies them all: a ``doc_id IN`` branch per
+        bounded candidate list, and a semi-join or plain-scan branch,
+        capped at _ISIN_CAP + 1 rows, for each needle that can exceed the
+        cap.  The memo (_verified_ids) holds each needle's sorted id list,
+        or None when the set is too large -- _rescue_frames then keeps its
+        lazy verify scan in the plan.  A verified set is a subset of its
+        candidates, so a memoized needle never needs its candidates again.
+        One needle costs at most one candidate collect and one verify
+        collect, and so do B needles."""
         ex_key = bool(ex_fn)
-        cold = sorted(
-            {t for t in needles if (t, ex_key) not in self._verified_cache}
-        )
-        if len(cold) < 2 or self._tri_post_df is None:
+        memo = self._verified_ids
+        cold = sorted({t for t in needles if (t, ex_key) not in memo})
+        if not cold:
             return
-        if len(self._verified_cache) + len(cold) > self._VERIFIED_NEEDLE_CAP:
-            # make room for the WHOLE batch up front: the per-insert
-            # eviction would otherwise wipe needles warmed earlier in this
-            # same call (a batch may transiently exceed the cap; the next
-            # per-needle insert restores the bound)
-            self._verified_cache.clear()
-            self._verified_ids.clear()
+        if len(memo) + len(cold) > self._VERIFIED_NEEDLE_CAP:
+            # make room for the WHOLE call up front: a call may exceed the
+            # cap transiently, but never evicts needles it resolves
+            memo.clear()
             cold = sorted(set(needles))
         cap = self._ISIN_CAP
-        pair_rows: list[tuple[str, int]] = []
-        n_sel: dict[str, int] = {}
-        fullscan: list[str] = []
-        for t in cold:
-            tris = needle_tri_codes(t)
-            if not tris:
-                fullscan.append(t)  # sub-trigram needle: plain verify scan
-                continue
-            sel = self._tri_select(tris)
-            if sel is self._TRI_DECLINED:
-                fullscan.append(t)  # lane declines: plain verify scan
-                continue
-            if not sel:
-                # refuted corpus-wide: cache the empty frame now
-                self._cache_verified((t, ex_key), [])
-                self._tri_cand_cache.setdefault(t, [])
-                continue
-            # provably more candidates than an IN pushdown takes: the
-            # per-needle path keeps the candidate frame LAZY and
-            # semi-joins it; mirror that as a lazy verify branch (n < 0)
-            n_sel[t] = -len(sel) if sel[0][1] > cap else len(sel)
-            pair_rows += [(t, int(x)) for x, _ in sel]
-        from pyspark.sql.window import Window
-
-        def _cand_df(terms: dict[str, int]):
-            """Lazy (term, doc_id) candidate pairs for the given needles
-            (|n| selected trigrams each) -- no action."""
-            rows_ = [(t, c) for t, c in pair_rows if t in terms]
-            qt = self.spark.createDataFrame(rows_, "term string, tri int")
-            codes = sorted({c for _, c in rows_})
-            post = self._tri_post_df.filter(F.col("tri").isin(codes))
-            nsel_df = self.spark.createDataFrame(
-                [(t, abs(n)) for t, n in sorted(terms.items())],
-                "term string, n int",
-            )
-            return (
-                post.join(F.broadcast(qt), "tri")
-                .groupBy("term", "doc_id")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .join(F.broadcast(nsel_df), "term")
-                .filter(F.col("c") == F.col("n"))
-                .select("term", "doc_id")
-            )
-
-        # batched trigram candidates: ONE Arrow collect for every needle
-        # whose candidate set is bounded (<= rarest trigram df <= cap)
-        cand_ids: dict[str, list[int]] = {}
-        small = {t: n for t, n in n_sel.items() if n > 0}
-        lazy = {t: n for t, n in n_sel.items() if n < 0}
-        if small:
-            pdf = _cand_df(small).toPandas()
-            for t in small:
-                cand_ids[t] = []
-            for t, d in pdf.groupby("term")["doc_id"]:
-                cand_ids[t] = [int(x) for x in d]
-            for t, ids in cand_ids.items():
-                if not ids:
-                    # trigrams individually present but never co-located
-                    self._cache_verified((t, ex_key), [])
-            cand_ids = {t: ids for t, ids in cand_ids.items() if ids}
-        # batched verify: one union job over pruned branches + full scan
-        docs = self._docs_text().select(
-            "doc_id",
-            F.lower(F.col("text")).alias("_t"),
-            F.lower(F.col("url")).alias("_u"),
-        )
-
-        def _hit(term_lit):
-            c = F.col("_t").contains(term_lit)
-            return c if ex_key else c | F.col("_u").contains(term_lit)
-
+        picks = {t: self._tri_pick(t) for t in cold}
+        cands = self._tri_candidates(picks)
         branches: list[DataFrame] = []
-        for t, ids in sorted(cand_ids.items()):
-            branches.append(
-                docs.filter(
-                    F.expr("doc_id IN (%s)" % ",".join(map(str, ids)))
-                )
-                .filter(_hit(F.lit(t)))
-                .select(F.lit(t).alias("term"), "doc_id")
-            )
-        if lazy:
-            branches.append(
-                docs.join(_cand_df(lazy), "doc_id", "inner")
-                .filter(_hit(F.col("term")))
-                .select("term", "doc_id")
-            )
-        if fullscan:
-            fs = self.spark.createDataFrame(
-                [(t,) for t in sorted(set(fullscan))], "term string"
-            )
-            branches.append(
-                docs.crossJoin(F.broadcast(fs))
-                .filter(_hit(F.col("term")))
-                .select("term", "doc_id")
-            )
+        for t in cold:
+            c = cands.get(t)
+            if picks[t] == [] or (isinstance(c, list) and not c):
+                # refuted, or trigrams present but never co-located
+                memo[(t, ex_key)] = []
+                continue
+            branch = self._verify_scan(t, c, ex_key)
+            if not isinstance(c, list):  # lazy candidates or a plain scan
+                branch = branch.limit(cap + 1)
+            branches.append(branch)
         if not branches:
             return
-        allv = branches[0]
-        for b in branches[1:]:
-            allv = allv.unionByName(b)
-        wv = Window.partitionBy("term").orderBy("doc_id")
-        vdf = (
-            allv.withColumn("rn", F.row_number().over(wv))
-            .filter(F.col("rn") <= cap + 1)
-            .select("term", "doc_id")
-            .toPandas()
-        )
-        verified: dict[str, list[int]] = {
-            t: [] for t in list(cand_ids) + list(lazy) + fullscan
-        }
-        for t, d in vdf.groupby("term")["doc_id"]:
-            verified[t] = [int(x) for x in d]
-        for t, ids in verified.items():
-            key = (t, ex_key)
-            self._cache_verified(key, None if len(ids) > cap else ids)
+        got: dict[str, list[int]] = {}
+        for r in _union_all(branches).collect():
+            got.setdefault(r["term"], []).append(int(r["doc_id"]))
+        for t in cold:
+            if (t, ex_key) not in memo:
+                ids = sorted(got.get(t, []))
+                memo[(t, ex_key)] = ids if len(ids) <= cap else None
 
     def _rescue_frames(
-        self, rescues: list[str], ex_fn: bool
-    ) -> list[DataFrame]:
-        """(term, doc_id, tf=1) containment-match frames, one per rescue
-        needle: the memoized literal frame when the needle's verified set
-        is cached, else the candidate-pruned doc-store scan (which the
-        first sighting materializes into the memo via _try_verify_cache).
-        Needles refuted corpus-wide (no doc can contain them) or verified
-        empty contribute no frame."""
-        docs = self._docs_text().select(
-            "doc_id",
-            F.lower(F.col("text")).alias("_t"),
-            F.lower(F.col("url")).alias("_u"),
-        )
+        self, needles: list[str], ex_fn: bool
+    ) -> DataFrame | None:
+        """ONE (term, doc_id, tf=1) containment-match frame for the rescue
+        ``needles``, resolved through warm_rescue_needles: literal rows for
+        the memoized id lists, plus the lazy verify scan of each needle
+        too large to memoize.  None when no doc contains any needle."""
+        import pyarrow as pa
+
+        self.warm_rescue_needles(needles, ex_fn)
         ex_key = bool(ex_fn)
-        scans: list[DataFrame] = []
-        for t in rescues:
-            key = (t, ex_key)
-            lit_df = self._verified_cache.get(key)
-            if lit_df is not None:
-                # warm needle: the exact match set was materialized on a
-                # prior query -- a literal postings frame replaces the
-                # doc-store scan entirely
-                scans.append(lit_df)
-                continue
-            base = docs
-            ids = self._tri_candidate_ids(t)
-            if ids is self._TRI_DECLINED:
-                ids = None  # too common to prune: plain verify scan
-            if isinstance(ids, DataFrame):
-                base = docs.join(ids, "doc_id", "leftsemi")
-            elif ids is not None:
-                if not ids:
-                    continue  # no doc can contain t
-                # one JVM-parsed IN expression: a python-side .isin(ids)
-                # pays a py4j literal conversion PER id (~2ms each -- 5s of
-                # driver time at a few thousand candidates)
-                base = docs.filter(
-                    F.expr(
-                        "doc_id IN (%s)" % ",".join(map(str, ids))
+        lit_terms: list[str] = []
+        lit_ids: list[int] = []
+        large: list[str] = []
+        for t in sorted(set(needles)):
+            ids = self._verified_ids[(t, ex_key)]
+            if ids is None:
+                large.append(t)
+            else:
+                lit_terms += [t] * len(ids)
+                lit_ids += ids
+        # too large to memoize: the verify scan stays in the plan, over
+        # the lazy candidate frame (more than _ISIN_CAP candidates)
+        cands = self._tri_candidates({t: self._tri_pick(t) for t in large})
+        frames = [self._verify_scan(t, cands.get(t), ex_key) for t in large]
+        if lit_ids:
+            frames.insert(
+                0,
+                self.spark.createDataFrame(
+                    pa.table(
+                        {
+                            "term": pa.array(lit_terms, pa.string()),
+                            "doc_id": pa.array(lit_ids, pa.int64()),
+                        }
                     )
-                )
-            hay_hit = (
-                F.col("_t").contains(t)
-                if ex_fn  # -n: containment rescue checks TEXT only
-                else (F.col("_t").contains(t) | F.col("_u").contains(t))
+                ),
             )
-            scan_frame = base.filter(hay_hit).select(
-                F.lit(t).alias("term"),
-                "doc_id",
-                F.lit(1).cast("int").alias("tf"),
+        if not frames:
+            return None
+        return _union_all(frames).select(
+            "term", "doc_id", F.lit(1).cast("int").alias("tf")
+        )
+
+    def _postings_rows(self, terms, exclude_filenames: bool) -> DataFrame:
+        """The postings rows of ``terms``.  -n (exclude_filenames) drops
+        url-token-only matches (tf_url = url-token share of tf, written at
+        build time); the surviving rows keep the FULL tf for scoring (see
+        search() docstring)."""
+        post = self._postings_df.filter(_term_in("term", terms))
+        if not exclude_filenames:
+            return post
+        if "tf_url" not in self._postings_df.columns:
+            raise ValueError(
+                "exclude_filenames needs the tf_url postings column; "
+                "this index predates it -- rebuild with build_index()"
             )
-            if key not in self._verified_cache:
-                scan_frame = self._try_verify_cache(key, scan_frame, ids)
-                if scan_frame is None:
-                    continue  # verified empty: no doc contains t
-            scans.append(scan_frame)
-        return scans
+        return post.filter((F.col("tf") - F.col("tf_url")) > 0)
 
     def _term_rows(
         self, plan: QueryPlan, terms: list[str], *, exclude_filenames: bool
@@ -1253,29 +1139,17 @@ class SearchEngine:
         """(term, doc_id, tf, doc_len) rows for the GIVEN terms only, with
         the containment rescue applied to those that are rescue terms
         (lets WandEngine fetch just the excluded-term rows)."""
-        post = self._postings_df.filter(F.col("term").isin(list(terms)))
-        if exclude_filenames:
-            # -n: drop url-token-only matches (tf_url = url-token share of
-            # tf, written at build time); the surviving rows keep the FULL
-            # tf for scoring (see search() docstring)
-            if "tf_url" not in self._postings_df.columns:
-                raise ValueError(
-                    "exclude_filenames needs the tf_url postings column; "
-                    "this index predates it -- rebuild with build_index()"
-                )
-            post = post.filter((F.col("tf") - F.col("tf_url")) > 0)
-        post = post.select("term", "doc_id", "tf", "doc_len")
+        post = self._postings_rows(terms, exclude_filenames).select(
+            "term", "doc_id", "tf", "doc_len"
+        )
         rescues = sorted(t for t in oracle.rescue_terms(plan) if t in terms)
         if not rescues:
             return post
-        scans = self._rescue_frames(rescues, exclude_filenames)
-        if not scans:
+        scan_df = self._rescue_frames(rescues, exclude_filenames)
+        if scan_df is None:
             # every rescue term was refuted or verified empty corpus-wide:
             # no doc contains any of them, token postings alone decide
             return post
-        scan_df = scans[0]
-        for s in scans[1:]:
-            scan_df = scan_df.unionByName(s)
         if self._doc_lens_df is not None:
             # rescue hits need doc_len for BM25 -- join the slim lengths
             # table (only the matched doc_ids flow into the join)
@@ -1573,7 +1447,7 @@ class SearchEngine:
         return (
             scored.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
-            .join(self._docs().select("doc_id", "url"), "doc_id", "left")
+            .join(self._docs_df.select("doc_id", "url"), "doc_id", "left")
             .select("doc_id", "url", "score")
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
@@ -1796,7 +1670,7 @@ class SearchEngine:
             m = scored.select("doc_id", F.lit(0.0).alias("score"))
         else:
             m = scored.select("doc_id", F.round("score", 6).alias("score"))
-        j = m.join(self._docs().select("doc_id", "url"), "doc_id").join(
+        j = m.join(self._docs_df.select("doc_id", "url"), "doc_id").join(
             meta.select("url", "facet"), "url"
         )
         # counts and ranks as two window functions over the SAME facet
@@ -1871,8 +1745,8 @@ class SearchEngine:
         )
         if plain:
             self.term_dfs(plain)
-        # batch-verify the union of cold rescue needles once (one action
-        # instead of two driver round-trips per needle per branch)
+        # resolve the union of rescue needles once (two collects for all
+        # cold needles instead of two per needle per branch)
         rescues = sorted({t for p in plans.values() for t in oracle.rescue_terms(p)})
         if rescues:
             self.warm_rescue_needles(rescues, bool(exclude_filenames))
@@ -1908,34 +1782,25 @@ class SearchEngine:
             F.desc("score"), F.asc("doc_id")
         )
         if scored_parts:
-            allsc = scored_parts[0]
-            for p_ in scored_parts[1:]:
-                allsc = allsc.unionByName(p_)
-            topk = allsc.withColumn("rank", F.row_number().over(w)).filter(
-                F.col("rank") <= k
+            topk = (
+                _union_all(scored_parts)
+                .withColumn("rank", F.row_number().over(w))
+                .filter(F.col("rank") <= k)
             )
             parts.append(
                 topk.join(
-                    self._docs().select("doc_id", "url"), "doc_id", "left"
+                    self._docs_df.select("doc_id", "url"), "doc_id", "left"
                 ).select("query_id", "rank", "doc_id", "url", "score")
             )
         if zero_parts:
-            allz = zero_parts[0]
-            for p_ in zero_parts[1:]:
-                allz = allz.unionByName(p_)
             # scores are all 0.0, so the shared (score desc, doc_id asc)
             # rank order reduces to doc_id order -- same as _ranked
             parts.append(
-                allz.withColumn("rank", F.row_number().over(w)).select(
-                    "query_id", "rank", "doc_id", "url", "score"
-                )
+                _union_all(zero_parts)
+                .withColumn("rank", F.row_number().over(w))
+                .select("query_id", "rank", "doc_id", "url", "score")
             )
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
-        return out.orderBy(
-            F.asc("query_id"), F.asc("rank")
-        )
+        return _union_all(parts).orderBy(F.asc("query_id"), F.asc("rank"))
 
     def search_batch_fused(
         self,
@@ -1974,10 +1839,8 @@ class SearchEngine:
         broadcast query-term table as idf-0 marker rows, and max(excl)
         applies the drop rule -- no anti-join, no second sort of the
         scored set; marker rows never enter the score array (null-skipped
-        by collect_list) so kept docs' scores stay f64-identical.  Cold
-        containment needles batch-verify in one union job first
-        (warm_rescue_needles) and warm needles merge into one combined
-        literal frame.
+        by collect_list) so kept docs' scores stay f64-identical.  All
+        excluded needles of the batch come from ONE _rescue_frames call.
         Everything else (required/exact/compound/filtered) falls back to
         the branch-union plan and the outputs are unioned.  Rows are
         value-identical to search_batch -- f64-exact: a one-element
@@ -2063,10 +1926,6 @@ class SearchEngine:
             all_excl = sorted(
                 {t for qid in fused for t in excl_terms_by_q[qid]}
             )
-            if all_excl:
-                # batch-verify cold needles in one action instead of two
-                # driver round-trips per needle
-                self.warm_rescue_needles(all_excl, ex_fn)
             xt_rows = sorted(
                 (qid, t) for qid in fused for t in excl_terms_by_q[qid]
             )
@@ -2079,76 +1938,34 @@ class SearchEngine:
                 "query_id string, term string, idf double, pos int, "
                 "gate int, n_gate int, excl int",
             )
-            post = self._postings_df.filter(
-                _term_in("term", sorted(set(all_terms) | set(all_excl)))
-            )
-            if exclude_filenames:
-                if "tf_url" not in self._postings_df.columns:
-                    raise ValueError(
-                        "exclude_filenames needs the tf_url postings column; "
-                        "this index predates it -- rebuild with build_index()"
-                    )
-                post = post.filter((F.col("tf") - F.col("tf_url")) > 0)
-            post = post.select(
+            post = self._postings_rows(
+                sorted(set(all_terms) | set(all_excl)), exclude_filenames
+            ).select(
                 "term",
                 "doc_id",
                 "tf",
                 "doc_len",
                 F.lit(0).alias("src"),
             )
-            if all_excl:
-                dl_t = post.schema["doc_len"].dataType
-                tf_t = post.schema["tf"].dataType
-                # ONE combined literal frame for every warm needle with a
-                # known verified-id list (one stage instead of one
-                # one-task stage per needle); per-needle frames only for
-                # uncacheable (too-large) or unwarmed needles
-                lit_terms: list[str] = []
-                lit_ids: list[int] = []
-                rest_needles: list[str] = []
-                for t in all_excl:
-                    ids = self._verified_ids.get((t, ex_fn), None)
-                    if isinstance(ids, list):
-                        lit_terms += [t] * len(ids)
-                        lit_ids += ids
-                    else:
-                        rest_needles.append(t)
-                frames: list[DataFrame] = []
-                if lit_terms:
-                    import pandas as pd
-
-                    frames.append(
-                        self.spark.createDataFrame(
-                            pd.DataFrame(
-                                {
-                                    "term": lit_terms,
-                                    "doc_id": pd.Series(
-                                        lit_ids, dtype="int64"
-                                    ),
-                                    "tf": pd.Series(
-                                        1, index=range(len(lit_ids)),
-                                        dtype="int32",
-                                    ),
-                                }
-                            )
-                        )
+            # every excluded needle of the batch resolves in one resolver
+            # call (two collects for all cold needles, not two per needle)
+            hits = self._rescue_frames(all_excl, ex_fn) if all_excl else None
+            if hits is not None:
+                # markers never score, so doc_len is a placeholder; src=1
+                # restricts these rows to marker qt rows below (a
+                # containment hit is part of a term's DROP set, never of
+                # its scoring postings)
+                post = post.unionByName(
+                    hits.select(
+                        "term",
+                        "doc_id",
+                        F.col("tf").cast(post.schema["tf"].dataType).alias("tf"),
+                        F.lit(1)
+                        .cast(post.schema["doc_len"].dataType)
+                        .alias("doc_len"),
+                        F.lit(1).alias("src"),
                     )
-                if rest_needles:
-                    frames += self._rescue_frames(rest_needles, ex_fn)
-                for frame in frames:
-                    # markers never score, so doc_len is a placeholder;
-                    # src=1 restricts these rows to marker qt rows below
-                    # (a containment hit is part of a term's DROP set,
-                    # never of its scoring postings)
-                    post = post.unionByName(
-                        frame.select(
-                            "term",
-                            "doc_id",
-                            F.col("tf").cast(tf_t).alias("tf"),
-                            F.lit(1).cast(dl_t).alias("doc_len"),
-                            F.lit(1).alias("src"),
-                        )
-                    )
+                )
             tfp = tf_part(
                 F.col("tf").cast("double"),
                 F.col("doc_len").cast("double"),
@@ -2220,7 +2037,7 @@ class SearchEngine:
                 F.col("rank") <= k
             )
             parts.append(
-                topk.join(self._docs().select("doc_id", "url"), "doc_id", "left")
+                topk.join(self._docs_df.select("doc_id", "url"), "doc_id", "left")
                 .select("query_id", "rank", "doc_id", "url", "score")
             )
         if rest:
@@ -2229,10 +2046,7 @@ class SearchEngine:
                     rest, k, exact, exclude_filenames=exclude_filenames
                 )
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.orderBy(F.asc("query_id"), F.asc("rank"))
+        return _union_all(parts).orderBy(F.asc("query_id"), F.asc("rank"))
 
     def files_only(
         self, query: str, exact: bool = False, exclude_filenames: bool = False
@@ -2251,7 +2065,7 @@ class SearchEngine:
         if zero_score:
             out = scored.select("doc_id", "url")
         else:
-            out = out.join(self._docs().select("doc_id", "url"), "doc_id", "left")
+            out = out.join(self._docs_df.select("doc_id", "url"), "doc_id", "left")
         return out.select("doc_id", "url").orderBy(F.asc("doc_id"))
 
     def _match_frames(
@@ -2272,7 +2086,7 @@ class SearchEngine:
         fdocs = self._filtered_docs(plan)
 
         if plan.is_universal_query:
-            docs = fdocs if fdocs is not None else self._docs()
+            docs = fdocs if fdocs is not None else self._docs_df
             return (
                 docs.select("doc_id", "url").withColumn("score", F.lit(0.0)),
                 None,
@@ -2283,7 +2097,7 @@ class SearchEngine:
         if not plan.term_indices:
             # all keywords were stop words: no-match path (FIXTURES q18)
             return (
-                self._docs()
+                self._docs_df
                 .select("doc_id", "url")
                 .withColumn("score", F.lit(0.0))
                 .limit(0),
@@ -2306,7 +2120,7 @@ class SearchEngine:
         if plan.has_only_excluded_terms:
             # everything NOT containing the excluded terms, score 0,
             # doc_id order (ranking.rs:239-245 + only-excluded fast path)
-            docs = fdocs if fdocs is not None else self._docs()
+            docs = fdocs if fdocs is not None else self._docs_df
             return (
                 docs.join(cand.select("doc_id").distinct(), "doc_id", "leftanti")
                 .select("doc_id", "url")
@@ -2370,16 +2184,12 @@ class SearchEngine:
         # drop set = token postings ∪ containment matches of the excluded
         # terms, doc_id only -- no doc_len join, no (term, doc_id) merge:
         # the anti-join neither needs tf nor cares about duplicate rows
-        post_excl = self._postings_df.filter(
-            F.col("term").isin(excl_terms)
+        drop = self._postings_rows(excl_terms, exclude_filenames).select(
+            "doc_id"
         )
-        if exclude_filenames:
-            post_excl = post_excl.filter(
-                (F.col("tf") - F.col("tf_url")) > 0
-            )
-        drop = post_excl.select("doc_id")
-        for frame in self._rescue_frames(sorted(excl_terms), exclude_filenames):
-            drop = drop.unionByName(frame.select("doc_id"))
+        hits = self._rescue_frames(sorted(excl_terms), exclude_filenames)
+        if hits is not None:
+            drop = drop.unionByName(hits.select("doc_id"))
         scored = scored.join(drop, "doc_id", "leftanti")
         return scored, pos_cand, idfs, False
 

@@ -551,7 +551,7 @@ class WandEngine:
             ],
             "rank int, doc_id long, score double",
         )
-        docs = self._fallback._docs().select("doc_id", "url")
+        docs = self._fallback._docs_df.select("doc_id", "url")
         return (
             hits.join(docs, "doc_id", "left")
             .select("rank", "doc_id", "url", "score")

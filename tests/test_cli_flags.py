@@ -164,6 +164,7 @@ def test_config_without_index(capsys):
     assert cfg["query"]["driver_read_bytes"] == 64 << 20
     assert cfg["rescue"]["tri_direct_frac"] == 0.05
     assert cfg["rescue"]["tri_direct_floor"] == 1_000
+    assert cfg["rescue"]["memo_needles"] == 128
 
 
 # -- grep asymmetric context + color ----------------------------------------
@@ -245,7 +246,7 @@ def test_suggest_cli(ix, capsys):
 def test_mlt_cli(spark, ix, capsys):
     from probe_spark.engine import SearchEngine
 
-    seed = SearchEngine(spark, ix)._docs().select("url").head()["url"]
+    seed = SearchEngine(spark, ix)._docs_df.select("url").head()["url"]
     rc, out = _run(
         capsys, "mlt", "--index", ix, "--url", seed,
         "-k", "5", "--max-df-frac", "0.95",

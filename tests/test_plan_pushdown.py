@@ -48,7 +48,7 @@ def test_rescue_scan_docid_pushdown(spark, tiny_index):
     assert ids  # the fixture corpus contains this string
     from pyspark.sql import functions as F
 
-    scan = eng._docs().select("doc_id", "text").filter(
+    scan = eng._docs_df.select("doc_id", "text").filter(
         F.col("doc_id").isin(ids[:50])
     )
     plan = _formatted_plan(scan)
@@ -61,7 +61,7 @@ def test_docs_url_projection_prunes_text(spark, tiny_index):
     from probe_spark.engine import SearchEngine
 
     eng = SearchEngine(spark, path)
-    proj = eng._docs().select("doc_id", "url")
+    proj = eng._docs_df.select("doc_id", "url")
     plan = _formatted_plan(proj)
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan

@@ -201,15 +201,19 @@ def test_queries_identical_across_builds(engines, query):
     ids=["in-pushdown", "declined-fullscan", "lazy-toolarge"],
 )
 def test_warm_rescue_identical_across_builds(spark, tri_builds, patch):
-    """The three test_warm_rescue needle classes: batched and per-needle
-    rescue on the pruned build equal the per-needle complete build."""
+    """The three test_warm_rescue needle classes: the resolver on the
+    pruned build, all needles in one call or one needle per call, equals
+    the complete build."""
     out = []
-    for build, warm in (("complete", False), ("pruned", False), ("pruned", True)):
+    for build, one_by_one in (
+        ("complete", False), ("pruned", False), ("pruned", True)
+    ):
         eng = SearchEngine(spark, tri_builds[build])
         for k, v in patch.items():
             setattr(eng, k, v)
-        if warm:
-            eng.warm_rescue_needles(NEEDLES, False)
+        if one_by_one:
+            for n in NEEDLES:
+                eng.warm_rescue_needles([n], False)
         out.append(_frames_rows(eng, NEEDLES))
     assert out[0] and out[1] == out[0] and out[2] == out[0]
 

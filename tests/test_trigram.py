@@ -141,7 +141,7 @@ def test_tri_lane_enabled_and_candidates_superset(spark, tiny_index):
     # every TRUE containment match must be in the candidate set
     truth = {
         int(r["doc_id"])
-        for r in eng._docs()
+        for r in eng._docs_df
         .filter(
             F.lower(F.col("text")).contains(needle)
             | F.lower(F.col("url")).contains(needle)
@@ -161,7 +161,6 @@ def test_tri_candidate_ids_refutes_absent_term(spark, tiny_index):
     assert eng._tri_candidate_ids("ab") is None  # too short
     # without the lane the prefilter stays out of the way
     eng._tri_post_df = None
-    eng._tri_cand_cache.clear()
     assert eng._tri_candidate_ids("zzqqxxnowhere") is None
 
 
