@@ -649,14 +649,14 @@ BATCH_QUERIES: dict[str, str] = {
 
 def probe_index_batch_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A query SET served through the inverted index by the FUSED
-    queries-as-data plan (SearchEngine.search_batch_fused): the batch
+    queries-as-data lane of SearchEngine.search_batch: the batch
     becomes a broadcast (query_id, term, idf, pos, gate, n_gate) table
     joined once against the term-pruned postings -- one scan + one
     shuffle regardless of batch size, the serving plan whose throughput
     scales with cores (bench scaling.serving).  The set covers every
     fused match rule: bags, a required-first gate, a conjunctive AND
-    gate, and an exclusion drop-pair anti-join.  Row-identical to the
-    per-branch search_batch (pinned by test_search_batch_fused_identity);
+    gate, and an exclusion drop-pair anti-join.  Row-identical to
+    per-query search() (pinned by test_search_batch_identity);
     DuckDB oracle = UNION ALL of per-query BM25 blocks with the gating
     expressed as HAVING counts / NOT IN (see _batch_sql).  Containment ==
     token semantics for the exclusion on this corpus (no vocabulary
@@ -668,7 +668,7 @@ def probe_index_batch_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ix = _documents_simple_index(spark, sf_dir)
     eng = SearchEngine(spark, ix)
-    hits = eng.search_batch_fused(dict(BATCH_QUERIES), k=50)
+    hits = eng.search_batch(dict(BATCH_QUERIES), k=50)
     # same 6dp rounding + re-rank as _rounded_topk, partitioned per query
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("doc_id")

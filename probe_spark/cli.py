@@ -140,9 +140,10 @@ def main(argv: list[str] | None = None) -> int:
 
     ba = sub.add_parser(
         "batch",
-        help="serve a whole query set in one Spark action "
-        "(SearchEngine.search_batch_fused: bag queries share one "
-        "queries-as-data join plan); JSON-lines output keyed by query_id",
+        help="serve a whole query set (SearchEngine.search_batch: "
+        "left-deep keyword chains share one queries-as-data join, every "
+        "other query runs the single-query lane); JSON-lines output "
+        "keyed by query_id",
     )
     ba.add_argument("--index", required=True)
     ba.add_argument(
@@ -550,10 +551,9 @@ def main(argv: list[str] | None = None) -> int:
             print("error: no queries in file", file=sys.stderr)
             return 2
         eng = SearchEngine(spark, args.index)
-        # fused plan: bag queries ride one queries-as-data join, other
-        # shapes fall back to per-branch plans -- rows are identical to
-        # search_batch (test_search_batch_fused_identity)
-        rows = eng.search_batch_fused(
+        # rows are identical to per-query search() calls
+        # (test_search_batch_identity)
+        rows = eng.search_batch(
             queries,
             k=args.k,
             exact=args.exact,

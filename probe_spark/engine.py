@@ -17,6 +17,12 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      1-6 run unchanged.  Opening an engine runs no Spark job either: the
      dictionaries load with pyarrow and the Spark readers are created on
      first Spark-path use.
+  0b. batches (``search_batch``): every query is parsed once and the
+     batch's rescue needles resolve in one resolver call; the left-deep
+     single-keyword chains _fused_chain_gates classifies share ONE
+     queries-as-data join, and every other query runs the single-query
+     lane of search_local (step 0, else steps 1-5 and one collect), its
+     urls read in one lookup for the whole batch.
   1. parse query -> AST + QueryPlan (driver, pure Python, shared w/ oracle)
   2. posting retrieval: filter the term-sorted postings parquet with
      ``term IN (...)`` -- parquet row-group stats prune non-matching row
@@ -1366,11 +1372,16 @@ class SearchEngine:
         self.check_refresh()
         plan = elastic.create_query_plan(query, exact)
         if not with_matches:
-            ranked = self._driver_ranked(
-                plan, k, boost_coverage, exclude_filenames
+            # driver lane: a local relation; only a url read over the
+            # budget runs a Spark job (_urls)
+            hits = self._driver_hits(
+                plan,
+                k,
+                boost_coverage=boost_coverage,
+                exclude_filenames=exclude_filenames,
             )
-            if ranked is not None:
-                return ranked
+            if hits is not None:
+                return self._hits_frame({"": hits}).drop("query_id")
         extra = ("matched_keywords", "score_breakdown") if with_matches else ()
         scored, cand, idfs, zero_score = self._match_frames(
             plan,
@@ -1389,34 +1400,26 @@ class SearchEngine:
             hits = self._hydrate_matches(hits, cand, idfs)
         return self._ranked(hits, extra)
 
-    def _driver_ranked(
-        self,
-        plan: QueryPlan,
-        k: int,
-        boost_coverage: bool,
-        exclude_filenames: bool,
-    ) -> DataFrame | None:
-        """search()'s (rank, doc_id, url, score) frame from the driver lane:
-        the hits' urls come from a pruned doc-store read, and the frame is
-        a local relation built from an Arrow table, so collecting it runs
-        no Spark job.  None when the Spark plan serves the query."""
+    def _hits_frame(
+        self, hits: dict[str, list[tuple[int, float]]]
+    ) -> DataFrame:
+        """(query_id, rank, doc_id, url, score) of per-query top-k ``hits``
+        ({query_id: [(doc_id, score)]}, rank = position in the list), rows
+        in (query_id, rank) order, with every url from ONE _urls lookup.
+        The frame is a local relation built from an Arrow table, so
+        collecting it runs no Spark job."""
         import pyarrow as pa
 
-        hits = self._driver_hits(
-            plan,
-            k,
-            boost_coverage=boost_coverage,
-            exclude_filenames=exclude_filenames,
-        )
-        if hits is None:
-            return None
-        ids = [d for d, _ in hits]
-        docs = self._pruned(self._docs_path, "doc_id", ids, ["doc_id", "url"])
-        if docs is None:
-            return None
-        url = dict(zip(docs["doc_id"].to_pylist(), docs["url"].to_pylist()))
+        rows = [
+            (qid, rank, d, sc)
+            for qid in sorted(hits)
+            for rank, (d, sc) in enumerate(hits[qid], 1)
+        ]
+        qids, ranks, ids, scores = zip(*rows) if rows else ((),) * 4
+        url = self._urls(sorted(set(ids)))
         schema = pa.schema(
             [
+                ("query_id", pa.string()),
                 pa.field("rank", pa.int32(), nullable=False),
                 ("doc_id", pa.int64()),
                 ("url", pa.string()),
@@ -1425,15 +1428,30 @@ class SearchEngine:
         )
         return self.spark.createDataFrame(
             pa.table(
-                [
-                    range(1, len(ids) + 1),
-                    ids,
-                    [url.get(d) for d in ids],
-                    [sc for _, sc in hits],
-                ],
+                [qids, ranks, ids, [url.get(d) for d in ids], scores],
                 schema=schema,
             )
         )
+
+    def _urls(self, ids: list[int]) -> dict[int, str]:
+        """{doc_id: url} of ``ids`` from the doc store: a footer-pruned
+        pyarrow read, or over the driver budget ONE Spark read filtered on
+        the ids."""
+        if not ids:
+            return {}
+        docs = self._pruned(self._docs_path, "doc_id", ids, ["doc_id", "url"])
+        if docs is not None:
+            return dict(
+                zip(docs["doc_id"].to_pylist(), docs["url"].to_pylist())
+            )
+        rows = (
+            self._docs_df.filter(
+                F.expr("doc_id IN (%s)" % ",".join(map(str, ids)))
+            )
+            .select("doc_id", "url")
+            .collect()
+        )
+        return {r["doc_id"]: r["url"] for r in rows}
 
     def _topk_hits(
         self, scored: DataFrame, k: int, exclude_doc_id: int | None = None
@@ -1696,36 +1714,32 @@ class SearchEngine:
         boost_coverage: bool = False,
         exclude_filenames: bool = False,
     ) -> DataFrame:
-        """Serve a whole query SET in ONE Spark action: (query_id, rank,
-        doc_id, url, score), per-query top-k, rank partitioned by query_id.
+        """Per-query top-k of a whole query SET as one frame: (query_id,
+        rank, doc_id, url, score), sorted by (query_id, rank).  Rows are
+        value-identical to per-query ``search()`` calls.
 
-        The cluster serving pattern for an analytic index is a query
-        BATCH (relevance labeling of a query log, offline eval sweeps),
-        and per-job scheduling overhead -- not scoring -- dominates when
-        the queries are issued one action at a time.  Each query's branch
-        keeps its own term-pruned postings scan and TakeOrdered top-k
-        (exactly the single-query physical plan), the branches are
-        unioned lazily, and one action computes them all; Spark schedules
-        the branches' stages concurrently inside the job, so the batch
-        cost approaches max(branch) instead of sum(branch).
+        Every query is parsed once, the batch's rescue needles resolve in
+        ONE warm_rescue_needles call, and each query takes one of two
+        lanes:
 
-        Driver-side planning is batched too: every query's terms resolve
-        through ONE pruned terms-dictionary lookup (term_dfs over the
-        union of terms) instead of a lookup action per query.  Rows are
-        value-identical to per-query ``search()`` calls -- the batch
-        identity test pins this.
+        - fused: the left-deep single-keyword chains _fused_chain_gates
+          classifies (bags, "+required optional", conjunctive AND chains,
+          "-excluded" tails), when boost_coverage is off, become DATA in
+          one queries-as-data join (_fused_topk): one postings scan and
+          one shuffle however many queries fuse;
+        - single-query: every other query runs _local_hits, the lane of
+          search_local (the driver lane, else one Spark top-k collect);
+          rank is the position in its top-k list, and the urls of all
+          these hits come from ONE _urls lookup.
 
-        Top-k + hydration are SHARED across branches (half-fused): each
-        query keeps its own scoring plan (the single-query physical
-        plan), but the scored frames union into ONE query_id-partitioned
-        window and ONE url join instead of a per-branch TakeOrdered +
-        join + window chain.  Scores are computed by the identical
-        per-branch plans, so rows stay f64-exact vs search(); what
-        changes is stage count -- the r4 serving trials measured the
-        branch-union plan at 0.29 scaling efficiency because per-branch
-        top-k/hydration stages are driver fixed cost that more cores
-        cannot absorb, and this removes ~2/3 of them (measured 1.4x on
-        the 25-ref-query batch)."""
+        Measured on 4 cores over the sf0.1 perfbench corpus (5000 docs):
+        at driver budget 0 the fused join serves a 32-query batch_log log
+        in 1.8-2.5 s and 7 jobs, where a search_local loop takes
+        9.0-10.0 s and 87-89 jobs; the branch-union plan (one scoring
+        branch per query, a shared top-k window and url join) that served
+        the other shapes before took 4.2-4.5 s and 21 jobs on the 17
+        reference queries that do not fuse, where a search_local loop
+        takes 1.8-2.9 s and 9 jobs."""
         if not queries:
             raise ValueError("search_batch: empty query set")
         self.check_refresh()
@@ -1733,320 +1747,246 @@ class SearchEngine:
             qid: elastic.create_query_plan(q, exact)
             for qid, q in queries.items()
         }
-        # one dictionary lookup for the union of all plain terms (rescue
-        # terms resolve per-branch exactly as in search())
-        plain = sorted(
-            {
-                t
-                for p in plans.values()
-                for t in p.term_indices
-                if t not in oracle.rescue_terms(p)
-            }
+        # one resolver call for the union of all rescue needles
+        needles = sorted(
+            {t for p in plans.values() for t in oracle.rescue_terms(p)}
         )
-        if plain:
-            self.term_dfs(plain)
-        # resolve the union of rescue needles once (two collects for all
-        # cold needles instead of two per needle per branch)
-        rescues = sorted({t for p in plans.values() for t in oracle.rescue_terms(p)})
-        if rescues:
-            self.warm_rescue_needles(rescues, bool(exclude_filenames))
+        if needles:
+            self.warm_rescue_needles(needles, bool(exclude_filenames))
+        gates_by_q: dict[str, list[str]] = {}
+        if not boost_coverage:
+            for qid, p in plans.items():
+                g = _fused_chain_gates(p, self._excl_only_rescues(p))
+                if g is not None:
+                    gates_by_q[qid] = g
+        loop = sorted(set(plans) - set(gates_by_q))
+        frames = []
+        if loop:
+            frames.append(
+                self._hits_frame(
+                    {
+                        qid: self._local_hits(
+                            plans[qid],
+                            k,
+                            boost_coverage=boost_coverage,
+                            exclude_filenames=exclude_filenames,
+                        )
+                        for qid in loop
+                    }
+                )
+            )
+            if not gates_by_q:
+                return frames[0]
+        frames.append(
+            self._fused_topk(plans, gates_by_q, k, exclude_filenames)
+        )
+        return _union_all(frames).orderBy(F.asc("query_id"), F.asc("rank"))
+
+    # bench.py and perfbench call the batch by this name
+    search_batch_fused = search_batch
+
+    def _fused_topk(
+        self,
+        plans: dict[str, QueryPlan],
+        gates_by_q: dict[str, list[str]],
+        k: int,
+        exclude_filenames: bool,
+    ) -> DataFrame:
+        """search_batch's fused lane: (query_id, rank, doc_id, url, score)
+        of the queries in ``gates_by_q`` ({query_id: _fused_chain_gates
+        result}) from ONE queries-as-data join.
+
+        The queries become DATA instead of plans: a broadcast (query_id,
+        term, idf, pos) table is joined once against the term-pruned
+        postings, scored per (query_id, doc_id) with the SAME
+        keyword-order f64 sum as the lane scorer's left-deep AST, and
+        top-k'd with one window -- one postings scan and one shuffle
+        REGARDLESS of batch size, where a plan per query schedules O(B)
+        stages, a driver cost more cores cannot absorb.
+
+        Required / conjunctive matching fuses as a GATE COUNT: the
+        broadcast query-term table carries a per-term gate flag and the
+        per-query gate total, and docs survive iff they matched every
+        gating term (one extra agg column, no extra shuffle).  Exclusions
+        fuse as DATA in the same aggregation: each excluded term's match
+        rows (postings union memoized containment frames, exactly
+        _match_bag_excluded's drop set) ride the same broadcast
+        query-term table as idf-0 marker rows, and max(excl) applies the
+        drop rule -- no anti-join, no second sort of the scored set;
+        marker rows never enter the score array (null-skipped by
+        collect_list) so kept docs' scores stay f64-identical.  All
+        excluded needles of the batch come from ONE _rescue_frames call.
+        Rows are value-identical to per-query search() -- f64-exact: a
+        one-element ordered sum is 0.0 + x == x for the single-term case
+        and the multi-term association mirrors the lane scorer's --
+        pinned by test_search_batch_identity."""
+        fused = sorted(gates_by_q)
+        # per-query split: positives feed the scoring join, excluded
+        # terms become idf-0 marker rows in the same join (empty for
+        # pure bags)
+        pos_terms_by_q: dict[str, list[str]] = {}
+        excl_terms_by_q: dict[str, list[str]] = {}
+        for qid in fused:
+            p = plans[qid]
+            excl = set(p.excluded_terms)
+            pos_terms_by_q[qid] = [
+                t for t in p.term_indices if t not in excl
+            ]
+            excl_terms_by_q[qid] = [
+                t for t in p.term_indices if t in excl
+            ]
+        all_terms = sorted(
+            {t for qid in fused for t in pos_terms_by_q[qid]}
+        )
+        dfs = self.term_dfs(all_terms)
+        qt_rows = []
+        for qid in fused:
+            p = plans[qid]
+            gates = set(gates_by_q[qid])
+            kws = [
+                kw
+                for t in walk_terms(p.ast)
+                if not t.excluded
+                for kw in t.lowercase_keywords
+            ]
+            for pos, kw in enumerate(kws):
+                qt_rows.append(
+                    (
+                        qid,
+                        kw,
+                        oracle.idf(self.n_docs, dfs.get(kw, 0)),
+                        pos,
+                        1 if kw in gates else 0,
+                        len(gates),
+                        0,
+                    )
+                )
+        # exclusions fuse as DATA in the same shuffle: each excluded
+        # term contributes MARKER rows (idf 0, pos -1, excl 1) from
+        # its token postings union its containment-match frames, and
+        # the per-(query, doc) agg adds one max(excl) column -- a doc
+        # survives iff no marker row reached it.  The 0.0 marker
+        # contributions keep the ordered f64 sum bit-identical
+        # (0.0 + 0.0 == 0.0 precedes every real term), and the
+        # pre-refactor LeftAnti sort-merge join over the full scored
+        # set -- the measured serving bottleneck -- disappears.
+        ex_fn = bool(exclude_filenames)
+        all_excl = sorted(
+            {t for qid in fused for t in excl_terms_by_q[qid]}
+        )
+        xt_rows = sorted(
+            (qid, t) for qid in fused for t in excl_terms_by_q[qid]
+        )
+        for qid, t in xt_rows:
+            qt_rows.append(
+                (qid, t, 0.0, -1, 0, len(set(gates_by_q[qid])), 1)
+            )
+        qt = self.spark.createDataFrame(
+            qt_rows,
+            "query_id string, term string, idf double, pos int, "
+            "gate int, n_gate int, excl int",
+        )
+        post = self._postings_rows(
+            sorted(set(all_terms) | set(all_excl)), exclude_filenames
+        ).select(
+            "term",
+            "doc_id",
+            "tf",
+            "doc_len",
+            F.lit(0).alias("src"),
+        )
+        # every excluded needle of the batch resolves in one resolver
+        # call (two collects for all cold needles, not two per needle)
+        hits = self._rescue_frames(all_excl, ex_fn) if all_excl else None
+        if hits is not None:
+            # markers never score, so doc_len is a placeholder; src=1
+            # restricts these rows to marker qt rows below (a
+            # containment hit is part of a term's DROP set, never of
+            # its scoring postings)
+            post = post.unionByName(
+                hits.select(
+                    "term",
+                    "doc_id",
+                    F.col("tf").cast(post.schema["tf"].dataType).alias("tf"),
+                    F.lit(1)
+                    .cast(post.schema["doc_len"].dataType)
+                    .alias("doc_len"),
+                    F.lit(1).alias("src"),
+                )
+            )
+        tfp = tf_part(
+            F.col("tf").cast("double"),
+            F.col("doc_len").cast("double"),
+            self.avgdl,
+            self.params,
+        )
+        joined = post.join(F.broadcast(qt), "term").filter(
+            # containment-marker rows (src=1) pair only with marker qt
+            # rows; token postings pair with both (a token hit both
+            # scores a positive term and drops an excluded one)
+            ~((F.col("src") == 1) & (F.col("excl") == 0))
+        )
+        scored = (
+            joined.select(
+                "query_id",
+                "doc_id",
+                "pos",
+                "gate",
+                "n_gate",
+                "excl",
+                # marker rows contribute NULL (collect_list skips
+                # nulls, so they never enter the score array; a 0.0
+                # prefix would sum identically -- 0.0 + 0.0 == 0.0 --
+                # but bloats every dropped doc's array for nothing)
+                F.when(
+                    F.col("excl") == 0, F.col("idf") * tfp
+                ).alias("term_score"),
+            )
+            .groupBy("query_id", "doc_id")
+            .agg(
+                F.array_sort(
+                    F.collect_list(
+                        F.when(
+                            F.col("excl") == 0,
+                            F.struct("pos", "term_score"),
+                        )
+                    )
+                ).alias("arr"),
+                F.sum("gate").alias("gates_hit"),
+                F.first("n_gate").alias("n_gate"),
+                F.max("excl").alias("excl_hit"),
+            )
+            # gate-count match rule: required / conjunctive-AND chains
+            # need every gating term present (postings are unique per
+            # (term, doc_id), so gates_hit counts present gate terms);
+            # pure bags have n_gate 0 and pass through.  excl_hit = 1
+            # means some excluded term's postings or containment set
+            # reached this doc: the boolean drop rule, applied in the
+            # SAME shuffle
+            .filter(
+                (F.col("gates_hit") == F.col("n_gate"))
+                & (F.col("excl_hit") == 0)
+            )
+            .select(
+                "query_id",
+                "doc_id",
+                F.aggregate(
+                    "arr", F.lit(0.0), lambda acc, s: acc + s["term_score"]
+                ).alias("score"),
+            )
+            .filter(F.col("score") > 0.0)
+        )
         from pyspark.sql.window import Window
 
-        scored_parts: list[DataFrame] = []
-        zero_parts: list[DataFrame] = []
-        for qid in sorted(queries):
-            scored, _cand, _idfs, zero_score = self._match_frames(
-                plans[qid],
-                boost_coverage=boost_coverage,
-                exclude_filenames=exclude_filenames,
-            )
-            if zero_score:
-                # universal / stopword-only / only-excluded: score-0 docs
-                # in doc_id order, cut per branch (the k-row cut must see
-                # only this query's docs)
-                zero_parts.append(
-                    scored.orderBy(F.asc("doc_id"))
-                    .limit(k)
-                    .select(
-                        F.lit(qid).alias("query_id"), "doc_id", "url", "score"
-                    )
-                )
-            else:
-                scored_parts.append(
-                    scored.select(
-                        F.lit(qid).alias("query_id"), "doc_id", "score"
-                    )
-                )
-        parts: list[DataFrame] = []
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("doc_id")
         )
-        if scored_parts:
-            topk = (
-                _union_all(scored_parts)
-                .withColumn("rank", F.row_number().over(w))
-                .filter(F.col("rank") <= k)
-            )
-            parts.append(
-                topk.join(
-                    self._docs_df.select("doc_id", "url"), "doc_id", "left"
-                ).select("query_id", "rank", "doc_id", "url", "score")
-            )
-        if zero_parts:
-            # scores are all 0.0, so the shared (score desc, doc_id asc)
-            # rank order reduces to doc_id order -- same as _ranked
-            parts.append(
-                _union_all(zero_parts)
-                .withColumn("rank", F.row_number().over(w))
-                .select("query_id", "rank", "doc_id", "url", "score")
-            )
-        return _union_all(parts).orderBy(F.asc("query_id"), F.asc("rank"))
-
-    def search_batch_fused(
-        self,
-        queries: dict[str, str],
-        k: int = 10,
-        exact: bool = False,
-        boost_coverage: bool = False,
-        exclude_filenames: bool = False,
-    ) -> DataFrame:
-        """search_batch with the per-branch plans FUSED into one join.
-
-        search_batch unions one physical plan per query, so a B-query
-        batch schedules O(B) stages -- at cluster scale the driver, not
-        the executors, becomes the bottleneck (the r4 serving trials
-        measured 0.22 scaling efficiency for the branch-union plan:
-        per-branch scheduling is a fixed cost more cores cannot absorb).
-        Here eligible queries become DATA instead of plans: a broadcast
-        (query_id, term, idf, pos) table is joined once against the
-        term-pruned postings, scored per (query_id, doc_id) with the
-        SAME keyword-order f64 sum as the lane scorer's left-deep AST, and
-        top-k'd with one window -- one postings scan and one shuffle
-        REGARDLESS of batch size, the relevance-labeling /
-        offline-eval-sweep plan a 100-TB corpus needs.
-
-        Eligible = left-deep single-keyword operator chains with no field
-        filters (_fused_chain_gates): pure disjunctive bags, "keywords
-        -noise" bags with conjunctive exclusions, "+required optional"
-        queries, and explicit conjunctive AND chains -- probe's dominant
-        query-log shapes.  Required / conjunctive matching fuses as a
-        GATE COUNT: the broadcast query-term table carries a per-term
-        gate flag and the per-query gate total, and docs survive iff
-        they matched every gating term (one extra agg column, no extra
-        shuffle).  Exclusions fuse as DATA in the same aggregation: each
-        excluded term's match rows (postings union memoized containment
-        frames, exactly _match_bag_excluded's drop set) ride the same
-        broadcast query-term table as idf-0 marker rows, and max(excl)
-        applies the drop rule -- no anti-join, no second sort of the
-        scored set; marker rows never enter the score array (null-skipped
-        by collect_list) so kept docs' scores stay f64-identical.  All
-        excluded needles of the batch come from ONE _rescue_frames call.
-        Everything else (required/exact/compound/filtered) falls back to
-        the branch-union plan and the outputs are unioned.  Rows are
-        value-identical to search_batch -- f64-exact: a one-element
-        ordered sum is 0.0 + x == x for the single-term case and the
-        multi-term association mirrors the lane scorer's -- pinned by
-        the fused-vs-branch identity test.  boost_coverage batches
-        delegate wholesale to search_batch, whose lane scorer looks the
-        boost up in lanes.boost_table."""
-        if not queries:
-            raise ValueError("search_batch_fused: empty query set")
-        if boost_coverage:
-            return self.search_batch(
-                queries,
-                k,
-                exact,
-                boost_coverage=True,
-                exclude_filenames=exclude_filenames,
-            )
-        self.check_refresh()
-        plans = {
-            qid: elastic.create_query_plan(q, exact)
-            for qid, q in queries.items()
-        }
-        gates_by_q: dict[str, list[str]] = {}
-        for qid, p in plans.items():
-            g = _fused_chain_gates(p, self._excl_only_rescues(p))
-            if g is not None:
-                gates_by_q[qid] = g
-        fused = sorted(gates_by_q)
-        rest = {qid: queries[qid] for qid in queries if qid not in set(fused)}
-        parts = []
-        if fused:
-            # per-query split: positives feed the scoring join, excluded
-            # terms become idf-0 marker rows in the same join (empty for
-            # pure bags)
-            pos_terms_by_q: dict[str, list[str]] = {}
-            excl_terms_by_q: dict[str, list[str]] = {}
-            for qid in fused:
-                p = plans[qid]
-                excl = set(p.excluded_terms)
-                pos_terms_by_q[qid] = [
-                    t for t in p.term_indices if t not in excl
-                ]
-                excl_terms_by_q[qid] = [
-                    t for t in p.term_indices if t in excl
-                ]
-            all_terms = sorted(
-                {t for qid in fused for t in pos_terms_by_q[qid]}
-            )
-            dfs = self.term_dfs(all_terms)
-            qt_rows = []
-            for qid in fused:
-                p = plans[qid]
-                gates = set(gates_by_q[qid])
-                kws = [
-                    kw
-                    for t in walk_terms(p.ast)
-                    if not t.excluded
-                    for kw in t.lowercase_keywords
-                ]
-                for pos, kw in enumerate(kws):
-                    qt_rows.append(
-                        (
-                            qid,
-                            kw,
-                            oracle.idf(self.n_docs, dfs.get(kw, 0)),
-                            pos,
-                            1 if kw in gates else 0,
-                            len(gates),
-                            0,
-                        )
-                    )
-            # exclusions fuse as DATA in the same shuffle: each excluded
-            # term contributes MARKER rows (idf 0, pos -1, excl 1) from
-            # its token postings union its containment-match frames, and
-            # the per-(query, doc) agg adds one max(excl) column -- a doc
-            # survives iff no marker row reached it.  The 0.0 marker
-            # contributions keep the ordered f64 sum bit-identical
-            # (0.0 + 0.0 == 0.0 precedes every real term), and the
-            # pre-refactor LeftAnti sort-merge join over the full scored
-            # set -- the measured serving bottleneck -- disappears.
-            ex_fn = bool(exclude_filenames)
-            all_excl = sorted(
-                {t for qid in fused for t in excl_terms_by_q[qid]}
-            )
-            xt_rows = sorted(
-                (qid, t) for qid in fused for t in excl_terms_by_q[qid]
-            )
-            for qid, t in xt_rows:
-                qt_rows.append(
-                    (qid, t, 0.0, -1, 0, len(set(gates_by_q[qid])), 1)
-                )
-            qt = self.spark.createDataFrame(
-                qt_rows,
-                "query_id string, term string, idf double, pos int, "
-                "gate int, n_gate int, excl int",
-            )
-            post = self._postings_rows(
-                sorted(set(all_terms) | set(all_excl)), exclude_filenames
-            ).select(
-                "term",
-                "doc_id",
-                "tf",
-                "doc_len",
-                F.lit(0).alias("src"),
-            )
-            # every excluded needle of the batch resolves in one resolver
-            # call (two collects for all cold needles, not two per needle)
-            hits = self._rescue_frames(all_excl, ex_fn) if all_excl else None
-            if hits is not None:
-                # markers never score, so doc_len is a placeholder; src=1
-                # restricts these rows to marker qt rows below (a
-                # containment hit is part of a term's DROP set, never of
-                # its scoring postings)
-                post = post.unionByName(
-                    hits.select(
-                        "term",
-                        "doc_id",
-                        F.col("tf").cast(post.schema["tf"].dataType).alias("tf"),
-                        F.lit(1)
-                        .cast(post.schema["doc_len"].dataType)
-                        .alias("doc_len"),
-                        F.lit(1).alias("src"),
-                    )
-                )
-            tfp = tf_part(
-                F.col("tf").cast("double"),
-                F.col("doc_len").cast("double"),
-                self.avgdl,
-                self.params,
-            )
-            joined = post.join(F.broadcast(qt), "term").filter(
-                # containment-marker rows (src=1) pair only with marker qt
-                # rows; token postings pair with both (a token hit both
-                # scores a positive term and drops an excluded one)
-                ~((F.col("src") == 1) & (F.col("excl") == 0))
-            )
-            scored = (
-                joined.select(
-                    "query_id",
-                    "doc_id",
-                    "pos",
-                    "gate",
-                    "n_gate",
-                    "excl",
-                    # marker rows contribute NULL (collect_list skips
-                    # nulls, so they never enter the score array; a 0.0
-                    # prefix would sum identically -- 0.0 + 0.0 == 0.0 --
-                    # but bloats every dropped doc's array for nothing)
-                    F.when(
-                        F.col("excl") == 0, F.col("idf") * tfp
-                    ).alias("term_score"),
-                )
-                .groupBy("query_id", "doc_id")
-                .agg(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("excl") == 0,
-                                F.struct("pos", "term_score"),
-                            )
-                        )
-                    ).alias("arr"),
-                    F.sum("gate").alias("gates_hit"),
-                    F.first("n_gate").alias("n_gate"),
-                    F.max("excl").alias("excl_hit"),
-                )
-                # gate-count match rule: required / conjunctive-AND chains
-                # need every gating term present (postings are unique per
-                # (term, doc_id), so gates_hit counts present gate terms);
-                # pure bags have n_gate 0 and pass through.  excl_hit = 1
-                # means some excluded term's postings or containment set
-                # reached this doc: the boolean drop rule, applied in the
-                # SAME shuffle
-                .filter(
-                    (F.col("gates_hit") == F.col("n_gate"))
-                    & (F.col("excl_hit") == 0)
-                )
-                .select(
-                    "query_id",
-                    "doc_id",
-                    F.aggregate(
-                        "arr", F.lit(0.0), lambda acc, s: acc + s["term_score"]
-                    ).alias("score"),
-                )
-                .filter(F.col("score") > 0.0)
-            )
-            from pyspark.sql.window import Window
-
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc("doc_id")
-            )
-            topk = scored.withColumn("rank", F.row_number().over(w)).filter(
-                F.col("rank") <= k
-            )
-            parts.append(
-                topk.join(self._docs_df.select("doc_id", "url"), "doc_id", "left")
-                .select("query_id", "rank", "doc_id", "url", "score")
-            )
-        if rest:
-            parts.append(
-                self.search_batch(
-                    rest, k, exact, exclude_filenames=exclude_filenames
-                )
-            )
-        return _union_all(parts).orderBy(F.asc("query_id"), F.asc("rank"))
+        topk = scored.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= k
+        )
+        return topk.join(
+            self._docs_df.select("doc_id", "url"), "doc_id", "left"
+        ).select("query_id", "rank", "doc_id", "url", "score")
 
     def files_only(
         self, query: str, exact: bool = False, exclude_filenames: bool = False
@@ -2336,29 +2276,43 @@ class SearchEngine:
 
         with query_deadline(self.spark, timeout):
             self.check_refresh()
-            plan = elastic.create_query_plan(query, exact)
-            hits = self._driver_hits(
-                plan,
+            return self._local_hits(
+                elastic.create_query_plan(query, exact),
                 k,
                 boost_coverage=boost_coverage,
                 exclude_filenames=exclude_filenames,
             )
-            if hits is not None:
-                return hits
-            scored, _cand, _idfs, zero_score = self._match_frames(
-                plan,
-                boost_coverage=boost_coverage,
-                exclude_filenames=exclude_filenames,
-            )
-            order = (
-                [F.asc("doc_id")]
-                if zero_score
-                else [F.desc("score"), F.asc("doc_id")]
-            )
-            rows = (
-                scored.orderBy(*order)
-                .limit(k)
-                .select("doc_id", "score")
-                .collect()
-            )
+
+    def _local_hits(
+        self,
+        plan: QueryPlan,
+        k: int,
+        *,
+        boost_coverage: bool,
+        exclude_filenames: bool,
+    ) -> list[tuple[int, float]]:
+        """search_local's top-k [(doc_id, score)] of a parsed query: the
+        driver lane (_driver_hits), else one Spark collect of the top-k
+        cut of _match_frames' scored frame."""
+        hits = self._driver_hits(
+            plan,
+            k,
+            boost_coverage=boost_coverage,
+            exclude_filenames=exclude_filenames,
+        )
+        if hits is not None:
+            return hits
+        scored, _cand, _idfs, zero_score = self._match_frames(
+            plan,
+            boost_coverage=boost_coverage,
+            exclude_filenames=exclude_filenames,
+        )
+        order = (
+            [F.asc("doc_id")]
+            if zero_score
+            else [F.desc("score"), F.asc("doc_id")]
+        )
+        rows = (
+            scored.orderBy(*order).limit(k).select("doc_id", "score").collect()
+        )
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]

@@ -112,6 +112,27 @@ def test_tiny_budget_runs_the_spark_plan(spark, tiny_index, monkeypatch):
     assert _jobs(spark) > j0
 
 
+def test_url_read_over_budget_keeps_driver_hits(spark, tiny_index, monkeypatch):
+    """When only the doc store's url read exceeds the budget, search()
+    keeps the driver lane's hits and reads their urls with one Spark job,
+    returning the same rows."""
+    from probe_spark.engine import SearchEngine
+
+    path, _ = tiny_index
+    eng = SearchEngine(spark, path)
+    q = "error handling retry"
+    rows = eng.search(q, k=10).collect()
+    pruned = eng._pruned
+    monkeypatch.setattr(
+        eng,
+        "_pruned",
+        lambda table, *a: None if table == eng._docs_path else pruned(table, *a),
+    )
+    j0 = _jobs(spark)
+    assert eng.search(q, k=10).collect() == rows
+    assert _jobs(spark) - j0 <= 1
+
+
 @pytest.mark.parametrize(
     "query, opts",
     [

@@ -2,6 +2,7 @@
 over the reference query set (FIXTURES.md SS3), determinism, resumability.
 """
 
+import itertools
 import math
 
 import pytest
@@ -106,45 +107,56 @@ def test_determinism(engine):
     assert a == b
 
 
-def test_search_batch_identity(engine):
-    """search_batch (one action for the whole set) must be row-identical
-    to per-query search() -- across plan shapes that exercise different
-    engine state (plain bag, required/boolean, excluded rescue, quoted
-    phrase, field filter), pinning that no per-query planning state
-    leaks between the unioned branches."""
-    batch = {
-        "bag": "error handling retry",
-        "bool": "+error +handler",
-        "excl": "process -deprecated",
-        "phrase": '"error handling" retry',
-        "field": "lang:de firewall",
-    }
-    got = engine.search_batch(batch, k=10).collect()
+BATCH_SHAPES = {
+    "bag": "error handling retry",
+    "bool": "+error +handler",
+    "excl": "process -deprecated",
+    "phrase": '"error handling" retry',
+    "field": "lang:de firewall",
+}
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+@pytest.mark.parametrize(
+    "opts", ["plain", "exclude_filenames", "boost_coverage", "exact"]
+)
+def test_search_batch_identity(engine, monkeypatch, opts, budget):
+    """search_batch must be row-identical to per-query search() over the
+    25 reference queries plus plan shapes that exercise different engine
+    state (plain bag, required/boolean, excluded rescue, quoted phrase,
+    field filter) -- f64-exact, for the fused queries-as-data lane and
+    the single-query lane alike, pinning that no per-query planning
+    state leaks between the queries of a batch.  At driver budget 0
+    every query of both lanes runs its Spark plan."""
+    from probe_spark import indexer
+
+    if budget == "zero":
+        monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    kw = {} if opts == "plain" else {opts: True}
+    batch = {**QUERIES, **BATCH_SHAPES}
+    got = engine.search_batch(batch, k=10, **kw).collect()
     by_q: dict[str, list] = {}
     for r in got:
         by_q.setdefault(r["query_id"], []).append(
             (r["rank"], r["doc_id"], r["url"], r["score"])
         )
-    assert sorted(by_q) == sorted(batch)
+    assert [r["query_id"] for r in got] == sorted(
+        r["query_id"] for r in got
+    )
     for qid, q in batch.items():
         solo = [
             (r["rank"], r["doc_id"], r["url"], r["score"])
-            for r in engine.search(q, k=10).collect()
+            for r in engine.search(q, k=10, **kw).collect()
         ]
-        assert by_q[qid] == solo, f"{qid}: batch != solo\n{by_q[qid]}\n{solo}"
+        assert by_q.get(qid, []) == solo, (
+            f"{qid}: batch != solo\n{by_q.get(qid)}\n{solo}"
+        )
 
 
-def test_search_batch_fused_identity(engine):
-    """search_batch_fused (queries-as-data join plan for bag queries,
-    branch-union fallback for the rest) must be row-identical to
-    search_batch across the WHOLE 25-query reference set -- f64-exact,
-    covering both the fused single-/multi-term shapes and every fallback
-    shape (required, excluded, quoted, filtered, compound, stopword-only,
-    duplicate-keyword)."""
-    got = engine.search_batch(QUERIES, k=10).collect()
-    fused = engine.search_batch_fused(QUERIES, k=10).collect()
-    key = lambda r: (r["query_id"], r["rank"], r["doc_id"], r["url"], r["score"])  # noqa: E731
-    assert [key(r) for r in got] == [key(r) for r in fused]
+def test_search_batch_is_search_batch_fused():
+    from probe_spark.engine import SearchEngine
+
+    assert SearchEngine.search_batch_fused is SearchEngine.search_batch
 
 
 def test_fused_chain_gates_classifier():
@@ -177,14 +189,14 @@ def test_fused_chain_gates_classifier():
     assert gates("firewall retry") is None  # firewall dual-emits
 
 
-def test_search_batch_fused_exclusions(engine):
+def test_search_batch_fused_exclusions(engine, monkeypatch):
     """Fused exclusions (queries-as-data drop-pair anti-join): bagexcl
     queries ride the fused plan -- including a shared excluded term
     across queries, multiple exclusions in one query, an exclusion that
     hits nothing, and one that wipes a term's whole match set -- and stay
     row-identical to per-query search(), with and without
-    exclude_filenames."""
-    from probe_spark import elastic
+    exclude_filenames, at the default driver budget and at 0."""
+    from probe_spark import elastic, indexer
     from probe_spark.engine import SearchEngine, _fused_chain_gates
 
     batch = {
@@ -204,7 +216,9 @@ def test_search_batch_fused_exclusions(engine):
         assert _fused_chain_gates(
             p, SearchEngine._excl_only_rescues(p)
         ) is not None, qid
-    for ex_fn in (False, True):
+    budgets = (indexer.DRIVER_READ_BYTES, 0)
+    for budget, ex_fn in itertools.product(budgets, (False, True)):
+        monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", budget)
         fused = engine.search_batch_fused(
             batch, k=10, exclude_filenames=ex_fn
         ).collect()
@@ -221,7 +235,7 @@ def test_search_batch_fused_exclusions(engine):
                 ).collect()
             ]
             assert by_q.get(qid, []) == solo, (
-                f"{qid} ex_fn={ex_fn}: fused != solo"
+                f"{qid} budget={budget} ex_fn={ex_fn}: fused != solo"
             )
 
 
