@@ -58,7 +58,10 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
 
 Corpus statistics (N, avgdl, per-term df) are global index-time values per
 the design decision in SURVEY.md SS7.0; df for rescue terms is the exact
-containment-or-token count computed by the same job that finds candidates.
+containment-or-token count, taken on the driver from the resolver memo
+united with the needle's own token postings (_query_dfs, the one df rule
+for every query term; a grouped count only for needles too large to
+memoize or over the driver budget).
 """
 
 from __future__ import annotations
@@ -711,10 +714,6 @@ class SearchEngine:
         # dict lives in _reopen, so any on-disk index change
         # (check_refresh fingerprint) drops it with the others.
         self._verified_ids: dict[tuple[str, bool], list[int] | None] = {}
-        # rescue-term df memo (same keying/invalidation): the df of a
-        # rescue term is a corpus-wide constant of the index, so the
-        # per-query df-count action is only paid on first sight
-        self._rescue_df_cache: dict[tuple[str, bool], int] = {}
         self._full_dict = False
         # trigram substring-index lane (indexer._slice_tables): serves the
         # containment rescue in O(trigram df) instead of an O(corpus)
@@ -1186,54 +1185,79 @@ class SearchEngine:
         return out
 
     def _query_dfs(
-        self, plan: QueryPlan, cand: DataFrame, *, exclude_filenames: bool
+        self, plan: QueryPlan, *, exclude_filenames: bool
     ) -> dict[str, int]:
-        """Global df per query term: regular terms from the terms dictionary
-        (driver cache / term-pruned parquet); rescue terms from the
-        candidate rows (their containment scan defines their df).
+        """The one df rule for every query term, decided on the driver:
+        {term: global df} for each of ``plan.term_indices``.
 
-        PURELY-excluded rescue terms skip the df job: their idf only gates
-        the drop decision (a doc is dropped iff its excluded total > 0,
-        i.e. tf > 0 and idf > 0 -- oracle.score_expr), and kept docs have
-        tf = 0 for them, so ANY positive df yields identical results while
-        saving a full doc-store containment scan action (the same
-        observation the WAND engine applies to its synthetic exclusion
-        blocks)."""
+        - Regular terms: the terms dictionary (term_dfs).
+        - Excluded-only rescue needles (_excl_only_rescues): df 1.  Their
+          idf only gates the drop (a doc is dropped iff tf > 0 and idf >
+          0 -- oracle.score_expr), and kept docs have tf = 0 for them, so
+          any positive df gives identical results.
+        - Scored rescue needles: the docs oracle.doc_term_freqs gives tf >
+          0, i.e. the resolver memo's ids united with the needle's own
+          token postings after the -n filter.  A needle absent from the
+          dictionary has no postings, so nothing is read for it.  Needles
+          memoized as too large, or whose postings read exceeds the
+          driver budget, share ONE grouped count over their _term_rows."""
         rescues = oracle.rescue_terms(plan)
-        regular = [t for t in plan.term_indices if t not in rescues]
-        out: dict[str, int] = {}
-        if regular:
-            out.update(self.term_dfs(regular))
         excl_only = self._excl_only_rescues(plan)
-        for t in excl_only:
-            out[t] = 1
-        scored_rescues = sorted(rescues - excl_only)
+        out = dict.fromkeys(plan.term_indices, 0)
+        out.update(self.term_dfs([t for t in out if t not in rescues]))
+        out.update(dict.fromkeys(excl_only, 1))
+        scored = sorted(rescues - excl_only)
+        if not scored:
+            return out
         ex_key = bool(exclude_filenames)
-        for t in list(scored_rescues):
-            if (t, ex_key) in self._rescue_df_cache:
-                # a rescue term's df is a corpus-wide constant of the index
-                # (invalidated with the other caches on refresh): the count
-                # action is only paid on the term's first sighting
-                out[t] = self._rescue_df_cache[(t, ex_key)]
-                scored_rescues.remove(t)
-        if scored_rescues:
+        self.warm_rescue_needles(scored, ex_key)
+        memo = {t: self._verified_ids[(t, ex_key)] for t in scored}
+        hit = {t: set(ids) for t, ids in memo.items() if ids is not None}
+        tok = self.term_dfs(list(hit))
+        posted = [t for t in hit if tok.get(t)]
+        if posted:
+            rows = self._driver_postings(posted, ["term", "doc_id"], ex_key)
+            if rows is None:  # over the budget: counted below
+                hit = {t: v for t, v in hit.items() if t not in posted}
+            else:
+                for t, d in zip(rows["term"].to_pylist(), rows["doc_id"].to_pylist()):
+                    hit[t].add(d)
+        out.update({t: len(v) for t, v in hit.items()})
+        counted = [t for t in scored if t not in hit]
+        if counted:
             rows = (
-                cand.filter(F.col("term").isin(scored_rescues))
+                self._term_rows(plan, counted, exclude_filenames=ex_key)
                 .groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
+                .count()
                 .collect()
             )
-            got = {r["term"]: int(r["df"]) for r in rows}
-            for t in scored_rescues:
-                d = got.get(t, 0)
-                out[t] = d
-                self._rescue_df_cache[(t, ex_key)] = d
+            out.update({r["term"]: int(r["count"]) for r in rows})
         return out
+
+    def _driver_postings(
+        self, terms: list[str], cols: list[str], exclude_filenames: bool
+    ):
+        """The postings rows of ``terms`` as an Arrow table of ``cols``,
+        read on the driver (pruned_read), with -n's url-token-only matches
+        dropped as in _postings_rows; None over the driver budget."""
+        import pyarrow.compute as pc
+
+        extra = ["tf", "tf_url"] if exclude_filenames else []
+        rows = self._pruned(
+            self._postings_path,
+            "term",
+            terms,
+            cols + [c for c in extra if c not in cols],
+        )
+        if rows is None or not exclude_filenames:
+            return rows
+        rows = rows.filter(pc.greater(pc.subtract(rows["tf"], rows["tf_url"]), 0))
+        return rows.select(cols)
 
     @staticmethod
     def _excl_only_rescues(plan: QueryPlan) -> set[str]:
-        """Rescue terms that are excluded and never positive -- the ones
-        whose df is substitutable (see _query_dfs)."""
+        """Rescue terms that are excluded and never positive: their idf only
+        gates the drop, so _query_dfs gives them df 1 and no count."""
         rescues = oracle.rescue_terms(plan)
         pos_kws = (
             {
@@ -1272,26 +1296,20 @@ class SearchEngine:
 
         if plan.is_universal_query or oracle.rescue_terms(plan):
             return None
-        cols = ["term", "doc_id", "tf", "doc_len"]
-        if exclude_filenames:
-            cols.append("tf_url")
-        rows = self._pruned(self._postings_path, "term", plan.term_indices, cols)
+        rows = self._driver_postings(
+            list(plan.term_indices),
+            ["term", "doc_id", "tf", "doc_len"],
+            exclude_filenames,
+        )
         if rows is None:
             return None
-        if exclude_filenames:
-            # -n: url-token-only matches drop out, as in _term_rows
-            rows = rows.filter(
-                pc.greater(pc.subtract(rows["tf"], rows["tf_url"]), 0)
-            )
         if any(_filter_values(plan)):
             ok = self._driver_filter(plan, pc.unique(rows["doc_id"]))
             if ok is None:
                 return None
             rows = rows.filter(pc.is_in(rows["doc_id"], value_set=ok))
-        dfs = self.term_dfs(list(plan.term_indices))
-        idfs = {
-            t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices
-        }
+        dfs = self._query_dfs(plan, exclude_filenames=exclude_filenames)
+        idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items()}
         ids, sc = score_rows(
             rows,
             plan.ast,
@@ -2072,11 +2090,11 @@ class SearchEngine:
 
         # global df BEFORE field filters narrow the candidate set -- stats
         # are corpus-wide (SURVEY.md SS7.0), filters only restrict results
-        dfs = self._query_dfs(plan, cand, exclude_filenames=exclude_filenames)
+        dfs = self._query_dfs(plan, exclude_filenames=exclude_filenames)
+        idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items()}
 
         if fdocs is not None:
             cand = cand.join(fdocs.select("doc_id"), "doc_id", "leftsemi")
-        idfs = {t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in plan.term_indices}
 
         scored = self._score_lanes(
             cand, plan, list(plan.term_indices), idfs, boost_coverage
@@ -2106,14 +2124,8 @@ class SearchEngine:
         pos_cand = self._term_rows(
             plan, pos_terms, exclude_filenames=exclude_filenames
         )
-        dfs = self.term_dfs(pos_terms)
-        idfs = {
-            t: oracle.idf(self.n_docs, dfs.get(t, 0)) for t in pos_terms
-        }
-        for t in excl_terms:
-            # excluded idf only gates the drop decision (tf>0) -- any
-            # positive df is equivalent; mirror _query_dfs's substitution
-            idfs[t] = oracle.idf(self.n_docs, 1)
+        dfs = self._query_dfs(plan, exclude_filenames=exclude_filenames)
+        idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items()}
         if fdocs is not None:
             pos_cand = pos_cand.join(
                 fdocs.select("doc_id"), "doc_id", "leftsemi"

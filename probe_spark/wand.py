@@ -314,12 +314,6 @@ class WandEngine:
             self._seg_stats().count()
         self._fallback.pin_hot(materialize=False)
 
-    def _idfs(self, terms: list[str]) -> dict[str, float]:
-        dfs = self._fallback.term_dfs(terms)
-        return {
-            t: oracle.idf(self.n_docs, df) for t, df in dfs.items() if df
-        }
-
     def _score_segs(
         self,
         blocks: DataFrame,
@@ -542,21 +536,7 @@ class WandEngine:
                 exclude_filenames=exclude_filenames,
             )
         pairs = self.search_local(query, k, exact=exact, boost_coverage=boost_coverage)
-        from pyspark.sql import Row
-
-        hits = self.spark.createDataFrame(
-            [
-                Row(rank=i + 1, doc_id=int(d), score=float(s))
-                for i, (d, s) in enumerate(pairs)
-            ],
-            "rank int, doc_id long, score double",
-        )
-        docs = self._fallback._docs_df.select("doc_id", "url")
-        return (
-            hits.join(docs, "doc_id", "left")
-            .select("rank", "doc_id", "url", "score")
-            .orderBy("rank")
-        )
+        return self._fallback._hits_frame({"": pairs}).drop("query_id")
 
     def search_local(
         self,
@@ -624,36 +604,14 @@ class WandEngine:
         rescues = oracle.rescue_terms(plan)
         dict_terms = [t for t in pos_terms if t not in rescues]
         pos_rescues = sorted(t for t in pos_terms if t in rescues)
-        idfs = self._idfs(dict_terms) if dict_terms else {}
-        rescue_rows = None
-        if pos_rescues:
-            # positive rescue (quoted exact) terms: containment rows from
-            # the flat engine's rescue path (token postings ∪ substring
-            # scan, tf = max); their df is the containment count -- same
-            # semantics as SearchEngine._query_dfs
-            rescue_rows = self._fallback._term_rows(
-                plan, pos_rescues, exclude_filenames=False
-            ).persist()
-            for r in (
-                rescue_rows.groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .collect()
-            ):
-                if int(r["df"]) > 0:
-                    idfs[r["term"]] = oracle.idf(self.n_docs, int(r["df"]))
-        if not idfs:
+        # every df, rescue needles and excluded terms included, from the
+        # flat engine's one rule; terms no doc holds get no idf
+        dfs = self._fallback._query_dfs(plan, exclude_filenames=False)
+        idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items() if d}
+        if not any(t in idfs for t in pos_terms):
             # no positive query term exists in the corpus (df = 0 for all):
-            # nothing can score -- and an EMPTY literal map would not even
-            # analyze (map()[term] is void-typed)
-            if rescue_rows is not None:
-                rescue_rows.unpersist()
+            # nothing can score
             return []
-        # an excluded term's idf only gates the drop decision (total > 0
-        # <=> tf > 0 and idf > 0); the oracle's containment df is >= 1
-        # whenever any doc matches, so any positive constant is faithful
-        for t in excl:
-            if idfs.get(t, 0.0) <= 0.0:
-                idfs[t] = 1.0
         term_pos = {
             kw: i
             for i, kw in enumerate(
@@ -667,8 +625,6 @@ class WandEngine:
         self._refresh_blocks()
         if self._blocks_df is None:
             # no blocks table at all: nothing compacted yet
-            if rescue_rows is not None:
-                rescue_rows.unpersist()
             return self._fallback.search_local(
                 query, k, exact=exact, boost_coverage=boost_coverage
             )
@@ -685,16 +641,21 @@ class WandEngine:
             if dict_terms
             else None
         )
-        if rescue_rows is not None:
-            # synthetic blocks for positive rescue terms join the scoring
-            # set BEFORE must-filtering and upper bounds, so segment
-            # pruning accounts for them.  Dictionary blocks for these
+        if pos_rescues:
+            # synthetic blocks for positive rescue (quoted exact) terms,
+            # from the flat engine's rescue rows (token postings ∪
+            # substring scan, tf = max), join the scoring set BEFORE
+            # must-filtering and upper bounds, so segment pruning accounts
+            # for them.  Dictionary blocks for these
             # terms are excluded above -- _term_rows already unioned token
             # postings in (max tf), a second copy would double-count.
             from probe_spark.compaction import BLOCKS_SCHEMA, encode_posting_group
 
             rblocks = (
-                rescue_rows.withColumn(
+                self._fallback._term_rows(
+                    plan, pos_rescues, exclude_filenames=False
+                )
+                .withColumn(
                     "seg", F.shiftright(F.col("doc_id"), SEG_BITS)
                 )
                 .groupBy("term", "seg")
@@ -934,7 +895,5 @@ class WandEngine:
             if sblocks is not blocks:
                 sblocks.unpersist()
             blocks.unpersist()
-            if rescue_rows is not None:
-                rescue_rows.unpersist()
         results.sort(key=lambda x: (-x[1], x[0]))
         return results[:k]

@@ -107,14 +107,21 @@ def test_wand_boolean_matches_oracle(spark, compacted, tiny_oracle, query):
 
 
 def test_wand_search_dataframe_api(spark, compacted):
-    """WandEngine.search returns the SearchEngine-shaped ranked DataFrame
-    with hydrated urls."""
+    """WandEngine.search returns the flat engine's search() rows, urls
+    hydrated, as a local relation that collects with no Spark job."""
+    from probe_spark.engine import SearchEngine
     from probe_spark.wand import WandEngine
 
     path, _ = compacted
-    rows = WandEngine(spark, path).search("firewall whitelist", k=5).collect()
+    q = "firewall whitelist"
+    frame = WandEngine(spark, path).search(q, k=5)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = sched.nextJobId()
+    rows = frame.collect()
+    assert sched.nextJobId() == j0  # a local relation: no Spark job
     assert [r["rank"] for r in rows] == list(range(1, len(rows) + 1))
     assert all(r["url"] and r["score"] > 0 for r in rows)
+    assert rows == SearchEngine(spark, path).search(q, k=5).collect()
 
 
 def test_wand_engine_differential_random_queries(spark, compacted, tiny_oracle):
@@ -325,6 +332,7 @@ def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
     from pyspark.sql import functions as F
 
     from probe_spark import oracle
+    from probe_spark.elastic import create_query_plan
     from probe_spark.wand import WandEngine
 
     path, _ = compacted
@@ -339,7 +347,11 @@ def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
         blocks.groupBy("term", "seg").count().filter("count > 1").count()
     )
     assert multi > 0, "fixture terms must span multiple blocks per segment"
-    idfs = eng._idfs(terms)
+    dfs = eng._fallback._query_dfs(
+        create_query_plan(q, False), exclude_filenames=False
+    )
+    assert sorted(dfs) == terms
+    idfs = {t: oracle.idf(eng.n_docs, d) for t, d in dfs.items()}
     term_pos = {t: i for i, t in enumerate(terms)}
 
     full = eng._score_segs(blocks, idfs, None, term_pos).collect()

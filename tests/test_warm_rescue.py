@@ -6,7 +6,8 @@ too-large verified set, sub-trigram, corpus-refuted and no trigram lane;
 for one needle and for four in one call.  Caps are forced per class via
 instance attributes.  The job-count tests pin that one resolver serves a
 single cold needle no heavier than the per-needle pipeline it replaced,
-and a batch of needles lighter than one query per needle."""
+and a batch of needles lighter than one query per needle.  The df rule
+(_query_dfs) must give every needle class the oracle's global df."""
 
 from __future__ import annotations
 
@@ -103,16 +104,18 @@ def test_resolver_without_lane(spark, tiny_index, docs):
 
 
 # Spark jobs of the first (cold) and second (memoized) search_local of a
-# query on a fresh engine, measured at the commit before the one resolver
-# (per-needle pipeline plus a batch warmer) with the test session.
+# query on a fresh engine, with the test session.  The cold bounds are
+# measured with rescue dfs taken from the resolver memo (_query_dfs runs
+# no job); the warm bounds are the ones measured at the commit before the
+# one resolver (per-needle pipeline plus a batch warmer).
 PARENT_JOBS = {
-    "in-pushdown": ('"error handling"', {}, 10, 3),
+    "in-pushdown": ('"error handling"', {}, 6, 3),
     "excluded": ('network -"firewall rules"', {}, 5, 3),
-    "sub-trigram": ('"st"', {}, 9, 3),
-    "refuted": ('"zzqqxxnowhere"', {}, 2, 1),
-    "declined": ('"error handling"', CLASSES["declined-fullscan"], 9, 3),
-    "lazy-toolarge": ('"error handling"', CLASSES["lazy-toolarge"], 12, 3),
-    "no-lane": ('"error handling"', {"_tri_post_df": None}, 9, 3),
+    "sub-trigram": ('"st"', {}, 5, 3),
+    "refuted": ('"zzqqxxnowhere"', {}, 1, 1),
+    "declined": ('"error handling"', CLASSES["declined-fullscan"], 5, 3),
+    "lazy-toolarge": ('"error handling"', CLASSES["lazy-toolarge"], 8, 3),
+    "no-lane": ('"error handling"', {"_tri_post_df": None}, 5, 3),
 }
 
 
@@ -148,3 +151,50 @@ def test_batch_of_needles_beats_one_query_each(spark, tiny_index):
         _jobs(spark, lambda: eng.search_local(q, 10)) for q in queries.values()
     )
     assert batch < single, (batch, single)
+
+
+# one query holding a needle of every class: multi-word (lane-served),
+# single-token and also a dictionary term, sub-trigram, refuted, and an
+# excluded-only needle, beside a regular term
+DF_QUERY = '"error handling" "firewall" "st" "zzqqxxnowhere" retry -"firewall rules"'
+DF_PATCHES = {
+    "default": {},
+    "declined": CLASSES["declined-fullscan"],
+    "lazy-toolarge": CLASSES["lazy-toolarge"],
+    "no-lane": {"_tri_post_df": None},
+}
+
+
+@pytest.mark.parametrize("budget", ["default", "zero"])
+@pytest.mark.parametrize("cls", sorted(DF_PATCHES))
+def test_query_dfs_equal_oracle(
+    spark, tiny_index, tiny_oracle, monkeypatch, cls, budget
+):
+    """_query_dfs, the one df rule, gives every scored rescue needle and
+    regular term the oracle's global df, with and without -n; excluded-
+    only needles get df 1.  With every memo entry an id list and the
+    reads within the budget it runs no Spark job."""
+    from probe_spark import elastic, indexer, oracle
+
+    if budget == "zero":
+        monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    eng = _engine(spark, tiny_index, DF_PATCHES[cls])
+    plan = elastic.create_query_plan(DF_QUERY, False)
+    excl_only = eng._excl_only_rescues(plan)
+    assert excl_only == {"firewall rules"}
+    assert eng.term_dfs(["firewall"])["firewall"] > 0  # postings are read
+    for ex_fn in (False, True):
+        got = eng._query_dfs(plan, exclude_filenames=ex_fn)
+        want = oracle.global_df(tiny_oracle, plan, ex_fn)
+        assert {t: got[t] for t in want if t not in excl_only} == {
+            t: d for t, d in want.items() if t not in excl_only
+        }
+        assert all(got[t] == 1 for t in excl_only)
+        lists = all(
+            eng._verified_ids[(t, ex_fn)] is not None
+            for t in oracle.rescue_terms(plan) - excl_only
+        )
+        if lists and budget == "default":
+            assert _jobs(
+                spark, lambda: eng._query_dfs(plan, exclude_filenames=ex_fn)
+            ) == 0
