@@ -136,8 +136,11 @@ def probe_index_bm25_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def probe_index_wand_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same query/oracle as probe_index_bm25_simple but answered by the
-    segment-pruned WAND engine over the compacted varbyte BLOCK index --
-    puts codec + compaction + block-max pruning under the DuckDB oracle."""
+    WAND engine over the compacted varbyte BLOCK index.  The bag is
+    rescue-free, so at sf0.01 and sf0.1 its reads fit the driver budget and
+    the flat engine's driver lane serves it (0 Spark jobs); the segment
+    plan and its one scorer stay under the DuckDB gate through
+    probe_index_wand_bool_simple, whose -window is a rescue term."""
     from probe_spark.wand import WandEngine
 
     ix = _documents_simple_index(spark, sf_dir)

@@ -265,9 +265,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if ok else 1
 
     if args.cmd == "config":  # driver-side, no Spark session
+        import inspect
+
         from probe_spark import dedup, indexer, watchdog
         from probe_spark.config import DEFAULT_BM25
         from probe_spark.engine import SearchEngine
+        from probe_spark.wand import WandEngine
+
+        wand_defaults = inspect.signature(WandEngine).parameters
 
         out: dict = {
             "bm25": {"k1": DEFAULT_BM25.k1, "b": DEFAULT_BM25.b},
@@ -291,8 +296,8 @@ def main(argv: list[str] | None = None) -> int:
             },
             "dedup": {"band_bucket_cap": dedup.BAND_BUCKET_CAP},
             "wand": {
-                "phase1_segs_default": 8,
-                "phase2_batch_default": 256,
+                "phase1_segs_default": wand_defaults["phase1_segs"].default,
+                "phase2_batch_default": wand_defaults["phase2_batch"].default,
             },
         }
         if args.index:

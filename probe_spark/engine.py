@@ -714,6 +714,10 @@ class SearchEngine:
         # dict lives in _reopen, so any on-disk index change
         # (check_refresh fingerprint) drops it with the others.
         self._verified_ids: dict[tuple[str, bool], list[int] | None] = {}
+        # the df _query_dfs counted for a memoized needle it cannot take
+        # from the memo (a None entry, or a postings read over the budget),
+        # same keys; cleared wherever _verified_ids is
+        self._counted_dfs: dict[tuple[str, bool], int] = {}
         self._full_dict = False
         # trigram substring-index lane (indexer._slice_tables): serves the
         # containment rescue in O(trigram df) instead of an O(corpus)
@@ -1055,6 +1059,7 @@ class SearchEngine:
             # make room for the WHOLE call up front: a call may exceed the
             # cap transiently, but never evicts needles it resolves
             memo.clear()
+            self._counted_dfs.clear()
             cold = sorted(set(needles))
         cap = self._ISIN_CAP
         picks = {t: self._tri_pick(t) for t in cold}
@@ -1200,7 +1205,8 @@ class SearchEngine:
           token postings after the -n filter.  A needle absent from the
           dictionary has no postings, so nothing is read for it.  Needles
           memoized as too large, or whose postings read exceeds the
-          driver budget, share ONE grouped count over their _term_rows."""
+          driver budget, share ONE grouped count over their _term_rows,
+          kept in _counted_dfs beside their memo entries."""
         rescues = oracle.rescue_terms(plan)
         excl_only = self._excl_only_rescues(plan)
         out = dict.fromkeys(plan.term_indices, 0)
@@ -1223,15 +1229,19 @@ class SearchEngine:
                 for t, d in zip(rows["term"].to_pylist(), rows["doc_id"].to_pylist()):
                     hit[t].add(d)
         out.update({t: len(v) for t, v in hit.items()})
+        known = self._counted_dfs
         counted = [t for t in scored if t not in hit]
-        if counted:
+        todo = [t for t in counted if (t, ex_key) not in known]
+        if todo:
             rows = (
-                self._term_rows(plan, counted, exclude_filenames=ex_key)
+                self._term_rows(plan, todo, exclude_filenames=ex_key)
                 .groupBy("term")
                 .count()
                 .collect()
             )
-            out.update({r["term"]: int(r["count"]) for r in rows})
+            got = {r["term"]: int(r["count"]) for r in rows}
+            known.update({(t, ex_key): got.get(t, 0) for t in todo})
+        out.update({t: known[(t, ex_key)] for t in counted})
         return out
 
     def _driver_postings(

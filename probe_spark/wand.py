@@ -21,70 +21,79 @@ top-k; a doc in a must-pruned segment lacks a keyword every scoring doc
 needs.  Ties at theta live in un-pruned segments and are resolved by the
 final exact sort.
 
-Two in-segment scorers:
-  * disjunctive OR-bags: dense numpy accumulation (no Python per doc);
-  * general boolean (required/And/Or, multi-keyword terms): candidates =
-    intersection of must-keyword postings, then lanes.eval_and_score on
-    its numpy backend -- the scorer the flat engine runs on its Column
-    backend, so rank identity is structural.
-Exact/excluded (containment-rescue) terms and field filters fall back to
-the flat-postings engine (engine.py).
+Routing (search_local): the query is parsed and the index refreshed once.
+The flat engine (engine.py) serves every query the segment plan does not
+own -- -n, universal, only-excluded, a keyword both excluded and positive,
+no blocks table -- through its _local_hits, and every rescue-free query its
+driver lane (_driver_hits) can answer with no Spark job.  The segment plan
+serves the rest: queries with a rescue term (quoted exact or excluded,
+containment-matched; their rows come from the flat engine's resolver and
+are re-encoded as synthetic blocks) and rescue-free queries over the
+driver budget.
 
-Everything stays in DataFrames: segment scoring is one Arrow applyInPandas
-over (seg) groups over decoded blocks.
+One in-segment scorer (_score_segs): decode the blocks into per-term tf
+lanes, mask by the must keywords, then lanes.eval_and_score on its numpy
+backend -- the scorer the flat engine runs on its Column backend and its
+driver lane, so rank identity is structural.  Plain OR-bags also skip
+blocks that cannot reach phase 2's theta.
+
+The segment plan stays in DataFrames: segment scoring is one Arrow
+applyInPandas over (seg) groups over decoded blocks.
 """
 
 from __future__ import annotations
 
+from collections import Counter
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from probe_spark import elastic, oracle
-from probe_spark.compaction import SEG_BITS, SEG_SIZE
+from probe_spark.compaction import (
+    BLOCKS_SCHEMA,
+    SEG_BITS,
+    SEG_SIZE,
+    encode_posting_group,
+)
 from probe_spark.config import DEFAULT_BM25, BM25Params
 from probe_spark.engine import SearchEngine
-from probe_spark.lanes import boost_table, tf_part
+from probe_spark.lanes import tf_part
 
-_SCORE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-    ]
-)
+_SCORE_SCHEMA = "doc_id long, score double"
 
 
-def idf_map_expr(idfs: dict[str, float]):
-    """Literal map Column term -> idf (missing terms fall out as null,
+def _lit_map(values: dict[str, float]):
+    """Literal map Column term -> value (missing terms fall out as null,
     which nulls the product -- those blocks contribute no upper bound)."""
     return F.create_map(
-        *[x for t, v in sorted(idfs.items()) for x in (F.lit(t), F.lit(v))]
+        *[x for t, v in sorted(values.items()) for x in (F.lit(t), F.lit(v))]
     )
 
 
-def _wand_supported(plan) -> bool:
-    """Queries the segment engine can serve.  Excluded AND positive rescue
-    (quoted exact) terms are served: their containment rows come from the
-    flat engine's rescue path and are re-encoded as synthetic blocks (see
-    search_local), with containment df driving their idf.  Field filters
-    are served by semi-joining the scored docs against the filtered doc
-    set (filters only REMOVE docs, so segment upper-bound pruning stays
-    sound).  Remaining fallbacks: universal / stopword-only queries and
-    only-excluded queries (score-0 doc-store scans -- no blocks involved
-    at all)."""
-    return bool(
-        plan.ast is not None
-        and not plan.is_universal_query
-        and not plan.has_only_excluded_terms
-        and plan.term_indices
+def _positive_keywords(plan) -> Counter:
+    """Keywords of the query's non-excluded Terms, counted once per Term
+    node (empty for universal, stopword-only and only-excluded
+    queries)."""
+    if plan.ast is None or plan.is_universal_query:
+        return Counter()
+    return Counter(
+        kw
+        for t in elastic.walk_terms(plan.ast)
+        if not t.excluded
+        for kw in t.lowercase_keywords
     )
+
+
+def _segment_owned(plan) -> bool:
+    """Queries the segment plan can serve: some positive keyword, and none
+    that is also excluded (that keyword would mix containment-rescue df
+    with dictionary df -- the flat engine owns that corner).  Field
+    filters are served by semi-joining the scored docs against the
+    filtered doc set (filters only REMOVE docs, so segment upper-bound
+    pruning stays sound)."""
+    pos = _positive_keywords(plan).keys()
+    return bool(pos) and not (pos & plan.excluded_terms)
 
 
 def _must_keywords(plan) -> frozenset[str]:
@@ -119,9 +128,9 @@ def _must_keywords(plan) -> frozenset[str]:
 
 def _is_disjunctive_bag(plan) -> bool:
     """True when the query is a pure OR-bag of optional non-exact terms:
-    score == sum of per-term BM25 and match == any term present.  Such a
-    query is scored by the dense accumulation of _score_segs (with
-    intra-segment block skipping) instead of the boolean lane scorer."""
+    score == sum of per-term BM25 and match == any term present.  Only
+    such a query gets _score_segs' intra-segment block skipping, whose
+    bound is that per-keyword sum."""
     if plan.ast is None or plan.has_required_anywhere or plan.excluded_terms:
         return False
     all_kws: list[str] = []
@@ -130,16 +139,16 @@ def _is_disjunctive_bag(plan) -> bool:
             return False
         # multi-keyword terms (compound splits, e.g. "deadline" ->
         # dead+line) sum INSIDE the Term first, then node totals add --
-        # the flat keyword sum here is the same value but a different f64
+        # the same value as the flat keyword sum but a different f64
         # association (observed flipping the last ulp at 100k docs), so
-        # those route to the lane scorer which mirrors the tree exactly
+        # the skip bound is kept to single-keyword terms
         if len(t.lowercase_keywords) > 1:
             return False
         all_kws.extend(t.lowercase_keywords)
     # a keyword repeated across Term nodes contributes once per node to the
     # expression score (e.g. "repository OR repositori" where the exception
-    # dual-emit puts "repositori" in both terms) -- the flat per-term sum
-    # would undercount, so bail to the lane scorer
+    # dual-emit puts "repositori" in both terms) -- the flat per-term bound
+    # would undercount it
     if len(all_kws) != len(set(all_kws)):
         return False
 
@@ -182,13 +191,9 @@ class WandEngine:
         # half of phase 0 (see _seg_stats)
         self._seg_stats_df: DataFrame | None = None
         self._seg_stats_key: tuple | None = None
-        p = Path(self.index_dir)
-        from probe_spark.engine import _read_stats
-
-        self.n_docs, self.avgdl = _read_stats(p / "stats")
-        self._blocks_path = str(p / "blocks")
-        self._terms_path = str(p / "terms")
         self._fallback = SearchEngine(spark, index_dir, params)
+        self.n_docs, self.avgdl = self._fallback.n_docs, self._fallback.avgdl
+        self._blocks_path = str(Path(self.index_dir) / "blocks")
         # create the blocks reader once: spark.read.parquet re-lists files
         # and re-infers partitioning on every call (engine.py does the same
         # for its tables) -- measurable fixed overhead per query.  The
@@ -266,6 +271,15 @@ class WandEngine:
             self.params,
         )
 
+    def _max_tfp(self, blocks: DataFrame) -> DataFrame:
+        """(term, seg, max_tfp) of ``blocks``: each (term, seg)'s largest
+        block tf_part bound."""
+        return (
+            blocks.select("term", "seg", self._tfp_expr().alias("tfp"))
+            .groupBy("term", "seg")
+            .agg(F.max("tfp").alias("max_tfp"))
+        )
+
     def _seg_stats(self) -> DataFrame:
         """(term, seg, max_tfp): the per-segment upper-bound statistics,
         persisted ACROSS queries.  idf * max(tfp) == max(idf * tfp)
@@ -280,14 +294,7 @@ class WandEngine:
             return self._seg_stats_df
         if self._seg_stats_df is not None:
             self._seg_stats_df.unpersist()
-        self._seg_stats_df = (
-            self._blocks_df.select(
-                "term", "seg", self._tfp_expr().alias("tfp")
-            )
-            .groupBy("term", "seg")
-            .agg(F.max("tfp").alias("max_tfp"))
-            .persist()
-        )
+        self._seg_stats_df = self._max_tfp(self._blocks_df).persist()
         self._seg_stats_key = key
         return self._seg_stats_df
 
@@ -319,34 +326,39 @@ class WandEngine:
         blocks: DataFrame,
         idfs: dict[str, float],
         k: int | None,
-        term_pos: dict[str, int],
+        plan,
+        must_kws: tuple[str, ...],
         boost: bool = False,
-        n_terms: int = 0,
         theta: float = 0.0,
     ) -> DataFrame:
-        """Per-seg dense scoring: decode blocks, accumulate BM25 into a
-        seg-local array, emit the seg's top-k (score desc, doc_id asc).
-        Terms accumulate in AST keyword order (term_pos) so double sums
-        match the oracle bit-for-bit.  ``boost`` applies the R7 coverage
-        boost (matched-term count per doc rides the same decode pass).
+        """Per-seg scoring: decode blocks into dense per-term tf lanes,
+        intersect the must-keyword lanes to get candidates (any keyword
+        when there is none), then evaluate + score the AST as numpy lane
+        ops over the candidates (lanes.eval_and_score -- bit-identical to
+        the scalar oracle, differential-tested).  ``boost`` applies the R7
+        coverage boost.  Emits the seg's top-k (score desc, doc_id asc).
 
-        ``theta`` > 0 enables INTRA-segment block skipping (phase 2 only;
-        the reference's batched early termination at block granularity,
-        ranking.rs two-stage analog): a block of term t is decoded only if
-        ub_block(t) + sum over other terms of their seg-max block ub can
-        still reach theta.  Soundness: docs appear in exactly one block per
-        (term, seg), so for any doc d touching a skipped block its true
-        score <= that skipped block's combined bound < theta -- d either
-        vanishes or surfaces with an underestimated partial score, and
-        either way it cannot displace the phase-1 top-k (all >= theta).
-        Docs touching only kept blocks accumulate EXACTLY as without
-        skipping, so every score >= theta is exact and rank identity
-        holds.  Only the disjunctive path uses this: `_is_disjunctive_bag`
+        ``theta`` > 0 enables INTRA-segment block skipping for plain
+        OR-bags (_is_disjunctive_bag; phase 2 only; the reference's batched
+        early termination at block granularity, ranking.rs two-stage
+        analog): a block of term t is decoded only if ub_block(t) + sum
+        over other terms of their seg-max block ub can still reach theta.
+        Soundness: docs appear in exactly one block per (term, seg), so for
+        any doc d touching a skipped block its true score <= that skipped
+        block's combined bound < theta -- d either vanishes or surfaces
+        with an underestimated partial score, and either way it cannot
+        displace the phase-1 top-k (all >= theta).  Docs touching only
+        kept blocks score EXACTLY as without skipping, so every score >=
+        theta is exact and rank identity holds.  `_is_disjunctive_bag`
         guarantees no excluded terms (whose blocks must never be skipped
         -- missing an exclusion row would un-drop a doc) and keyword
         multiplicity 1 (no per-node re-count)."""
         params = self.params
         avgdl = self.avgdl
+        ast = plan.ast
+        term_indices = dict(plan.term_indices)
+        n_terms = len(term_indices) if boost else 0
+        skip = theta > 0.0 and _is_disjunctive_bag(plan)
         boost_cap = 1.0 + oracle.COVERAGE_BOOST_MULT  # max boost factor
 
         def score_group(pdf):
@@ -354,17 +366,18 @@ class WandEngine:
             import pandas as pd
 
             from probe_spark.codec import decode_doc_block, varbyte_decode
+            from probe_spark.lanes import eval_and_score
 
-            pdf = pdf.assign(_pos=pdf["term"].map(term_pos)).sort_values(
-                ["_pos", "block_id"]
+            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
+                {"doc_id": "int64", "score": "float64"}
             )
             seg = int(pdf["seg"].iloc[0])
             base = seg << SEG_BITS
-            if theta > 0.0 and avgdl > 0 and len(pdf) > 1:
+            if skip and avgdl > 0 and len(pdf) > 1:
                 # same tf_part expression (and f64 op order) as the
-                # accumulation loop below, evaluated at the block's
-                # (max_tf, min_dl) corner: tf_part is increasing in tf and
-                # decreasing in dl, so ub dominates every doc in the block
+                # scorer, evaluated at the block's (max_tf, min_dl)
+                # corner: tf_part is increasing in tf and decreasing in
+                # dl, so ub dominates every doc in the block
                 tfp = tf_part(
                     pdf["max_tf"].to_numpy(dtype=np.float64),
                     pdf["min_dl"].to_numpy(dtype=np.float64),
@@ -389,76 +402,7 @@ class WandEngine:
                 # soundness
                 pdf = pdf[bf * bound >= theta * (1.0 - 1e-12)]
                 if len(pdf) == 0:
-                    return pd.DataFrame(
-                        {"doc_id": [], "score": []}
-                    ).astype({"doc_id": "int64", "score": "float64"})
-            acc = np.zeros(SEG_SIZE, dtype=np.float64)
-            nmatch = np.zeros(SEG_SIZE, dtype=np.int64) if boost else None
-            for term, docs, tfs, dls in zip(
-                pdf["term"], pdf["docs"], pdf["tfs"], pdf["dls"]
-            ):
-                idf = idfs.get(term, 0.0)
-                if idf == 0.0:
-                    continue
-                d = decode_doc_block(docs)
-                t = varbyte_decode(tfs).astype(np.float64)
-                l = varbyte_decode(dls).astype(np.float64)
-                tp = tf_part(t, l, avgdl, params)
-                idx = (d - base).astype(np.int64)
-                acc[idx] += idf * tp
-                if boost:
-                    nmatch[idx] += 1
-            if boost and n_terms:
-                acc = acc * np.asarray(boost_table(n_terms))[nmatch]
-            nz = np.flatnonzero(acc)
-            if len(nz) == 0:
-                return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": "int64", "score": "float64"}
-                )
-            scores = acc[nz]
-            if k is not None and len(nz) > k:
-                # top-k by (score desc, doc_id asc): doc ids in nz are
-                # ascending, stable lexsort on -score keeps that order
-                order = np.argsort(-scores, kind="stable")[:k]
-                nz, scores = nz[order], scores[order]
-            return pd.DataFrame(
-                {"doc_id": (nz + base).astype("int64"), "score": scores}
-            )
-
-        return blocks.groupBy("seg").applyInPandas(score_group, _SCORE_SCHEMA)
-
-    def _score_segs_bool(
-        self,
-        blocks: DataFrame,
-        idfs: dict[str, float],
-        k: int | None,
-        plan,
-        must_kws: tuple[str, ...],
-        boost: bool = False,
-        n_terms: int = 0,
-    ) -> DataFrame:
-        """Per-seg boolean scoring: decode blocks into dense per-term tf
-        lanes, intersect the must-keyword lanes to get candidates, then
-        evaluate + score the AST as numpy lane ops over the candidates
-        (lanes.eval_and_score -- bit-identical to the scalar oracle,
-        differential-tested).  Emits the seg's top-k."""
-        params = self.params
-        avgdl = self.avgdl
-        ast = plan.ast
-        term_indices = dict(plan.term_indices)
-
-        def score_group(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from probe_spark.codec import decode_doc_block, varbyte_decode
-            from probe_spark.lanes import eval_and_score
-
-            empty = pd.DataFrame({"doc_id": [], "score": []}).astype(
-                {"doc_id": "int64", "score": "float64"}
-            )
-            seg = int(pdf["seg"].iloc[0])
-            base = seg << SEG_BITS
+                    return empty
             tf_lane: dict[str, np.ndarray] = {}
             dl_lane = np.zeros(SEG_SIZE, dtype=np.int64)
             for term, docs, tfs, dls in zip(
@@ -495,7 +439,7 @@ class WandEngine:
                 avgdl,
                 idfs,
                 params,
-                boost_terms=n_terms if boost else 0,
+                boost_terms=n_terms,
             )
             ids = (cand[keep] + base).astype(np.int64)
             sc = scores[keep]
@@ -521,11 +465,9 @@ class WandEngine:
     ) -> DataFrame:
         """Top-k as a ranked DataFrame (rank, doc_id, url, score) -- same
         shape as SearchEngine.search, urls hydrated from the doc store.
-        ``exact``/``boost_coverage`` are served in-segment (synthetic
-        rescue blocks / boosted bounds).  ``with_matches`` and
-        ``exclude_filenames`` route through the flat engine (rank-identical
-        by the differential suite): block tf has no url split, so the -n
-        match view needs the flat postings."""
+        ``with_matches`` and ``exclude_filenames`` route through the flat
+        engine (rank-identical by the differential suite): block tf has no
+        url split, so the -n match view needs the flat postings."""
         if with_matches or exclude_filenames:
             return self._fallback.search(
                 query,
@@ -547,87 +489,79 @@ class WandEngine:
         boost_coverage: bool = False,
         exclude_filenames: bool = False,
     ) -> list[tuple[int, float]]:
-        """``timeout`` (seconds) cancels the query's Spark job group at the
-        deadline and raises QueryTimeoutError (probe_spark.watchdog; the
-        deadline covers fallback paths too -- nested calls run inside the
-        same job group).  ``boost_coverage`` applies the R7 coverage boost
-        in-segment (upper bounds are scaled by the max boost factor so
-        pruning stays sound).  ``exclude_filenames`` routes to the flat
+        """Top-k as [(doc_id, score)], routed as the module docstring
+        says.  ``timeout`` (seconds) cancels the query's Spark job group at
+        the deadline and raises QueryTimeoutError (probe_spark.watchdog;
+        the deadline covers the flat engine's lanes too -- they run inside
+        the same job group).  ``boost_coverage`` applies the R7 coverage
+        boost (in-segment, upper bounds are scaled by the max boost factor
+        so pruning stays sound).  ``exclude_filenames`` routes to the flat
         engine (see search())."""
         from probe_spark.watchdog import query_deadline
 
         with query_deadline(self.spark, timeout):
-            if exclude_filenames:
-                return self._fallback.search_local(
-                    query,
+            # refresh FIRST: idfs snapshot n_docs/df, so a stale view here
+            # would survive into scoring
+            self._refresh_blocks()
+            plan = elastic.create_query_plan(query, exact)
+            if (
+                exclude_filenames
+                or self._blocks_df is None
+                or not _segment_owned(plan)
+            ):
+                return self._fallback._local_hits(
+                    plan,
                     k,
-                    exact=exact,
                     boost_coverage=boost_coverage,
-                    exclude_filenames=True,
+                    exclude_filenames=exclude_filenames,
                 )
-            return self._search_local_inner(query, k, exact, boost_coverage)
+            # the flat engine's driver lane (0 Spark jobs) answers rescue-
+            # free queries under its read budget; the rest are segment-
+            # scored
+            hits = self._fallback._driver_hits(
+                plan, k, boost_coverage=boost_coverage, exclude_filenames=False
+            )
+            if hits is not None:
+                return hits
+            return self._segment_hits(plan, k, boost_coverage)
 
-    def _search_local_inner(
-        self,
-        query: str,
-        k: int = 10,
-        exact: bool = False,
-        boost_coverage: bool = False,
+    def _synthetic_blocks(self, plan, terms: list[str]) -> DataFrame:
+        """The flat engine's rows of ``terms`` (token postings UNION
+        doc-store containment for rescue terms, tf = max), encoded as
+        blocks the segment scorer reads like the on-disk ones."""
+        return (
+            self._fallback._term_rows(plan, terms, exclude_filenames=False)
+            .withColumn("seg", F.shiftright(F.col("doc_id"), SEG_BITS))
+            .groupBy("term", "seg")
+            .applyInPandas(encode_posting_group, BLOCKS_SCHEMA)
+        )
+
+    def _segment_hits(
+        self, plan, k: int, boost_coverage: bool
     ) -> list[tuple[int, float]]:
-        # refresh FIRST: idfs below snapshot n_docs/df, so a stale view
-        # here would survive into scoring even though the blocks listing
-        # itself refreshes later
-        self._refresh_blocks()
-        plan = elastic.create_query_plan(query, exact)
-        excl = sorted(plan.excluded_terms)
-        pos_kws = {
-            kw
-            for t in elastic.walk_terms(plan.ast or elastic.Term(()))
-            if not t.excluded
-            for kw in t.lowercase_keywords
-        }
-        if not _wand_supported(plan) or (set(excl) & pos_kws):
-            # a keyword both excluded and positive mixes containment-rescue
-            # df with dictionary df -- the flat engine owns that corner
-            return self._fallback.search_local(
-                query, k, exact=exact, boost_coverage=boost_coverage
-            )
-        disjunctive = _is_disjunctive_bag(plan)
-        terms = list(plan.term_indices)
-        if not terms:
-            return []
-        pos_terms = [t for t in terms if t not in plan.excluded_terms]
-        if not pos_terms:
-            return self._fallback.search_local(
-                query, k, exact=exact, boost_coverage=boost_coverage
-            )
+        """The segment plan's top-k of a query it owns (_segment_owned)."""
+        # a keyword can appear in SEVERAL Term nodes (exception dual-emit,
+        # e.g. "repository OR repositori" where both Terms carry
+        # "repositori"); score_expr sums it once per node, so the upper
+        # bound scales each term's contribution by its multiplicity.
+        # Excluded Terms never ADD score -- they are not part of the bound.
+        mult = _positive_keywords(plan)
+        pos = set(mult)
         rescues = oracle.rescue_terms(plan)
-        dict_terms = [t for t in pos_terms if t not in rescues]
-        pos_rescues = sorted(t for t in pos_terms if t in rescues)
+        excl = sorted(plan.excluded_terms)
+        dict_terms = sorted(pos - rescues)
+        pos_rescues = sorted(pos & rescues)
         # every df, rescue needles and excluded terms included, from the
         # flat engine's one rule; terms no doc holds get no idf
         dfs = self._fallback._query_dfs(plan, exclude_filenames=False)
         idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items() if d}
-        if not any(t in idfs for t in pos_terms):
+        if not pos & idfs.keys():
             # no positive query term exists in the corpus (df = 0 for all):
             # nothing can score
             return []
-        term_pos = {
-            kw: i
-            for i, kw in enumerate(
-                kw
-                for t in elastic.walk_terms(plan.ast)
-                for kw in t.lowercase_keywords
-            )
-        }
+        disjunctive = _is_disjunctive_bag(plan)
         must_kws = () if disjunctive else tuple(sorted(_must_keywords(plan)))
 
-        self._refresh_blocks()
-        if self._blocks_df is None:
-            # no blocks table at all: nothing compacted yet
-            return self._fallback.search_local(
-                query, k, exact=exact, boost_coverage=boost_coverage
-            )
         blocks = (
             self._blocks_df.filter(F.col("term").isin(dict_terms))
             if dict_terms
@@ -649,28 +583,13 @@ class WandEngine:
             # for them.  Dictionary blocks for these
             # terms are excluded above -- _term_rows already unioned token
             # postings in (max tf), a second copy would double-count.
-            from probe_spark.compaction import BLOCKS_SCHEMA, encode_posting_group
-
-            rblocks = (
-                self._fallback._term_rows(
-                    plan, pos_rescues, exclude_filenames=False
-                )
-                .withColumn(
-                    "seg", F.shiftright(F.col("doc_id"), SEG_BITS)
-                )
-                .groupBy("term", "seg")
-                .applyInPandas(encode_posting_group, BLOCKS_SCHEMA)
-            )
+            rblocks = self._synthetic_blocks(plan, pos_rescues)
             blocks = (
                 rblocks
                 if blocks is None
                 else blocks.unionByName(rblocks, allowMissingColumns=True)
             )
-            rstats = (
-                rblocks.select("term", "seg", self._tfp_expr().alias("tfp"))
-                .groupBy("term", "seg")
-                .agg(F.max("tfp").alias("max_tfp"))
-            )
+            rstats = self._max_tfp(rblocks)
             qstats = (
                 rstats if qstats is None else qstats.unionByName(rstats)
             )
@@ -700,18 +619,8 @@ class WandEngine:
             # apply the drop semantics in-segment.  Only segments that hold
             # positive postings can score (every scoring doc needs a
             # positive keyword), so exclusion rows outside them are pruned.
-            from probe_spark.compaction import BLOCKS_SCHEMA, encode_posting_group
-
-            excl_rows = self._fallback._term_rows(
-                plan, excl, exclude_filenames=False
-            )
-            excl_blocks = (
-                excl_rows.withColumn(
-                    "seg", F.shiftright(F.col("doc_id"), SEG_BITS)
-                )
-                .groupBy("term", "seg")
-                .applyInPandas(encode_posting_group, BLOCKS_SCHEMA)
-                .join(blocks.select("seg").distinct(), "seg", "leftsemi")
+            excl_blocks = self._synthetic_blocks(plan, excl).join(
+                blocks.select("seg").distinct(), "seg", "leftsemi"
             )
             # allowMissingColumns: the on-disk table carries the bucket
             # partition column, the synthetic rows don't (scorer ignores it)
@@ -726,7 +635,6 @@ class WandEngine:
         # on the filtered k-th score -- pruning remains sound.  df/idf stay
         # corpus-wide, matching the flat engine (stats before filters).
         fdocs = self._fallback._filtered_docs(plan)
-        n_query_terms = len(plan.term_indices)
         # with a field filter the in-segment top-k truncation must be
         # skipped (it would keep unfiltered docs and drop survivors); the
         # final TakeOrdered still reduces map-side, so each partition
@@ -734,44 +642,13 @@ class WandEngine:
         seg_k = None if fdocs is not None else k
 
         def score(bdf: DataFrame, theta: float = 0.0) -> DataFrame:
-            if disjunctive:
-                s = self._score_segs(
-                    bdf,
-                    idfs,
-                    seg_k,
-                    term_pos,
-                    boost_coverage,
-                    n_query_terms,
-                    theta=theta,
-                )
-            else:
-                s = self._score_segs_bool(
-                    bdf, idfs, seg_k, plan, must_kws, boost_coverage, n_query_terms
-                )
+            s = self._score_segs(
+                bdf, idfs, seg_k, plan, must_kws, boost_coverage, theta
+            )
             if fdocs is not None:
                 s = s.join(fdocs.select("doc_id"), "doc_id", "leftsemi")
             return s
 
-        # a keyword can appear in SEVERAL Term nodes (exception dual-emit,
-        # e.g. "repository OR repositori" where both Terms carry
-        # "repositori"); score_expr sums it once per node, so the upper
-        # bound must scale each term's contribution by its multiplicity.
-        # Excluded Terms never ADD score -- they are not part of the bound.
-        from collections import Counter
-
-        mult = Counter(
-            kw
-            for t in elastic.walk_terms(plan.ast)
-            if not t.excluded
-            for kw in t.lowercase_keywords
-        )
-        mult_map = F.create_map(
-            *[
-                x
-                for t, v in sorted(mult.items())
-                for x in (F.lit(t), F.lit(float(v)))
-            ]
-        )
         seg_ub_persisted = None
         rest_persisted = None
         try:
@@ -784,9 +661,11 @@ class WandEngine:
             seg_ub = (
                 qstats.withColumn(
                     "tub",
-                    idf_map_expr(idfs)[F.col("term")]
+                    _lit_map(idfs)[F.col("term")]
                     * F.col("max_tfp")
-                    * mult_map[F.col("term")],
+                    * _lit_map({t: float(v) for t, v in mult.items()})[
+                        F.col("term")
+                    ],
                 )
                 .groupBy("seg")
                 .agg(F.sum("tub").alias("seg_ub"))
@@ -876,7 +755,7 @@ class WandEngine:
                     & (F.col("seg_ub") >= theta)
                 ).select("seg")
                 # theta rides into the scorer for intra-segment block
-                # skipping (disjunctive path; see _score_segs)
+                # skipping (plain OR-bags; see _score_segs)
                 p2 = (
                     score(
                         sblocks.join(F.broadcast(segs_b), "seg", "leftsemi"),

@@ -167,6 +167,22 @@ def test_config_without_index(capsys):
     assert cfg["rescue"]["memo_needles"] == 128
 
 
+def test_config_reports_wand_defaults(capsys, monkeypatch):
+    """config reads the WAND phase defaults off WandEngine itself: moved
+    defaults show up in its output."""
+    from probe_spark.wand import WandEngine
+
+    params, phase1, phase2 = WandEngine.__init__.__defaults__
+    assert (phase1, phase2) == (8, 256)
+    monkeypatch.setattr(WandEngine.__init__, "__defaults__", (params, 3, 17))
+    rc, out = _run(capsys, "config")
+    assert rc == 0
+    assert json.loads(out.out)["wand"] == {
+        "phase1_segs_default": 3,
+        "phase2_batch_default": 17,
+    }
+
+
 # -- grep asymmetric context + color ----------------------------------------
 
 

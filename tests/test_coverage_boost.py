@@ -67,9 +67,10 @@ def test_spark_plan_boost_is_the_oracle(spark, boost_index, monkeypatch):
     assert got == _want(boost_index)
 
 
-def test_wand_boost_is_the_oracle(spark, boost_index):
+def test_wand_boost_is_the_oracle(spark, boost_index, monkeypatch):
     from probe_spark.wand import WandEngine
 
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)  # segment scorer
     path, query, _ = boost_index
     got = WandEngine(spark, str(path)).search_local(query, 10, boost_coverage=True)
     assert got == _want(boost_index)

@@ -53,12 +53,15 @@ def test_incremental_ingest_then_query(spark, tmp_path, query):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
-def test_incremental_compaction_after_stream(spark, tmp_path):
+def test_incremental_compaction_after_stream(spark, tmp_path, monkeypatch):
     """Compaction is per-bucket and resumable: after a streaming delta,
     compact_index(resume=True) compacts ONLY the delta bucket, and the
     WAND engine (upper bounds re-derived from current global stats) stays
-    rank-identical to the oracle over the union corpus."""
+    rank-identical to the oracle over the union corpus.  Driver budget 0
+    keeps these rescue-free queries on the segment plan."""
     import json
+
+    from probe_spark import indexer
 
     from probe_spark.compaction import compact_index
     from probe_spark.fixtures import pages_df
@@ -93,6 +96,7 @@ def test_incremental_compaction_after_stream(spark, tmp_path):
         [Doc(r["doc_id"], r["url"], r["text"], r["lang"]) for r in docs_rows]
     )
     assert oracle_ix.n_docs == 170
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
     eng = WandEngine(spark, ix, phase1_segs=1)
     for query in ("firewall", "error AND handling", "+retry process"):
         got = eng.search_local(query, k=10)

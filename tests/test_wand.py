@@ -15,6 +15,15 @@ DISJUNCTIVE_QUERIES = [
 ]
 
 
+@pytest.fixture
+def segment_plan(monkeypatch):
+    """Driver budget 0: the flat engine's driver lane reads nothing, so
+    every query the segment plan owns is segment-scored."""
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+
+
 @pytest.fixture(scope="module")
 def compacted(spark, tiny_index):
     from probe_spark.compaction import compact_index
@@ -69,6 +78,7 @@ def test_blocks_roundtrip_postings(spark, compacted):
     assert n == len(flat)
 
 
+@pytest.mark.usefixtures("segment_plan")
 @pytest.mark.parametrize("query", DISJUNCTIVE_QUERIES)
 def test_wand_matches_oracle(spark, compacted, tiny_oracle, query):
     from probe_spark.wand import WandEngine
@@ -91,6 +101,7 @@ BOOLEAN_QUERIES = [
 ]
 
 
+@pytest.mark.usefixtures("segment_plan")
 @pytest.mark.parametrize("query", BOOLEAN_QUERIES)
 def test_wand_boolean_matches_oracle(spark, compacted, tiny_oracle, query):
     """Required/And/Or queries run on the segment engine (must-keyword
@@ -104,6 +115,23 @@ def test_wand_boolean_matches_oracle(spark, compacted, tiny_oracle, query):
     assert [d for d, _ in got] == [d for d, _ in expected], query
     for (gd, gs), (_, es) in zip(got, expected):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
+
+
+def test_wand_driver_lane_zero_jobs(spark, compacted):
+    """At the default budget the bags and rescue-free booleans are the
+    flat engine's driver lane: no Spark job, the flat engine's rows."""
+    from probe_spark.engine import SearchEngine
+    from probe_spark.wand import WandEngine
+
+    path, _ = compacted
+    eng = WandEngine(spark, path)
+    flat = SearchEngine(spark, path)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    for q in DISJUNCTIVE_QUERIES + BOOLEAN_QUERIES:
+        j0 = sched.nextJobId()
+        got = eng.search_local(q, k=10)
+        assert sched.nextJobId() == j0, q
+        assert got and got == flat.search_local(q, k=10), q
 
 
 def test_wand_search_dataframe_api(spark, compacted):
@@ -159,6 +187,7 @@ RESCUE_FILTER_QUERIES = [
 ]
 
 
+@pytest.mark.usefixtures("segment_plan")
 @pytest.mark.parametrize("query", RESCUE_FILTER_QUERIES)
 def test_wand_rescue_and_filters_served_in_segment(
     spark, compacted, tiny_oracle, monkeypatch, query
@@ -175,7 +204,7 @@ def test_wand_rescue_and_filters_served_in_segment(
     def _no_fallback(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("query fell back to the flat engine")
 
-    monkeypatch.setattr(eng._fallback, "search_local", _no_fallback)
+    monkeypatch.setattr(eng._fallback, "_local_hits", _no_fallback)
     got = eng.search_local(query, k=10)
     expected = oracle_search(tiny_oracle, query, k=10)
     assert [d for d, _ in got] == [d for d, _ in expected], query
@@ -183,6 +212,7 @@ def test_wand_rescue_and_filters_served_in_segment(
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_wand_whole_query_exact_served_in_segment(
     spark, compacted, tiny_oracle, monkeypatch
 ):
@@ -192,7 +222,7 @@ def test_wand_whole_query_exact_served_in_segment(
     eng = WandEngine(spark, path, phase1_segs=1)
     monkeypatch.setattr(
         eng._fallback,
-        "search_local",
+        "_local_hits",
         lambda *a, **k: (_ for _ in ()).throw(AssertionError("fell back")),
     )
     got = eng.search_local("error handling", k=10, exact=True)
@@ -202,6 +232,7 @@ def test_wand_whole_query_exact_served_in_segment(
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_wand_boost_coverage_identity(spark, compacted, tiny_oracle):
     """--boost-coverage in the segment engine: upper bounds scale by the
     max boost factor so pruning stays sound; scores match the oracle."""
@@ -256,6 +287,7 @@ EXCLUDED_QUERIES = [
 ]
 
 
+@pytest.mark.usefixtures("segment_plan")
 @pytest.mark.parametrize("query", EXCLUDED_QUERIES)
 def test_wand_excluded_matches_oracle(
     spark, compacted, tiny_oracle, monkeypatch, query
@@ -271,7 +303,7 @@ def test_wand_excluded_matches_oracle(
     def _no_fallback(*a, **k):  # pragma: no cover - failure path
         raise AssertionError("excluded query fell back to the flat engine")
 
-    monkeypatch.setattr(eng._fallback, "search_local", _no_fallback)
+    monkeypatch.setattr(eng._fallback, "_local_hits", _no_fallback)
     got = eng.search_local(query, k=10)
     expected = oracle_search(tiny_oracle, query, k=10)
     assert [d for d, _ in got] == [d for d, _ in expected], query
@@ -279,6 +311,7 @@ def test_wand_excluded_matches_oracle(
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_wand_multiseg_pruning_identity(spark, tmp_path_factory):
     """Corpus spanning >1 segment (8192-doc aligned): must-segment pruning
     and theta pruning must not change results vs the oracle."""
@@ -324,6 +357,7 @@ def test_wand_multiseg_pruning_identity(spark, tmp_path_factory):
             assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (q, gd)
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
     """Intra-segment block skipping (theta in _score_segs, phase-2 path):
     a theta above every block's bound prunes the whole segment; a real
@@ -347,21 +381,19 @@ def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
         blocks.groupBy("term", "seg").count().filter("count > 1").count()
     )
     assert multi > 0, "fixture terms must span multiple blocks per segment"
-    dfs = eng._fallback._query_dfs(
-        create_query_plan(q, False), exclude_filenames=False
-    )
+    plan = create_query_plan(q, False)
+    dfs = eng._fallback._query_dfs(plan, exclude_filenames=False)
     assert sorted(dfs) == terms
     idfs = {t: oracle.idf(eng.n_docs, d) for t, d in dfs.items()}
-    term_pos = {t: i for i, t in enumerate(terms)}
 
-    full = eng._score_segs(blocks, idfs, None, term_pos).collect()
+    full = eng._score_segs(blocks, idfs, None, plan, ()).collect()
     assert full, "unskipped run must score docs"
     best = max(r["score"] for r in full)
 
     # theta above any reachable score: every block's combined bound is <
     # theta, so the scorer must emit nothing
     pruned = eng._score_segs(
-        blocks, idfs, None, term_pos, theta=best * 4.0
+        blocks, idfs, None, plan, (), theta=best * 4.0
     ).collect()
     assert pruned == []
 
@@ -371,7 +403,7 @@ def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
     exact = {r["doc_id"]: r["score"] for r in full}
     theta = sorted((r["score"] for r in full), reverse=True)[9]
     skipped = eng._score_segs(
-        blocks, idfs, None, term_pos, theta=theta
+        blocks, idfs, None, plan, (), theta=theta
     ).collect()
     kept = {r["doc_id"]: r["score"] for r in skipped if r["score"] >= theta}
     want = {d: s for d, s in exact.items() if s >= theta}
@@ -385,6 +417,7 @@ def test_wand_block_skip_prunes_and_stays_exact(spark, compacted, tiny_oracle):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), gd
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_phase2_batched_walk_identity(spark, compacted, tiny_oracle):
     """phase2_batch=1 forces the maximum number of theta-re-tightening
     batches (every remaining segment its own batch); results must stay
@@ -410,6 +443,7 @@ def test_phase2_batched_walk_identity(spark, compacted, tiny_oracle):
             assert gs == es, (query, gd)
 
 
+@pytest.mark.usefixtures("segment_plan")
 def test_seg_stats_cache_invalidation(spark, compacted):
     """The cross-query seg-stats cache must be keyed to the compaction
     fingerprint + global stats: same key -> same persisted frame object,

@@ -198,3 +198,40 @@ def test_query_dfs_equal_oracle(
             assert _jobs(
                 spark, lambda: eng._query_dfs(plan, exclude_filenames=ex_fn)
             ) == 0
+
+
+# a needle whose df _query_dfs must count (memo entry None at _ISIN_CAP =
+# 1; postings read over the budget at budget 0), and the warm search_local
+# jobs of '"firewall" cache' measured before the counted df was kept
+COUNTED = {
+    "lazy-toolarge": ("default", CLASSES["lazy-toolarge"], 6),
+    "over-budget": ("zero", {}, 4),
+}
+
+
+@pytest.mark.parametrize("case", sorted(COUNTED))
+def test_counted_df_kept_with_memo(spark, tiny_index, monkeypatch, case):
+    """A needle's counted df is kept beside its memo entry: the second
+    query counts nothing, gets the same dfs, and the entry goes when the
+    memo is cleared."""
+    from probe_spark import elastic, indexer
+
+    budget, patch, warm = COUNTED[case]
+    if budget == "zero":
+        monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    q = '"firewall" cache'
+    plan = elastic.create_query_plan(q, False)
+    eng = _engine(spark, tiny_index, patch)
+    eng.search_local(q, 10)
+    assert _jobs(spark, lambda: eng.search_local(q, 10)) <= warm
+    dfs = eng._query_dfs(plan, exclude_filenames=False)
+    assert _jobs(
+        spark, lambda: eng._query_dfs(plan, exclude_filenames=False)
+    ) == 0
+    assert ("firewall", False) in eng._counted_dfs
+    eng._counted_dfs.clear()
+    assert eng._query_dfs(plan, exclude_filenames=False) == dfs
+    # a memo clear at the needle cap drops the counted dfs with it
+    eng._VERIFIED_NEEDLE_CAP = len(eng._verified_ids)
+    eng.warm_rescue_needles(["zzqqxxnowhere"], False)
+    assert not eng._counted_dfs
