@@ -3,26 +3,31 @@
 Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
 
   0. driver lane (``search_local``, and ``search`` without with_matches):
-     a query with no rescue term that is not universal is served on the
-     driver with zero Spark jobs when its reads fit
+     a query that is neither universal nor only-excluded is served on
+     the driver with zero Spark jobs when its reads fit
      ``indexer.DRIVER_READ_BYTES`` (bytes of the column chunks decoded).
      pyarrow reads only the postings row groups whose cached footer
-     min/max on ``term`` cover a query term; field filters read doc_id,
-     lang and url of the candidate docs the same way; rows pivot into tf
-     lanes and score with lanes.eval_and_score on its numpy backend, the
-     AST walk step 4 runs on Columns; top-k is cut by (score desc, doc_id
-     asc).  search()
-     hydrates the k urls likewise and returns a local relation.  Over the
-     budget, at budget 0, or when a footer lacks a needed column, steps
-     1-6 run unchanged.  Opening an engine runs no Spark job either: the
-     dictionaries load with pyarrow and the Spark readers are created on
-     first Spark-path use.
+     min/max on ``term`` cover a query term; each rescue needle (step 3,
+     resolved on the driver too) adds a tf-1 row per doc of its memoized
+     id list, doc_len read from doc_lens the same way; field filters read
+     doc_id, lang and url of the candidate docs likewise; rows pivot into
+     tf lanes (max tf per term and doc, so a token tf wins over the
+     rescue's 1) and score with lanes.eval_and_score on its numpy
+     backend, the AST walk step 4 runs on Columns; top-k is cut by (score
+     desc, doc_id asc).  A query no term of which has a document returns
+     no hits before any read.  search() hydrates the k urls likewise and
+     returns a local relation.  Over the budget, at budget 0, when a
+     footer lacks a needed column, or when a needle is too large to
+     memoize, steps 1-6 run unchanged.  Opening an engine runs no Spark
+     job either: the dictionaries load with pyarrow and the Spark readers
+     are created on first Spark-path use.
   0b. batches (``search_batch``): every query is parsed once and the
-     batch's rescue needles resolve in one resolver call; the left-deep
-     single-keyword chains _fused_chain_gates classifies share ONE
-     queries-as-data join, and every other query runs the single-query
-     lane of search_local (step 0, else steps 1-5 and one collect), its
-     urls read in one lookup for the whole batch.
+     batch's rescue needles resolve in one resolver call; each query the
+     driver lane answers is served there, the left-deep single-keyword
+     chains _fused_chain_gates classifies among the rest share ONE
+     queries-as-data join when there are at least two, and every other
+     query runs steps 1-5 and one collect, the urls of the driver and
+     single-query hits read in one lookup for the whole batch.
   1. parse query -> AST + QueryPlan (driver, pure Python, shared w/ oracle)
   2. posting retrieval: filter the term-sorted postings parquet with
      ``term IN (...)`` -- parquet row-group stats prune non-matching row
@@ -40,11 +45,14 @@ Query lifecycle (replacing the reference's scan steps 3-9, SURVEY.md SS3.1):
      above the cutoff, shorter than 3 bytes, or an index without the lane
      -- is verified by the plain containment scan.  One resolver
      (warm_rescue_needles) serves every needle of a query or a batch: it
-     classifies the cold ones on the driver, runs at most one candidate
-     collect and one verify collect for all of them, and memoizes each as
-     an id list (or "too large") in one memo, _verified_ids;
-     _rescue_frames turns the memo into one frame.  The reference pays a
-     full scan on EVERY query.
+     classifies the cold ones on the driver, and each of its two steps
+     runs on the driver when its pyarrow read fits the budget (the
+     selected trigram lists, intersected with numpy; the candidates' doc
+     store rows, or the whole store for a plain-scan needle, lowercased
+     as Python's str.lower does), else as one Spark collect for all of
+     them; it memoizes each needle as an id list (or "too large") in one
+     memo, _verified_ids; _rescue_frames turns the memo into one frame.
+     The reference pays a full scan on EVERY query.
   4. boolean evaluation + expression scoring per doc: one Column plan, no
      UDF.  A conditional aggregation (groupBy doc_id, the one shuffle;
      skipped when a single term is scored) pivots the rows into per-term
@@ -437,10 +445,11 @@ def pruned_read(footers, key: str, values, columns: list[str]):
     """The rows whose ``key`` is in ``values``, as one Arrow table of
     ``columns``, read with pyarrow from only the row groups whose footer
     min/max on ``key`` can hold a value (a row group without min/max
-    stats is read).  None -- the caller runs its Spark plan -- when the
-    footers are missing or unreadable, a file lacks one of ``columns``,
-    or the row groups' ``columns`` chunks total more than
-    indexer.DRIVER_READ_BYTES (at 0 nothing is read)."""
+    stats is read); every row when ``values`` is None.  None -- the
+    caller runs its Spark plan -- when the footers are missing or
+    unreadable, a file lacks one of ``columns``, or the row groups'
+    ``columns`` chunks total more than indexer.DRIVER_READ_BYTES (at 0
+    nothing is read)."""
     import bisect
 
     import pyarrow as pa
@@ -452,7 +461,7 @@ def pruned_read(footers, key: str, values, columns: list[str]):
     budget = indexer.DRIVER_READ_BYTES
     if not footers or budget <= 0:
         return None
-    vals = sorted(set(values))
+    vals = None if values is None else sorted(set(values))
     picked, total = [], 0
     for path, md in footers:
         paths = [md.schema.column(j).path for j in range(md.num_columns)]
@@ -466,7 +475,7 @@ def pruned_read(footers, key: str, values, columns: list[str]):
             if not rg.num_rows:
                 continue
             st = rg.column(kj).statistics
-            if st is not None and st.has_min_max:
+            if vals is not None and st is not None and st.has_min_max:
                 try:
                     i = bisect.bisect_left(vals, st.min)
                     if i == len(vals) or vals[i] > st.max:
@@ -487,13 +496,55 @@ def pruned_read(footers, key: str, values, columns: list[str]):
     parts = [
         pa.schema([schema.field(c) for c in columns]).empty_table()
     ]
-    value_set = pa.array(vals, type=schema.field(key).type)
     for path, md, groups in picked:
         t = pq.ParquetFile(path, metadata=md).read_row_groups(
             groups, columns=columns
         )
-        parts.append(t.filter(pc.is_in(t[key], value_set=value_set)))
+        if vals is not None:
+            t = t.filter(
+                pc.is_in(t[key], value_set=pa.array(vals, t.schema.field(key).type))
+            )
+        parts.append(t)
     return pa.concat_tables(parts, promote_options="permissive")
+
+
+def _lowered(col):
+    """A string column lowercased as Python's str.lower does -- the
+    oracle's haystack (oracle.doc_term_freqs) -- with nulls as "":
+    pyarrow on ASCII rows, str.lower on the others (pc.utf8_lower
+    differs on e.g. "İ" and a final "Σ")."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = pc.fill_null(col.combine_chunks(), "")
+    other = pc.invert(pc.string_is_ascii(col))
+    low = pc.ascii_lower(col)
+    if not pc.any(other).as_py():
+        return low
+    rest = [s.lower() for s in col.filter(other).to_pylist()]
+    return pc.replace_with_mask(low, other, pa.array(rest, col.type))
+
+
+def _contained_ids(docs, needles: dict, ex_fn: bool) -> dict[str, list[int]]:
+    """{needle: sorted doc ids} of the (doc_id, text, url) Arrow table
+    ``docs`` whose lowercased text -- or url, unless ``ex_fn`` (-n) --
+    contains the needle, among the needle's candidate ids (``needles``
+    values; None: every row).  The driver host of _verify_scan."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    ids = docs["doc_id"].combine_chunks()
+    text = _lowered(docs["text"])
+    url = None if ex_fn else _lowered(docs["url"])
+    out = {}
+    for t, cands in needles.items():
+        hit = pc.match_substring(text, t)
+        if url is not None:
+            hit = pc.or_(hit, pc.match_substring(url, t))
+        if cands is not None:
+            hit = pc.and_(hit, pc.is_in(ids, value_set=pa.array(cands, ids.type)))
+        out[t] = sorted(ids.filter(hit).to_pylist())
+    return out
 
 
 def _filter_values(plan: QueryPlan) -> tuple[list, list, list]:
@@ -532,7 +583,8 @@ class _SparkReader:
     one job, only when the footers cannot say.  The table path comes from
     ``engine._reader_paths`` (None: the table is absent or disabled, and
     the attribute reads None); assigning the attribute replaces the
-    reader until the next _reopen."""
+    reader until the next _reopen, and assigning None also disables the
+    table for the driver-side reads of its path."""
 
     def __set_name__(self, owner, name: str) -> None:
         self.name = name
@@ -555,6 +607,8 @@ class _SparkReader:
 
     def __set__(self, eng, value) -> None:
         eng._readers[self.name] = value
+        if value is None:
+            eng._reader_paths[self.name] = None
 
 
 class SearchEngine:
@@ -944,7 +998,7 @@ class SearchEngine:
         """_tri_select's verdict for one needle ([] refuted, _TRI_DECLINED,
         or the selected (tri, df) list); None when the lane cannot prune
         it -- no lane, or a needle shorter than one trigram."""
-        if self._tri_post_df is None:
+        if self._reader_paths["_tri_post_df"] is None:
             return None
         tris = needle_tri_codes(needle)
         return self._tri_select(tris) if tris else None
@@ -980,10 +1034,14 @@ class SearchEngine:
         """The resolver's candidate step: {needle: candidates} for the
         lane-served needles among ``picks`` ({needle: _tri_pick verdict}).
         Needles whose rarest selected trigram has df <= _ISIN_CAP (so
-        their candidates do too) get an id list, all from ONE collect; the
+        their candidates do too) get an id list: their trigram lists are
+        read on the driver (pruned_read on ``tri``) and intersected with
+        numpy, or, over the driver budget, come from ONE collect.  The
         others get their lazy (doc_id) frame -- provably too many for an
         IN pushdown, so the verify scan semi-joins it.  Cost is O(sum of
         the selected trigram dfs) -- never O(corpus)."""
+        import numpy as np
+
         picks = {
             t: p for t, p in picks.items() if p and p is not self._TRI_DECLINED
         }
@@ -993,10 +1051,25 @@ class SearchEngine:
             if sel[0][1] > self._ISIN_CAP
         }
         bounded = {t: sel for t, sel in picks.items() if t not in out}
-        if bounded:
-            out.update({t: [] for t in bounded})
-            for r in self._tri_cand_rows(bounded).collect():
-                out[r["term"]].append(int(r["doc_id"]))
+        if not bounded:
+            return out
+        rows = self._pruned(
+            self._reader_paths["_tri_post_df"],
+            "tri",
+            [c for sel in bounded.values() for c, _ in sel],
+            ["tri", "doc_id"],
+        )
+        if rows is not None:
+            tri, doc = rows["tri"].to_numpy(), rows["doc_id"].to_numpy()
+            for t, sel in bounded.items():
+                ids = np.unique(doc[tri == sel[0][0]])
+                for c, _ in sel[1:]:
+                    ids = np.intersect1d(ids, doc[tri == c])
+                out[t] = ids.tolist()
+            return out
+        out.update({t: [] for t in bounded})
+        for r in self._tri_cand_rows(bounded).collect():
+            out[r["term"]].append(int(r["doc_id"]))
         return out
 
     def _tri_candidate_ids(self, needle: str):
@@ -1028,6 +1101,22 @@ class SearchEngine:
             hit = hit | F.col("_u").contains(needle)
         return docs.filter(hit).select(F.lit(needle).alias("term"), "doc_id")
 
+    def _driver_verify(self, todo: dict, ex_fn: bool) -> dict[str, list[int]]:
+        """The verify step on the driver: {needle: sorted containment ids}
+        for ``todo`` ({needle: candidate id list, or None for the plain
+        scan}), read from the doc store -- the candidates' rows (pruned on
+        doc_id), or every row when some needle has no candidate list.  {}
+        when the read exceeds the driver budget or the store has no text
+        column (reference mode): _verify_scan then runs on Spark."""
+        if not todo:
+            return {}
+        lists = [c for c in todo.values() if c is not None]
+        ids = None if len(lists) < len(todo) else {d for c in lists for d in c}
+        docs = self._pruned(
+            self._docs_path, "doc_id", ids, ["doc_id", "text", "url"]
+        )
+        return {} if docs is None else _contained_ids(docs, todo, ex_fn)
+
     # memoize at most this many needles driver-side; a needle's verified
     # set is memoized only when it fits an IN pushdown (_ISIN_CAP) anyway
     _VERIFIED_NEEDLE_CAP = 128
@@ -1039,17 +1128,22 @@ class SearchEngine:
 
         Each cold needle is classified on the driver (_tri_pick): refuted
         needles memoize as empty with no job; lane-served ones get their
-        candidates from ONE collect (_tri_candidates); declined,
-        sub-trigram and lane-less needles are verified by the plain scan.
-        Then ONE collect verifies them all: a ``doc_id IN`` branch per
-        bounded candidate list, and a semi-join or plain-scan branch,
-        capped at _ISIN_CAP + 1 rows, for each needle that can exceed the
-        cap.  The memo (_verified_ids) holds each needle's sorted id list,
-        or None when the set is too large -- _rescue_frames then keeps its
-        lazy verify scan in the plan.  A verified set is a subset of its
-        candidates, so a memoized needle never needs its candidates again.
-        One needle costs at most one candidate collect and one verify
-        collect, and so do B needles."""
+        candidates from _tri_candidates (a driver read, else ONE collect);
+        declined, sub-trigram and lane-less needles are verified by the
+        plain scan.
+        The verify step runs on the driver when its read fits the budget
+        (_driver_verify: the candidates' doc store rows, or the whole
+        table when a plain-scan needle is among them).  Otherwise ONE
+        collect verifies them all: a ``doc_id IN`` branch per bounded
+        candidate list, and a semi-join or plain-scan branch, capped at
+        _ISIN_CAP + 1 rows, for each needle that can exceed the cap (a
+        lazy candidate frame always takes this collect).  The memo
+        (_verified_ids) holds each needle's sorted id list, or None when
+        the set is too large -- _rescue_frames then keeps its lazy verify
+        scan in the plan.  A verified set is a subset of its candidates,
+        so a memoized needle never needs its candidates again.  One needle
+        costs at most one candidate collect and one verify collect, and so
+        do B needles; at sf0.1 both steps fit the budget and run no job."""
         ex_key = bool(ex_fn)
         memo = self._verified_ids
         cold = sorted({t for t in needles if (t, ex_key) not in memo})
@@ -1064,22 +1158,29 @@ class SearchEngine:
         cap = self._ISIN_CAP
         picks = {t: self._tri_pick(t) for t in cold}
         cands = self._tri_candidates(picks)
-        branches: list[DataFrame] = []
+        todo: dict = {}
         for t in cold:
             c = cands.get(t)
             if picks[t] == [] or (isinstance(c, list) and not c):
                 # refuted, or trigrams present but never co-located
                 memo[(t, ex_key)] = []
+            else:
+                todo[t] = c
+        got = self._driver_verify(
+            {t: c for t, c in todo.items() if not isinstance(c, DataFrame)},
+            ex_key,
+        )
+        branches: list[DataFrame] = []
+        for t, c in todo.items():
+            if t in got:
                 continue
             branch = self._verify_scan(t, c, ex_key)
             if not isinstance(c, list):  # lazy candidates or a plain scan
                 branch = branch.limit(cap + 1)
             branches.append(branch)
-        if not branches:
-            return
-        got: dict[str, list[int]] = {}
-        for r in _union_all(branches).collect():
-            got.setdefault(r["term"], []).append(int(r["doc_id"]))
+        if branches:
+            for r in _union_all(branches).collect():
+                got.setdefault(r["term"], []).append(int(r["doc_id"]))
         for t in cold:
             if (t, ex_key) not in memo:
                 ids = sorted(got.get(t, []))
@@ -1294,23 +1395,45 @@ class SearchEngine:
         exclude_filenames: bool,
     ) -> list[tuple[int, float]] | None:
         """Top-k [(doc_id, score)] served on the driver with no Spark job,
-        or None when the Spark plan serves the query: it is universal or
-        has a rescue term, a table's footers lack a needed column, or a
-        read exceeds the driver budget (pruned_read).  Postings come from
-        the row groups whose footer term range covers a query term; field
-        filters read doc_id/lang/url of the candidate docs; the scorer is
+        or None when the Spark plan serves the query: the driver budget is
+        0, it is universal or only-excluded, a rescue needle is memoized as
+        too large, a table's footers lack a needed column, or a read
+        exceeds the driver budget (pruned_read).  [] when no query term
+        has a document.  Postings
+        come from the row groups whose footer term range covers a query
+        term; each rescue needle adds a (needle, doc_id, tf=1, doc_len)
+        row per id of its memo entry (warm_rescue_needles), doc_len read
+        from doc_lens the same way -- the scorer keeps the max tf per
+        (term, doc), so a token tf wins as in _term_rows; field filters
+        read doc_id/lang/url of the candidate docs; the scorer is
         lanes.eval_and_score, on the numpy backend where the Spark plan
         runs its Column backend, so the rows are the Spark plan's."""
         import numpy as np
         import pyarrow.compute as pc
 
-        if plan.is_universal_query or oracle.rescue_terms(plan):
+        from probe_spark import indexer
+
+        if (
+            indexer.DRIVER_READ_BYTES <= 0
+            or plan.is_universal_query
+            or plan.has_only_excluded_terms
+        ):
             return None
+        ex_key = bool(exclude_filenames)
+        rescues = sorted(oracle.rescue_terms(plan))
+        if rescues:
+            self.warm_rescue_needles(rescues, ex_key)
+            memo = {t: self._verified_ids.get((t, ex_key)) for t in rescues}
+            if None in memo.values():
+                return None
+        dfs = self._query_dfs(plan, exclude_filenames=ex_key)
+        if not any(dfs.values()):
+            return []
         rows = self._driver_postings(
-            list(plan.term_indices),
-            ["term", "doc_id", "tf", "doc_len"],
-            exclude_filenames,
+            list(plan.term_indices), ["term", "doc_id", "tf", "doc_len"], ex_key
         )
+        if rows is not None and rescues:
+            rows = self._with_rescue_rows(rows, memo)
         if rows is None:
             return None
         if any(_filter_values(plan)):
@@ -1318,7 +1441,6 @@ class SearchEngine:
             if ok is None:
                 return None
             rows = rows.filter(pc.is_in(rows["doc_id"], value_set=ok))
-        dfs = self._query_dfs(plan, exclude_filenames=exclude_filenames)
         idfs = {t: oracle.idf(self.n_docs, d) for t, d in dfs.items()}
         ids, sc = score_rows(
             rows,
@@ -1330,6 +1452,36 @@ class SearchEngine:
             boost_coverage,
         )
         return [(int(ids[i]), float(sc[i])) for i in np.lexsort((ids, -sc))[:k]]
+
+    def _with_rescue_rows(self, rows, memo: dict[str, list[int]]):
+        """Postings ``rows`` plus a (needle, doc_id, tf=1, doc_len) row per
+        id of each needle's memo list, with doc_len from a pruned read of
+        doc_lens (the doc store's column on a legacy layout); None over
+        the driver budget."""
+        import pyarrow as pa
+
+        ids = sorted({d for v in memo.values() for d in v})
+        if not ids:
+            return rows
+        lens = self._pruned(
+            self._reader_paths["_doc_lens_df"] or self._docs_path,
+            "doc_id",
+            ids,
+            ["doc_id", "doc_len"],
+        )
+        if lens is None:
+            return None
+        dl = dict(zip(lens["doc_id"].to_pylist(), lens["doc_len"].to_pylist()))
+        pairs = [(t, d) for t, v in memo.items() for d in v]
+        extra = pa.table(
+            {
+                "term": [t for t, _ in pairs],
+                "doc_id": [d for _, d in pairs],
+                "tf": [1] * len(pairs),
+                "doc_len": [dl[d] for _, d in pairs],
+            }
+        )
+        return pa.concat_tables([rows, extra.cast(rows.schema)])
 
     def _driver_filter(self, plan: QueryPlan, ids):
         """The ``ids`` that pass the query's field filters, as an Arrow
@@ -1747,18 +1899,22 @@ class SearchEngine:
         value-identical to per-query ``search()`` calls.
 
         Every query is parsed once, the batch's rescue needles resolve in
-        ONE warm_rescue_needles call, and each query takes one of two
+        ONE warm_rescue_needles call, and each query takes one of three
         lanes:
 
-        - fused: the left-deep single-keyword chains _fused_chain_gates
-          classifies (bags, "+required optional", conjunctive AND chains,
-          "-excluded" tails), when boost_coverage is off, become DATA in
+        - driver: every query the driver lane answers (_driver_hits, no
+          Spark job);
+        - fused: of the rest, the left-deep single-keyword chains
+          _fused_chain_gates classifies (bags, "+required optional",
+          conjunctive AND chains, "-excluded" tails), when boost_coverage
+          is off and at least two of them share the join, become DATA in
           one queries-as-data join (_fused_topk): one postings scan and
           one shuffle however many queries fuse;
-        - single-query: every other query runs _local_hits, the lane of
-          search_local (the driver lane, else one Spark top-k collect);
-          rank is the position in its top-k list, and the urls of all
-          these hits come from ONE _urls lookup.
+        - Spark: every other query runs _spark_hits, search_local's Spark
+          top-k collect.
+
+        Rank is the position in a query's top-k list, and the urls of the
+        driver and Spark lanes' hits come from ONE _urls lookup.
 
         Measured on 4 cores over the sf0.1 perfbench corpus (5000 docs):
         at driver budget 0 the fused join serves a 32-query batch_log log
@@ -1781,33 +1937,32 @@ class SearchEngine:
         )
         if needles:
             self.warm_rescue_needles(needles, bool(exclude_filenames))
+        opts = dict(
+            boost_coverage=boost_coverage, exclude_filenames=exclude_filenames
+        )
+        hits: dict[str, list[tuple[int, float]]] = {}
+        for qid in sorted(plans):
+            h = self._driver_hits(plans[qid], k, **opts)
+            if h is not None:
+                hits[qid] = h
         gates_by_q: dict[str, list[str]] = {}
         if not boost_coverage:
-            for qid, p in plans.items():
+            for qid in sorted(set(plans) - set(hits)):
+                p = plans[qid]
                 g = _fused_chain_gates(p, self._excl_only_rescues(p))
                 if g is not None:
                     gates_by_q[qid] = g
-        loop = sorted(set(plans) - set(gates_by_q))
-        frames = []
-        if loop:
-            frames.append(
-                self._hits_frame(
-                    {
-                        qid: self._local_hits(
-                            plans[qid],
-                            k,
-                            boost_coverage=boost_coverage,
-                            exclude_filenames=exclude_filenames,
-                        )
-                        for qid in loop
-                    }
-                )
-            )
-            if not gates_by_q:
-                return frames[0]
-        frames.append(
-            self._fused_topk(plans, gates_by_q, k, exclude_filenames)
-        )
+        if len(gates_by_q) < 2:
+            # a join of one query shares nothing, and its fixed jobs cost
+            # more than the query's own Spark plan
+            gates_by_q = {}
+        for qid in sorted(set(plans) - set(hits) - set(gates_by_q)):
+            hits[qid] = self._spark_hits(plans[qid], k, **opts)
+        if not gates_by_q:
+            return self._hits_frame(hits)
+        frames = [self._fused_topk(plans, gates_by_q, k, exclude_filenames)]
+        if hits:
+            frames.insert(0, self._hits_frame(hits))
         return _union_all(frames).orderBy(F.asc("query_id"), F.asc("rank"))
 
     # bench.py and perfbench call the batch by this name
@@ -2314,16 +2469,23 @@ class SearchEngine:
         exclude_filenames: bool,
     ) -> list[tuple[int, float]]:
         """search_local's top-k [(doc_id, score)] of a parsed query: the
-        driver lane (_driver_hits), else one Spark collect of the top-k
-        cut of _match_frames' scored frame."""
-        hits = self._driver_hits(
-            plan,
-            k,
-            boost_coverage=boost_coverage,
-            exclude_filenames=exclude_filenames,
+        driver lane (_driver_hits), else _spark_hits."""
+        opts = dict(
+            boost_coverage=boost_coverage, exclude_filenames=exclude_filenames
         )
-        if hits is not None:
-            return hits
+        hits = self._driver_hits(plan, k, **opts)
+        return hits if hits is not None else self._spark_hits(plan, k, **opts)
+
+    def _spark_hits(
+        self,
+        plan: QueryPlan,
+        k: int,
+        *,
+        boost_coverage: bool,
+        exclude_filenames: bool,
+    ) -> list[tuple[int, float]]:
+        """One Spark collect of the top-k cut of _match_frames' scored
+        frame."""
         scored, _cand, _idfs, zero_score = self._match_frames(
             plan,
             boost_coverage=boost_coverage,

@@ -24,12 +24,13 @@ final exact sort.
 Routing (search_local): the query is parsed and the index refreshed once.
 The flat engine (engine.py) serves every query the segment plan does not
 own -- -n, universal, only-excluded, a keyword both excluded and positive,
-no blocks table -- through its _local_hits, and every rescue-free query its
-driver lane (_driver_hits) can answer with no Spark job.  The segment plan
-serves the rest: queries with a rescue term (quoted exact or excluded,
-containment-matched; their rows come from the flat engine's resolver and
-are re-encoded as synthetic blocks) and rescue-free queries over the
-driver budget.
+no blocks table -- through its _local_hits, and every query its driver
+lane (_driver_hits) can answer with no Spark job, quoted exact and
+excluded ("rescue") terms included: their needles resolve on the driver
+too.  The segment plan serves the rest: queries whose reads exceed the
+driver budget, and rescue queries with a needle too large to memoize;
+rescue rows come from the flat engine's resolver and are re-encoded as
+synthetic blocks.
 
 One in-segment scorer (_score_segs): decode the blocks into per-term tf
 lanes, mask by the must keywords, then lanes.eval_and_score on its numpy
@@ -515,9 +516,9 @@ class WandEngine:
                     boost_coverage=boost_coverage,
                     exclude_filenames=exclude_filenames,
                 )
-            # the flat engine's driver lane (0 Spark jobs) answers rescue-
-            # free queries under its read budget; the rest are segment-
-            # scored
+            # the flat engine's driver lane (0 Spark jobs) answers what
+            # fits its read budget, rescue needles included; the rest are
+            # segment-scored
             hits = self._fallback._driver_hits(
                 plan, k, boost_coverage=boost_coverage, exclude_filenames=False
             )

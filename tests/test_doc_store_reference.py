@@ -88,6 +88,28 @@ def test_reference_engine_rank_identity(spark, ref_index, tiny_oracle, query):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
+def test_reference_rescue_verifies_on_spark(spark, ref_index, tiny_oracle):
+    """The slim store has no text column for the driver to read, so a
+    fresh engine verifies a cold needle on Spark (through the source
+    join) and still returns the oracle's rows; once the needle is
+    memoized, the query is driver-served."""
+    from probe_spark.engine import SearchEngine
+
+    ix, _, _ = ref_index
+    eng = SearchEngine(spark, ix)
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    q = '"error handling" retry'
+    j0 = sched.nextJobId()
+    got = eng.search_local(q, k=10)
+    j1 = sched.nextJobId()
+    assert j1 > j0
+    assert eng.search_local(q, k=10) == got and sched.nextJobId() == j1
+    expected = oracle_search(tiny_oracle, q, k=10)
+    assert [d for d, _ in got] == [d for d, _ in expected]
+    for (gd, gs), (_, es) in zip(got, expected):
+        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), gd
+
+
 def test_reference_wand_rank_identity(spark, ref_index, tiny_oracle):
     """Segment engine on a compacted reference-mode index: rescue blocks
     hydrate through the source join, results stay oracle-identical."""

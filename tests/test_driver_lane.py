@@ -112,6 +112,22 @@ def test_tiny_budget_runs_the_spark_plan(spark, tiny_index, monkeypatch):
     assert _jobs(spark) > j0
 
 
+def test_dictionary_miss_reads_nothing(spark, tiny_index, monkeypatch):
+    """A bag none of whose terms is in the terms dictionary (df 0 for
+    every term) returns no hits without reading a table."""
+    from probe_spark import engine
+
+    calls = []
+    read = engine.pruned_read
+    monkeypatch.setattr(
+        engine, "pruned_read", lambda *a: calls.append(a[1:3]) or read(*a)
+    )
+    eng = engine.SearchEngine(spark, tiny_index[0])
+    j0 = _jobs(spark)
+    assert eng.search_local("orderzq zzzabsentterm", k=10) == []
+    assert calls == [] and _jobs(spark) == j0
+
+
 def test_url_read_over_budget_keeps_driver_hits(spark, tiny_index, monkeypatch):
     """When only the doc store's url read exceeds the budget, search()
     keeps the driver lane's hits and reads their urls with one Spark job,

@@ -191,11 +191,12 @@ def test_fused_chain_gates_classifier():
 
 def test_search_batch_fused_exclusions(engine, monkeypatch):
     """Fused exclusions (queries-as-data drop-pair anti-join): bagexcl
-    queries ride the fused plan -- including a shared excluded term
-    across queries, multiple exclusions in one query, an exclusion that
-    hits nothing, and one that wipes a term's whole match set -- and stay
+    queries ride the fused plan at driver budget 0 -- including a shared
+    excluded term across queries, multiple exclusions in one query, an
+    exclusion that hits nothing, and one that wipes a term's whole match
+    set -- and the driver lane at the default budget, and stay
     row-identical to per-query search(), with and without
-    exclude_filenames, at the default driver budget and at 0."""
+    exclude_filenames."""
     from probe_spark import elastic, indexer
     from probe_spark.engine import SearchEngine, _fused_chain_gates
 

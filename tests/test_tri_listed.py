@@ -12,6 +12,7 @@ from __future__ import annotations
 import json
 import shutil
 from collections import Counter
+from itertools import product
 from pathlib import Path
 
 import pytest
@@ -21,7 +22,7 @@ from probe_spark.engine import SearchEngine
 from probe_spark.oracle import CorpusIndex, Doc
 from probe_spark.oracle import search as oracle_search
 from tests.test_trigram import _py_tri_codes
-from tests.test_warm_rescue import _frames_rows
+from tests.test_warm_rescue import BUDGETS, _frames_rows, at_budget
 
 N_BUCKETS = 4
 # every trigram of a synthetic doc is shared by far more than 15 docs: the
@@ -172,23 +173,25 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def engines(spark, tri_builds):
-    return (
-        SearchEngine(spark, tri_builds["pruned"]),
-        SearchEngine(spark, tri_builds["complete"]),
-        _oracle(spark, tri_builds["pruned"]),
-    )
+def tri_oracle(spark, tri_builds):
+    return _oracle(spark, tri_builds["pruned"])
 
 
 @pytest.mark.parametrize("query", QUERIES)
-def test_queries_identical_across_builds(engines, query):
-    pruned, complete, oracle_ix = engines
-    got = pruned.search_local(query, k=20)
-    assert got == complete.search_local(query, k=20), query
-    expected = oracle_search(oracle_ix, query, k=20)
-    assert [d for d, _ in got] == [d for d, _ in expected], query
-    for (gd, gs), (_, es) in zip(got, expected):
-        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
+def test_queries_identical_across_builds(spark, tri_builds, tri_oracle, query):
+    """At both driver budgets, on fresh engines: the pruned build answers
+    as the complete one and the oracle do."""
+    expected = oracle_search(tri_oracle, query, k=20)
+    for budget in BUDGETS:
+        with at_budget(budget):
+            pruned, complete = (
+                SearchEngine(spark, tri_builds[b]) for b in ("pruned", "complete")
+            )
+            got = pruned.search_local(query, k=20)
+            assert got == complete.search_local(query, k=20), (query, budget)
+        assert [d for d, _ in got] == [d for d, _ in expected], (query, budget)
+        for (gd, gs), (_, es) in zip(got, expected):
+            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
 @pytest.mark.parametrize(
@@ -203,19 +206,20 @@ def test_queries_identical_across_builds(engines, query):
 def test_warm_rescue_identical_across_builds(spark, tri_builds, patch):
     """The three test_warm_rescue needle classes: the resolver on the
     pruned build, all needles in one call or one needle per call, equals
-    the complete build."""
+    the complete build, at both driver budgets."""
     out = []
-    for build, one_by_one in (
-        ("complete", False), ("pruned", False), ("pruned", True)
+    for budget, (build, one_by_one) in product(
+        BUDGETS, (("complete", False), ("pruned", False), ("pruned", True))
     ):
-        eng = SearchEngine(spark, tri_builds[build])
-        for k, v in patch.items():
-            setattr(eng, k, v)
-        if one_by_one:
-            for n in NEEDLES:
-                eng.warm_rescue_needles([n], False)
-        out.append(_frames_rows(eng, NEEDLES))
-    assert out[0] and out[1] == out[0] and out[2] == out[0]
+        with at_budget(budget):
+            eng = SearchEngine(spark, tri_builds[build])
+            for k, v in patch.items():
+                setattr(eng, k, v)
+            if one_by_one:
+                for n in NEEDLES:
+                    eng.warm_rescue_needles([n], False)
+            out.append(_frames_rows(eng, NEEDLES))
+    assert out[0] and all(o == out[0] for o in out)
 
 
 def test_ingest_keeps_listed_invariant(spark, tri_builds, tmp_path):

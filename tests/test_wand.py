@@ -118,8 +118,9 @@ def test_wand_boolean_matches_oracle(spark, compacted, tiny_oracle, query):
 
 
 def test_wand_driver_lane_zero_jobs(spark, compacted):
-    """At the default budget the bags and rescue-free booleans are the
-    flat engine's driver lane: no Spark job, the flat engine's rows."""
+    """At the default budget the bags, booleans and quoted or excluded-
+    phrase queries are the flat engine's driver lane: no Spark job (the
+    rescue needles resolve on the driver too), the flat engine's rows."""
     from probe_spark.engine import SearchEngine
     from probe_spark.wand import WandEngine
 
@@ -127,7 +128,8 @@ def test_wand_driver_lane_zero_jobs(spark, compacted):
     eng = WandEngine(spark, path)
     flat = SearchEngine(spark, path)
     sched = spark.sparkContext._jsc.sc().dagScheduler()
-    for q in DISJUNCTIVE_QUERIES + BOOLEAN_QUERIES:
+    rescue = ['"parseJSONToHTML5"', '"error handling" retry'] + EXCLUDED_QUERIES[:2]
+    for q in DISJUNCTIVE_QUERIES + BOOLEAN_QUERIES + rescue:
         j0 = sched.nextJobId()
         got = eng.search_local(q, k=10)
         assert sched.nextJobId() == j0, q

@@ -4,12 +4,18 @@ plus url, unless -n -- contains each needle, in every needle class:
 IN-pushdown candidates, declined/full-scan, lazy semi-join with a
 too-large verified set, sub-trigram, corpus-refuted and no trigram lane;
 for one needle and for four in one call.  Caps are forced per class via
-instance attributes.  The job-count tests pin that one resolver serves a
-single cold needle no heavier than the per-needle pipeline it replaced,
-and a batch of needles lighter than one query per needle.  The df rule
+instance attributes, and every class runs at the default driver budget
+(both resolver steps on the driver) and at budget 0 (both on Spark).  At
+budget 0 the job-count tests pin that one resolver serves a single cold
+needle no heavier than the per-needle pipeline it replaced, and a batch of
+needles lighter than one query per needle; at the default budget a query
+whose needles memoize as id lists runs no Spark job at all.  The df rule
 (_query_dfs) must give every needle class the oracle's global df."""
 
 from __future__ import annotations
+
+from contextlib import contextmanager
+from itertools import product
 
 import pytest
 
@@ -22,6 +28,21 @@ CLASSES = {
     "declined-fullscan": {"_TRI_DIRECT_FLOOR": 0, "_TRI_DIRECT_FRAC": 0.0},
     "lazy-toolarge": {"_ISIN_CAP": 1},  # lazy semi-join + too-large sets
 }
+
+
+BUDGETS = ("default", "zero")
+
+
+@contextmanager
+def at_budget(budget: str):
+    """Run the block at the default driver budget or at 0 (every read on
+    Spark)."""
+    from probe_spark import indexer
+
+    with pytest.MonkeyPatch.context() as mp:
+        if budget == "zero":
+            mp.setattr(indexer, "DRIVER_READ_BYTES", 0)
+        yield
 
 
 def _frames_rows(eng, needles, ex_fn=False):
@@ -60,32 +81,38 @@ def _engine(spark, tiny_index, patch):
 @pytest.mark.parametrize("cls", sorted(CLASSES))
 def test_warm_equals_per_needle(spark, tiny_index, docs, cls):
     """One needle per call (B = 1) and four in one call (B = 4) resolve to
-    the containment rows, memoized as id lists or too-large markers."""
-    for needles in (["firewall"], NEEDLES):
-        eng = _engine(spark, tiny_index, CLASSES[cls])
-        expected = _contains(docs, needles)
-        assert expected
-        assert _frames_rows(eng, needles) == expected
-        for t in needles:
-            want = [d for x, d in expected if x == t]
-            assert eng._verified_ids[(t, False)] == (
-                want if len(want) <= eng._ISIN_CAP else None
-            )
-        # a second read is served from the memo and the lazy scans alone
-        assert _frames_rows(eng, needles) == expected
+    the containment rows, memoized as id lists or too-large markers, at
+    both budgets."""
+    for budget, needles in product(BUDGETS, (["firewall"], NEEDLES)):
+        with at_budget(budget):
+            eng = _engine(spark, tiny_index, CLASSES[cls])
+            expected = _contains(docs, needles)
+            assert expected
+            assert _frames_rows(eng, needles) == expected
+            for t in needles:
+                want = [d for x, d in expected if x == t]
+                assert eng._verified_ids[(t, False)] == (
+                    want if len(want) <= eng._ISIN_CAP else None
+                )
+            # a second read is served from the memo and the lazy scans alone
+            assert _frames_rows(eng, needles) == expected
 
 
 def test_resolver_text_only(spark, tiny_index, docs):
     """-n: the haystack is the text alone, memoized under its own key."""
-    eng = _engine(spark, tiny_index, {})
     needles = NEEDLES + ["example"]
-    assert _frames_rows(eng, needles, True) == _contains(docs, needles, True)
-    assert _frames_rows(eng, ["example"]) == _contains(docs, ["example"])
+    for budget in BUDGETS:
+        with at_budget(budget):
+            eng = _engine(spark, tiny_index, {})
+            assert _frames_rows(eng, needles, True) == _contains(docs, needles, True)
+            assert _frames_rows(eng, ["example"]) == _contains(docs, ["example"])
 
 
 def test_resolver_sub_trigram(spark, tiny_index, docs):
-    eng = _engine(spark, tiny_index, {})
-    assert _frames_rows(eng, ["st", "ab"]) == _contains(docs, ["st", "ab"])
+    for budget in BUDGETS:
+        with at_budget(budget):
+            eng = _engine(spark, tiny_index, {})
+            assert _frames_rows(eng, ["st", "ab"]) == _contains(docs, ["st", "ab"])
 
 
 def test_warm_refuted_needle_caches_empty(spark, tiny_index):
@@ -98,16 +125,19 @@ def test_warm_refuted_needle_caches_empty(spark, tiny_index):
 
 
 def test_resolver_without_lane(spark, tiny_index, docs):
-    eng = _engine(spark, tiny_index, {"_tri_post_df": None})
-    assert eng._tri_candidate_ids("firewall") is None
-    assert _frames_rows(eng, NEEDLES) == _contains(docs, NEEDLES)
+    for budget in BUDGETS:
+        with at_budget(budget):
+            eng = _engine(spark, tiny_index, {"_tri_post_df": None})
+            assert eng._tri_candidate_ids("firewall") is None
+            assert _frames_rows(eng, NEEDLES) == _contains(docs, NEEDLES)
 
 
 # Spark jobs of the first (cold) and second (memoized) search_local of a
-# query on a fresh engine, with the test session.  The cold bounds are
-# measured with rescue dfs taken from the resolver memo (_query_dfs runs
-# no job); the warm bounds are the ones measured at the commit before the
-# one resolver (per-needle pipeline plus a batch warmer).
+# query on a fresh engine at driver budget 0, with the test session.  The
+# cold bounds are measured with rescue dfs taken from the resolver memo
+# (_query_dfs runs no job); the warm bounds are the ones measured at the
+# commit before the one resolver (per-needle pipeline plus a batch
+# warmer).
 PARENT_JOBS = {
     "in-pushdown": ('"error handling"', {}, 6, 3),
     "excluded": ('network -"firewall rules"', {}, 5, 3),
@@ -127,7 +157,10 @@ def _jobs(spark, fn):
 
 
 @pytest.mark.parametrize("cls", sorted(PARENT_JOBS))
-def test_cold_needle_jobs_within_parent(spark, tiny_index, cls):
+def test_cold_needle_jobs_within_parent(spark, tiny_index, monkeypatch, cls):
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
     q, patch, cold, warm = PARENT_JOBS[cls]
     eng = _engine(spark, tiny_index, patch)
     got = (
@@ -137,13 +170,43 @@ def test_cold_needle_jobs_within_parent(spark, tiny_index, cls):
     assert got[0] <= cold and got[1] <= warm, got
 
 
-def test_batch_of_needles_beats_one_query_each(spark, tiny_index):
-    queries = {
-        "a": '"error handling" retry',
-        "b": 'network -"firewall rules"',
-        "c": '"connection pool"',
-        "d": 'cache -"stale data"',
-    }
+@pytest.mark.parametrize("cls", sorted(PARENT_JOBS))
+def test_cold_needle_driver_lane(spark, tiny_index, tiny_oracle, cls):
+    """The default-budget twin: a query whose needles resolve on the
+    driver and memoize as id lists runs no Spark job, cold or warm, and
+    returns the oracle's rows; a needle whose candidates exceed the IN cap
+    (lazy-toolarge) keeps the Spark resolver within its budget-0 bounds."""
+    from probe_spark.oracle import search as oracle_search
+
+    q, patch, cold, warm = PARENT_JOBS[cls]
+    eng = _engine(spark, tiny_index, patch)
+    got = []
+    jobs = [_jobs(spark, lambda: got.append(eng.search_local(q, 10)))]
+    jobs.append(_jobs(spark, lambda: got.append(eng.search_local(q, 10))))
+    if cls == "lazy-toolarge":  # a lazy candidate frame: Spark
+        assert jobs[0] <= cold and jobs[1] <= warm, jobs
+    else:
+        assert jobs == [0, 0]
+    expected = oracle_search(tiny_oracle, q, k=10)
+    assert got[0] == got[1]
+    assert [d for d, _ in got[0]] == [d for d, _ in expected]
+    for (_, gs), (_, es) in zip(got[0], expected):
+        assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+
+
+BATCH = {
+    "a": '"error handling" retry',
+    "b": 'network -"firewall rules"',
+    "c": '"connection pool"',
+    "d": 'cache -"stale data"',
+}
+
+
+def test_batch_of_needles_beats_one_query_each(spark, tiny_index, monkeypatch):
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    queries = BATCH
     eng = _engine(spark, tiny_index, {})
     batch = _jobs(spark, lambda: eng.search_batch(queries, 10).collect())
     eng = _engine(spark, tiny_index, {})
@@ -151,6 +214,18 @@ def test_batch_of_needles_beats_one_query_each(spark, tiny_index):
         _jobs(spark, lambda: eng.search_local(q, 10)) for q in queries.values()
     )
     assert batch < single, (batch, single)
+
+
+def test_batch_of_needles_on_the_driver(spark, tiny_index):
+    """The default-budget twin: the batch's needles resolve and its
+    queries serve on the driver, so the batch runs no Spark job and
+    returns each query's search_local rows."""
+    eng = _engine(spark, tiny_index, {})
+    got = []
+    assert _jobs(spark, lambda: got.extend(eng.search_batch(BATCH, 10).collect())) == 0
+    for qid, q in BATCH.items():
+        rows = [(r["doc_id"], r["score"]) for r in got if r["query_id"] == qid]
+        assert rows == eng.search_local(q, 10), q
 
 
 # one query holding a needle of every class: multi-word (lane-served),
