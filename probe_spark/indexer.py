@@ -22,40 +22,78 @@ same mechanism Iceberg snapshots would give us):
   stats/                        singleton: n_docs, avgdl
   lineage/                      per-bucket build metrics + checkpoints
 
+Two hosts, one kernel.  The per-slice bodies (``_stage_slice``: rank,
+tokenize, write; ``_prune_slice``: drop dense trigrams) run either in
+mapInArrow tasks (the Spark host) or in a loop on the driver (the driver
+host); slicing, placement, the count check, the dictionaries, the commit
+and the lineage are the same code on both, so both write the same index.
+The gate (``hosted``) is the input plan's Catalyst size estimate
+(``_plan_bytes``, no job): rows times row width for an in-memory frame,
+file bytes for a scan, Long.MaxValue for a plan Spark cannot size.  Under
+DRIVER_BUILD_BYTES the pages are collected once (``toArrow``, one job)
+and the whole build runs in-process; the saving is the JVM scheduling and
+Python-worker start-up around a kernel that takes seconds, while the
+driver host tokenizes on one core and Spark on all of them.  Build
+seconds, measured on the perfbench corpus (repeated with url suffixes
+past 5000 docs) as in-memory frames (an estimate of 68 bytes a doc), 8
+buckets, 4 cores, two runs each, every build first in a fresh process
+("cold") and then again in the same process ("warm"):
+
+  docs     driver cold   driver warm   spark cold   spark warm
+   5000    2.3-2.5       1.2-1.3       5.7-6.7      2.2-2.7
+  10000    3.2-4.6       2.2-3.1       6.7-7.2      2.3-2.6
+  20000    5.2-6.8       4.2-4.8       8.2          3.8-3.9
+  30000    8.3-9.0       6.7-8.3       8.9-10.1     4.8-5.4
+  40000   10.6-13.3      8.9-11.4     10.4-10.9     4.8-5.9
+
+So the cold crossover lies between 30k and 40k docs (2.0-2.7 MB of
+estimate) and the warm one near 10k (0.7 MB).  DRIVER_BUILD_BYTES = 1 MiB
+sits between them: about 15k in-memory docs, where a cold build saves
+about 3 s and a warm one loses about 0.5 s.  A parquet scan is estimated
+at its file bytes, about 120 per doc for this corpus, so about 9k docs.
+``ingest_batch`` uses the same gate on its deduplicated micro-batch.
+
 The build in one pass (``build_index``):
-  * slicing -- a url-column-only job range-partitions the urls into
-    slices and collects each slice's (count, min url); slices ascend in
-    url, so slice i's doc ids are offset_i + rank within the slice.  A
-    bucket is k = file_count(bucket input bytes, FILE_BYTES) consecutive
-    slices (input bytes from ``df.inputFiles()``; an in-memory frame
-    counts as 0, so k = 1).  The core count never enters.
+  * slicing -- the urls are range-partitioned into slices and each
+    slice's (count, min url) kept; slices ascend in url, so slice i's doc
+    ids are offset_i + rank within the slice.  On the Spark host a
+    url-column-only job does it; on the driver host ``_cut_urls`` applies
+    Spark's own bound rule to every url, so small inputs (which Spark's
+    sampling reads whole) get the same slices on both hosts.  A bucket is
+    k = file_count(bucket input bytes, FILE_BYTES) consecutive slices
+    (input bytes from ``df.inputFiles()``; an in-memory frame counts as
+    0, so k = 1).  The core count never enters.
   * write -- ONE mapInArrow task per slice (pages placed by
-    ``repartitionById`` on the slice id): it sorts its rows by url, sets
-    doc_id = offset + rank, tokenizes each doc (``_doc_tokenizer``, the
-    same per-doc code ``_tokenize_partition`` runs), builds the slice's
-    pages_indexed, doc_lens, postings, terms_partial, tri_partial and
-    unpruned trigram rows as Arrow tables, sorts each with
-    ``Table.sort_by`` and writes them with pyarrow into
-    ``_attempts/<taskAttemptId>/``.  The task returns one small row
-    (slice, attempt, counts, its own wall time).
+    ``repartitionById`` on the slice id; on the driver host
+    ``_place_local`` applies the same ``url >= lo`` rule): it sorts its
+    rows by url, sets doc_id = offset + rank, tokenizes each doc
+    (``_doc_tokenizer``, the same per-doc code ``_tokenize_partition``
+    runs), builds the slice's pages_indexed, doc_lens, postings,
+    terms_partial, tri_partial and unpruned trigram rows as Arrow tables,
+    sorts each with ``Table.sort_by`` and writes them with pyarrow into
+    ``_attempts/<taskAttemptId>/`` (``_attempts/<slice>/`` on the driver
+    host).  The task returns one small row (slice, attempt, counts, its
+    own wall time).
   * trigram pass -- listed-trigram rule: ``manifest.tri_cutoff`` =
     trigram.tri_cutoff(n) of the slicing's doc count.  A trigram with df
     above it is never read by the engine, so its rows are dropped: the
     driver sums the tri_partial files of the winning attempts (plus the
     committed buckets of a resumed build) into the exact global df, and
-    one more mapInArrow job (a task per slice) drops the dense trigrams'
-    rows from the staged lane.  A manifest without ``tri_cutoff`` marks a
-    complete lane (every trigram listed).
+    one more mapInArrow job (a task per slice; a loop on the driver host)
+    drops the dense trigrams' rows from the staged lane.  A manifest
+    without ``tri_cutoff`` marks a complete lane (every trigram listed).
   * dictionaries -- terms and tri_terms are the key-sorted sums of the
     partials, computed with pyarrow on the driver while the partials total
     under FILE_BYTES (one file); above that a Spark aggregate lays them
     out as key ranges (``fold_dictionary``).
   * commit -- bucket by bucket the driver renames the winning attempts'
     files into ``<table>/bucket=b/part-<slice>.parquet`` and then writes
-    the bucket's lineage row, the resume marker.  Only attempts returned
-    by ``collect()`` land: a speculative or failed duplicate never does.
-    ``_attempts/`` is deleted at the end (and by every fresh build or
-    resume, which also clears what a killed run left behind).
+    the bucket's lineage row (counts, ``wall_ms`` and the ``host`` that
+    wrote it), the resume marker; a resume may run on the other host.
+    Only attempts returned by ``collect()`` land: a speculative or failed
+    duplicate never does.  ``_attempts/`` is deleted at the end (and by
+    every fresh build or resume, which also clears what a killed run left
+    behind).
 
 So a bucket of k slices is k files per table: (key, doc_id)-sorted runs
 over disjoint, ascending doc-id ranges (one sorted file per bucket when
@@ -80,7 +118,8 @@ Scale design notes (explicitly, per the north rule):
     probe's doc-index tie-break at ranking.rs:408-420), assigned WITHOUT a
     global sort: range-slice the urls, rank within each slice inside its
     task, add per-slice offsets computed from slice counts -- no driver
-    collect of data rows.
+    collect of data rows on the Spark host (the driver host collects only
+    inputs estimated under DRIVER_BUILD_BYTES).
   * the document text is read and written ONCE: the slice task writes the
     doc store and derives the slim columns (doc_lens, postings) from the
     same rows.  A slice's rows sit in one task's memory, bounded by the
@@ -178,6 +217,13 @@ FILE_BYTES = 256 << 20
 # the Spark plan runs (engine.pruned_read).
 DRIVER_READ_BYTES = 64 << 20
 
+# Driver build limit, in bytes of the input plan's Catalyst size estimate
+# (``_plan_bytes``): a build or ingest whose input estimates under it runs
+# the slice kernel in-process on the driver; at 0 every build runs on
+# Spark.  Set between the measured warm (~0.7 MB) and cold (2.0-2.7 MB)
+# crossovers: see the module docstring.
+DRIVER_BUILD_BYTES = 1 << 20
+
 
 def file_count(nbytes: int, target: int) -> int:
     """Files per bucket of one table: max(1, ceil(nbytes / target))."""
@@ -193,6 +239,22 @@ def _input_bytes(spark: SparkSession, df: DataFrame) -> int:
         p = spark._jvm.org.apache.hadoop.fs.Path(f)
         total += p.getFileSystem(conf).getFileStatus(p).getLen()
     return total
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df``'s optimized plan, no job: rows
+    times row width for an in-memory frame, the files' bytes for a scan,
+    Long.MaxValue for a plan it cannot size."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def hosted(pages: DataFrame) -> tuple[str, DataFrame | pa.Table]:
+    """The build host of ``pages`` and the input it runs on: ("driver",
+    the pages collected as one Arrow table, one job) when the plan's size
+    estimate is under DRIVER_BUILD_BYTES, else ("spark", ``pages``)."""
+    if _plan_bytes(pages) < DRIVER_BUILD_BYTES:
+        return "driver", pages.toArrow()
+    return "spark", pages
 
 
 TOKENS_SCHEMA = StructType(
@@ -395,56 +457,136 @@ SLICE_RESULT = (
 )
 
 
+def _stage_slice(
+    pages: pa.Table, sid: int, offset: int, attempt: int, staging: Path,
+    tokenizer: str, keep_text: bool,
+) -> dict:
+    """The write stage's per-slice body, on either host: slice ``sid``'s
+    tables land in ``<staging>/<attempt>/<table>.parquet`` (an empty table
+    writes no file).  Returns its SLICE_RESULT row."""
+    import pyarrow.compute as pc
+
+    t0 = time.perf_counter()
+    tables = _slice_tables(pages, offset, tokenizer, keep_text)
+    d = staging / str(attempt)
+    d.mkdir(parents=True, exist_ok=True)
+    for name, t in tables.items():
+        if t.num_rows:
+            write_arrow(t, d / f"{name}.parquet")
+    lens = tables["doc_lens"]["doc_len"]
+    return {
+        "sid": sid,
+        "attempt": attempt,
+        "n_docs": len(lens),
+        "n_postings": tables["postings"].num_rows,
+        "sum_dl": pc.sum(lens).as_py() or 0,
+        "n_tri": tables["tri_lane"].num_rows,
+        "wall_ms": int((time.perf_counter() - t0) * 1000),
+    }
+
+
 def _slice_writer(
     staging: str, offsets: dict[int, int], tokenizer: str, keep_text: bool
 ):
-    """mapInArrow fn of the write stage: one partition is one slice, whose
-    tables land in ``<staging>/<taskAttemptId>/<table>.parquet`` (an empty
-    table writes no file)."""
+    """mapInArrow fn of the Spark host's write stage: one partition is one
+    slice, staged by ``_stage_slice`` under its taskAttemptId."""
 
     def run(batches):
         import pyarrow.compute as pc
         from pyspark import TaskContext
 
-        t0 = time.perf_counter()
         batches = [b for b in batches if b.num_rows]
         if not batches:
             return
         pages = pa.Table.from_batches(batches)
         (sid,) = pc.unique(pages["sid"]).to_pylist()
-        tables = _slice_tables(pages, offsets[sid], tokenizer, keep_text)
-        att = TaskContext.get().taskAttemptId()
-        d = Path(staging) / str(att)
-        d.mkdir(parents=True, exist_ok=True)
-        for name, t in tables.items():
-            if t.num_rows:
-                write_arrow(t, d / f"{name}.parquet")
-        lens = tables["doc_lens"]["doc_len"]
-        yield pa.RecordBatch.from_pydict(
-            {
-                "sid": pa.array([sid], pa.int32()),
-                "attempt": [att],
-                "n_docs": [len(lens)],
-                "n_postings": [tables["postings"].num_rows],
-                "sum_dl": [pc.sum(lens).as_py() or 0],
-                "n_tri": [tables["tri_lane"].num_rows],
-                "wall_ms": [int((time.perf_counter() - t0) * 1000)],
-            }
-        )
+        yield _row_batch(_stage_slice(
+            pages, sid, offsets[sid], TaskContext.get().taskAttemptId(),
+            Path(staging), tokenizer, keep_text,
+        ))
 
     return run
 
 
+def _row_batch(row: dict) -> pa.RecordBatch:
+    """A per-slice result row as the one-row batch a mapInArrow task
+    yields (``sid`` an int column, the rest longs and strings)."""
+    return pa.RecordBatch.from_pydict(
+        {**{k: [v] for k, v in row.items()}, "sid": pa.array([row["sid"]], pa.int32())}
+    )
+
+
+def _slice_list(parts, n_buckets: int, par: int) -> list[dict]:
+    """The manifest slices of ``parts``, the (count, min url) of each
+    range partition in url order: the nonempty ones as {pid, bucket,
+    count, offset, lo}, where slice i covers urls [lo_i, lo_{i+1}) and
+    bucket = i * n_buckets // P, so a bucket is a contiguous run of
+    slices."""
+    slices, acc = [], 0
+    for i, (count, lo) in enumerate(p for p in parts if p[0] > 0):
+        slices.append(
+            {
+                "pid": i,
+                "bucket": i * n_buckets // par,
+                "count": count,
+                "offset": acc,
+                "lo": lo,
+            }
+        )
+        acc += count
+    return slices
+
+
+def _cut_urls(urls: list[str], par: int, nulls: int = 0) -> list[list]:
+    """The driver host's range partitioning of the sorted non-null
+    ``urls`` (and ``nulls`` null urls, which sort first and land in
+    partition 0): Spark's RangePartitioner.determineBounds over every url
+    with unit weight -- the weight it gives each url when its sampling job
+    reads them all, as it does while no input partition holds more than
+    300 * P / (input partitions) rows -- so then both hosts cut the same
+    slices.  A bound is an upper-inclusive url, never equal to the
+    previous one, so equal urls stay in one partition.  Returns each
+    partition's [count, min url]."""
+    import bisect
+
+    n = len(urls) + nulls
+    m = min(par, n)
+    step = n / m if m else 0.0
+    bounds: list[str] = []
+    cum, target = float(nulls), step
+    for u in urls:
+        if len(bounds) >= m - 1:
+            break
+        cum += 1.0
+        if cum >= target and (not bounds or u > bounds[-1]):
+            bounds.append(u)
+            target += step
+    parts = [[0, None] for _ in range(len(bounds) + 1)]
+    parts[0][0] = nulls
+    for u in urls:
+        p = parts[bisect.bisect_left(bounds, u)]
+        if p[1] is None:  # sorted: the first url is the minimum
+            p[1] = u
+        p[0] += 1
+    return parts
+
+
 def _slice_pages(
-    spark: SparkSession, pages: DataFrame, n_buckets: int, k: int = 1
+    spark: SparkSession, pages: DataFrame | pa.Table, n_buckets: int, k: int = 1
 ) -> list[dict]:
-    """Slicing: a url-COLUMN-ONLY job range-partitions the urls into
-    n_buckets * k slices and collects each slice's (count, min url).
-    Column pruning keeps the text out of this shuffle.  Returns the
-    nonempty slices in url order: {pid, bucket, count, offset, lo}, where
-    slice i covers urls [lo_i, lo_{i+1}) and bucket = i * n_buckets // P,
-    so a bucket is a contiguous run of slices."""
+    """Slicing into n_buckets * k range partitions of url, each
+    summarized as its (count, min url) by ``_slice_list``.  On the Spark
+    host (``pages`` a DataFrame) a url-COLUMN-ONLY job range-partitions
+    and collects them (column pruning keeps the text out of this shuffle);
+    on the driver host (an Arrow table) ``_cut_urls`` cuts them in
+    process."""
     par = n_buckets * k
+    if isinstance(pages, pa.Table):
+        import pyarrow.compute as pc
+
+        urls = sorted(pc.drop_null(pages["url"]).to_pylist())
+        parts = _cut_urls(urls, par, pages["url"].null_count)
+        return _slice_list(parts, n_buckets, par)
     slice_rows = (
         pages.select("url")
         .repartitionByRange(par, "url")
@@ -455,19 +597,7 @@ def _slice_pages(
     )
     # <= P rows: sorted here, as a Spark orderBy would cost two more jobs
     slice_rows.sort(key=lambda r: r["pid"])
-    slices, acc = [], 0
-    for i, row in enumerate(r for r in slice_rows if r["count"] > 0):
-        slices.append(
-            {
-                "pid": i,
-                "bucket": i * n_buckets // par,
-                "count": row["count"],
-                "offset": acc,
-                "lo": row["lo"],
-            }
-        )
-        acc += row["count"]
-    return slices
+    return _slice_list([(r["count"], r["lo"]) for r in slice_rows], n_buckets, par)
 
 
 def _place(pages: DataFrame, slices: list[dict], todo=None) -> DataFrame:
@@ -488,6 +618,20 @@ def _place(pages: DataFrame, slices: list[dict], todo=None) -> DataFrame:
     if todo is not None:
         placed = placed.filter(F.col("sid").isin(list(todo)))
     return placed.repartitionById(max(len(slices), 1), "sid")
+
+
+def _place_local(pages: pa.Table, slices: list[dict], todo) -> dict[int, pa.Table]:
+    """``_place`` on the driver host: {slice id: its rows} for the
+    nonempty slices in ``todo``, by the same ``url >= lo`` rule."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    sid = np.zeros(pages.num_rows, dtype=np.int64)
+    for s in slices[1:]:
+        ge = pc.fill_null(pc.greater_equal(pages["url"], s["lo"]), False)
+        sid += ge.to_numpy(zero_copy_only=False)
+    placed = {i: pages.filter(pa.array(sid == i)) for i in todo}
+    return {i: t for i, t in placed.items() if t.num_rows}
 
 
 def _assign_doc_ids(
@@ -683,22 +827,31 @@ def dense_tris(
 
 def write_slices(
     spark: SparkSession,
-    pages: DataFrame,
+    pages: DataFrame | pa.Table,
     slices: list[dict],
     staging: Path,
     todo: list[int],
     tokenizer: str = "probe",
     keep_text: bool = True,
 ) -> dict[int, dict]:
-    """The write stage: one task per slice in ``todo`` (slice ids) stages
-    its tables under ``staging``.  Returns {slice id: result row} of the
-    attempts ``collect()`` returned, each with ``files`` = {table: staged
-    file}.  Raises if a slice's row count differs from its ``count``
-    (unless that is None)."""
+    """The write stage: each slice in ``todo`` (slice ids) stages its
+    tables under ``staging`` -- one task per slice on the Spark host
+    (``pages`` a DataFrame), a loop on the driver host (an Arrow table,
+    the slice id standing in for the attempt).  Returns {slice id: result
+    row} of the attempts ``collect()`` returned, each with ``files`` =
+    {table: staged file}.  Raises if a slice's row count differs from its
+    ``count`` (unless that is None)."""
     offsets = {s["pid"]: s["offset"] for s in slices}
-    fn = _slice_writer(str(staging), offsets, tokenizer, keep_text)
-    rows = _place(pages, slices, todo).mapInArrow(fn, SLICE_RESULT).collect()
-    results = {r["sid"]: r.asDict() for r in rows}
+    if isinstance(pages, pa.Table):
+        rows = [
+            _stage_slice(t, sid, offsets[sid], sid, staging, tokenizer, keep_text)
+            for sid, t in _place_local(pages, slices, todo).items()
+        ]
+    else:
+        fn = _slice_writer(str(staging), offsets, tokenizer, keep_text)
+        placed = _place(pages, slices, todo).mapInArrow(fn, SLICE_RESULT)
+        rows = [r.asDict() for r in placed.collect()]
+    results = {r["sid"]: r for r in rows}
     for sid in todo:
         got = results.get(sid, {}).get("n_docs", 0)
         if slices[sid]["count"] not in (None, got):
@@ -716,13 +869,39 @@ def write_slices(
     return results
 
 
+def _prune_slice(lane: str, dense: list[int], sid: int, attempt: int) -> dict:
+    """The trigram pass's per-slice body, on either host: the staged
+    ``lane`` minus the ``dense`` trigrams' rows, written next to it as
+    ``<lane>.<attempt>.parquet`` (no file, path "", when nothing is
+    left).  Returns the slice's (sid, path, n_tri, wall_ms) row."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t0 = time.perf_counter()
+    table = pq.read_table(lane)
+    kept = table.filter(pc.invert(pc.is_in(table["tri"], pa.array(dense, pa.int32()))))
+    path = ""
+    if kept.num_rows:
+        path = f"{lane[:-len('.parquet')]}.{attempt}.parquet"
+        write_arrow(kept, Path(path))
+    return {
+        "sid": sid,
+        "path": path,
+        "n_tri": kept.num_rows,
+        "wall_ms": int((time.perf_counter() - t0) * 1000),
+    }
+
+
 def prune_lane(
-    spark: SparkSession, results: dict[int, dict], dense: list[int]
+    spark: SparkSession,
+    results: dict[int, dict],
+    dense: list[int],
+    host: str = "spark",
 ) -> None:
     """The trigram pass: sets each slice's ``files["tri_postings"]`` to
-    its staged lane minus the ``dense`` trigrams' rows (one task per slice,
-    written next to the lane, no file when nothing is left), its
-    ``n_tri`` to the rows kept, and adds the task's wall time."""
+    its staged lane minus the ``dense`` trigrams' rows (``_prune_slice``:
+    one task per slice on the Spark host, a loop on the driver host), its
+    ``n_tri`` to the rows kept, and adds the slice's wall time."""
     lanes = {
         sid: str(r["files"]["tri_lane"])
         for sid, r in results.items()
@@ -735,37 +914,25 @@ def prune_lane(
     order = sorted(lanes)
 
     def run(batches):
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        drop = pa.array(dense, pa.int32())
         for b in batches:
             for i in b.column("id").to_pylist():
-                t0 = time.perf_counter()
-                sid = order[i]
-                lane = pq.read_table(lanes[sid])
-                kept = lane.filter(pc.invert(pc.is_in(lane["tri"], drop)))
-                path = ""
-                if kept.num_rows:
-                    att = TaskContext.get().taskAttemptId()
-                    path = f"{lanes[sid][:-len('.parquet')]}.{att}.parquet"
-                    write_arrow(kept, Path(path))
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "sid": pa.array([sid], pa.int32()),
-                        "path": [path],
-                        "n_tri": [kept.num_rows],
-                        "wall_ms": [int((time.perf_counter() - t0) * 1000)],
-                    }
-                )
+                yield _row_batch(_prune_slice(
+                    lanes[order[i]], dense, order[i],
+                    TaskContext.get().taskAttemptId(),
+                ))
 
-    n = len(order)
-    for row in (
-        spark.range(0, n, 1, n)
-        .mapInArrow(run, "sid int, path string, n_tri long, wall_ms long")
-        .collect()
-    ):
+    if host == "driver":
+        rows = [_prune_slice(lanes[sid], dense, sid, sid) for sid in order]
+    else:
+        n = len(order)
+        rows = (
+            spark.range(0, n, 1, n)
+            .mapInArrow(run, "sid int, path string, n_tri long, wall_ms long")
+            .collect()
+        )
+    for row in rows:
         r = results[row["sid"]]
         r["files"]["tri_postings"] = Path(row["path"]) if row["path"] else None
         r["n_tri"] = row["n_tri"]
@@ -924,8 +1091,9 @@ def build_index(
     # only the columns the index needs travel through the placement
     # shuffle (html, once validated, stays behind)
     pages = pages.select("url", "text", "lang")
+    k = file_count(_input_bytes(spark, pages) // n_buckets, FILE_BYTES)
+    host, pages = hosted(pages)
     if not resuming:
-        k = file_count(_input_bytes(spark, pages) // n_buckets, FILE_BYTES)
         slices = _slice_pages(spark, pages, n_buckets, k)
         manifest = {
             "n_buckets": n_buckets,
@@ -962,7 +1130,7 @@ def build_index(
         )
 
     tri_parts = partials("tri_partial")
-    prune_lane(spark, results, dense_tris(spark, tri_parts, cutoff))
+    prune_lane(spark, results, dense_tris(spark, tri_parts, cutoff), host)
     lap("trigram_pass")
 
     fold_dictionary(spark, out, "terms", partials("terms_partial"))
@@ -986,6 +1154,7 @@ def build_index(
                     k: sum(r[k] for r in rows)
                     for k in ("n_docs", "n_postings", "sum_dl", "wall_ms")
                 },
+                "host": host,
                 "bytes_in": _dir_bytes(out / "pages_indexed" / f"bucket={b}"),
                 "bytes_out": sum(
                     _dir_bytes(out / t / f"bucket={b}")
@@ -1017,6 +1186,7 @@ def build_index(
     wall_s = max(tot["wall_ms"], 1) / 1000.0
     metrics = {
         **tot,
+        "host": host,
         "docs_per_sec": tot["n_docs"] / wall_s,
         "postings_per_sec": tot["n_postings"] / wall_s,
         "bytes_by_table": bytes_by_table(out),

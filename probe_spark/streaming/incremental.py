@@ -15,8 +15,10 @@ Design:
     batch bucket by the bytes of the files the micro-batch read (an
     in-memory frame is one slice, which needs no slicing job; k > 1 runs
     the build's url-column slicing job), and one Arrow task per slice
-    ranks, tokenizes and writes every table of its slice.
-    Ids continue above the current high-water mark (note ids are
+    ranks, tokenizes and writes every table of its slice.  A micro-batch
+    the build's gate (indexer.hosted) sends to the driver host is
+    collected once, url dedup included, and sliced and written
+    in-process by the same per-slice code.  Ids continue above the current high-water mark (note ids are
     arrival-order across batches, not global url rank, so tie-breaks are
     deterministic but differ from a from-scratch rebuild);
   * the trigram lane keeps the build's invariant "df <= tri_cutoff =>
@@ -56,6 +58,7 @@ from probe_spark.indexer import (
     dense_tris,
     file_count,
     fold_dictionary,
+    hosted,
     parquet_files,
     prune_lane,
     rebuild_tri_terms,
@@ -245,12 +248,14 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
         existing = spark.read.parquet(str(out / "pages_indexed")).select("url")
         fresh = fresh.join(existing, "url", "leftanti")
     # one bucket of k url slices, sized like a batch bucket by the bytes
-    # of the files the micro-batch read; ids continue above the index.  A
-    # single slice needs no slicing job: its count is the write's
+    # of the files the micro-batch read; ids continue above the index.  On
+    # the driver host the dedup runs in the one collect; on the Spark host
+    # a single slice needs no slicing job: its count is the write's
     k = file_count(_input_bytes(spark, batch_df), FILE_BYTES)
+    host, fresh = hosted(fresh)
     slices = (
         _slice_pages(spark, fresh, 1, k)
-        if k > 1
+        if k > 1 or host == "driver"
         else [{"pid": 0, "bucket": 0, "count": None, "offset": 0}]
     )
     for s in slices:
@@ -273,6 +278,7 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
     prune_lane(
         spark, results,
         dense_tris(spark, folded + delta, manifest.get("tri_cutoff")),
+        host,
     )
     n_docs = sum(r["n_docs"] for r in results.values())
     if n_docs == 0:
@@ -296,6 +302,8 @@ def ingest_batch(spark: SparkSession, batch_df, index_dir: str, epoch_id: int) -
                 "n_docs": n_docs,
                 "sum_dl": sum_dl,
                 "n_tri_postings": sum(r["n_tri"] for _, r in parts),
+                "wall_ms": sum(r["wall_ms"] for _, r in parts),
+                "host": host,
                 "epoch": epoch_id,
                 "finished_ts": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
             }

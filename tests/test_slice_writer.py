@@ -54,7 +54,9 @@ def test_build_record_and_staging_cleanup(spark, tmp_path):
 def test_only_returned_attempt_lands(spark, tmp_path):
     """Two staged attempts for one slice: the one the job returned and a
     stray (a losing speculative duplicate).  Only the returned one's
-    files are committed; the stray stays in staging."""
+    files are committed; the stray stays in staging.  The pages go in as
+    a DataFrame, so slicing and the write run on the Spark host, the one
+    with task attempts, whatever DRIVER_BUILD_BYTES says."""
     pages = _pages(spark, 0, 30)
     slices = indexer._slice_pages(spark, pages, 1)
     assert [s["pid"] for s in slices] == [0]

@@ -160,6 +160,34 @@ def test_special_terms_parameter():
     assert "keywordalpha" not in toks_plain
 
 
+def test_split_camel_case_returns_a_fresh_list():
+    """The memo holds tuples: a caller mutating the returned list leaves
+    the next call's answer unchanged."""
+    got = tk.split_camel_case("parseJSONToHTML5")
+    got.append("mutated")
+    got[0] = "x"
+    assert tk.split_camel_case("parseJSONToHTML5") == [
+        "parse", "json", "to", "html", "5"
+    ]
+
+
+def test_memoized_tokenize_equals_uncached(monkeypatch):
+    """tokenize over the fixture corpus's texts and urls (with and without
+    special terms) gives the same tokens through the memo as through the
+    uncached split, recursion included."""
+    from probe_spark.fixtures import make_pages
+
+    pages = make_pages(300)
+    special = frozenset(["keywordalpha", "firewall"])
+    inputs = [(s, sp) for p in pages for s in (p.text, p.url)
+              for sp in (tk._EMPTY, special)]
+    cached = [tk.tokenize(s, sp) for s, sp in inputs]
+    monkeypatch.setattr(
+        tk, "_split_camel_case_cached", tk._split_camel_case_cached.__wrapped__
+    )
+    assert [tk.tokenize(s, sp) for s, sp in inputs] == cached
+
+
 # --- stemmer vectors (Snowball English / Porter2) --------------------------
 
 @pytest.mark.parametrize(
