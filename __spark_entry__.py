@@ -71,15 +71,13 @@ def _documents_index(spark: SparkSession, sf_dir: str) -> str:
 
 def _documents_simple_index(spark: SparkSession, sf_dir: str) -> str:
     """Side index over the documents table built with the SQL-expressible
-    whitespace tokenizer (build_index(tokenizer='simple')) and compacted
-    into block-max blocks.  The probe_index_*_simple entries route their
-    queries through SearchEngine/WandEngine READING these postings/blocks
-    tables, so the driver's DuckDB oracle exercises the inverted index
-    machinery itself (codec, compaction, segment pruning) -- the full-probe
+    whitespace tokenizer (build_index(tokenizer='simple')).  The
+    probe_index_*_simple entries route their queries through SearchEngine
+    READING these postings/terms/stats tables, so the driver's DuckDB
+    oracle exercises the inverted index machinery itself -- the full-probe
     tokenizer keeps its own pytest parity suite."""
     from pyspark.sql import functions as F
 
-    from probe_spark.compaction import compact_index
     from probe_spark.indexer import build_index
 
     _ensure_shipped(spark)
@@ -100,7 +98,6 @@ def _documents_simple_index(spark: SparkSession, sf_dir: str) -> str:
             F.col("lang"),
         )
         build_index(spark, pages, str(ix), n_buckets=4, tokenizer="simple")
-    compact_index(spark, str(ix), resume=True)
     return str(ix)
 
 
@@ -135,16 +132,12 @@ def probe_index_bm25_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def probe_index_wand_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same query/oracle as probe_index_bm25_simple but answered by the
-    WAND engine over the compacted varbyte BLOCK index.  The bag is
-    rescue-free, so at sf0.01 and sf0.1 its reads fit the driver budget and
-    the flat engine's driver lane serves it (0 Spark jobs); the segment
-    plan and its one scorer stay under the DuckDB gate through
-    probe_index_wand_bool_simple, whose -window is a rescue term."""
-    from probe_spark.wand import WandEngine
+    """Same query, engine and oracle (R1_SQL) as probe_index_bm25_simple;
+    the name is kept from the retired segment-pruned (WAND) engine."""
+    from probe_spark.engine import SearchEngine
 
     ix = _documents_simple_index(spark, sf_dir)
-    eng = WandEngine(spark, ix)
+    eng = SearchEngine(spark, ix)
     return _rounded_topk(eng.search("spark join", k=50))
 
 
@@ -162,15 +155,12 @@ def probe_index_bool_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def probe_index_wand_bool_simple(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R2 boolean '+spark +join -window' through the WAND SEGMENT engine
-    (required-term segment intersection + synthetic exclusion blocks +
-    vectorized lane scoring over the compacted block index); same DuckDB
-    oracle as probe_index_bool_simple (R2_SQL) -- puts the WAND exclusion
-    path under the driver's hard gate."""
-    from probe_spark.wand import WandEngine
+    """Same query, engine and oracle (R2_SQL) as probe_index_bool_simple;
+    the name is kept from the retired segment-pruned (WAND) engine."""
+    from probe_spark.engine import SearchEngine
 
     ix = _documents_simple_index(spark, sf_dir)
-    eng = WandEngine(spark, ix)
+    eng = SearchEngine(spark, ix)
     return _rounded_topk(eng.search("+spark +join -window", k=50))
 
 
@@ -214,7 +204,6 @@ def _documents_refstore_index(spark: SparkSession, sf_dir: str) -> str:
     layout a deployment with an existing Iceberg crawl table would use."""
     from pyspark.sql import functions as F
 
-    from probe_spark.compaction import compact_index
     from probe_spark.indexer import build_index
 
     _ensure_shipped(spark)
@@ -238,7 +227,6 @@ def _documents_refstore_index(spark: SparkSession, sf_dir: str) -> str:
             doc_store="reference",
             source_path=str(src),
         )
-    compact_index(spark, str(ix), resume=True)
     return str(ix)
 
 
@@ -261,14 +249,13 @@ def _documents_incremental_index(spark: SparkSession, sf_dir: str) -> str:
     half of the documents table (tokenizer='simple'), then the odd half
     folded in through TWO Structured-Streaming micro-batches
     (streaming/incremental.start_incremental_index, availableNow drains,
-    shared checkpoint across runs), then compacted.  The final index must
+    shared checkpoint across runs).  The final index must
     be semantically identical to a fresh full build -- postings, df, avgdl
     and therefore every BM25 score -- so the querying entry shares the
     plain BM25 oracle (R1_SQL) and the driver's gate verifies the whole
-    ingest->fold->compact chain, not just the batch path."""
+    ingest->fold chain, not just the batch path."""
     from pyspark.sql import functions as F
 
-    from probe_spark.compaction import compact_index
     from probe_spark.indexer import build_index
     from probe_spark.streaming.incremental import start_incremental_index
 
@@ -303,7 +290,6 @@ def _documents_incremental_index(spark: SparkSession, sf_dir: str) -> str:
                 spark, str(stream_dir), str(ix), str(ckpt_dir)
             )
             q.awaitTermination()
-        compact_index(spark, str(ix), resume=True)
         done.touch()
     return str(ix)
 
@@ -332,7 +318,6 @@ def _documents_pipeline_index(spark: SparkSession, sf_dir: str) -> str:
     actually runs."""
     from pyspark.sql import functions as F
 
-    from probe_spark.compaction import compact_index
     from probe_spark.entry_queries import pipeline_dedup_corpus
     from probe_spark.indexer import build_index
 
@@ -348,7 +333,6 @@ def _documents_pipeline_index(spark: SparkSession, sf_dir: str) -> str:
             F.col("lang"),
         )
         build_index(spark, pages, str(ix), n_buckets=2, tokenizer="simple")
-    compact_index(spark, str(ix), resume=True)
     return str(ix)
 
 
@@ -754,18 +738,16 @@ def probe_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def probe_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Segment-pruned (WAND-style) top-10 over the compacted block index
-    for a disjunctive query (rows-only check; rank identity vs the oracle
-    is pytest-verified in tests/test_wand.py)."""
+    """Top-10 (doc_id, score) of a disjunctive query through search_local
+    (rows-only check; rank identity vs the oracle is pytest-verified in
+    tests/test_spark_engine.py).  The name is kept from the retired
+    segment-pruned (WAND) engine."""
     from pyspark.sql import Row
 
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
+    from probe_spark.engine import SearchEngine
 
     ix = _documents_index(spark, sf_dir)
-    # no-op when every bucket is checkpointed; heals legacy block layouts
-    compact_index(spark, ix, resume=True)
-    pairs = WandEngine(spark, ix).search_local("spark merge sort window", k=10)
+    pairs = SearchEngine(spark, ix).search_local("spark merge sort window", k=10)
     return spark.createDataFrame(
         [Row(rank=i + 1, doc_id=d, score=s) for i, (d, s) in enumerate(pairs)],
         "rank int, doc_id long, score double",
@@ -773,17 +755,15 @@ def probe_wand_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def probe_wand_bool_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boolean (required + And) query through the WAND segment engine:
-    must-keyword segment intersection, then the oracle scorer in-segment
-    (rows-only check; rank identity vs the oracle is pytest-verified)."""
+    """Boolean (required + And) top-10 through search_local (rows-only
+    check; rank identity vs the oracle is pytest-verified).  The name is
+    kept from the retired segment-pruned (WAND) engine."""
     from pyspark.sql import Row
 
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
+    from probe_spark.engine import SearchEngine
 
     ix = _documents_index(spark, sf_dir)
-    compact_index(spark, ix, resume=True)
-    pairs = WandEngine(spark, ix).search_local("+spark merge AND sort", k=10)
+    pairs = SearchEngine(spark, ix).search_local("+spark merge AND sort", k=10)
     return spark.createDataFrame(
         [Row(rank=i + 1, doc_id=d, score=s) for i, (d, s) in enumerate(pairs)],
         "rank int, doc_id long, score double",
@@ -1053,7 +1033,7 @@ def oracle_sql() -> dict[str, str]:
     from probe_spark.entry_queries import BAGEXCL_SQL, R1_SQL, R2_SQL
 
     # the simple-tokenizer index entries share the BM25 math oracles: the
-    # Spark side reads the REAL postings/blocks tables, the SQL recomputes
+    # Spark side reads the REAL postings tables, the SQL recomputes
     # the same scores from raw text
     out = {
         "probe_index_bm25_simple": R1_SQL,

@@ -3,16 +3,14 @@ query and ranking semantics of probelabs/probe (see SURVEY.md).
 
 Public API:
 
-    from probe_spark import build_index, compact_index, SearchEngine, WandEngine
+    from probe_spark import build_index, SearchEngine
 """
 
 __version__ = "0.1.0"
 
 __all__ = [
     "build_index",
-    "compact_index",
     "SearchEngine",
-    "WandEngine",
     "get_spark",
 ]
 
@@ -24,18 +22,10 @@ def __getattr__(name):
         from probe_spark.indexer import build_index
 
         return build_index
-    if name == "compact_index":
-        from probe_spark.compaction import compact_index
-
-        return compact_index
     if name == "SearchEngine":
         from probe_spark.engine import SearchEngine
 
         return SearchEngine
-    if name == "WandEngine":
-        from probe_spark.wand import WandEngine
-
-        return WandEngine
     if name == "get_spark":
         from probe_spark.session import get_spark
 

@@ -8,7 +8,6 @@ Usage (also works with plain ``python -m probe_spark.cli``):
   spark-submit ... search --index /data/ix --query '+error handler' -k 10 \\
       [--format json|markdown|text|xml|outline|color] [--max-tokens N]
       [--max-bytes N]
-  spark-submit ... compact --index /data/ix
   spark-submit ... grep --index /data/ix --pattern 'regex'
 
 Build the zip with:  python -m zipfile -c probe_spark.zip probe_spark/
@@ -89,7 +88,6 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--max-results", type=int)
     s.add_argument("--max-bytes", type=int)
     s.add_argument("--max-tokens", type=int)
-    s.add_argument("--wand", action="store_true", help="use the compacted block index")
     s.add_argument(
         "--reranker",
         default="bm25",
@@ -155,9 +153,6 @@ def main(argv: list[str] | None = None) -> int:
     ba.add_argument("--exact", action="store_true")
     ba.add_argument("--boost-coverage", action="store_true")
     ba.add_argument("-n", "--exclude-filenames", action="store_true")
-
-    c = sub.add_parser("compact", help="compact postings into block-max blocks")
-    c.add_argument("--index", required=True)
 
     bm = sub.add_parser(
         "benchmark", help="time the headline query shapes on an index"
@@ -265,14 +260,9 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if ok else 1
 
     if args.cmd == "config":  # driver-side, no Spark session
-        import inspect
-
         from probe_spark import dedup, indexer, watchdog
         from probe_spark.config import DEFAULT_BM25
         from probe_spark.engine import SearchEngine
-        from probe_spark.wand import WandEngine
-
-        wand_defaults = inspect.signature(WandEngine).parameters
 
         out: dict = {
             "bm25": {"k1": DEFAULT_BM25.k1, "b": DEFAULT_BM25.b},
@@ -295,10 +285,6 @@ def main(argv: list[str] | None = None) -> int:
                 "memo_needles": SearchEngine._VERIFIED_NEEDLE_CAP,
             },
             "dedup": {"band_bucket_cap": dedup.BAND_BUCKET_CAP},
-            "wand": {
-                "phase1_segs_default": wand_defaults["phase1_segs"].default,
-                "phase2_batch_default": wand_defaults["phase2_batch"].default,
-            },
         }
         if args.index:
             from pathlib import Path
@@ -458,47 +444,25 @@ def main(argv: list[str] | None = None) -> int:
                         seen.add(r["url"])
                         print(r["url"])
             return 0
-        if args.wand:
-            from probe_spark.wand import WandEngine
+        from probe_spark.engine import SearchEngine
 
-            try:
-                with query_deadline(spark, deadline_s):
-                    rows = [
-                        r.asDict()
-                        for r in WandEngine(spark, args.index)
-                        .search(
-                            query,
-                            args.k,
-                            exact=args.exact,
-                            with_matches=args.matches,
-                            boost_coverage=args.boost_coverage,
-                            exclude_filenames=args.exclude_filenames,
-                        )
-                        .collect()
-                    ]
-            except QueryTimeoutError as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 3
-        else:
-            from probe_spark.engine import SearchEngine
-
-            eng = SearchEngine(spark, args.index)
-            try:
-                with query_deadline(spark, deadline_s):
-                    rows = [
-                        r.asDict()
-                        for r in eng.search(
-                            query,
-                            args.k,
-                            args.exact,
-                            args.boost_coverage,
-                            with_matches=args.matches,
-                            exclude_filenames=args.exclude_filenames,
-                        ).collect()
-                    ]
-            except QueryTimeoutError as e:
-                print(f"error: {e}", file=sys.stderr)
-                return 3
+        eng = SearchEngine(spark, args.index)
+        try:
+            with query_deadline(spark, deadline_s):
+                rows = [
+                    r.asDict()
+                    for r in eng.search(
+                        query,
+                        args.k,
+                        args.exact,
+                        args.boost_coverage,
+                        with_matches=args.matches,
+                        exclude_filenames=args.exclude_filenames,
+                    ).collect()
+                ]
+        except QueryTimeoutError as e:
+            print(f"error: {e}", file=sys.stderr)
+            return 3
         if args.session:
             from probe_spark.session_cache import SessionCache
 
@@ -710,12 +674,6 @@ def main(argv: list[str] | None = None) -> int:
                 ts.append(time.time() - t0)
             timings[name] = round(statistics.median(ts), 3)
         print(json.dumps({"runs": args.runs, "median_sec": timings}))
-        return 0
-
-    if args.cmd == "compact":
-        from probe_spark.compaction import compact_index
-
-        print(json.dumps(compact_index(spark, args.index)))
         return 0
 
     if args.cmd == "grep":

@@ -26,10 +26,6 @@ DEFAULT_BM25 = BM25Params()
 # unique terms are rejected.  Kept as a validated constraint.
 MAX_QUERY_TERMS = 256
 
-# Posting-list block size (docs per compressed block) for the varbyte index
-# and block-max WAND metadata.
-POSTING_BLOCK_SIZE = 128
-
 # Language alias normalization (normalize_language_alias,
 # /root/reference/src/search/search_runner.rs:1904-1921).  Applied to BOTH
 # the lang: filter value and the document lang label (the reference

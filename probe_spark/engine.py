@@ -654,7 +654,7 @@ class SearchEngine:
 
     def check_refresh(self) -> bool:
         """Reopen readers + caches iff the index changed on disk since the
-        last query (incremental ingest / compaction).  Returns True when a
+        last query (incremental ingest or a rebuild).  Returns True when a
         refresh happened.  Called at the top of search()."""
         fp = self._index_fingerprint()
         if fp == self._index_fp:
@@ -685,15 +685,6 @@ class SearchEngine:
         if materialize:
             self._postings_df.count()
             self._docs_df.count()
-
-    def unpin(self) -> None:
-        """Inverse of pin_hot: unpersist the pinned frames and clear the
-        pin bookkeeping, so callers don't have to reach into private
-        state (_pinned_frames / _pin) to undo a pin."""
-        for frame in self._pinned_frames:
-            frame.unpersist()
-        self._pin = False
-        self._pinned_frames = ()
 
     def _reopen(self) -> None:
         p = Path(self.index_dir)
@@ -1143,7 +1134,15 @@ class SearchEngine:
         scan in the plan.  A verified set is a subset of its candidates,
         so a memoized needle never needs its candidates again.  One needle
         costs at most one candidate collect and one verify collect, and so
-        do B needles; at sf0.1 both steps fit the budget and run no job."""
+        do B needles; at sf0.1 both steps fit the budget and run no job.
+
+        Jobs: adaptive query execution runs a collect's shuffle stage as a
+        job of its own, so a collect that shuffles costs two jobs -- the
+        candidate collect when some needle selects more than one trigram
+        (the grouped _tri_cand_rows), the verify collect when it holds a
+        capped branch (lazy candidates or a plain scan).  A cold call thus
+        runs at most four jobs; on the 1000-doc fixture at budget 0 the
+        lane-served needle "error handling" runs three (2 + 1)."""
         ex_key = bool(ex_fn)
         memo = self._verified_ids
         cold = sorted({t for t in needles if (t, ex_key) not in memo})
@@ -1248,8 +1247,7 @@ class SearchEngine:
         self, plan: QueryPlan, terms: list[str], *, exclude_filenames: bool
     ) -> DataFrame:
         """(term, doc_id, tf, doc_len) rows for the GIVEN terms only, with
-        the containment rescue applied to those that are rescue terms
-        (lets WandEngine fetch just the excluded-term rows)."""
+        the containment rescue applied to those that are rescue terms."""
         post = self._postings_rows(terms, exclude_filenames).select(
             "term", "doc_id", "tf", "doc_len"
         )

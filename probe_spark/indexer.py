@@ -108,7 +108,7 @@ produce with ``INDEX_ARROW`` -- zstd level 3, v2 data pages, no stored
 Arrow schema, ``doc_id`` and ``tri`` DELTA_BINARY_PACKED, ``term`` and
 ``url`` DELTA_BYTE_ARRAY, ``text`` DELTA_LENGTH_BYTE_ARRAY, and a
 dictionary only on the low-cardinality columns.  Spark-written tables
-(the dictionary fallback, compaction blocks, suggest buckets) go through
+(the dictionary fallback, suggest buckets) go through
 ``index_write`` (INDEX_PARQUET): zstd, v2 pages, doc_id without a
 dictionary.  Readers are encoding-agnostic, so layouts written with
 other codecs stay valid.
@@ -126,7 +126,7 @@ Scale design notes (explicitly, per the north rule):
     FILE_BYTES slice sizing for file inputs.
   * a term's postings are B independent sorted runs, one per bucket
     (buckets double as salt for hot-term skew, SURVEY.md SS4), merged at
-    query or compaction time; parquet row-group stats prune term lookups.
+    query time; parquet row-group stats prune term lookups.
   * global aggregates need no extra passes over data: doc counts and
     doc_len sums come from the winning attempts' result rows (exact under
     task retries and speculation, since only those attempts' files land),
@@ -288,7 +288,7 @@ def _doc_tokenizer(tokenizer: str = "probe"):
       * "simple" -- single-space split of text only.  This is the
         SQL-expressible tokenizer used by the probe_index_*_simple driver
         entries, so the DuckDB oracle can exercise the index build + query
-        machinery (postings/terms/stats/blocks) end-to-end while the
+        machinery (postings/terms/stats) end-to-end while the
         tokenizer itself is verified by its own parity suite.
 
     ``tf`` maps term -> count over text and url tokens, ``tf_url`` the url
@@ -1069,10 +1069,9 @@ def build_index(
         # fresh build: drop checkpoints AND derived tables of any previous
         # build in this dir -- per-bucket commits replace only their own
         # bucket, so a rebuild with fewer buckets would otherwise leave
-        # stale higher-numbered bucket dirs polluting postings/terms/blocks
+        # stale higher-numbered bucket dirs polluting postings/terms
         for stale in (
-            *BUCKET_TABLES, "lineage", "docs", "terms", "stats", "blocks",
-            "tri_terms",
+            *BUCKET_TABLES, "lineage", "docs", "terms", "stats", "tri_terms",
         ):
             shutil.rmtree(out / stale, ignore_errors=True)
         (out / "stream_state.json").unlink(missing_ok=True)

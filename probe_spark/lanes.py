@@ -6,7 +6,7 @@ with two backends.
 ``where``, a constant and a cast to f64 -- and emits it over either
 backend:
   * ``NumpyOps``: lanes are numpy arrays, one slot per candidate doc.  The
-    driver lane (``score_rows``) and WAND's in-segment scorers run it;
+    driver lane (``score_rows``) runs it;
   * ``COLUMNS``: lanes are Spark Columns of a one-row-per-doc frame.  The
     Spark plans' scorer (engine._score_lanes) runs it as one Catalyst
     expression, so no Python node enters a serving plan.

@@ -90,9 +90,6 @@ class SessionCache:
         )
         return [(int(r["doc_id"]), r["doc_md5"]) for r in rows]
 
-    def seen_doc_ids(self, session_id: str, query: str) -> set[int]:
-        return {d for d, _m in self._cached_rows(session_id, query)}
-
     def filter_results(
         self, session_id: str, query: str, results: list[tuple[int, float]]
     ) -> list[tuple[int, float]]:

@@ -33,8 +33,7 @@ Design:
     stats update from running totals carried in stream_state.json (doc
     counts and doc_len sums come from the winning attempts' result rows
     -- no extra jobs over the index, and exact under retries/speculation);
-  * the flat-postings query engine sees appended postings immediately;
-    compaction folds deltas into block-max blocks on demand.
+  * the query engine sees appended postings immediately.
 """
 
 from __future__ import annotations

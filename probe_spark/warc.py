@@ -248,19 +248,6 @@ def response_rows(
         yield url, ts, _http_body(content), lang
 
 
-def conversion_rows(
-    buf: bytes,
-) -> Iterator[tuple[str, dt.datetime, str, str]]:
-    """(url, warc_ts, text, lang) for each WARC-Type: conversion record
-    -- the WET layout (Common Crawl's extracted-text sidecar files):
-    payload is the page's plain text directly, no HTTP wrapper."""
-    for headers, content in parse_records(buf):
-        if headers.get("warc-type") != "conversion":
-            continue
-        url, ts, lang = _record_fields(headers)
-        yield url, ts, content.decode("utf-8", "replace"), lang
-
-
 def _open_stream(path: str) -> BinaryIO:
     """Binary stream over a possibly-gzipped file: incremental member
     decompression (GzipFile reads concatenated members), no whole-file

@@ -4,16 +4,16 @@ ask #3 evidence).
 The r4 10M-doc latency numbers were cold-cache first sightings measured
 while the oracle shared the box; this script builds (or resumes) the
 fixture index WITHOUT an oracle phase and records, per engine path
-(flat, WAND, WAND+pin_hot):
+(flat, flat+pin_hot):
 
   - cold: first sighting of each of the 25 reference queries
   - warm: min over ``PROBE_LAT_SWEEPS`` (default 3) further sweeps --
-    memoized rescue needles, persisted seg-stats, cached dictionaries,
+    memoized rescue needles, cached dictionaries,
     OS page cache: the steady-state an interactive deployment serves
 
 p50/p99 over the 25-query set for each (path, temperature), one JSON
-line.  A fixed scratch (PROBE_SCALEID_DIR) survives crashes: build and
-compaction are lineage-resumable exactly as in rank_identity_scale.py.
+line.  A fixed scratch (PROBE_SCALEID_DIR) survives crashes: the build
+is lineage-resumable exactly as in rank_identity_scale.py.
 
 Usage: python scripts/query_latency_scale.py [n_docs] [n_buckets]
 """
@@ -49,12 +49,10 @@ def main() -> None:
     # float('inf') and json.dumps would emit non-standard 'Infinity'
     sweeps = max(1, int(os.environ.get("PROBE_LAT_SWEEPS", "3")))
 
-    from probe_spark.compaction import compact_index
     from probe_spark.engine import SearchEngine
     from probe_spark.fixtures import pages_df
     from probe_spark.indexer import build_index
     from probe_spark.session import get_spark
-    from probe_spark.wand import WandEngine
 
     fixed = os.environ.get("PROBE_SCALEID_DIR")
     if fixed:
@@ -75,45 +73,39 @@ def main() -> None:
         )
         out["build_sec"] = round(time.time() - t0, 1)
         out["n_postings"] = metrics["n_postings"]
-        t0 = time.time()
-        compact_index(spark, ix)
-        out["compact_sec"] = round(time.time() - t0, 1)
 
-        flat = SearchEngine(spark, ix)
-        wand = WandEngine(spark, ix)
+        eng = SearchEngine(spark, ix)
         qs = [QUERIES[qid] for qid in sorted(QUERIES)]
 
-        for label, eng in (("flat", flat), ("wand", wand)):
-            cold: list[float] = []
-            for q in qs:
+        cold: list[float] = []
+        for q in qs:
+            t0 = time.time()
+            eng.search_local(q, k=10)
+            cold.append(time.time() - t0)
+        out["flat_cold"] = _dist(cold)
+        best = [float("inf")] * len(qs)
+        for _ in range(sweeps):
+            for i, q in enumerate(qs):
                 t0 = time.time()
                 eng.search_local(q, k=10)
-                cold.append(time.time() - t0)
-            out[f"{label}_cold"] = _dist(cold)
-            best = [float("inf")] * len(qs)
-            for _ in range(sweeps):
-                for i, q in enumerate(qs):
-                    t0 = time.time()
-                    eng.search_local(q, k=10)
-                    best[i] = min(best[i], time.time() - t0)
-            out[f"{label}_warm"] = _dist(best)
-            out[f"{label}_warm_p99_over_p50"] = round(
-                out[f"{label}_warm"]["p99_sec"]
-                / max(out[f"{label}_warm"]["p50_sec"], 1e-9),
-                2,
-            )
+                best[i] = min(best[i], time.time() - t0)
+        out["flat_warm"] = _dist(best)
+        out["flat_warm_p99_over_p50"] = round(
+            out["flat_warm"]["p99_sec"] / max(out["flat_warm"]["p50_sec"], 1e-9),
+            2,
+        )
 
-        # pinned lane: blocks + hot flat tables executor-cached
-        wand.pin_hot()
+        # pinned lane: hot tables executor-cached
+        eng.pin_hot()
         for q in qs:  # cache fill
-            wand.search_local(q, k=10)
+            eng.search_local(q, k=10)
         best = [float("inf")] * len(qs)
         for _ in range(max(1, sweeps - 1)):
             for i, q in enumerate(qs):
                 t0 = time.time()
-                wand.search_local(q, k=10)
+                eng.search_local(q, k=10)
                 best[i] = min(best[i], time.time() - t0)
-        out["wand_pinned_warm"] = _dist(best)
+        out["flat_pinned_warm"] = _dist(best)
         print(json.dumps(out))
     finally:
         spark.stop()

@@ -1,15 +1,15 @@
 #!/usr/bin/env python
 """One-off large-scale rank-identity run (BASELINE.md evidence).
 
-Builds the synthetic fixture corpus at N docs, compacts it, and checks the
-25 reference queries (FIXTURES.md §3) through BOTH engines against the
+Builds the synthetic fixture corpus at N docs and checks the 25 reference
+queries (FIXTURES.md §3) through SearchEngine.search_local against the
 pure-Python oracle -- doc ids must match exactly and scores to the last
 ulp.  Usage:
 
     python scripts/rank_identity_scale.py [n_docs] [n_buckets]
 
-Prints one JSON line with build/compact/oracle/query timings and the
-per-engine pass counts; exit 0 only on 25/25 + 25/25.
+Prints one JSON line with build/oracle/query timings and the pass count;
+exit 0 only on 25/25.
 """
 
 from __future__ import annotations
@@ -120,16 +120,14 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1_000_000
     n_buckets = int(sys.argv[2]) if len(sys.argv) > 2 else 8
 
-    from probe_spark.compaction import compact_index
     from probe_spark.engine import SearchEngine
     from probe_spark.fixtures import pages_df
     from probe_spark.indexer import build_index
     from probe_spark.oracle import search as oracle_search
     from probe_spark.session import get_spark
-    from probe_spark.wand import WandEngine
 
     # PROBE_SCALEID_DIR pins the scratch to a fixed path that SURVIVES a
-    # crash: build and compaction are lineage-resumable, so a relaunch
+    # crash: the build is lineage-resumable, so a relaunch
     # with the same dir picks up where the dead run stopped instead of
     # redoing hours of work.  Unset keeps the old fresh-tempdir behavior.
     import os as _os
@@ -161,15 +159,12 @@ def main() -> None:
         )
         out["build_sec"] = round(time.time() - t0, 1)
         out["n_postings"] = metrics["n_postings"]
-        t0 = time.time()
-        compact_index(spark, ix)
-        out["compact_sec"] = round(time.time() - t0, 1)
 
         import os
 
         # release the Spark JVM (driver heap defaults to 32g) across the
         # oracle's resident-set peak at multi-million-doc scale; a fresh
-        # session serves the engine/wand query phase afterwards
+        # session serves the engine query phase afterwards
         spark.stop()
 
         # PROBE_ORACLE_BUILD_WORKERS caps the corpus-build fork pool:
@@ -242,40 +237,34 @@ def main() -> None:
 
         spark = get_spark("rank_identity_scale_query")
         spark.sparkContext.setLogLevel("ERROR")
-        flat = SearchEngine(spark, ix)
-        wand = WandEngine(spark, ix)
-        results = {"engine": 0, "wand": 0}
+        eng = SearchEngine(spark, ix)
+        passed = 0
         mismatches = []
-        lat: dict[str, list[float]] = {"engine": [], "wand": []}
+        lat: list[float] = []
         t0 = time.time()
         for qid in sorted(QUERIES):
             q = QUERIES[qid]
             expected = expected_all[qid]
-            for label, eng in (("engine", flat), ("wand", wand)):
-                tq = time.time()
-                got = eng.search_local(q, k=10)
-                lat[label].append(time.time() - tq)
-                ok = [d for d, _ in got] == [d for d, _ in expected] and all(
-                    gs == es for (_, gs), (_, es) in zip(got, expected)
-                )
-                if ok:
-                    results[label] += 1
-                else:
-                    mismatches.append((qid, label, got[:3], expected[:3]))
-        out["queries_sec"] = round(time.time() - t0, 1)
-        # per-path latency distribution at THIS corpus size (cold cache,
-        # first sighting of each query -- the conservative number)
-        for label, ts in lat.items():
-            ts = sorted(ts)
-            out[f"{label}_p50_sec"] = round(ts[len(ts) // 2], 3)
-            out[f"{label}_p99_sec"] = round(
-                ts[min(len(ts) - 1, int(len(ts) * 0.99))], 3
+            tq = time.time()
+            got = eng.search_local(q, k=10)
+            lat.append(time.time() - tq)
+            ok = [d for d, _ in got] == [d for d, _ in expected] and all(
+                gs == es for (_, gs), (_, es) in zip(got, expected)
             )
-        out["engine_pass"] = results["engine"]
-        out["wand_pass"] = results["wand"]
-        out["mismatches"] = [
-            {"qid": m[0], "path": m[1]} for m in mismatches[:5]
-        ]
+            if ok:
+                passed += 1
+            else:
+                mismatches.append((qid, got[:3], expected[:3]))
+        out["queries_sec"] = round(time.time() - t0, 1)
+        # latency distribution at THIS corpus size (cold cache, first
+        # sighting of each query -- the conservative number)
+        lat.sort()
+        out["engine_p50_sec"] = round(lat[len(lat) // 2], 3)
+        out["engine_p99_sec"] = round(
+            lat[min(len(lat) - 1, int(len(lat) * 0.99))], 3
+        )
+        out["engine_pass"] = passed
+        out["mismatches"] = [{"qid": m[0]} for m in mismatches[:5]]
         print(json.dumps(out))
         # keep the scratch on mismatch too: it is the debugging evidence
         ok = not mismatches

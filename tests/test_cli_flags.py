@@ -86,17 +86,6 @@ def test_exclude_filenames_shrinks_url_matches(spark, ix, tiny_oracle):
     assert got == nofn
 
 
-def test_exclude_filenames_wand_routes_to_fallback(spark, ix, tiny_oracle):
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
-
-    compact_index(spark, ix, resume=True)
-    eng = WandEngine(spark, ix)
-    exp = oracle_search(tiny_oracle, "firewall whitelist", k=5, exclude_filenames=True)
-    got = eng.search_local("firewall whitelist", 5, exclude_filenames=True)
-    assert [d for d, _ in got] == [d for d, _ in exp]
-
-
 # -- frequency / dry-run -----------------------------------------------------
 
 
@@ -165,22 +154,6 @@ def test_config_without_index(capsys):
     assert cfg["rescue"]["tri_direct_frac"] == 0.05
     assert cfg["rescue"]["tri_direct_floor"] == 1_000
     assert cfg["rescue"]["memo_needles"] == 128
-
-
-def test_config_reports_wand_defaults(capsys, monkeypatch):
-    """config reads the WAND phase defaults off WandEngine itself: moved
-    defaults show up in its output."""
-    from probe_spark.wand import WandEngine
-
-    params, phase1, phase2 = WandEngine.__init__.__defaults__
-    assert (phase1, phase2) == (8, 256)
-    monkeypatch.setattr(WandEngine.__init__, "__defaults__", (params, 3, 17))
-    rc, out = _run(capsys, "config")
-    assert rc == 0
-    assert json.loads(out.out)["wand"] == {
-        "phase1_segs_default": 3,
-        "phase2_batch_default": 17,
-    }
 
 
 # -- grep asymmetric context + color ----------------------------------------

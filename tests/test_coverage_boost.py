@@ -1,6 +1,6 @@
-"""The R7 coverage boost is one value in every host: the driver lane, the
-Spark plan (budget 0) and WAND's segment scorer each look it up in
-lanes.boost_table, so a boosted score equals the scalar oracle's in f64.
+"""The R7 coverage boost is one value in every host: the driver lane and
+the Spark plan (budget 0) each look it up in lanes.boost_table, so a
+boosted score equals the scalar oracle's in f64.
 The (matched, n_terms) pairs are ones where recomputing cov**1.5 differs
 from oracle.coverage_boost in the last ulp: numpy's pow at (3, 8), the
 JVM's at (5, 7)."""
@@ -30,12 +30,9 @@ def _pages(matched: int, n_terms: int) -> list[tuple[str, str, str]]:
 
 @pytest.fixture(scope="module", params=[(3, 8), (5, 7)], ids=["3of8", "5of7"])
 def boost_index(spark, tmp_path_factory, request):
-    from probe_spark.compaction import compact_index
-
     matched, n_terms = request.param
     path = tmp_path_factory.mktemp("boost") / "ix"
     _build(spark, path, _pages(matched, n_terms))
-    compact_index(spark, str(path))
     query = " ".join(_WORDS[:n_terms])
     assert len(elastic.create_query_plan(query).term_indices) == n_terms
     yield path, query, _oracle(path)
@@ -66,11 +63,3 @@ def test_spark_plan_boost_is_the_oracle(spark, boost_index, monkeypatch):
     got = SearchEngine(spark, str(path)).search_local(query, 10, boost_coverage=True)
     assert got == _want(boost_index)
 
-
-def test_wand_boost_is_the_oracle(spark, boost_index, monkeypatch):
-    from probe_spark.wand import WandEngine
-
-    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)  # segment scorer
-    path, query, _ = boost_index
-    got = WandEngine(spark, str(path)).search_local(query, 10, boost_coverage=True)
-    assert got == _want(boost_index)

@@ -110,23 +110,6 @@ def test_reference_rescue_verifies_on_spark(spark, ref_index, tiny_oracle):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), gd
 
 
-def test_reference_wand_rank_identity(spark, ref_index, tiny_oracle):
-    """Segment engine on a compacted reference-mode index: rescue blocks
-    hydrate through the source join, results stay oracle-identical."""
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
-
-    ix, _, _ = ref_index
-    compact_index(spark, ix)
-    eng = WandEngine(spark, ix, phase1_segs=1)
-    for query in TEXT_TOUCHING_QUERIES:
-        got = eng.search_local(query, k=10)
-        expected = oracle_search(tiny_oracle, query, k=10)
-        assert [d for d, _ in got] == [d for d, _ in expected], query
-        for (gd, gs), (_, es) in zip(got, expected):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
-
-
 def test_reference_kill_resume(spark, tmp_path_factory, tiny_oracle):
     """A build killed mid-phase-B resumes from lineage and serves
     identical results -- the resumable-batch north rule holds in

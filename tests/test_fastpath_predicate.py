@@ -8,7 +8,6 @@ fails loudly.  Pure plan-level predicate -- no Spark session.
 
 from probe_spark import elastic
 from probe_spark.engine import _bag_plus_exclusions
-from probe_spark.wand import _is_disjunctive_bag
 
 
 def plan(q: str):
@@ -32,9 +31,7 @@ class TestEngages:
 
 class TestDeclines:
     def test_no_exclusions_is_plain_bag(self):
-        # the pure-bag predicate owns this shape, not bag+exclusions
         assert not _bag_plus_exclusions(plan("scan merge"))
-        assert _is_disjunctive_bag(plan("scan merge"))
 
     def test_required_term(self):
         assert not _bag_plus_exclusions(plan("+scan -vector"))

@@ -157,7 +157,7 @@ def test_index_tables_zstd_delta_doc_id(tiny_index, assert_index_layout, table):
 def test_bytes_by_table_matches_disk(tiny_index):
     """build_index reports each table's footprint from a driver-side walk;
     the build's own tables are unchanged since (later tests only add
-    tables such as blocks/ and lineage rows)."""
+    tables such as suggest buckets and lineage rows)."""
     from probe_spark.indexer import _dir_bytes
 
     path, metrics = tiny_index

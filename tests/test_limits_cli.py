@@ -174,16 +174,6 @@ def test_cli_build_search_grep(spark, tmp_path, capsys):
     n = int(capsys.readouterr().out.strip().splitlines()[-1])
     assert n > 0
 
-    assert main(["compact", "--index", str(tmp_path / "ix")]) == 0
-    blocks = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert blocks["blocks_bytes"] > 0
-
-    assert main(
-        ["search", "--index", str(tmp_path / "ix"), "--query", "firewall",
-         "-k", "5", "--wand", "--format", "text"]
-    ) == 0
-    _ = capsys.readouterr()
-
     # grep --context prints matching lines with surrounding context
     assert main(
         ["grep", "--index", str(tmp_path / "ix"), "--pattern", "firewall",

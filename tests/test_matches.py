@@ -71,20 +71,6 @@ def test_only_excluded_and_universal_have_empty_matches(eng):
             assert r["score_breakdown"] == {}
 
 
-def test_wand_matches_route(spark, tiny_index):
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
-
-    ix, _ = tiny_index
-    compact_index(spark, ix, resume=True)
-    rows = (
-        WandEngine(spark, ix)
-        .search("firewall whitelist", k=5, with_matches=True)
-        .collect()
-    )
-    assert rows and all(r["matched_keywords"] for r in rows)
-
-
 def test_breakdown_sums_to_score_with_coverage_boost(spark, tiny_index):
     """With boost_coverage the reported score is scaled; the breakdown
     entries must carry their share so the map still sums to `score`."""

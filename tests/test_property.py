@@ -1,18 +1,11 @@
 """Property-based tests (hypothesis) mirroring the reference's proptest
 layer (SURVEY.md SS5.3, tests/property_tests.rs): nothing panics on
-arbitrary input, codecs round-trip, evaluation is consistent."""
+arbitrary input, evaluation is consistent."""
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from probe_spark import elastic, textkit
-from probe_spark.codec import (
-    decode_doc_block,
-    encode_doc_block,
-    varbyte_decode,
-    varbyte_encode,
-)
 from probe_spark.stemmer import stem
 
 
@@ -31,24 +24,6 @@ def test_stemmer_total_and_idempotent_on_output_length(word):
     out = stem(word)
     assert isinstance(out, str)
     assert len(out) <= len(word) + 1  # step-1b can append an 'e'
-
-
-@settings(max_examples=150, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
-def test_varbyte_roundtrip(vals):
-    v = np.array(vals, dtype=np.uint64)
-    assert varbyte_decode(varbyte_encode(v)).tolist() == vals
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(
-        st.integers(min_value=0, max_value=10**12), min_size=1, max_size=200, unique=True
-    )
-)
-def test_doc_block_roundtrip(ids):
-    arr = np.array(sorted(ids), dtype=np.uint64)
-    assert decode_doc_block(encode_doc_block(arr)).tolist() == sorted(ids)
 
 
 @settings(max_examples=200, deadline=None)

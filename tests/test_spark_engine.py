@@ -107,6 +107,32 @@ def test_determinism(engine):
     assert a == b
 
 
+@pytest.mark.parametrize("budget", ["default", "zero"])
+def test_engine_differential_random_queries(
+    engine, tiny_oracle, monkeypatch, budget
+):
+    """Seeded random boolean shapes must agree with the oracle on the
+    driver lane (default budget) and on the Spark lanes (budget 0)."""
+    import random
+
+    from probe_spark import indexer
+
+    if budget == "zero":
+        monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    rng = random.Random(42)
+    vocab = ["firewall", "whitelist", "error", "handling", "retry",
+             "process", "timeout", "deadline", "token", "lock"]
+    ops = ["{} {}", "{} AND {}", "{} OR {}", "+{} {}", "({} OR {}) AND {}"]
+    for _ in range(6):
+        shape = rng.choice(ops)
+        q = shape.format(*rng.sample(vocab, shape.count("{}")))
+        exp = oracle_search(tiny_oracle, q, k=10)
+        got = engine.search_local(q, 10)
+        assert [d for d, _ in got] == [d for d, _ in exp], q
+        for (gd, gs), (_, es) in zip(got, exp):
+            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (q, gd)
+
+
 BATCH_SHAPES = {
     "bag": "error handling retry",
     "bool": "+error +handler",

@@ -53,59 +53,6 @@ def test_incremental_ingest_then_query(spark, tmp_path, query):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 
-def test_incremental_compaction_after_stream(spark, tmp_path, monkeypatch):
-    """Compaction is per-bucket and resumable: after a streaming delta,
-    compact_index(resume=True) compacts ONLY the delta bucket, and the
-    WAND engine (upper bounds re-derived from current global stats) stays
-    rank-identical to the oracle over the union corpus.  Driver budget 0
-    keeps these rescue-free queries on the segment plan."""
-    import json
-
-    from probe_spark import indexer
-
-    from probe_spark.compaction import compact_index
-    from probe_spark.fixtures import pages_df
-    from probe_spark.indexer import build_index
-    from probe_spark.streaming.incremental import start_incremental_index
-    from probe_spark.wand import WandEngine
-
-    ix = str(tmp_path / "ix")
-    stream_dir = tmp_path / "incoming"
-    stream_dir.mkdir()
-    base = pages_df(spark, 120).drop("html", "warc_ts")
-    build_index(spark, base, ix, n_buckets=2)
-    m1 = compact_index(spark, ix)
-    assert m1["buckets_compacted"] == 2
-
-    wave = (
-        pages_df(spark, 170)
-        .drop("html", "warc_ts")
-        .join(base.select("url"), "url", "leftanti")
-    )
-    wave.coalesce(1).write.mode("overwrite").parquet(str(stream_dir / "w"))
-    q = start_incremental_index(spark, f"{stream_dir}/w", ix, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-
-    m2 = compact_index(spark, ix, resume=True)
-    assert m2["buckets_compacted"] == 3  # only the delta was new
-    state = json.loads((tmp_path / "ix" / "lineage" / "compaction.json").read_text())
-    assert len(state["buckets"]) == 3
-
-    docs_rows = spark.read.parquet(f"{ix}/pages_indexed").collect()
-    oracle_ix = CorpusIndex.build(
-        [Doc(r["doc_id"], r["url"], r["text"], r["lang"]) for r in docs_rows]
-    )
-    assert oracle_ix.n_docs == 170
-    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
-    eng = WandEngine(spark, ix, phase1_segs=1)
-    for query in ("firewall", "error AND handling", "+retry process"):
-        got = eng.search_local(query, k=10)
-        expected = oracle_search(oracle_ix, query, k=10)
-        assert [d for d, _ in got] == [d for d, _ in expected], query
-        for (gd, gs), (_, es) in zip(got, expected):
-            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
-
-
 def test_incremental_checkpoint_no_reprocess(spark, tmp_path):
     """Restarting the stream over the same directory must not double-index
     (exactly-once from the checkpoint)."""
@@ -249,32 +196,26 @@ def test_stream_crash_rollforward_heals_fold(
 
 def test_cached_engines_see_incremental_delta(spark, tmp_path):
     """Freshness without reconstruction (index fingerprint refresh): a
-    WandEngine and a flat SearchEngine CONSTRUCTED BEFORE an incremental
-    delta + incremental compaction must serve post-delta queries with
-    results identical to freshly built engines -- stats, dictionary
-    caches, file listings and tri lane all refresh from the on-disk
-    change marker at the next query."""
+    SearchEngine CONSTRUCTED BEFORE an incremental delta must serve
+    post-delta queries with results identical to a freshly built engine
+    -- stats, dictionary caches, file listings and tri lane all refresh
+    from the on-disk change marker at the next query."""
     import pytest as _pytest
 
-    from probe_spark.compaction import compact_index
     from probe_spark.engine import SearchEngine
     from probe_spark.fixtures import pages_df
     from probe_spark.indexer import build_index
     from probe_spark.streaming.incremental import start_incremental_index
-    from probe_spark.wand import WandEngine
 
     ix = str(tmp_path / "ix")
     stream_dir = tmp_path / "incoming"
     stream_dir.mkdir()
     base = pages_df(spark, 120).drop("html", "warc_ts")
     build_index(spark, base, ix, n_buckets=2)
-    compact_index(spark, ix)
 
-    # engines cached BEFORE the delta lands
+    # engine cached BEFORE the delta lands
     flat = SearchEngine(spark, ix)
-    wand = WandEngine(spark, ix, phase1_segs=1)
-    flat.search("firewall", k=5).collect()  # warm their caches
-    wand.search_local("firewall", k=5)
+    flat.search("firewall", k=5).collect()  # warm its caches
 
     wave = (
         pages_df(spark, 170)
@@ -284,7 +225,6 @@ def test_cached_engines_see_incremental_delta(spark, tmp_path):
     wave.coalesce(1).write.mode("overwrite").parquet(str(stream_dir / "w"))
     q = start_incremental_index(spark, f"{stream_dir}/w", ix, str(tmp_path / "ck"))
     q.awaitTermination(120)
-    compact_index(spark, ix, resume=True)
 
     docs_rows = spark.read.parquet(f"{ix}/pages_indexed").collect()
     oracle_ix = CorpusIndex.build(
@@ -297,12 +237,8 @@ def test_cached_engines_see_incremental_delta(spark, tmp_path):
             (r["doc_id"], r["score"])
             for r in flat.search(query, k=10).collect()
         ]
-        got_wand = wand.search_local(query, k=10)
         assert [d for d, _ in got_flat] == [d for d, _ in expected], query
-        assert [d for d, _ in got_wand] == [d for d, _ in expected], query
         for (gd, gs), (_, es) in zip(got_flat, expected):
-            assert gs == _pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
-        for (gd, gs), (_, es) in zip(got_wand, expected):
             assert gs == _pytest.approx(es, rel=1e-12, abs=1e-12), (query, gd)
 
 

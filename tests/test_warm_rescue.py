@@ -8,8 +8,9 @@ instance attributes, and every class runs at the default driver budget
 (both resolver steps on the driver) and at budget 0 (both on Spark).  At
 budget 0 the job-count tests pin that one resolver serves a single cold
 needle no heavier than the per-needle pipeline it replaced, and a batch of
-needles lighter than one query per needle; at the default budget a query
-whose needles memoize as id lists runs no Spark job at all.  The df rule
+needles lighter than one query per needle, and the resolver runs the jobs
+its docstring counts; at the default budget a query whose needles memoize
+as id lists runs no Spark job at all.  The df rule
 (_query_dfs) must give every needle class the oracle's global df."""
 
 from __future__ import annotations
@@ -192,6 +193,29 @@ def test_cold_needle_driver_lane(spark, tiny_index, tiny_oracle, cls):
     assert [d for d, _ in got[0]] == [d for d, _ in expected]
     for (_, gs), (_, es) in zip(got[0], expected):
         assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+
+
+# (needles, instance patch) -> Spark jobs of one cold resolver call at
+# budget 0, as warm_rescue_needles' docstring counts them: a grouped
+# candidate collect or a capped verify collect shuffles, which adds a job
+RESOLVER_JOBS = [
+    (["error handling"], {}, 3),  # grouped candidates (2) + verify (1)
+    (["error handling"], {"_TRI_INTERSECT": 1}, 2),  # one trigram: no group
+    (["st"], {}, 2),  # sub-trigram: capped plain-scan verify only
+    (["error handling", "firewall rules", "stale data", "st"], {}, 4),
+]
+
+
+@pytest.mark.parametrize("needles,patch,want", RESOLVER_JOBS)
+def test_resolver_jobs_as_documented(
+    spark, tiny_index, monkeypatch, needles, patch, want
+):
+    from probe_spark import indexer
+
+    monkeypatch.setattr(indexer, "DRIVER_READ_BYTES", 0)
+    eng = _engine(spark, tiny_index, patch)
+    assert _jobs(spark, lambda: eng.warm_rescue_needles(needles, False)) == want
+    assert _jobs(spark, lambda: eng.warm_rescue_needles(needles, False)) == 0
 
 
 BATCH = {

@@ -53,14 +53,3 @@ def test_engine_search_local_timeout_plumbing(spark, tiny_index):
         "firewall", k=5
     )
 
-
-def test_wand_search_local_timeout_plumbing(spark, tiny_index):
-    from probe_spark.compaction import compact_index
-    from probe_spark.wand import WandEngine
-
-    ix, _ = tiny_index
-    compact_index(spark, ix, resume=True)
-    eng = WandEngine(spark, ix)
-    assert eng.search_local("firewall", k=5, timeout=120.0) == eng.search_local(
-        "firewall", k=5
-    )

@@ -7,9 +7,7 @@ realistic df spread there, and the MLT entry needs a df-cap override to
 return anything.  The fixture corpus (fixtures.pages_df) is deliberately
 Zipf-skewed; this suite pins MLT / suggest / prefix behavior on it with
 DEFAULT parameters against in-test brute-force oracles, so no operator
-needs a fixture-shaped parameter override to be exercised.  (WAND's
-default-parameter behavior on the same fixture is already pinned by
-tests/test_wand.py's full 25-query suite.)
+needs a fixture-shaped parameter override to be exercised.
 """
 
 from __future__ import annotations
